@@ -25,12 +25,16 @@ flip it):
   (``SPARK_GRAFT_CHECKPOINT_DIR``, e.g. an HDFS/S3 path, set once per
   session here). Survives executor loss; costs one distributed-FS
   round trip per materialization. The 100 TB default for long jobs.
+  With neither the env var nor a session checkpoint dir set, the call
+  raises ``ValueError`` at once rather than at the first action.
 * ``persist`` — ``persist(DISK_ONLY)``: keeps lineage intact (an
   executor loss RECOMPUTES the lost blocks instead of failing), stores
   on executor local disk, no distributed-FS traffic. Middle ground;
-  note the blocks stay pinned until GC (same lifetime story as
-  localCheckpoint) and the UNTRUNCATED plan keeps Catalyst's planning
-  cost for very deep lineages.
+  note the blocks stay pinned in Spark's CacheManager until the caller
+  runs ``unpersist()`` — unlike localCheckpoint RDDs, the ContextCleaner
+  never reclaims them, so a long session accumulates them — and the
+  UNTRUNCATED plan keeps Catalyst's planning cost for very deep
+  lineages.
 
 All three strategies materialize the same rows — results are identical;
 only failure recovery and storage placement differ. The knob exists so
@@ -54,6 +58,7 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
 
     Strategy from ``SPARK_GRAFT_MATERIALIZE`` (default ``local`` —
     ``localCheckpoint``; see module docstring for the cluster options).
+    ``eager=True`` materializes before returning under every strategy.
     """
     mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "local")
     if mode not in _VALID:
@@ -65,10 +70,19 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
         return df.localCheckpoint(eager=eager)
     if mode == "reliable":
         sc = df.sparkSession.sparkContext
-        ckdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-        if ckdir and sc.getCheckpointDir() is None:
+        if sc.getCheckpointDir() is None:
+            ckdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+            if not ckdir:
+                raise ValueError(
+                    "materialize: SPARK_GRAFT_MATERIALIZE=reliable needs a "
+                    "checkpoint dir; set SPARK_GRAFT_CHECKPOINT_DIR (or call "
+                    "sc.setCheckpointDir)"
+                )
             sc.setCheckpointDir(ckdir)
         return df.checkpoint(eager=eager)
     from pyspark import StorageLevel
 
-    return df.persist(StorageLevel.DISK_ONLY)
+    out = df.persist(StorageLevel.DISK_ONLY)
+    if eager:
+        out.count()
+    return out

@@ -32,8 +32,9 @@ __all__ = [
     "read_json_pages",
     "normalize_event_ts",
     "ts_from_nanos",
- "read_xml",
-    "read_binary_assets",]
+    "read_xml",
+    "read_binary_assets",
+]
 
 
 def ts_from_nanos(col):
@@ -112,6 +113,32 @@ def _maybe_unzip(path: str) -> str:
         return zf.extract(member, out_dir)
 
 
+def _file_lines(spark: SparkSession, path: str) -> DataFrame:
+    """The file's lines in file order, with a 0-based line number ``__i``.
+
+    ``coalesce(1)`` folds the text scan's splits, in offset order, into one
+    partition, so ``monotonically_increasing_id`` numbers lines in file
+    order and every later pass over the frame sees them in that order —
+    no sort needed.
+    """
+    text = spark.read.text(path).coalesce(1)
+    return text.withColumn("__i", F.monotonically_increasing_id())
+
+
+def _csv_from_lines(spark: SparkSession, lines: DataFrame, **opts: str) -> DataFrame:
+    """Parse a one-string-column frame of CSV lines with Spark's CSV reader.
+
+    The frame is cast to ``Dataset[String]`` and handed to the JVM
+    ``DataFrameReader.csv(Dataset[String])``, so the lines never leave the
+    JVM: PySpark's ``csv(RDD[str])`` would instead pickle every line
+    through a Python worker on each of the reader's passes (header
+    ``take(1)``, schema inference, the final scan).
+    """
+    jds = getattr(lines._jdf, "as")(spark._jvm.Encoders.STRING())
+    reader = spark.read.options(**opts)
+    return DataFrame(reader._jreader.csv(jds), spark)
+
+
 def read_delim(
     spark: SparkSession,
     path: str,
@@ -125,9 +152,11 @@ def read_delim(
 
     * ``skip=N`` — drop N banner lines before the header (OMIM files,
       I:167-181; Spark CSV has no skipRows). Implemented by reading as text
-      single-partition, filtering on a file-order row id, re-parsing from
-      the remaining lines. Single-partition is correct here: every skip-N
-      source in the reference is one small fetched file.
+      single-partition, filtering on a file-order row id and re-parsing
+      the remaining lines with Spark's CSV reader over a JVM
+      ``Dataset[String]`` — no Python worker, no sort (the single
+      partition already yields file order). Single-partition is correct
+      here: every skip-N source in the reference is one small fetched file.
     * ``header=False`` — columns named ``V1..Vn`` matching R's
       ``fread(header=FALSE)`` (S4, I:117-120) so positional consumers
       (``select(7,5)`` → ``V7``,``V5``, T:251) port verbatim.
@@ -145,8 +174,9 @@ def read_delim(
       within quoted string", matching R's read.table) instead of
       silently merging fields — which also rejects the one unsupported
       corner, a double quote embedded in a single-quoted field.
-      Ingest-edge files only (the re-parse routes one small file
-      through an RDD of lines, like ``skip``); a whitespace FACT table
+      Ingest-edge files only (like ``skip``, the re-parse reads one small
+      file single-partition and hands its tokenized lines to the CSV
+      reader as a JVM ``Dataset[String]``); a whitespace FACT table
       should be normalized once at ingest, not re-split per query.
     * ``multiline=True`` — RFC-4180 quoted fields containing embedded
       newlines and escaped ``""`` quotes (R's readers handle these by
@@ -165,8 +195,7 @@ def read_delim(
         )
     path = _maybe_unzip(path)
     if sep is None:
-        text = spark.read.text(path).coalesce(1)
-        text = text.withColumn("__i", F.monotonically_increasing_id())
+        text = _file_lines(spark, path)
         # quote-aware tokenization: a naive regexp_replace('\s+','\t')
         # would rewrite the INSIDE of quoted fields; read.table keeps
         # 'g1 "tumor suppressor" 0.5' as three fields.
@@ -210,13 +239,13 @@ def read_delim(
         )
         body = (
             text.where(F.col("__i") >= skip)
-            .orderBy("__i")
             .select(F.array_join(requoted, "\t").alias("v"))
             .where(F.col("v") != "")  # read.table drops blank lines
         )
-        csv_opts = {"sep": "\t", "header": str(header).lower(),
-                    "inferSchema": str(infer_schema).lower()}
-        df = spark.read.options(**csv_opts).csv(body.rdd.map(lambda r: r[0]))
+        df = _csv_from_lines(
+            spark, body, sep="\t", header=str(header).lower(),
+            inferSchema=str(infer_schema).lower(),
+        )
         if not header:
             df = df.toDF(*[f"V{i + 1}" for i in range(len(df.columns))])
         return df
@@ -233,14 +262,11 @@ def read_delim(
             df = df.toDF(*[f"V{i + 1}" for i in range(len(df.columns))])
         return df
     if skip > 0:
-        text = spark.read.text(path).coalesce(1)
-        text = text.withColumn("__i", F.monotonically_increasing_id())
-        body = text.where(F.col("__i") >= skip).orderBy("__i").drop("__i")
-        csv_opts = {"sep": sep, "header": str(header).lower(),
-                    "inferSchema": str(infer_schema).lower()}
-        df = (
-            spark.read.options(**csv_opts)
-            .csv(body.rdd.map(lambda r: r[0]))  # re-parse remaining lines
+        text = _file_lines(spark, path)
+        body = text.where(F.col("__i") >= skip).drop("__i")
+        df = _csv_from_lines(  # re-parse the remaining lines
+            spark, body, sep=sep, header=str(header).lower(),
+            inferSchema=str(infer_schema).lower(),
         )
     else:
         df = (
@@ -269,6 +295,14 @@ def read_excel(
     pure-stdlib xlsx parser (``sources.xlsx``) — zipped XML needs no
     external engine. First post-skip row is the header, matching
     ``openxlsx::read.xlsx``.
+
+    The stdlib branch types the columns with Spark's own row inference
+    (the schema, and errors such as ``CANNOT_DETERMINE_TYPE`` for an
+    all-empty column, are those of ``createDataFrame(rows, header)``),
+    then hands the rows over as one ``pyarrow.Table`` of that schema:
+    the JVM holds the data as Arrow batches, so the bronze write runs no
+    Python worker, where a list of rows would be pickled into a Python
+    RDD.
     """
     pdf = None
     try:  # narrow: only the pandas/engine import path may fall through
@@ -292,7 +326,22 @@ def read_excel(
 
         schema = StructType([StructField(h, StringType()) for h in header])
         return spark.createDataFrame([], schema=schema)
-    return spark.createDataFrame(body, schema=header)
+    return _create_via_arrow(spark, body, header)
+
+
+def _create_via_arrow(spark: SparkSession, rows: list[list], header: list[str]) -> DataFrame:
+    """``createDataFrame(rows, schema=header)`` with the rows shipped as Arrow."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = spark._inferSchemaFromList(rows, names=header)
+    arrow_schema = to_arrow_schema(schema)
+    columns = [
+        pa.array([r[i] for r in rows], type=field.type)
+        for i, field in enumerate(arrow_schema)
+    ]
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema=schema)
 
 
 def read_json_pages(

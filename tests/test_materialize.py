@@ -33,13 +33,42 @@ def test_persist_keeps_lineage_disk_only(spark, monkeypatch):
     out.unpersist()
 
 
+def _cache_loaded(spark, df) -> bool:
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    builder = cached.get().cachedRepresentation().cacheBuilder()
+    return builder.isCachedColumnBuffersLoaded()
+
+
+def test_persist_eager_materializes(spark, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "persist")
+    lazy = materialize(_frame(spark).select("id"))
+    eager = materialize(_frame(spark).select("s"), eager=True)
+    try:
+        assert not _cache_loaded(spark, lazy)
+        assert _cache_loaded(spark, eager)
+    finally:
+        lazy.unpersist()
+        eager.unpersist()
+
+
 def test_reliable_checkpoints_to_dir(spark, monkeypatch, tmp_path):
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "reliable")
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path))
+    # set explicitly: an earlier test may already have pointed the shared
+    # session at another dir, which materialize would keep
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
     out = materialize(_frame(spark), eager=True)
     assert sorted(r["id"] for r in out.collect()) == [1, 2, 3]
     # the reliable checkpoint wrote RDD blocks under the given dir
     assert any(tmp_path.rglob("rdd-*")), "no checkpoint files written"
+
+
+def test_reliable_without_checkpoint_dir_raises(spark, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "reliable")
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
+    # the shared session's dir may have been set by an earlier test
+    monkeypatch.setattr(spark.sparkContext, "getCheckpointDir", lambda: None)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CHECKPOINT_DIR"):
+        materialize(_frame(spark))
 
 
 def test_invalid_mode_raises(spark, monkeypatch):

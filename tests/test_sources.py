@@ -425,6 +425,129 @@ def test_read_delim_whitespace_unbalanced_quote_raises(spark, tmp_path):
         read_delim(spark, str(bad), sep=None).collect()
 
 
+def _rdd_lineage(df):
+    return df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_read_delim_skip_keeps_file_order_across_splits(spark, tmp_path):
+    """skip=N reads single-partition and relies on the coalesced text
+    scan, not a sort, for file order: with the file cut into many input
+    splits the header is still the line after the banner and the rows
+    come back in file order."""
+    from gene_level_metadata_pipeline_spark.sources.readers import read_delim
+
+    p = tmp_path / "banner.tsv"
+    p.write_text(
+        "# banner 1\n# banner 2\nid\tval\n"
+        + "".join(f"{i}\tv{i}\n" for i in range(300))
+    )
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "256")
+    try:
+        assert spark.read.text(str(p)).rdd.getNumPartitions() >= 3
+        df = read_delim(spark, str(p), sep="\t", skip=2)
+        assert df.columns == ["id", "val"]
+        assert [(r.id, r.val) for r in df.collect()] == [
+            (i, f"v{i}") for i in range(300)
+        ]
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_read_delim_reparse_stays_in_jvm(spark, tmp_path):
+    """skip>0 and sep=None re-parse their lines through the JVM
+    ``csv(Dataset[String])``: no Python worker in the lineage."""
+    from gene_level_metadata_pipeline_spark.sources.readers import read_delim
+
+    skip_file = tmp_path / "skip.tsv"
+    skip_file.write_text("# banner\na\tb\n1\tx\n2\ty\n")
+    ws_file = tmp_path / "ws.txt"
+    ws_file.write_text("a   b\n1 'x y'\n\n2\ty\n")
+    for df in (
+        read_delim(spark, str(skip_file), sep="\t", skip=1),
+        read_delim(spark, str(ws_file), sep=None),
+    ):
+        assert "PythonRDD" not in _rdd_lineage(df)
+        assert df.first()[0] == 1
+
+
+def _xlsx_with_sheet(tmp_path, rows_xml: str) -> str:
+    """The fixture workbook with its first sheet replaced by ``rows_xml``."""
+    import zipfile
+
+    from gene_level_metadata_pipeline_spark.plans.fixtures import fixture_dir
+
+    W = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    path = str(tmp_path / "sheet.xlsx")
+    with zipfile.ZipFile(f"{fixture_dir()}/workbook.xlsx") as zin, \
+            zipfile.ZipFile(path, "w") as zout:
+        for nm in zin.namelist():
+            if nm == "xl/worksheets/sheet1.xml":
+                zout.writestr(nm, f'<worksheet xmlns="{W}"><sheetData>'
+                                  f"{rows_xml}</sheetData></worksheet>")
+            else:
+                zout.writestr(nm, zin.read(nm))
+    return path
+
+
+def _s(ref, text):
+    return f'<c r="{ref}" t="inlineStr"><is><t>{text}</t></is></c>'
+
+
+def test_xlsx_arrow_handoff_matches_row_inference(spark, tmp_path):
+    """The stdlib xlsx branch ships rows as Arrow, typed by Spark's own row
+    inference: same schema and rows as ``createDataFrame(rows, header)``,
+    and no Python worker in the lineage."""
+    from gene_level_metadata_pipeline_spark.sources.readers import (
+        _create_via_arrow, read_excel,
+    )
+
+    header = ["s", "i", "f", "b", "n"]
+    rows = [["a", 1, 1.5, True, None], [None, 2, None, False, "x"]]
+    got = _create_via_arrow(spark, rows, header)
+    want = spark.createDataFrame(rows, schema=header)
+    assert got.schema == want.schema
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
+
+    path = _xlsx_with_sheet(
+        tmp_path,
+        f'<row r="1">{_s("A1", "gene")}{_s("B1", "score")}{_s("C1", "ok")}</row>'
+        f'<row r="2">{_s("A2", "g1")}<c r="B2"><v>2</v></c>'
+        '<c r="C2" t="b"><v>1</v></c></row>'
+        f'<row r="3">{_s("A3", "g2")}<c r="C3" t="b"><v>0</v></c></row>',
+    )
+    df = read_excel(spark, path)
+    assert df.schema.simpleString() == "struct<gene:string,score:double,ok:boolean>"
+    assert [tuple(r) for r in df.collect()] == [("g1", 2.0, True), ("g2", None, False)]
+    assert "PythonRDD" not in _rdd_lineage(df)
+
+
+def test_xlsx_all_empty_column_and_header_only(spark, tmp_path):
+    """An all-empty column still fails type inference (not a ``void``
+    column, which plain Arrow inference would give); a header-only sheet
+    is still the empty all-string frame."""
+    import pytest
+    from pyspark.errors import PySparkValueError
+
+    from gene_level_metadata_pipeline_spark.sources.readers import read_excel
+
+    empty_col = _xlsx_with_sheet(
+        tmp_path,
+        f'<row r="1">{_s("A1", "gene")}{_s("B1", "blank")}</row>'
+        f'<row r="2">{_s("A2", "g1")}</row>',
+    )
+    with pytest.raises(PySparkValueError, match="CANNOT_DETERMINE_TYPE"):
+        read_excel(spark, empty_col)
+
+    header_only = _xlsx_with_sheet(
+        tmp_path, f'<row r="1">{_s("A1", "gene")}{_s("B1", "score")}</row>'
+    )
+    df = read_excel(spark, header_only)
+    assert df.schema.simpleString() == "struct<gene:string,score:string>"
+    assert df.count() == 0
+
+
 def test_pipeline_config_env_and_masking(monkeypatch):
     """E2: secrets resolve from env with placeholder-default semantics
     (empty string == unset, like the reference's gitignored overrides);

@@ -95,7 +95,9 @@ def materialize_recommendation(executors: int) -> dict[str, str]:
     Single-node / local mode: executor loss == process loss, reliability
     adds nothing — keep ``local``. Small clusters: ``persist``
     (DISK_ONLY keeps lineage, so a lost executor recomputes instead of
-    failing; no distributed-FS traffic). Large fleets, where some
+    failing; no distributed-FS traffic; its blocks stay pinned on
+    executor disk until unpersisted, so size local disk for every
+    materialization a session makes). Large fleets, where some
     executor loss per long job is expected: ``reliable`` (DataFrame
     .checkpoint to SPARK_GRAFT_CHECKPOINT_DIR on the cluster FS)."""
     if executors <= 1:
