@@ -10,8 +10,9 @@ Reference sites:
     (IMPC viability: drop every row of a key that maps ambiguously)
   * A3 null_conflicts — ``…:273-277`` (MGI viability: keep the key, null
     every non-key column for ambiguous keys, re-distinct)
-  * A4 drop_dup_keys — ``scripts/tidy/temp-tidy-all-manuscript-files.R:46-47``
-    and ``:74-76`` (remove all rows of duplicated keys)
+  * A4 (drop duplicated keys) — ``scripts/tidy/temp-tidy-all-manuscript-files.R:46-47``
+    and ``:74-76``: the same rows as A2, so ``keep_unique`` serves it;
+    the audited dup list the reference anti-joins against is ``dup_keys``
   * A5 prefer_flagged — ``scripts/tidy/temp-tidy-all-web-files.R:158-166``
     (groups of size 1 kept as-is; larger groups keep only rows where a flag
     column equals the preferred value)
@@ -22,8 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["keep_unique", "null_conflicts", "drop_dup_keys", "dup_keys",
-           "prefer_flagged", "golden_record"]
+__all__ = ["keep_unique", "null_conflicts", "dup_keys", "prefer_flagged",
+           "golden_record"]
 
 
 def _group_count(key: str | list[str]) -> Column:
@@ -42,16 +43,6 @@ def keep_unique(df: DataFrame, key: str | list[str]) -> DataFrame:
         .where(F.col("__n") == 1)
         .drop("__n")
     )
-
-
-def drop_dup_keys(df: DataFrame, key: str | list[str]) -> DataFrame:
-    """Remove every row of keys that occur more than once (A4).
-
-    Same result as :func:`keep_unique`; kept as a separate name because the
-    reference frames it as an anti-join against an audited dup list
-    (``TM:46-47``) — callers that want the audit use :func:`dup_keys`.
-    """
-    return keep_unique(df, key)
 
 
 def dup_keys(df: DataFrame, key: str | list[str]) -> DataFrame:

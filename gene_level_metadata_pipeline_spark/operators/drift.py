@@ -28,6 +28,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gene_level_metadata_pipeline_spark.materialize import (
+    materialize as _materialize,
+)
+
 __all__ = ["psi", "ks_two_sample"]
 
 
@@ -606,7 +610,7 @@ def fdr_bh(
     a distributed prefix COUNT (range repartition on (p, key), local
     row_number per partition, broadcast per-partition-count offsets —
     the selection.running_sum discipline, including the mandatory
-    localCheckpoint: repartitionByRange samples bounds per evaluation
+    ``materialize`` pin: repartitionByRange samples bounds per evaluation
     and unpinned _pid labels corrupt silently at scale, found live at
     sf0.1 by running_sum), and the step-up suffix min
     ``min_{rank >= i}`` reuses the SAME pinned partition labels: a
@@ -627,18 +631,18 @@ def fdr_bh(
         df.select(k.alias("key"), p.alias("p_e6"))
         .repartitionByRange(n, F.col("p_e6"), F.col("key"))
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(_materialize)
     )
 
     # The ranked frame feeds THREE consumers (offsets, m, the join) and
     # the suffix-min frame feeds two (partition minima, the final join);
     # without pinning, Spark replays the _pid window per branch — the
-    # mixture_reweight_mw lesson. Lazy localCheckpoints share one
-    # materialization each.
+    # mixture_reweight_mw lesson. Each lazy ``materialize`` pin is
+    # computed once for all its consumers.
     w_asc = Window.partitionBy("_pid").orderBy("p_e6", "key")
     local = ranged.withColumn(
         "_lrank", F.row_number().over(w_asc)
-    ).localCheckpoint(eager=False)
+    ).transform(_materialize)
 
     # One row per partition: counts -> rank offsets (prefix) and, later,
     # partition-level raw minima -> suffix-min offsets. Both windows run
@@ -675,7 +679,7 @@ def fdr_bh(
     ).rowsBetween(Window.unboundedPreceding, 0)
     loc2 = ranked.withColumn(
         "_lmin", F.min("raw_e6").over(w_desc)
-    ).localCheckpoint(eager=False)
+    ).transform(_materialize)
     wp_desc = Window.orderBy(F.col("_pid").desc())
     suf = (
         loc2.groupBy("_pid").agg(F.min("raw_e6").alias("_pmin"))

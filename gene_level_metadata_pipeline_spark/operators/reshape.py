@@ -18,7 +18,6 @@ __all__ = [
     "melt",
     "transpose",
     "union_all",
-    "union_evolve",
     "distinct_all",
 ]
 
@@ -112,21 +111,11 @@ def transpose(
     return pivot_wider(long, [header_col], id_col, "__v", agg="first")
 
 
-def union_evolve(*dfs: DataFrame) -> DataFrame:
-    """Union frames with evolving schemas: dplyr ``bind_rows`` semantics
-    (SURVEY R5's general form) — columns matched by NAME, columns absent
-    from a frame filled with NULL, output schema = first-seen column
-    order. Spark's ``unionByName(allowMissingColumns=True)`` folded over
-    the inputs; zero shuffles (pure map-side concatenation)."""
-    from functools import reduce
-
-    return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
-    )
-
-
 def union_all(*dfs: DataFrame) -> DataFrame:
-    """Union-by-name of homogeneous frames (R5: ``T:442``, ``TW:166``)."""
+    """Union-by-name: dplyr ``bind_rows`` semantics (R5: ``T:442``,
+    ``TW:166``). Columns matched by NAME, columns absent from a frame
+    filled with NULL (so evolving schemas union too), output schema =
+    first-seen column order; zero shuffles (map-side concatenation)."""
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
 
 

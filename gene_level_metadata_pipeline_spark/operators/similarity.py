@@ -28,6 +28,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gene_level_metadata_pipeline_spark.materialize import (
+    materialize as _materialize,
+)
+
 __all__ = [
     "cosine",
     "brute_force_topk",
@@ -807,9 +811,9 @@ def pq_codebooks(
                     lambda p: p.getField("mv"),
                 ).alias("ce")
             )
-            # truncate lineage between Lloyd rounds — the same
-            # per-round localCheckpoint discipline as kmeans_centroids
-            .localCheckpoint(eager=False)
+            # pin each Lloyd round's codebooks — the same per-round
+            # materialization discipline as kmeans_centroids
+            .transform(_materialize)
         )
     return codebooks
 
@@ -2019,7 +2023,7 @@ def dbscan_grid_2d(
         )
         .select("pid", "qid")
     )
-    pairs = pairs.localCheckpoint(eager=False)
+    pairs = pairs.transform(_materialize)
 
     deg = pairs.groupBy("pid").agg(F.count(F.lit(1)).alias("n"))
     # core feeds three consumers and core_lab two; they are REBUILT per

@@ -1402,12 +1402,12 @@ def q_json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_union_evolve_schemas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-evolution union (reshape.union_evolve): dplyr bind_rows
+    """Schema-evolution union (reshape.union_all): dplyr bind_rows
     semantics — frames with different column sets concatenated by name,
     missing columns NULL-filled, first-seen column order. The map-side
     concatenation adds no shuffle; each branch's filter still pushes to
     its scan."""
-    from gene_level_metadata_pipeline_spark.operators.reshape import union_evolve
+    from gene_level_metadata_pipeline_spark.operators.reshape import union_all
 
     ord_ = _t(spark, sf_dir, "orders")
     old = ord_.where(
@@ -1416,7 +1416,7 @@ def q_union_evolve_schemas(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = ord_.where(
         F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp")
     ).select("o_orderkey", F.col("o_totalprice").alias("total"))
-    return union_evolve(old, new)
+    return union_all(old, new)
 
 
 

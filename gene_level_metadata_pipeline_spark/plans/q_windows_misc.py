@@ -9,6 +9,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gene_level_metadata_pipeline_spark.materialize import (
+    materialize as _materialize,
+)
 from gene_level_metadata_pipeline_spark.operators.harmonize import harmonize, spine
 from gene_level_metadata_pipeline_spark.plans.q_dedup_text import (
     _minhash_oracle,
@@ -4724,7 +4727,7 @@ def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(0)
         ).alias("s"),
         F.count(F.lit(1)).alias("n"),
-    ).localCheckpoint(eager=False)
+    ).transform(_materialize)
     fit = isotonic_fit(bk, bucket_col="bucket", sum_col="s", n_col="n")
     with_s = fit.join(bk.select("bucket", "s"), "bucket")
     return brier_decomposition(

@@ -38,7 +38,7 @@ DEFAULT_CONFIG: dict[str, str] = {
     # region, ID maps) must go broadcast; 64 MB is safe on the 16 GiB
     # local heap get_spark actually configures (SPARK_GRAFT_DRIVER_MEM).
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # Arrow for the pandas bridge (Excel reader, mapInPandas multimodal ops).
+    # Arrow for the pandas bridge (mapInPandas multimodal ops).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Read legacy/ns parquet timestamps without error. Spark 4 raises
     # PARQUET_TYPE_ILLEGAL on TIMESTAMP(NANOS) (the events table) unless

@@ -16,13 +16,14 @@ correct for source files; deliberately not a fact-table path.
 
 from __future__ import annotations
 
-import io
+import hashlib
 import os
+import shutil
 import tempfile
 import urllib.request
 import zipfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -97,20 +98,44 @@ def fetch_to_staging(url: str, staging_dir: str | None = None) -> str:
     name = url.rstrip("/").rsplit("/", 1)[-1] or "fetched"
     dest = os.path.join(staging_dir, name)
     with urllib.request.urlopen(url) as resp, open(dest, "wb") as out:  # noqa: S310
-        out.write(resp.read())
+        shutil.copyfileobj(resp, out)  # streamed: downloads can be GBs
     return dest
 
 
 def _maybe_unzip(path: str) -> str:
     """S7: ``readr::read_tsv('*.zip')`` transparently unzips (IW:22-23).
-    Extract the first member to a sibling staging dir; gz needs no handling
-    (Spark reads .gz natively)."""
+
+    The first member is extracted once per archive version: the staging
+    dir is keyed on the archive's resolved path, size and mtime, so later
+    reads of an unchanged archive reuse the extracted file instead of
+    leaving a fresh copy behind each time. The member is written to a
+    temp file and renamed into place, so a concurrent reader never sees a
+    partial file. gz needs no handling (Spark reads .gz natively).
+    """
     if not path.endswith(".zip"):
         return path
-    out_dir = tempfile.mkdtemp(prefix="spark_graft_unzip_")
-    with zipfile.ZipFile(path) as zf:
+    real = os.path.realpath(path)
+    st = os.stat(real)
+    key = hashlib.sha256(
+        f"{real}\0{st.st_size}\0{st.st_mtime_ns}".encode()
+    ).hexdigest()[:16]
+    out_dir = os.path.join(tempfile.gettempdir(), f"spark_graft_unzip_{key}")
+    with zipfile.ZipFile(real) as zf:
         member = zf.namelist()[0]
-        return zf.extract(member, out_dir)
+        # basename only: a member name must not escape the staging dir
+        dest = os.path.join(out_dir, os.path.basename(member))
+        if os.path.exists(dest):
+            return dest
+        os.makedirs(out_dir, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=out_dir, prefix=".partial-")
+        try:
+            with os.fdopen(fd, "wb") as out, zf.open(member) as src:
+                shutil.copyfileobj(src, out)
+            os.replace(tmp, dest)
+        except BaseException:
+            os.unlink(tmp)
+            raise
+    return dest
 
 
 def _file_lines(spark: SparkSession, path: str) -> DataFrame:
@@ -125,7 +150,7 @@ def _file_lines(spark: SparkSession, path: str) -> DataFrame:
     return text.withColumn("__i", F.monotonically_increasing_id())
 
 
-def _csv_from_lines(spark: SparkSession, lines: DataFrame, **opts: str) -> DataFrame:
+def _csv_from_lines(spark: SparkSession, lines: DataFrame, **opts: str | bool) -> DataFrame:
     """Parse a one-string-column frame of CSV lines with Spark's CSV reader.
 
     The frame is cast to ``Dataset[String]`` and handed to the JVM
@@ -139,6 +164,49 @@ def _csv_from_lines(spark: SparkSession, lines: DataFrame, **opts: str) -> DataF
     return DataFrame(reader._jreader.csv(jds), spark)
 
 
+def _whitespace_fields(line: Column) -> Column:
+    """One line split by R ``read.table``'s default rule, fields tab-joined.
+
+    Quote-aware: a naive ``regexp_replace('\\s+', '\\t')`` would rewrite the
+    INSIDE of quoted fields, where read.table keeps
+    ``g1 "tumor suppressor" 0.5`` as three fields. Tokens are ``"..."``,
+    ``'...'`` or bare runs; single-quoted tokens are re-quoted double so
+    the CSV parser strips them identically.
+
+    Unbalanced double quotes fail LOUD like R's read.table ("EOF within
+    quoted string"): with an odd quote count the ``"[^"]*"`` alternative
+    would silently span whitespace to the NEXT quote anywhere later on the
+    line, merging fields into one token — a wrong-shape row is worse than
+    an error at the ingest edge. (The check also rejects a double quote
+    embedded in a single-quoted field, a documented unsupported corner.)
+    """
+    n_dq = F.length(line) - F.length(F.regexp_replace(line, '"', ""))
+    checked = F.when(
+        n_dq % 2 == 1,
+        F.raise_error(
+            F.concat(
+                F.lit(
+                    "read_delim(sep=None): unbalanced double quote "
+                    "(EOF within quoted string, as R's read.table "
+                    "raises) in line: "
+                ),
+                line,
+            )
+        ),
+    ).otherwise(line)
+    toks = F.regexp_extract_all(checked, F.lit("\"[^\"]*\"|'[^']*'|\\S+"), 0)
+    requoted = F.transform(
+        toks,
+        lambda t: F.when(
+            t.rlike("^'.*'$"),
+            F.concat(
+                F.lit('"'), t.substr(F.lit(2), F.length(t) - 2), F.lit('"')
+            ),
+        ).otherwise(t),
+    )
+    return F.array_join(requoted, "\t")
+
+
 def read_delim(
     spark: SparkSession,
     path: str,
@@ -149,6 +217,9 @@ def read_delim(
     multiline: bool = False,
 ) -> DataFrame:
     """Delimited-file reader with the reference's quirks (S2–S8).
+
+    Two paths: a line re-parse when the file needs line-level work
+    (``skip > 0`` or ``sep=None``), a plain Spark CSV file scan otherwise.
 
     * ``skip=N`` — drop N banner lines before the header (OMIM files,
       I:167-181; Spark CSV has no skipRows). Implemented by reading as text
@@ -164,117 +235,44 @@ def read_delim(
     * ``sep=None`` — S6, R ``read.table`` default: ANY run of whitespace
       separates fields, blank lines are skipped, and QUOTED fields keep
       their interior whitespace (IW:19 reads gnomAD constraint metrics
-      this way). Lines are tokenized with one Catalyst
-      ``regexp_extract_all`` (``"..."`` / ``'...'`` / bare runs — the
-      R ``quote = "\\"'"`` default; single-quoted tokens are re-quoted
-      double so the CSV parser strips them identically), tokens joined
-      with tabs, then the normal CSV parser takes over, so header naming
-      and schema inference are identical to the single-char path.
-      Lines with an UNBALANCED double quote raise at read time ("EOF
-      within quoted string", matching R's read.table) instead of
-      silently merging fields — which also rejects the one unsupported
-      corner, a double quote embedded in a single-quoted field.
-      Ingest-edge files only (like ``skip``, the re-parse reads one small
-      file single-partition and hands its tokenized lines to the CSV
-      reader as a JVM ``Dataset[String]``); a whitespace FACT table
-      should be normalized once at ingest, not re-split per query.
+      this way). Each line is tokenized by :func:`_whitespace_fields`
+      (R's ``quote = "\\"'"`` default) into tab-joined fields, then the
+      same line re-parse as ``skip`` takes over, so header naming and
+      schema inference are identical to the single-char path. Lines with
+      an UNBALANCED double quote raise at read time ("EOF within quoted
+      string", matching R's read.table) instead of silently merging
+      fields. Ingest-edge files only; a whitespace FACT table should be
+      normalized once at ingest, not re-split per query.
     * ``multiline=True`` — RFC-4180 quoted fields containing embedded
       newlines and escaped ``""`` quotes (R's readers handle these by
       default; Spark needs ``multiLine``). Scale caveat: a multiLine CSV
       file is NOT splittable — one file = one task — so use it only for
       the small messy sources it exists for, never a fact table.
-      Incompatible with ``skip`` (the line-oriented pre-filter would cut
-      quoted records in half).
+      Incompatible with ``skip`` and ``sep=None`` (a line-oriented
+      re-parse would cut quoted records in half): raises ``ValueError``.
     """
-    if multiline and skip > 0:
-        raise ValueError("read_delim: multiline and skip are incompatible")
-    if sep is None and multiline:
+    line_reparse = skip > 0 or sep is None
+    if multiline and line_reparse:
         raise ValueError(
-            "read_delim: sep=None (whitespace runs) is line-oriented and "
-            "incompatible with multiline quoted records"
+            "read_delim: multiline quoted records are incompatible with "
+            f"line-oriented re-parsing (skip={skip}, sep={sep!r})"
         )
     path = _maybe_unzip(path)
-    if sep is None:
-        text = _file_lines(spark, path)
-        # quote-aware tokenization: a naive regexp_replace('\s+','\t')
-        # would rewrite the INSIDE of quoted fields; read.table keeps
-        # 'g1 "tumor suppressor" 0.5' as three fields.
-        # Unbalanced double quotes fail LOUD like R's read.table ("EOF
-        # within quoted string"): with an odd quote count the "[^"]*"
-        # alternative would silently span whitespace to the NEXT quote
-        # anywhere later on the line, merging fields into one token —
-        # a wrong-shape row is worse than an error at the ingest edge.
-        # (The check also rejects a double quote embedded in a
-        # single-quoted field, which was already a documented
-        # unsupported corner.)
-        n_dq = F.length("value") - F.length(
-            F.regexp_replace(F.col("value"), '"', "")
-        )
-        line = F.when(
-            n_dq % 2 == 1,
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "read_delim(sep=None): unbalanced double quote "
-                        "(EOF within quoted string, as R's read.table "
-                        "raises) in line: "
-                    ),
-                    F.col("value"),
-                )
-            ),
-        ).otherwise(F.col("value"))
-        toks = F.regexp_extract_all(
-            line, F.lit("\"[^\"]*\"|'[^']*'|\\S+"), 0
-        )
-        requoted = F.transform(
-            toks,
-            lambda t: F.when(
-                t.rlike("^'.*'$"),
-                F.concat(
-                    F.lit('"'),
-                    t.substr(F.lit(2), F.length(t) - 2),
-                    F.lit('"'),
-                ),
-            ).otherwise(t),
-        )
-        body = (
-            text.where(F.col("__i") >= skip)
-            .select(F.array_join(requoted, "\t").alias("v"))
-            .where(F.col("v") != "")  # read.table drops blank lines
-        )
-        df = _csv_from_lines(
-            spark, body, sep="\t", header=str(header).lower(),
-            inferSchema=str(infer_schema).lower(),
-        )
-        if not header:
-            df = df.toDF(*[f"V{i + 1}" for i in range(len(df.columns))])
-        return df
-    if multiline:
-        df = (
-            spark.read.option("sep", sep)
-            .option("header", header)
-            .option("inferSchema", infer_schema)
-            .option("multiLine", True)
-            .option("escape", '"')  # RFC-4180 "" escaping, as R reads it
-            .csv(path)
-        )
-        if not header:
-            df = df.toDF(*[f"V{i + 1}" for i in range(len(df.columns))])
-        return df
-    if skip > 0:
-        text = _file_lines(spark, path)
-        body = text.where(F.col("__i") >= skip).drop("__i")
-        df = _csv_from_lines(  # re-parse the remaining lines
-            spark, body, sep=sep, header=str(header).lower(),
-            inferSchema=str(infer_schema).lower(),
-        )
+    opts = {"sep": "\t" if sep is None else sep, "header": header,
+            "inferSchema": infer_schema}
+    if line_reparse:
+        lines = _file_lines(spark, path).where(F.col("__i") >= skip)
+        if sep is None:
+            lines = lines.select(
+                _whitespace_fields(F.col("value")).alias("value")
+            ).where(F.col("value") != "")  # read.table drops blank lines
+        else:
+            lines = lines.select("value")
+        df = _csv_from_lines(spark, lines, **opts)
     else:
-        df = (
-            spark.read.option("sep", sep)
-            .option("header", header)
-            .option("inferSchema", infer_schema)
-            .csv(path)
-        )
+        if multiline:  # RFC-4180 "" escaping, as R reads it
+            opts.update(multiLine=True, escape='"')
+        df = spark.read.options(**opts).csv(path)
     if not header:
         df = df.toDF(*[f"V{i + 1}" for i in range(len(df.columns))])
     return df
@@ -291,29 +289,18 @@ def read_excel(
     Excel sources in the reference are small manuscript supplements — a
     driver-side parse + ``createDataFrame`` is the right scale trade-off.
     ``sheet`` by index or name; ``skip`` mirrors openxlsx ``startRow-1``.
-    Prefers pandas+openpyxl when installed; otherwise falls back to the
-    pure-stdlib xlsx parser (``sources.xlsx``) — zipped XML needs no
-    external engine. First post-skip row is the header, matching
-    ``openxlsx::read.xlsx``.
+    The sheet is parsed by the pure-stdlib xlsx reader (``sources.xlsx``:
+    zipped XML needs no external engine), which reads every numeric cell
+    as a double, so a workbook yields the same schema on every machine.
+    First post-skip row is the header, matching ``openxlsx::read.xlsx``.
 
-    The stdlib branch types the columns with Spark's own row inference
-    (the schema, and errors such as ``CANNOT_DETERMINE_TYPE`` for an
-    all-empty column, are those of ``createDataFrame(rows, header)``),
-    then hands the rows over as one ``pyarrow.Table`` of that schema:
-    the JVM holds the data as Arrow batches, so the bronze write runs no
-    Python worker, where a list of rows would be pickled into a Python
-    RDD.
+    Columns are typed with Spark's own row inference (the schema, and
+    errors such as ``CANNOT_DETERMINE_TYPE`` for an all-empty column, are
+    those of ``createDataFrame(rows, header)``), then the rows are handed
+    over as one ``pyarrow.Table`` of that schema: the JVM holds the data
+    as Arrow batches, so the bronze write runs no Python worker, where a
+    list of rows would be pickled into a Python RDD.
     """
-    pdf = None
-    try:  # narrow: only the pandas/engine import path may fall through
-        import pandas as pd
-
-        pdf = pd.read_excel(path, sheet_name=sheet, skiprows=skip)
-    except ImportError:
-        pass
-    if pdf is not None:
-        return spark.createDataFrame(pdf)
-
     from gene_level_metadata_pipeline_spark.sources.xlsx import read_xlsx_rows
 
     rows = read_xlsx_rows(path, sheet=sheet, skip=skip)

@@ -1,5 +1,5 @@
-"""Minimal pure-stdlib XLSX reader (fallback for environments without an
-Excel engine).
+"""Minimal pure-stdlib XLSX reader (the engine's only Excel path: no
+Excel engine is needed, so a workbook parses the same everywhere).
 
 XLSX is a zip of XML parts; this reads the workbook sheet list, the shared
 strings table, and one worksheet's cell grid — enough for the reference's
@@ -58,8 +58,8 @@ def _sheet_target(zf: zipfile.ZipFile, sheet: int | str) -> str:
 def read_xlsx_rows(path: str, sheet: int | str = 0, skip: int = 0) -> list[list]:
     """Rectangular cell grid of one sheet as a list of rows.
 
-    Cell values: shared/inline strings → str, numbers → float (int when
-    integral), booleans → bool, empty → None. ``skip`` drops leading rows
+    Cell values: shared/inline strings → str, numbers → float (integral
+    ones too), booleans → bool, empty → None. ``skip`` drops leading rows
     (openxlsx ``startRow-1``). Rows are padded to the widest row.
     """
     with zipfile.ZipFile(path) as zf:
@@ -73,7 +73,7 @@ def read_xlsx_rows(path: str, sheet: int | str = 0, skip: int = 0) -> list[list]
         for row in ws.iter(f"{NS}row"):
             # honor the row-number attribute: writers omit fully-blank rows
             # from the XML, and skip/startRow must land on the same rows
-            # the pandas/openpyxl path (which honors indices) would use
+            # openxlsx's startRow (which honors indices) would use
             rnum = row.get("r")
             if rnum is not None:
                 while len(rows) < int(rnum) - 1:
@@ -96,7 +96,7 @@ def read_xlsx_rows(path: str, sheet: int | str = 0, skip: int = 0) -> list[list]
                 elif v is not None and v.text is not None:
                     # always float: mixed int/float in one column would break
                     # Spark's schema merge (CANNOT_MERGE_TYPE Long vs Double);
-                    # pandas/openxlsx read numerics as double too
+                    # R's openxlsx reads numerics as double too
                     val = float(v.text)
                 else:
                     val = None

@@ -87,3 +87,27 @@ def test_scale_conf_materialize_recommendation():
     big = materialize_recommendation(1000)
     assert big["SPARK_GRAFT_MATERIALIZE"] == "reliable"
     assert "SPARK_GRAFT_CHECKPOINT_DIR" in big
+
+
+def test_drift_fdr_bh_pins_through_materialize(spark, monkeypatch):
+    """fdr_bh's shared subtrees follow SPARK_GRAFT_MATERIALIZE: under
+    persist its plan reads persisted relations, not local-checkpoint
+    RDDs, and the answer is the local-mode one."""
+    from pyspark.sql import functions as F
+
+    from gene_level_metadata_pipeline_spark.operators.drift import fdr_bh
+
+    df = spark.range(40).select(
+        F.col("id"), ((F.col("id") * 7919) % 200_000).alias("p_e6")
+    )
+    monkeypatch.delenv("SPARK_GRAFT_MATERIALIZE", raising=False)
+    expected = sorted(fdr_bh(df, num_partitions=2).collect())
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "persist")
+    try:
+        out = fdr_bh(df, num_partitions=2)
+        plan = out._jdf.queryExecution().toString()
+        assert "InMemoryRelation" in plan
+        assert "ExistingRDD" not in plan
+        assert sorted(out.collect()) == expected
+    finally:
+        spark.catalog.clearCache()

@@ -205,27 +205,27 @@ def test_ols_excludes_null_x_or_y_rows(spark):
 
 
 def test_engine_facade_exposes_timeseries_family(spark):
-    """The Engine front door must pass the time-series operators
-    through unchanged (a facade method that drifts from its operator
-    is worse than no facade)."""
-    from datetime import datetime
+    """The time-series operators compose on one frame family: gaps and
+    islands, interval coalescing and the OLS trend."""
+    from gene_level_metadata_pipeline_spark.operators.timeseries import (
+        coalesce_intervals,
+        gaps_islands,
+        ols_trend,
+    )
 
-    from gene_level_metadata_pipeline_spark.engine import Engine
-
-    eng = Engine(spark)
     df = _ev(spark, [(1, _h(0)), (1, _h(1)), (1, _h(4))])
-    assert eng.gaps_islands(df, "user_id", "ts", HOUR_US).count() == 2
+    assert gaps_islands(df, "user_id", "ts", HOUR_US).count() == 2
     iv = spark.createDataFrame(
         [(1, 0, 10), (1, 5, 20), (1, 30, 40)], "k long, s long, e long"
     )
-    merged = eng.coalesce_intervals(iv, "k", "s", "e").collect()
+    merged = coalesce_intervals(iv, "k", "s", "e").collect()
     assert sorted((r.cov_start, r.cov_end, r.n_merged) for r in merged) == [
         (0, 20, 2), (30, 40, 1)
     ]
     pts = spark.createDataFrame(
         [("g", x, 2 * x + 1) for x in range(5)], "g string, x long, y long"
     ).withColumn("y", F.col("y").cast("decimal(18,0)"))
-    assert eng.ols_trend(pts, "g", "x", "y").collect()[0].slope_raw == 2.0
+    assert ols_trend(pts, "g", "x", "y").collect()[0].slope_raw == 2.0
 
 
 def test_probe_cells_fanout_order_and_degenerate(spark):
@@ -278,43 +278,64 @@ def test_multiprobe_recall_superset_of_single_probe(spark):
 
 
 def test_engine_facade_exposes_batch3_family(spark):
-    """The round-5 batch-2/3 operators are reachable through Engine —
-    one smoke call per delegation (semantics are certified by their
-    own oracles/units; this pins the facade wiring)."""
-    from gene_level_metadata_pipeline_spark.engine import Engine
+    """The round-5 batch-2/3 operators run end to end — one smoke call
+    per operator (semantics are certified by their own oracles/units)."""
+    from gene_level_metadata_pipeline_spark.operators.conflicts import (
+        golden_record,
+    )
+    from gene_level_metadata_pipeline_spark.operators.dedup import (
+        near_dup_against_history,
+        source_overlap_matrix,
+    )
+    from gene_level_metadata_pipeline_spark.operators.graph import (
+        hits_bipartite,
+        kcore,
+        sssp_weighted,
+    )
+    from gene_level_metadata_pipeline_spark.operators.harmonize import (
+        cdc_apply,
+        retract_aggregate,
+    )
+    from gene_level_metadata_pipeline_spark.operators.temporal import (
+        interval_overlap_join,
+    )
+    from gene_level_metadata_pipeline_spark.operators.textanalysis import (
+        bpe_encode,
+        bpe_train,
+        feature_hash,
+    )
 
-    eng = Engine(spark)
     g = spark.createDataFrame([(1, 2), (2, 3), (1, 3)], "u long, v long")
-    assert eng.kcore(g, k=2).count() == 3
+    assert kcore(g, k=2).count() == 3
     seed = spark.createDataFrame([(1,)], "node long")
     gw = spark.createDataFrame([(1, 2, 4)], "u long, v long, w long")
-    assert eng.sssp_weighted(gw, seed, max_hops=2).count() == 2
+    assert sssp_weighted(gw, seed, max_hops=2).count() == 2
     docs = spark.createDataFrame([(1, "ab ab")], "doc_id long, text string")
-    m = eng.bpe_train(docs, rounds=1)
+    m = bpe_train(docs, rounds=1)
     assert m.count() == 1
-    assert eng.bpe_encode(docs, m).count() == 1
-    assert eng.feature_hash(docs, n_features=4).count() >= 1
+    assert bpe_encode(docs, m).count() == 1
+    assert feature_hash(docs, n_features=4).count() >= 1
     snap = spark.createDataFrame([(1, "a")], "k long, v string")
     ch = spark.createDataFrame(
         [(1, None, 1, "delete")], "k long, v string, version int, op string"
     )
-    assert eng.cdc_apply(snap, ch, "k").count() == 0
+    assert cdc_apply(snap, ch, "k").count() == 0
     iv = spark.createDataFrame([("u", 0, 10)], "k string, lo long, hi long")
-    assert eng.interval_overlap_join(iv, iv, "k").count() == 1
-    assert eng.golden_record(snap, "k", {"v": "mode"}).count() == 1
-    assert eng.hits_bipartite(g.limit(1), iterations=1).count() == 2
+    assert interval_overlap_join(iv, iv, "k").count() == 1
+    assert golden_record(snap, "k", {"v": "mode"}).count() == 1
+    assert hits_bipartite(g.limit(1), iterations=1).count() == 2
     base = spark.createDataFrame([(1, 1, None)],
                                  "k long, n long, total decimal(18,6)")
     feed = spark.createDataFrame([(1, 2.0, "insert")],
                                  "k long, v double, op string")
-    assert eng.retract_aggregate(base, feed, "k", "v").count() == 1
+    assert retract_aggregate(base, feed, "k", "v").count() == 1
     two = spark.createDataFrame(
         [(1, "ab ab"), (2, "cd cd")], "doc_id long, text string"
     )
-    assert eng.source_overlap_matrix(
+    assert source_overlap_matrix(
         two.withColumn("src", two.doc_id % 2), "src", "text", num_hashes=4
     ).count() == 1
-    assert eng.near_dup_against_history(
+    assert near_dup_against_history(
         docs, docs.select((docs.doc_id + 10).alias("doc_id"), "text"),
         "text", "doc_id", threshold=0.1,
     ).count() >= 0

@@ -105,11 +105,18 @@ def test_xlsx_row_gaps_preserved(spark):
 
 
 def test_engine_facade_end_to_end(spark, tmp_path):
-    """The reference workflow through the facade: messy read -> clean ->
-    spine -> harmonize -> catalog/SQL."""
+    """The reference workflow: messy read and catalog/SQL through the
+    Engine, then clean -> spine -> harmonize with the operator functions."""
     from pyspark.sql import functions as F
 
     from gene_level_metadata_pipeline_spark.engine import Engine
+    from gene_level_metadata_pipeline_spark.operators.harmonize import (
+        harmonize,
+        spine,
+    )
+    from gene_level_metadata_pipeline_spark.operators.reshape import (
+        separate_rows,
+    )
 
     eng = Engine(spark)
     p = tmp_path / "hgnc.tsv"
@@ -120,15 +127,15 @@ def test_engine_facade_end_to_end(spark, tmp_path):
     eng.put("genes", genes)
     assert eng.sql("SELECT count(*) AS n FROM genes").collect()[0].n == 3
 
-    spn = eng.spine(genes, "symbol")
-    cleaned = eng.separate_rows(
+    spn = spine(genes, "symbol")
+    cleaned = separate_rows(
         genes.withColumn(
             "prev_symbol", F.when(F.col("prev_symbol") == "", None)
             .otherwise(F.col("prev_symbol"))
         ),
         "prev_symbol", r"\|",
     )
-    out = eng.harmonize(spn, cleaned, "symbol")
+    out = harmonize(spn, cleaned, "symbol")
     rows = {(r.symbol, r.prev_symbol) for r in out.collect()}
     assert rows == {("G1", "OLD1"), ("G1", "OLD2"), ("G2", None)}
 
@@ -472,6 +479,60 @@ def test_read_delim_reparse_stays_in_jvm(spark, tmp_path):
         assert df.first()[0] == 1
 
 
+def test_read_delim_multiline_rejects_line_reparse(spark, tmp_path):
+    """multiline quoted records cannot go through the line re-parse:
+    skip>0 or sep=None with multiline raises before any read."""
+    import pytest
+
+    from gene_level_metadata_pipeline_spark.sources.readers import read_delim
+
+    p = tmp_path / "ml.csv"
+    p.write_text('a,b\n1,"x\ny"\n')
+    with pytest.raises(ValueError, match="multiline"):
+        read_delim(spark, str(p), sep=",", skip=1, multiline=True)
+    with pytest.raises(ValueError, match="multiline"):
+        read_delim(spark, str(p), sep=None, multiline=True)
+    df = read_delim(spark, str(p), sep=",", multiline=True)
+    assert [tuple(r) for r in df.collect()] == [(1, "x\ny")]
+
+
+def test_read_delim_zip_extracts_once(spark, tmp_path, monkeypatch):
+    """Repeated reads of one unchanged .zip reuse a single extraction
+    instead of leaving a fresh copy behind per read."""
+    import zipfile
+
+    from gene_level_metadata_pipeline_spark.sources.readers import read_delim
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    z = tmp_path / "genes.zip"
+    with zipfile.ZipFile(z, "w") as zf:
+        zf.writestr("genes.tsv", "symbol\tn\nG1\t1\nG2\t2\n")
+    first = read_delim(spark, str(z)).collect()
+    second = read_delim(spark, str(z)).collect()
+    assert [tuple(r) for r in first] == [("G1", 1), ("G2", 2)]
+    assert second == first
+    extracted = list((tmp_path / "tmp").glob("spark_graft_unzip_*"))
+    assert len(extracted) == 1
+    assert [p.name for p in extracted[0].iterdir()] == ["genes.tsv"]
+
+
+def test_fetch_to_staging_round_trip(tmp_path):
+    """A staged fetch copies the source bytes unchanged (file:// URL)."""
+    from gene_level_metadata_pipeline_spark.sources.readers import (
+        fetch_to_staging,
+    )
+
+    src = tmp_path / "src" / "constraint.txt.gz"
+    src.parent.mkdir()
+    payload = bytes(range(256)) * 4096  # 1 MiB, several read chunks
+    src.write_bytes(payload)
+    dest = fetch_to_staging(src.as_uri(), str(tmp_path / "stage"))
+    assert dest == str(tmp_path / "stage" / "constraint.txt.gz")
+    with open(dest, "rb") as f:
+        assert f.read() == payload
+
+
 def _xlsx_with_sheet(tmp_path, rows_xml: str) -> str:
     """The fixture workbook with its first sheet replaced by ``rows_xml``."""
     import zipfile
@@ -574,11 +635,15 @@ def test_pipeline_config_env_and_masking(monkeypatch):
 
 
 def test_engine_facade_curation_path(spark):
-    """The curation workflow through the facade: near-dup pairs ->
-    canonical representative per cluster."""
-    from gene_level_metadata_pipeline_spark.engine import Engine
+    """The curation workflow: near-dup pairs -> canonical representative
+    per cluster."""
+    from gene_level_metadata_pipeline_spark.operators.dedup import (
+        near_dup_pairs,
+    )
+    from gene_level_metadata_pipeline_spark.operators.graph import (
+        canonicalize_duplicates,
+    )
 
-    eng = Engine(spark)
     docs = spark.createDataFrame(
         [
             (1, "the quick brown fox jumps over the lazy dog tonight"),
@@ -587,11 +652,11 @@ def test_engine_facade_curation_path(spark):
         ],
         "doc_id bigint, text string",
     )
-    pairs = eng.near_dup_pairs(docs, "text", "doc_id", threshold=0.3)
+    pairs = near_dup_pairs(docs, "text", "doc_id", threshold=0.3)
     assert {(r.doc_a, r.doc_b) for r in pairs.collect()} == {(1, 2)}
     canon = {
         (r.doc_id, r.canonical_id)
-        for r in eng.canonicalize_duplicates(docs, pairs).collect()
+        for r in canonicalize_duplicates(docs, pairs).collect()
     }
     assert canon == {(1, 1), (2, 1), (3, 3)}
 
