@@ -26,7 +26,6 @@ __all__ = [
     "extract_first",
     "extract_all_joined",
     "strip_version_suffix",
-    "strip_prefix",
     "recode",
     "round_r",
     "nullify",
@@ -61,12 +60,6 @@ def strip_version_suffix(col: Column | str) -> Column:
     """Drop a trailing ``.NN`` version from an ID (X2, ``TW:60``, ``TM:8``)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_replace(c, r"\.[0-9]+$", "")
-
-
-def strip_prefix(col: Column | str, prefix_regex: str) -> Column:
-    """Anchored prefix strip, e.g. ``^9606\\.`` (X1, ``T:175-176``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, f"^{prefix_regex}", "")
 
 
 def recode(col: Column | str, mapping: Mapping, default=None) -> Column:

@@ -1437,7 +1437,6 @@ def set_similarity_join(
     token_col: str = "w",
     threshold_num: int = 1,
     threshold_den: int = 2,
-    materialize_tokens: bool = True,
 ) -> DataFrame:
     """EXACT Jaccard-threshold self-join with PREFIX FILTERING (the
     PPJoin family, Chaudhuri/Xiao 2006-2011) — the third point in the
@@ -1497,17 +1496,10 @@ def set_similarity_join(
     # thin (id, tok) frame once on first use and lets every consumer
     # read the materialized blocks (guide §1.2 step 1: remove repeated
     # passes before tuning per-task work). Results are unchanged — only
-    # the number of times the explode runs. ``materialize_tokens=False``
-    # opts OUT for callers whose token table is too small to amortize a
-    # materialization job (r11: dedup_threshold_curve's deterministic
-    # 1-in-10 sample — ~500 docs at sf0.1 — paid checkpoint overhead
-    # for subtrees that re-expand in microseconds); results identical
-    # either way, only plan shape and scheduling differ.
+    # the number of times the explode runs.
     t = tokens.select(
         F.col(id_col).alias("id"), F.col(token_col).alias("tok")
-    ).distinct()
-    if materialize_tokens:
-        t = t.transform(_materialize)
+    ).distinct().transform(_materialize)
     sizes = t.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     dfreq = t.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     ranked = (

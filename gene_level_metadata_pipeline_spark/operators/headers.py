@@ -88,7 +88,6 @@ __all__ = [
     "reorder_first",
     "fix_shifted_header",
     "promote_first_row_to_header",
-    "drop_first_rows",
     "with_row_id",
 ]
 
@@ -157,11 +156,3 @@ def promote_first_row_to_header(df: DataFrame) -> DataFrame:
     names = [str(first[c]) for c in d.columns if c != ROW_ID]
     rest = d.where(F.col(ROW_ID) > first[ROW_ID]).drop(ROW_ID)
     return rest.toDF(*names)
-
-
-def drop_first_rows(df: DataFrame, n: int) -> DataFrame:
-    """``slice(-(1:n))`` — drop the first ``n`` file-order rows (O4)."""
-    d = df if ROW_ID in df.columns else with_row_id(df)
-    ids = [r[0] for r in d.select(ROW_ID).orderBy(ROW_ID).limit(n).collect()]
-    cutoff = max(ids) if ids else -1
-    return d.where(F.col(ROW_ID) > cutoff).drop(ROW_ID)

@@ -10,9 +10,8 @@ distributed, (c) broadcast-strategy awareness for small dimensions.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-__all__ = ["natural_join", "semi_join", "anti_join", "full_join", "id_map_join"]
+__all__ = ["natural_join", "semi_join", "anti_join", "full_join"]
 
 
 def natural_join(left: DataFrame, right: DataFrame, how: str = "left") -> DataFrame:
@@ -47,10 +46,3 @@ def full_join(left: DataFrame, right: DataFrame, key: str | list[str]) -> DataFr
     """Full outer join (J5: ``I:157``, ``TW:43-44``, ``TM:65-66``)."""
     keys = [key] if isinstance(key, str) else list(key)
     return left.join(right, on=keys, how="full_outer")
-
-
-def id_map_join(df: DataFrame, idmap: DataFrame, key: str | list[str]) -> DataFrame:
-    """ID-mapping inner join with unmapped rows removed — STRINGdb ``$map``
-    semantics (J7: ``I:72``). The map is a small dimension → broadcast."""
-    keys = [key] if isinstance(key, str) else list(key)
-    return df.join(F.broadcast(idmap), on=keys, how="inner")

@@ -5,8 +5,9 @@ that column and none on any other. Interleaving the bits of two (or more)
 key columns into a Z-value and range-partitioning on it gives every file a
 narrow min/max envelope on EVERY interleaved dimension — the standard
 layout for fact tables queried by several independent predicates
-(Delta/Iceberg OPTIMIZE ZORDER does exactly this; here it is plain column
-arithmetic + repartitionByRange, no table format required).
+(Delta/Iceberg OPTIMIZE ZORDER does exactly this; here the Z-value is a
+plain column a caller can ``repartitionByRange`` on, no table format
+required).
 
 The Z-value is pure integer bit arithmetic — expressible identically in
 any SQL engine, so layout decisions are oracle-checkable.
@@ -14,10 +15,10 @@ any SQL engine, so layout decisions are oracle-checkable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["zorder_value", "zorder_layout"]
+__all__ = ["zorder_value"]
 
 
 def zorder_value(cols: list[Column | str], bits: int = 8) -> Column:
@@ -36,13 +37,3 @@ def zorder_value(cols: list[Column | str], bits: int = 8) -> Column:
             bit = F.floor(masked / (1 << i)) % 2
             z = z + bit * F.lit(1 << (i * ncols + j)).cast("long")
     return z
-
-
-def zorder_layout(
-    df: DataFrame, cols: list[str], bits: int = 8, num_files: int = 32
-) -> DataFrame:
-    """Range-partition ``df`` by its Z-value into ``num_files`` output
-    slices (write each partition as one file for min/max pruning on all
-    of ``cols``). Returns the frame with a ``_zvalue`` column, ranged."""
-    z = zorder_value(cols, bits).alias("_zvalue")
-    return df.select("*", z).repartitionByRange(num_files, F.col("_zvalue"))

@@ -370,16 +370,6 @@ def _score_cells(
     )
 
 
-def _argmax_cid(
-    vectors: DataFrame, centroids: DataFrame, id_name: str, vec_name: str
-) -> DataFrame:
-    """Nearest-centroid id per vector id (see :func:`_score_cells` for
-    the zero-shuffle argmax contract). Returns (id, cell)."""
-    return _score_cells(vectors, centroids, vec_name).select(
-        F.col(id_name), F.col("cell")
-    )
-
-
 def kmeans_centroids(
     vectors: DataFrame,
     k: int = 8,

@@ -17,7 +17,6 @@ from gene_level_metadata_pipeline_spark.materialize import (
 __all__ = [
     "STOPWORDS",
     "bpe_train",
-    "bpe_train_batched",
     "bpe_encode",
     "feature_hash",
     "lang_scores",
@@ -1114,7 +1113,7 @@ _BPE_SEP = "\x1f"
 def _bpe_wrapped_words(docs: DataFrame, text_col: str, max_word_len: int):
     """Word-frequency table in the wrapped-string symbol representation
     (every symbol delimited by unit separators on both sides) — the
-    shared starting state of :func:`bpe_train` / :func:`bpe_train_batched`.
+    starting state of :func:`bpe_train`.
     Eagerly checkpointed: vocabulary-sized, re-read every round."""
     sep = _BPE_SEP
     return (
@@ -1136,8 +1135,8 @@ def _bpe_wrapped_words(docs: DataFrame, text_col: str, max_word_len: int):
 
 def _bpe_pair_counts(words: DataFrame) -> DataFrame:
     """Adjacent-symbol pair counts over the wrapped word table, in the
-    canonical (cnt DESC, a, b) argmax order — the per-round aggregation
-    both trainers share. All built-ins: split + slice/transform lambdas,
+    canonical (cnt DESC, a, b) argmax order — the per-job aggregation of
+    :func:`bpe_train`. All built-ins: split + slice/transform lambdas,
     no UDF."""
     sep = _BPE_SEP
     syms = words.withColumn(
@@ -1164,12 +1163,14 @@ def bpe_train(
     text_col: str = "text",
     rounds: int = 4,
     max_word_len: int = 20,
+    batch: int = 1,
 ) -> DataFrame:
     """Byte-pair-encoding merge training — the tokenizer-training core of
     an LLM data pipeline (Sennrich et al. 2016): start from characters,
     repeatedly merge the corpus-wide most frequent adjacent symbol pair.
     Returns the learned merge table (round, sym_a, sym_b, pair_count),
-    one row per merge, exact bigint counts.
+    one row per merge, exact bigint counts; ``round`` is the global
+    1-based merge index.
 
     Word model: lowercase ``[a-z]+`` tokens (length <= ``max_word_len``),
     merges stay word-internal (no end-of-word marker — documented
@@ -1187,80 +1188,36 @@ def bpe_train(
     anywhere: pair extraction is split + slice/transform lambdas, the
     merge is replace — all whole-stage-codegen expressions.
 
+    Batching: each of the ``rounds`` jobs runs ONE pair-count pass and
+    selects up to ``batch`` merges greedily in the canonical order from
+    the top ``batch * 8`` candidates, skipping any pair that TOUCHES an
+    earlier selection in the same job — shares a symbol with it, or
+    names its merged output symbol. Disjointness makes the batch
+    order-independent and keeps every recorded ``pair_count`` exact: a
+    merge (a, b) only rewrites fully-delimited ``a``/``b`` symbols, so it
+    cannot create, destroy, or overlap an occurrence of a
+    symbol-disjoint pair (c, d). The selected merges apply as one
+    chained ``replace()`` projection. ``batch=1`` is strictly sequential
+    BPE (``rounds`` merges). For ``batch > 1`` the recurrence stays
+    deterministic but may diverge from sequential BPE in one documented
+    case: a pair CREATED by an earlier merge in the batch (count measured
+    only next job) can outrank a later batch member that sequential
+    training would have deferred — the standard batched-BPE trade; the
+    table is still a valid greedy merge order for :func:`bpe_encode`.
+
     Scale: the shuffled unit is the WORD-FREQUENCY table (vocabulary),
     which grows sublinearly with corpus size (Heaps' law — the
     vocab_growth_curve diagnostic measures exactly this), not the
-    corpus; each round is one groupBy over vocab-many rows plus a
-    driver-side 1-row argmax collect (a global top-1 necessarily
-    reduces to the driver; the header-peek discipline) and a narrow
-    map for the merge. Rounds eagerly localCheckpoint: each round's
+    corpus; each job is one groupBy over vocab-many rows plus a bounded
+    driver-side candidate collect (``batch * 8`` rows — a global top-k
+    necessarily reduces to the driver; the header-peek discipline) and a
+    narrow map for the merges, so a vocabulary of M merges costs
+    M / ``batch`` jobs (measured: ~0.1 s of driver round-trip per job at
+    sf0.01; PLANS.md round 6). Jobs eagerly localCheckpoint: each job's
     collect would otherwise replay the whole merge lineage.
     """
-    sep = _BPE_SEP
-    spark = docs.sparkSession
-    words = _bpe_wrapped_words(docs, text_col, max_word_len)
-    merges: list[tuple[int, str, str, int]] = []
-    for r in range(1, rounds + 1):
-        top = _bpe_pair_counts(words).limit(1).collect()
-        if not top:
-            break
-        a, b, cnt = top[0]["a"], top[0]["b"], top[0]["cnt"]
-        merges.append((r, a, b, int(cnt)))
-        words = words.select(
-            F.replace(
-                F.col("s"),
-                F.lit(sep + a + sep + sep + b + sep),
-                F.lit(sep + a + b + sep),
-            ).alias("s"),
-            "freq",
-        ).localCheckpoint(eager=True)
-    return spark.createDataFrame(
-        merges, "round int, sym_a string, sym_b string, pair_count bigint"
-    )
-
-
-def bpe_train_batched(
-    docs: DataFrame,
-    text_col: str = "text",
-    rounds: int = 4,
-    batch: int = 8,
-    max_word_len: int = 20,
-) -> DataFrame:
-    """Batched BPE merge training — the classic scale optimization for
-    :func:`bpe_train`'s one-Spark-job-per-merge cost (measured: ~0.1 s of
-    driver round-trip per merge at sf0.01, so a production 32k-merge
-    vocabulary is ~50 min of sequential jobs; PLANS.md round 6).
-
-    Per job: ONE pair-count pass, then up to ``batch`` merges selected
-    greedily in the canonical (cnt DESC, a, b) order from the top
-    ``batch * 8`` candidates, skipping any pair that TOUCHES an
-    earlier selection in the same batch — shares a symbol with it, or
-    names its merged output symbol. Disjointness makes the batch
-    order-independent and keeps every recorded ``pair_count`` exact:
-    a merge (a, b) only rewrites fully-delimited ``a``/``b`` symbols,
-    so it cannot create, destroy, or overlap an occurrence of a
-    symbol-disjoint pair (c, d). All selected merges then apply as one
-    chained built-in ``replace()`` projection — one narrow job instead
-    of ``batch`` jobs.
-
-    Semantics: ``batch=1`` replays :func:`bpe_train` EXACTLY (same
-    argmax, same tie-break, same application). For ``batch > 1`` the
-    recurrence is deterministic but may diverge from strictly
-    sequential BPE in one documented case: a pair CREATED by an
-    earlier merge in the batch (count measured only next job) can
-    outrank a later batch member that sequential training would have
-    deferred. This is the standard batched-BPE trade; the merge table
-    it produces is a valid greedy merge order and feeds
-    :func:`bpe_encode` unchanged (``round`` = global 1-based merge
-    index).
-
-    Scale: rounds-axis cost drops from O(merges) jobs to
-    O(merges / batch) jobs; the per-job candidate collect is bounded
-    (``batch * 8`` rows — the header-peek discipline), and the shuffled
-    unit stays the vocabulary-sized word-frequency table.
-    """
     if batch < 1:
-        raise ValueError(f"bpe_train_batched: batch={batch} must be >= 1")
+        raise ValueError(f"bpe_train: batch={batch} must be >= 1")
     sep = _BPE_SEP
     spark = docs.sparkSession
     words = _bpe_wrapped_words(docs, text_col, max_word_len)

@@ -12,12 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["Catalog", "load_testdata"]
-
-TESTDATA_TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+__all__ = ["Catalog"]
 
 
 class Catalog:
@@ -42,11 +37,3 @@ class Catalog:
 
     def names(self) -> list[str]:
         return sorted(self._tables)
-
-
-def load_testdata(spark: SparkSession, sf_dir: str) -> Catalog:
-    """Register every driver parquet table under its bare name."""
-    cat = Catalog(spark)
-    for t in TESTDATA_TABLES:
-        cat.put(t, spark.read.parquet(f"{sf_dir}/{t}.parquet"))
-    return cat

@@ -3617,7 +3617,7 @@ def q_tokenizer_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_batched_oracle(rounds: int, batch: int) -> str:
-    """Unrolled BATCHED BPE recurrence (textanalysis.bpe_train_batched):
+    """Unrolled BATCHED BPE recurrence (textanalysis.bpe_train, batch > 1):
     per job, pair counts once, then ``batch`` greedy symbol-disjoint
     selections (each skips candidates touching any earlier pick's a, b,
     or merged a||b) from the top ``batch*8`` candidates, then ONE chained
@@ -3681,7 +3681,7 @@ def _bpe_batched_oracle(rounds: int, batch: int) -> str:
 
 @_register("bpe_train_batched", oracle=_bpe_batched_oracle(2, 2))
 def q_bpe_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched BPE merge training (textanalysis.bpe_train_batched): the
+    """Batched BPE merge training (textanalysis.bpe_train, batch=2): the
     rounds-axis scale path for bpe_train_merges — per Spark job, ONE
     pair-count pass selects up to `batch` symbol-disjoint merges
     greedily in the canonical (cnt DESC, a, b) order, and the whole
@@ -3693,12 +3693,10 @@ def q_bpe_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     disjoint selection, chained replace — so the learned merge table
     hash-matches exactly. Gate runs 2 jobs x batch 2 = 4 merges."""
     from gene_level_metadata_pipeline_spark.operators.textanalysis import (
-        bpe_train_batched,
+        bpe_train,
     )
 
-    return bpe_train_batched(
-        _t(spark, sf_dir, "documents"), rounds=2, batch=2
-    )
+    return bpe_train(_t(spark, sf_dir, "documents"), rounds=2, batch=2)
 
 
 def _lr_oracle(rounds: int = 3, n: int = 16, lr: str = "0.001",
@@ -4146,14 +4144,9 @@ def q_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % 10 == 0
     )
     sh = word_shingles(docs, text_col="text", id_col="doc_id", n=1)
-    # materialize_tokens=False (r11): the 1-in-10 sample is ~500 docs at
-    # sf0.1 — far too small to amortize a checkpoint-materialization
-    # job; let Catalyst re-expand the tiny subtree per consumer instead
-    # (A/B in OPTIMIZATION_r11.md; corpus-sized callers keep the
-    # default materialization).
     pairs = set_similarity_join(
         sh, id_col="doc_id", token_col="shingle",
-        threshold_num=1, threshold_den=2, materialize_tokens=False,
+        threshold_num=1, threshold_den=2,
     )
     bucketed = pairs.groupBy(
         (F.col("jac_e6") - F.pmod("jac_e6", F.lit(100000)))

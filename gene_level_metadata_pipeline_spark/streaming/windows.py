@@ -1,16 +1,41 @@
 """Structured Streaming slices over the events table (SURVEY.md §2.12).
 
 The reference is strictly batch; streaming is the engine's extension
-surface. Design: the same logical aggregation as the batch
-``events_hourly`` query, expressed as readStream → tumbling window →
-memory sink, run to completion with an availableNow trigger. At 100 TB the
-identical plan runs continuously against an object-store drop zone with a
-watermark bounding state.
+surface. Every entry point here does one job: stage a bounded input, run
+one streaming query to completion with an availableNow trigger, and
+return the result as a batch DataFrame the oracle can check. At 100 TB
+the identical plans run continuously against an object-store drop zone
+with watermarks bounding state.
+
+That job is written once, in private helpers:
+
+* ``_pinned_confs`` sets confs for one query and restores each caller
+  value afterwards (or unsets it if the caller had not set it);
+* ``_run_to_end`` starts a writer with availableNow under pinned shuffle
+  partitions and waits for it — the ``foreachBatch`` entry points call
+  it directly;
+* ``_drain`` runs a query into a memory sink through ``_run_to_end`` and
+  returns its rows as a batch frame, dropping the sink view even when
+  the query fails;
+* ``_events_source`` is the events parquet as a stream (plus its static
+  twin);
+* ``_stage_jsonl`` writes the deterministic multi-batch demos' inputs
+  with pinned modification times and returns the stream over them;
+* ``_demo_dir`` owns a demo's working directory: a caller-supplied one
+  is kept (the replay tests restart from it), a temporary one is removed
+  once the rows are collected.
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
+import os
+import re
+import shutil
+import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,24 +55,61 @@ __all__ = [
 ]
 
 
-import contextlib
-
-
 @contextlib.contextmanager
-def _pinned_shuffle(spark: SparkSession, n: int = 16):
-    """Pin shuffle/state partitions for one streaming query.
-
-    Stateful operators allocate one state-store task per shuffle
-    partition per micro-batch; on a caller session with the 200 default,
-    a kilobyte-scale demo stream pays 200 × operators × batches empty
-    tasks. The count is bound at ``start()``, so restoring the caller's
-    conf afterwards is safe."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+def _pinned_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` for one streaming query, then restore each caller
+    value — or unset the key if the caller had not set it. A stream's
+    confs are bound at ``start()``, so restoring afterwards is safe."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _run_to_end(spark: SparkSession, writer, shuffle: int) -> None:
+    """Start ``writer`` with an availableNow trigger (process every input
+    present at start, then stop) and wait for it; a failed query
+    re-raises here.
+
+    Shuffle/state partitions are pinned to ``shuffle``: stateful
+    operators allocate one state-store task per shuffle partition per
+    micro-batch, so on a caller session with the 200 default a
+    kilobyte-scale demo stream pays 200 × operators × batches empty
+    tasks."""
+    with _pinned_confs(spark, {"spark.sql.shuffle.partitions": str(shuffle)}):
+        writer.trigger(availableNow=True).start().awaitTermination()
+
+
+def _drain(
+    spark: SparkSession,
+    df: DataFrame,
+    mode: str,
+    shuffle: int = 16,
+    finish: Callable[[DataFrame], DataFrame] = lambda t: t,
+) -> DataFrame:
+    """Run the streaming ``df`` into a memory sink in output ``mode`` to
+    completion and return ``finish(sink table)`` as a batch frame. The
+    rows are collected before the sink view is dropped, and the view is
+    dropped in a ``finally``: a query that fails re-raises and leaves no
+    ``stream_*`` view behind."""
+    name = f"stream_{uuid.uuid4().hex[:8]}"
+    try:
+        _run_to_end(
+            spark,
+            df.writeStream.format("memory").queryName(name).outputMode(mode),
+            shuffle,
+        )
+        out = finish(spark.table(name))
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def _events_confs(spark: SparkSession) -> None:
@@ -58,6 +120,71 @@ def _events_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def _events_source(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(static events frame, the same file as a stream). The stream
+    reads ``sf_dir`` filtered to ``events.parquet``, with the static
+    frame's schema (a file stream cannot infer one)."""
+    _events_confs(spark)
+    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+    src = (
+        spark.readStream.schema(static.schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
+    return static, src
+
+
+def _stage_jsonl(
+    spark: SparkSession, d: str, schema: str, batches: list[list[tuple]]
+) -> DataFrame:
+    """Stage a deterministic multi-batch demo in ``d`` and return the
+    stream over it.
+
+    Batch i (1-based) is written once to ``batch_{i}.json``, one JSON
+    object per row keyed by the field names of the DDL ``schema``, and
+    its mtime pinned to 1_700_000_000 + 600·(i−1): FileStreamSource
+    orders files by modification time, not name, and
+    ``maxFilesPerTrigger=1`` makes each file one micro-batch. A file that
+    already exists (a restart over a caller's directory) is not
+    rewritten, only re-pinned."""
+    os.makedirs(d, exist_ok=True)
+    names = [field.split()[0] for field in schema.split(",")]
+    for i, rows in enumerate(batches, 1):
+        path = os.path.join(d, f"batch_{i}.json")
+        if not os.path.exists(path):
+            with open(path, "w") as f:
+                f.writelines(json.dumps(dict(zip(names, r))) + "\n" for r in rows)
+        mtime = 1_700_000_000 + 600 * (i - 1)
+        os.utime(path, (mtime, mtime))
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(d)
+
+
+@contextlib.contextmanager
+def _demo_dir(d: str | None, prefix: str):
+    """A demo's working directory. A caller-supplied ``d`` is created if
+    needed and kept; otherwise a fresh temporary directory is yielded and
+    removed on exit, so the caller must collect its rows inside the
+    ``with``."""
+    if d:
+        os.makedirs(d, exist_ok=True)
+        yield d
+        return
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _versions(d: str, prefix: str) -> list[int]:
+    """Sorted version numbers of the ``{prefix}{n}`` snapshots in ``d``."""
+    return sorted(
+        int(m.group(1))
+        for f in os.listdir(d)
+        if (m := re.fullmatch(rf"{prefix}(\d+)", f))
+    )
+
+
 def hourly_event_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour window counts via an actual streaming query.
 
@@ -66,37 +193,20 @@ def hourly_event_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink, and returns the completed result as a batch DataFrame —
     so the driver can oracle-check a genuinely streaming plan.
     """
-    _events_confs(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    ev = normalize_event_ts(src)
+    _, src = _events_source(spark, sf_dir)
     agg = (
-        ev.groupBy(F.window("ts", "1 hour"), "event_type")
+        normalize_event_ts(src)
+        .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"stream_hourly_{uuid.uuid4().hex[:8]}"
-    with _pinned_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(name).select(
-        F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
-        "event_type",
-        "n",
+    return _drain(
+        spark, agg, "complete",
+        finish=lambda t: t.select(
+            F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
+            "event_type",
+            "n",
+        ),
     )
-    # materialize before the sink table goes stale, then free the sink
-    rows = out.collect()
-    spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, out.schema)
 
 
 _FLUSH_SENTINEL_UID = -(2**40)  # impossible user_id reserved for the punctuation row
@@ -124,10 +234,8 @@ def _stage_with_flush_sentinel(
     and ``createDataFrame`` would reject a null in any field the parquet
     footer declared required.
     """
+    import datetime
     import glob as _glob
-    import os
-    import shutil
-    import tempfile
 
     from pyspark.sql.types import StructField, StructType
 
@@ -144,13 +252,10 @@ def _stage_with_flush_sentinel(
     row["user_id"] = _FLUSH_SENTINEL_UID
     if "event_id" in row:
         row["event_id"] = -1
+    max_ts = static.agg(F.max("ts")).first()[0]
     if ts_type == "bigint":  # raw nanos under nanosAsLong
-        max_ts = static.agg(F.max("ts")).first()[0]
         row["ts"] = int(max_ts) + horizon_s * 1_000_000_000
     else:  # timestamp / timestamp_ntz
-        import datetime
-
-        max_ts = static.agg(F.max("ts")).first()[0]
         row["ts"] = max_ts + datetime.timedelta(seconds=horizon_s)
     stage = tempfile.mkdtemp(prefix="sessionize_flush_")
     os.symlink(
@@ -168,6 +273,10 @@ def _stage_with_flush_sentinel(
     shutil.move(part, os.path.join(stage, "zz_sentinel.parquet"))
     shutil.rmtree(tmp_out, ignore_errors=True)
     return stage
+
+
+def _without_sentinel(t: DataFrame) -> DataFrame:
+    return t.where(F.col("user_id") != F.lit(_FLUSH_SENTINEL_UID))
 
 
 def sessionize_stream(
@@ -193,24 +302,15 @@ def sessionize_stream(
 
     Returns (user_id, session_start_us, session_end_us, n_events).
     """
-    import shutil
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    _events_confs(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+    static, src = _events_source(spark, sf_dir)
     stage_dir = None
     if flush_final:
         # None when events is empty: nothing to flush, no sentinel template
         stage_dir = _stage_with_flush_sentinel(spark, static, sf_dir, gap_minutes)
     if stage_dir is not None:
         src = spark.readStream.schema(static.schema).parquet(stage_dir)
-    else:
-        src = (
-            spark.readStream.schema(static.schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
     ev = normalize_event_ts(src).withWatermark("ts", "1 hour")
 
     gap_us = gap_minutes * 60 * 1_000_000
@@ -260,21 +360,8 @@ def sessionize_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
     try:
-        with _pinned_shuffle(spark):
-            q = (
-                sessions.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        out = spark.table(name).where(F.col("user_id") != F.lit(_FLUSH_SENTINEL_UID))
-        rows = out.collect()
-        spark.catalog.dropTempView(name)
-        return spark.createDataFrame(rows, out.schema)
+        return _drain(spark, sessions, "append", finish=_without_sentinel)
     finally:
         if stage_dir is not None:
             shutil.rmtree(stage_dir, ignore_errors=True)
@@ -301,8 +388,6 @@ def session_window_counts_stream(
 
     Returns (user_id, session_start_us, session_end_us, n, total).
     """
-    import shutil
-
     _events_confs(spark)
     static = spark.read.parquet(f"{sf_dir}/events.parquet")
     stage_dir = _stage_with_flush_sentinel(spark, static, sf_dir, gap_minutes)
@@ -321,30 +406,16 @@ def session_window_counts_stream(
                 .alias("total"),
             )
         )
-        name = f"stream_swin_{uuid.uuid4().hex[:8]}"
-        with _pinned_shuffle(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        out = (
-            spark.table(name)
-            .where(F.col("user_id") != F.lit(_FLUSH_SENTINEL_UID))
-            .select(
+        return _drain(
+            spark, agg, "append",
+            finish=lambda t: _without_sentinel(t).select(
                 "user_id",
                 F.unix_micros("sw.start").alias("session_start_us"),
                 F.unix_micros("sw.end").alias("session_end_us"),
                 "n",
                 "total",
-            )
+            ),
         )
-        rows = out.collect()
-        spark.catalog.dropTempView(name)
-        return spark.createDataFrame(rows, out.schema)
     finally:
         shutil.rmtree(stage_dir, ignore_errors=True)
 
@@ -366,8 +437,7 @@ def asof_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from gene_level_metadata_pipeline_spark.operators.temporal import as_of_join
 
-    _events_confs(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+    static, src = _events_source(spark, sf_dir)
     stat_us = normalize_event_ts(static).select(
         "event_id", "user_id", F.unix_micros("ts").alias("us")
     )
@@ -398,19 +468,10 @@ def asof_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()
         )
 
-    src = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", "events.parquet"
-    ).parquet(sf_dir)
     ev = normalize_event_ts(src).select(
         "event_id", "user_id", F.unix_micros("ts").alias("us")
     )
-    with _pinned_shuffle(spark):
-        q = (
-            ev.writeStream.foreachBatch(enrich)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_to_end(spark, ev.writeStream.foreachBatch(enrich), 16)
     return spark.createDataFrame(
         results, "event_id long, user_id long, us long, tier long"
     )
@@ -434,13 +495,7 @@ def stream_stream_interval_join(
 
     Returns (click_id, purchase_id, user_id, lag_s).
     """
-    _events_confs(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    _, src = _events_source(spark, sf_dir)
     ev = normalize_event_ts(src)
     clicks = (
         ev.where(F.col("event_type") == "click")
@@ -476,20 +531,7 @@ def stream_stream_interval_join(
             F.unix_timestamp("purchase_ts") - F.unix_timestamp("click_ts")
         ).cast("long").alias("lag_s"),
     )
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    with _pinned_shuffle(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(name)
-    rows = out.collect()
-    spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, out.schema)
+    return _drain(spark, joined, "append")
 
 
 def stream_dedup_within_watermark_demo(
@@ -505,7 +547,7 @@ def stream_dedup_within_watermark_demo(
     bounded state for time-bounded dedup — is the only viable exact-dedup
     contract on a 100 TB/day stream.
 
-    Deterministic five-batch demo: k1/k2 arrive in batch 1; batches 2-3
+    Deterministic four-batch demo: k1/k2 arrive in batch 1; batches 2-3
     advance the watermark far past k1's horizon and give the
     (one-batch-delayed) eviction pass time to run; batch 4 re-sends k1,
     which EMITS AGAIN — the expiry observable. A near-duplicate of k2
@@ -513,71 +555,28 @@ def stream_dedup_within_watermark_demo(
 
     Returns every emitted (event_id, k) row.
     """
-    import json
-    import os
-    import tempfile
-
     _events_confs(spark)
-    d = demo_dir or tempfile.mkdtemp(prefix="dedup_wm_demo_")
-    os.makedirs(d, exist_ok=True)
-
-    def write_batch(name: str, rows: list[tuple[str, str, str]], mtime: int) -> None:
-        path = os.path.join(d, name)
-        if not os.path.exists(path):
-            with open(path, "w") as f:
-                for event_id, k, ts in rows:
-                    f.write(json.dumps(
-                        {"event_id": event_id, "k": k, "ts": ts}) + "\n")
-        os.utime(path, (mtime, mtime))
-
-    write_batch("batch_1.json", [
-        ("e1", "k1", "2024-01-01 01:00:00"),
-        ("e2", "k2", "2024-01-01 01:05:00"),
-        ("e2dup", "k2", "2024-01-01 01:06:00"),   # within delay: suppressed
-    ], mtime=1_700_000_000)
-    # far-future row: watermark jumps to 09:50, past k1's 01:10 horizon
-    write_batch("batch_2.json", [
-        ("e3", "k9", "2024-01-01 10:00:00"),
-    ], mtime=1_700_000_600)
-    # filler: eviction runs with the advanced watermark one batch later
-    write_batch("batch_3.json", [
-        ("e4", "k8", "2024-01-01 10:02:00"),
-    ], mtime=1_700_001_200)
-    # k1 again, long after expiry: emits a SECOND time
-    write_batch("batch_4.json", [
-        ("e5", "k1", "2024-01-01 10:03:00"),
-    ], mtime=1_700_001_800)
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = StructType([
-        StructField("event_id", StringType()),
-        StructField("k", StringType()),
-        StructField("ts", StringType()),
-    ])
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(d)
-        .withColumn("ts", F.to_timestamp("ts"))
-        .withWatermark("ts", "10 minutes")
-    )
-    dedup = src.dropDuplicatesWithinWatermark(["k"]).select("event_id", "k")
-    name = f"dedup_wm_{uuid.uuid4().hex[:8]}"
-    with _pinned_shuffle(spark, 8):
-        q = (
-            dedup.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with _demo_dir(demo_dir, "dedup_wm_demo_") as d:
+        src = _stage_jsonl(spark, d, "event_id string, k string, ts string", [
+            [
+                ("e1", "k1", "2024-01-01 01:00:00"),
+                ("e2", "k2", "2024-01-01 01:05:00"),
+                ("e2dup", "k2", "2024-01-01 01:06:00"),  # within delay: suppressed
+            ],
+            # far-future row: watermark jumps to 09:50, past k1's 01:10 horizon
+            [("e3", "k9", "2024-01-01 10:00:00")],
+            # filler: eviction runs with the advanced watermark one batch later
+            [("e4", "k8", "2024-01-01 10:02:00")],
+            # k1 again, long after expiry: emits a SECOND time
+            [("e5", "k1", "2024-01-01 10:03:00")],
+        ])
+        dedup = (
+            src.withColumn("ts", F.to_timestamp("ts"))
+            .withWatermark("ts", "10 minutes")
+            .dropDuplicatesWithinWatermark(["k"])
+            .select("event_id", "k")
         )
-        q.awaitTermination()
-    out = spark.table(name)
-    rows = out.collect()
-    df = spark.createDataFrame(rows, out.schema)
-    spark.catalog.dropTempView(name)
-    return df
+        return _drain(spark, dedup, "append", shuffle=8)
 
 
 def transform_with_state_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -614,8 +613,6 @@ def transform_with_state_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql.types import LongType, StructField, StructType
 
-    _events_confs(spark)
-
     class CountProcessor(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._n = handle.getValueState(
@@ -638,45 +635,18 @@ def transform_with_state_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("user_id", LongType()),
         StructField("n", LongType()),
     ])
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    _, src = _events_source(spark, sf_dir)
     counts = src.select("user_id").groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=CountProcessor(),
         outputStructType=out_schema,
         outputMode="Update",
         timeMode="None",
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    name = f"tws_counts_{uuid.uuid4().hex[:8]}"
-    try:
-        with _pinned_shuffle(spark):
-            q = (
-                counts.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if old_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old_provider)
-    out = spark.table(name)
-    rows = out.collect()
-    df = spark.createDataFrame(rows, out.schema)
-    spark.catalog.dropTempView(name)
-    return df
+    with _pinned_confs(spark, {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    }):
+        return _drain(spark, counts, "update")
 
 
 def late_data_window_counts(spark: SparkSession, gap_dir: str | None = None) -> DataFrame:
@@ -690,75 +660,38 @@ def late_data_window_counts(spark: SparkSession, gap_dir: str | None = None) -> 
     watermarkForLateEvents one batch behind watermarkForEviction —
     SPARK-24588), which is why the late event must arrive two batches
     after the watermark-advancing one to be provably dropped. The emitted
-    hour-1 count is 2, not 3. maxFilesPerTrigger=1 splits the batches,
-    and batch ORDER is pinned via file modification times
-    (FileStreamSource orders by mtime, not name).
+    hour-1 count is 2, not 3.
 
     Returns (hour, n) for every CLOSED window.
     """
-    import json
-    import os
-    import tempfile
-
     _events_confs(spark)
-    d = gap_dir or tempfile.mkdtemp(prefix="late_demo_")
-    os.makedirs(d, exist_ok=True)
-
-    def write_batch(name: str, rows: list[tuple[str, int]], mtime: int) -> None:
-        path = os.path.join(d, name)
-        if not os.path.exists(path):
-            with open(path, "w") as f:
-                for ts, uid in rows:
-                    f.write(json.dumps({"ts": ts, "user_id": uid}) + "\n")
-        os.utime(path, (mtime, mtime))
-
-    write_batch("batch_1.json", [
-        ("2024-01-01 01:10:00", 1), ("2024-01-01 01:20:00", 2),
-        ("2024-01-01 02:15:00", 3),
-        # max event time far ahead: watermark = 09:00 - 2h = 07:00,
-        # so windows 01:00 and 02:00 are closed after this batch
-        ("2024-01-01 09:00:00", 4),
-    ], mtime=1_700_000_000)
-    write_batch("batch_2.json", [
-        ("2024-01-01 09:30:00", 5),   # filler: lets the 07:00 watermark
-    ], mtime=1_700_000_600)           # become the late-event filter
-    write_batch("batch_3.json", [
-        ("2024-01-01 01:40:00", 6),   # LATE: behind the 07:00 watermark
-    ], mtime=1_700_001_200)
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    schema = StructType([
-        StructField("ts", StringType()),
-        StructField("user_id", LongType()),
-    ])
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(d)
-        .withColumn("ts", F.to_timestamp("ts"))
-        .withWatermark("ts", "2 hours")
-    )
-    agg = src.groupBy(F.window("ts", "1 hour")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    name = f"late_demo_{uuid.uuid4().hex[:8]}"
-    with _pinned_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")   # emit each window once, on watermark close
-            .trigger(availableNow=True)
-            .start()
+    with _demo_dir(gap_dir, "late_demo_") as d:
+        src = _stage_jsonl(spark, d, "ts string, user_id long", [
+            [
+                ("2024-01-01 01:10:00", 1), ("2024-01-01 01:20:00", 2),
+                ("2024-01-01 02:15:00", 3),
+                # max event time far ahead: watermark = 09:00 - 2h = 07:00,
+                # so windows 01:00 and 02:00 are closed after this batch
+                ("2024-01-01 09:00:00", 4),
+            ],
+            # filler: lets the 07:00 watermark become the late-event filter
+            [("2024-01-01 09:30:00", 5)],
+            [("2024-01-01 01:40:00", 6)],  # LATE: behind the 07:00 watermark
+        ])
+        agg = (
+            src.withColumn("ts", F.to_timestamp("ts"))
+            .withWatermark("ts", "2 hours")
+            .groupBy(F.window("ts", "1 hour"))
+            .agg(F.count(F.lit(1)).alias("n"))
         )
-        q.awaitTermination()
-    out = spark.table(name).select(
-        F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
-        "n",
-    )
-    rows = out.collect()
-    spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, out.schema)
+        # append: emit each window once, on watermark close
+        return _drain(
+            spark, agg, "append",
+            finish=lambda t: t.select(
+                F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
+                "n",
+            ),
+        )
 
 
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -769,14 +702,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     the memory sink returns the completed result for oracle comparison
     against the equivalent batch join.
     """
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from gene_level_metadata_pipeline_spark.sources.readers import normalize_event_ts
-
-    _events_confs(spark)
-    static_events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    _, src = _events_source(spark, sf_dir)
     dim = (
         spark.read.parquet(f"{sf_dir}/customer.parquet")
         .where(F.col("c_custkey") < 100)
@@ -785,29 +711,12 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_mktsegment").alias("tier"),
         )
     )
-    src = (
-        spark.readStream.schema(static_events.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    ev = normalize_event_ts(src).select(
-        "event_id", "user_id", "event_type"
-    )
+    ev = normalize_event_ts(src).select("event_id", "user_id", "event_type")
     joined = ev.join(F.broadcast(dim), "user_id")
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        spark, joined, "append",
+        finish=lambda t: t.select("event_id", "user_id", "event_type", "tier"),
     )
-    q.awaitTermination()
-    out = spark.table(name).select("event_id", "user_id", "event_type", "tier")
-    rows = out.collect()
-    df = spark.createDataFrame(rows, out.schema)
-    spark.catalog.dropTempView(name)
-    return df
 
 
 def stream_outer_join_demo(spark: SparkSession, demo_dir: str | None = None) -> DataFrame:
@@ -821,113 +730,72 @@ def stream_outer_join_demo(spark: SparkSession, demo_dir: str | None = None) -> 
     is the one join where result completeness is governed by watermark
     progress, not input exhaustion.
 
-    Deterministic three-batch demo (same mtime-pinned mechanics as
-    late_data_window_counts): batch 1 carries clicks c1/c2 and a purchase
-    matching only c1; batch 2 advances both sides' watermarks far past
-    c2's 30-minute match window; batch 3 triggers the (one-batch-delayed)
-    eviction pass that emits c2 with NULLs. The far-future batch-2/3 rows
-    themselves stay inside their own match windows at query end and are
-    provably NOT emitted — stopping the stream does not flush state.
+    Deterministic three-batch demo: batch 1 carries clicks c1/c2 and a
+    purchase matching only c1; batch 2 advances both sides' watermarks
+    far past c2's 30-minute match window; batch 3 triggers the
+    (one-batch-delayed) eviction pass that emits c2 with NULLs. The
+    far-future batch-2/3 rows themselves stay inside their own match
+    windows at query end and are provably NOT emitted — stopping the
+    stream does not flush state.
 
     Returns (click_id, purchase_id, user_id, lag_s): one matched row and
     one NULL-padded row.
     """
-    import json
-    import os
-    import tempfile
-
     _events_confs(spark)
-    d = demo_dir or tempfile.mkdtemp(prefix="outer_join_demo_")
-    os.makedirs(d, exist_ok=True)
-
-    def write_batch(name: str, rows: list[tuple[str, str, int, str]], mtime: int) -> None:
-        path = os.path.join(d, name)
-        if not os.path.exists(path):
-            with open(path, "w") as f:
-                for kind, event_id, uid, ts in rows:
-                    f.write(json.dumps(
-                        {"kind": kind, "event_id": event_id,
-                         "user_id": uid, "ts": ts}) + "\n")
-        os.utime(path, (mtime, mtime))
-
-    write_batch("batch_1.json", [
-        ("click", "c1", 1, "2024-01-01 01:00:00"),
-        ("click", "c2", 2, "2024-01-01 01:05:00"),
-        ("purchase", "p1", 1, "2024-01-01 01:10:00"),
-    ], mtime=1_700_000_000)
-    # far-future rows on BOTH sides (different users — no match): each
-    # side's watermark jumps to 09:50, far past c2's 01:35 match horizon
-    write_batch("batch_2.json", [
-        ("click", "c8", 8, "2024-01-01 10:00:00"),
-        ("purchase", "p9", 9, "2024-01-01 10:00:00"),
-    ], mtime=1_700_000_600)
-    # filler batch: eviction (and its NULL emission) runs one batch
-    # behind the watermark advance, same lag as SPARK-24588's late filter
-    write_batch("batch_3.json", [
-        ("purchase", "p7", 7, "2024-01-01 10:05:00"),
-    ], mtime=1_700_001_200)
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    schema = StructType([
-        StructField("kind", StringType()),
-        StructField("event_id", StringType()),
-        StructField("user_id", LongType()),
-        StructField("ts", StringType()),
-    ])
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(d)
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    clicks = (
-        src.where(F.col("kind") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
+    with _demo_dir(demo_dir, "outer_join_demo_") as d:
+        src = _stage_jsonl(
+            spark, d, "kind string, event_id string, user_id long, ts string", [
+                [
+                    ("click", "c1", 1, "2024-01-01 01:00:00"),
+                    ("click", "c2", 2, "2024-01-01 01:05:00"),
+                    ("purchase", "p1", 1, "2024-01-01 01:10:00"),
+                ],
+                # far-future rows on BOTH sides (different users — no match):
+                # each side's watermark jumps to 09:50, far past c2's 01:35
+                # match horizon
+                [
+                    ("click", "c8", 8, "2024-01-01 10:00:00"),
+                    ("purchase", "p9", 9, "2024-01-01 10:00:00"),
+                ],
+                # filler batch: eviction (and its NULL emission) runs one
+                # batch behind the watermark advance, same lag as
+                # SPARK-24588's late filter
+                [("purchase", "p7", 7, "2024-01-01 10:05:00")],
+            ],
+        ).withColumn("ts", F.to_timestamp("ts"))
+        clicks = (
+            src.where(F.col("kind") == "click")
+            .select(
+                F.col("event_id").alias("click_id"),
+                "user_id",
+                F.col("ts").alias("click_ts"),
+            )
+            .withWatermark("click_ts", "10 minutes")
+        )
+        purchases = (
+            src.where(F.col("kind") == "purchase")
+            .select(
+                F.col("event_id").alias("purchase_id"),
+                F.col("user_id").alias("p_user_id"),
+                F.col("ts").alias("purchase_ts"),
+            )
+            .withWatermark("purchase_ts", "10 minutes")
+        )
+        joined = clicks.join(
+            purchases,
+            (F.col("user_id") == F.col("p_user_id"))
+            & (F.col("purchase_ts") >= F.col("click_ts"))
+            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
+            "leftOuter",
+        ).select(
+            "click_id",
+            "purchase_id",
             "user_id",
-            F.col("ts").alias("click_ts"),
+            (
+                F.unix_timestamp("purchase_ts") - F.unix_timestamp("click_ts")
+            ).cast("long").alias("lag_s"),
         )
-        .withWatermark("click_ts", "10 minutes")
-    )
-    purchases = (
-        src.where(F.col("kind") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "10 minutes")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "leftOuter",
-    ).select(
-        "click_id",
-        "purchase_id",
-        "user_id",
-        (
-            F.unix_timestamp("purchase_ts") - F.unix_timestamp("click_ts")
-        ).cast("long").alias("lag_s"),
-    )
-    name = f"outer_join_{uuid.uuid4().hex[:8]}"
-    with _pinned_shuffle(spark, 8):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(name)
-    rows = out.collect()
-    df = spark.createDataFrame(rows, out.schema)
-    spark.catalog.dropTempView(name)
-    return df
+        return _drain(spark, joined, "append", shuffle=8)
 
 
 def incremental_corpus_stream(
@@ -952,88 +820,60 @@ def incremental_corpus_stream(
     store, while this keeps it IN THE SINK, which is what lets a
     restarted job resume from the parquet history alone.
 
-    Deterministic three-batch demo (maxFilesPerTrigger=1, pinned
-    mtimes): batch 1 carries an in-batch duplicate, batches 2-3 carry
-    history duplicates and fresh texts. Returns the final history
-    (doc_id, text) — first-seen ids 1, 2, 5, 8 only.
+    Deterministic three-batch demo: batch 1 carries an in-batch
+    duplicate, batches 2-3 carry history duplicates and fresh texts.
+    Returns the final history (doc_id, text) — first-seen ids 1, 2, 5, 8
+    only.
     """
-    import json
-    import os
-    import tempfile
-
     from gene_level_metadata_pipeline_spark.operators.dedup import (
         dedup_against_history, dedup_exact,
     )
 
-    d = demo_dir or tempfile.mkdtemp(prefix="inc_corpus_")
-    src_dir = os.path.join(d, "incoming")
-    hist_dir = os.path.join(d, "history")
-    os.makedirs(src_dir, exist_ok=True)
-
-    def write_batch(name: str, rows: list[tuple[int, str]], mtime: int) -> None:
-        path = os.path.join(src_dir, name)
-        if not os.path.exists(path):
-            with open(path, "w") as f:
-                for doc_id, text in rows:
-                    f.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-        os.utime(path, (mtime, mtime))
-
-    write_batch("batch_1.json", [
-        (1, "alpha beta"),
-        (2, "gamma delta"),
-        (3, "alpha beta"),      # in-batch duplicate of 1: dropped in (1)
-    ], mtime=1_700_000_000)
-    write_batch("batch_2.json", [
-        (4, "alpha beta"),      # history duplicate: dropped in (2)
-        (5, "epsilon zeta"),
-    ], mtime=1_700_000_600)
-    write_batch("batch_3.json", [
-        (6, "epsilon zeta"),    # history duplicate
-        (7, "gamma delta"),     # history duplicate
-        (8, "eta theta"),
-    ], mtime=1_700_001_200)
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-    ])
-
-    def ingest(batch_df: DataFrame, _bid: int) -> None:
-        sp = batch_df.sparkSession
-        # (1) in-batch exact dedup: keep the minimum id per content hash
-        keep = dedup_exact(batch_df, "text", "doc_id").select(
-            F.col("canonical_id").alias("doc_id")
+    with _demo_dir(demo_dir, "inc_corpus_") as d:
+        hist_dir = os.path.join(d, "history")
+        src = _stage_jsonl(
+            spark, os.path.join(d, "incoming"), "doc_id long, text string", [
+                [
+                    (1, "alpha beta"),
+                    (2, "gamma delta"),
+                    (3, "alpha beta"),      # in-batch duplicate of 1: dropped in (1)
+                ],
+                [
+                    (4, "alpha beta"),      # history duplicate: dropped in (2)
+                    (5, "epsilon zeta"),
+                ],
+                [
+                    (6, "epsilon zeta"),    # history duplicate
+                    (7, "gamma delta"),     # history duplicate
+                    (8, "eta theta"),
+                ],
+            ],
         )
-        batch = batch_df.join(F.broadcast(keep), "doc_id")
-        # (2) against-history dedup (Bloom prefilter + exact confirm)
-        if os.path.isdir(hist_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(hist_dir)
-        ):
-            hist = sp.read.parquet(hist_dir)
-            batch = dedup_against_history(batch, hist, "text", "doc_id")
-        # (3) survivors become history
-        batch.write.mode("append").parquet(hist_dir)
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(src_dir)
-    )
-    with _pinned_shuffle(spark, 8):
-        q = (
-            src.writeStream.foreachBatch(ingest)
-            .option(
-                "checkpointLocation", os.path.join(d, "_checkpoint")
+        def ingest(batch_df: DataFrame, _bid: int) -> None:
+            sp = batch_df.sparkSession
+            # (1) in-batch exact dedup: keep the minimum id per content hash
+            keep = dedup_exact(batch_df, "text", "doc_id").select(
+                F.col("canonical_id").alias("doc_id")
             )
-            .trigger(availableNow=True)
-            .start()
+            batch = batch_df.join(F.broadcast(keep), "doc_id")
+            # (2) against-history dedup (Bloom prefilter + exact confirm)
+            if os.path.isdir(hist_dir) and any(
+                f.endswith(".parquet") for f in os.listdir(hist_dir)
+            ):
+                hist = sp.read.parquet(hist_dir)
+                batch = dedup_against_history(batch, hist, "text", "doc_id")
+            # (3) survivors become history
+            batch.write.mode("append").parquet(hist_dir)
+
+        _run_to_end(
+            spark,
+            src.writeStream.foreachBatch(ingest)
+            .option("checkpointLocation", os.path.join(d, "_checkpoint")),
+            8,
         )
-        q.awaitTermination()
-    out = spark.read.parquet(hist_dir)
-    rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+        out = spark.read.parquet(hist_dir)
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 def cdc_stream_apply(
@@ -1050,93 +890,47 @@ def cdc_stream_apply(
     Versioned directories (never overwrite-in-place: the job reading
     snap_v{n} writes snap_v{n+1}) are the copy-on-write discipline.
 
-    Deterministic three-batch demo (maxFilesPerTrigger=1, pinned
-    mtimes): upsert + insert, then a tombstone + a re-upsert, then a
-    delete-of-inserted + update + fresh insert. Final snapshot:
-    {1: A3, 2: B, 4: d, 6: F} — key 3 tombstoned, key 5 inserted then
-    deleted."""
-    import json
-    import os
-    import re as _re
-    import tempfile
-
+    Deterministic three-batch demo: upsert + insert, then a tombstone +
+    a re-upsert, then a delete-of-inserted + update + fresh insert.
+    Final snapshot: {1: A3, 2: B, 4: d, 6: F} — key 3 tombstoned, key 5
+    inserted then deleted."""
     from gene_level_metadata_pipeline_spark.operators.harmonize import (
         cdc_apply,
     )
 
-    d = demo_dir or tempfile.mkdtemp(prefix="cdc_stream_")
-    src_dir = os.path.join(d, "changes")
-    os.makedirs(src_dir, exist_ok=True)
-    snap0 = os.path.join(d, "snap_v0")
-    if not os.path.isdir(snap0):
-        spark.createDataFrame(
-            [(1, "a"), (2, "b"), (3, "c"), (4, "d")], "k long, val string"
-        ).write.mode("overwrite").parquet(snap0)
-
-    def write_batch(name: str, rows: list, mtime: int) -> None:
-        path = os.path.join(src_dir, name)
-        if not os.path.exists(path):
-            with open(path, "w") as f:
-                for k, val, version, op in rows:
-                    f.write(json.dumps(
-                        {"k": k, "val": val, "version": version, "op": op}
-                    ) + "\n")
-        os.utime(path, (mtime, mtime))
-
-    write_batch("b1.json", [
-        (2, "B", 1, "upsert"), (5, "E", 1, "upsert"),
-    ], mtime=1_700_000_000)
-    write_batch("b2.json", [
-        (3, None, 2, "delete"), (5, "E2", 2, "upsert"),
-    ], mtime=1_700_000_600)
-    write_batch("b3.json", [
-        (5, None, 3, "delete"), (1, "A3", 3, "upsert"), (6, "F", 1, "upsert"),
-    ], mtime=1_700_001_200)
-
-    from pyspark.sql.types import (
-        IntegerType, LongType, StringType, StructField, StructType,
-    )
-
-    schema = StructType([
-        StructField("k", LongType()),
-        StructField("val", StringType()),
-        StructField("version", IntegerType()),
-        StructField("op", StringType()),
-    ])
-
-    def latest_version() -> int:
-        vs = [
-            int(m.group(1))
-            for f in os.listdir(d)
-            if (m := _re.fullmatch(r"snap_v(\d+)", f))
-        ]
-        return max(vs)
-
-    def apply_batch(batch_df: DataFrame, bid: int) -> None:
-        sp = batch_df.sparkSession
-        cur = latest_version()
-        snap = sp.read.parquet(os.path.join(d, f"snap_v{cur}"))
-        out = cdc_apply(snap, batch_df, "k")
-        out.write.mode("overwrite").parquet(
-            os.path.join(d, f"snap_v{cur + 1}")
+    with _demo_dir(demo_dir, "cdc_stream_") as d:
+        snap0 = os.path.join(d, "snap_v0")
+        if not os.path.isdir(snap0):
+            spark.createDataFrame(
+                [(1, "a"), (2, "b"), (3, "c"), (4, "d")], "k long, val string"
+            ).write.mode("overwrite").parquet(snap0)
+        src = _stage_jsonl(
+            spark, os.path.join(d, "changes"),
+            "k long, val string, version int, op string", [
+                [(2, "B", 1, "upsert"), (5, "E", 1, "upsert")],
+                [(3, None, 2, "delete"), (5, "E2", 2, "upsert")],
+                [(5, None, 3, "delete"), (1, "A3", 3, "upsert"), (6, "F", 1, "upsert")],
+            ],
         )
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(src_dir)
-    )
-    with _pinned_shuffle(spark, 8):
-        q = (
+        def apply_batch(batch_df: DataFrame, bid: int) -> None:
+            sp = batch_df.sparkSession
+            cur = _versions(d, "snap_v")[-1]
+            snap = sp.read.parquet(os.path.join(d, f"snap_v{cur}"))
+            out = cdc_apply(snap, batch_df, "k")
+            out.write.mode("overwrite").parquet(
+                os.path.join(d, f"snap_v{cur + 1}")
+            )
+
+        _run_to_end(
+            spark,
             src.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(d, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", os.path.join(d, "_checkpoint")),
+            8,
         )
-        q.awaitTermination()
-    out = spark.read.parquet(os.path.join(d, f"snap_v{latest_version()}"))
-    rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+        last = _versions(d, "snap_v")[-1]
+        out = spark.read.parquet(os.path.join(d, f"snap_v{last}"))
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 def cms_stream_merge(
@@ -1168,10 +962,6 @@ def cms_stream_merge(
         from a sketch built over the concatenated batches in one shot:
         additivity certified end-to-end, not assumed.
     """
-    import os
-    import re as _re
-    import tempfile
-
     from gene_level_metadata_pipeline_spark.operators.textanalysis import (
         cms_lookup,
         cms_merge,
@@ -1179,34 +969,11 @@ def cms_stream_merge(
     )
 
     width, depth = 256, 4
-    d = demo_dir or tempfile.mkdtemp(prefix="cms_stream_")
-    src_dir = os.path.join(d, "tokens")
-    os.makedirs(src_dir, exist_ok=True)
-
-    batches = {
-        "b1.txt": ["apple"] * 3 + ["banana"] * 2 + ["cherry"],
-        "b2.txt": ["apple"] * 2 + ["durian"] * 4,
-        "b3.txt": ["banana"] + ["cherry"] * 2 + ["elderberry"] * 5
-                  + ["apple"],
-    }
-    for i, (name, words) in enumerate(sorted(batches.items())):
-        path = os.path.join(src_dir, name)
-        if not os.path.exists(path):
-            with open(path, "w") as f:
-                f.write("\n".join(words) + "\n")
-        mt = 1_700_000_000 + i * 600
-        os.utime(path, (mt, mt))
-
-    def versions() -> list[int]:
-        return sorted(
-            int(m.group(1))
-            for f in os.listdir(d)
-            if (m := _re.fullmatch(r"cms_v(\d+)", f))
-        )
-
-    def latest_version() -> int:
-        vs = versions()
-        return vs[-1] if vs else -1
+    batches = [
+        ["apple"] * 3 + ["banana"] * 2 + ["cherry"],
+        ["apple"] * 2 + ["durian"] * 4,
+        ["banana"] + ["cherry"] * 2 + ["elderberry"] * 5 + ["apple"],
+    ]
 
     def sketch_of(df: DataFrame) -> DataFrame:
         wc = df.groupBy(F.col("value").alias("word")).agg(
@@ -1214,65 +981,64 @@ def cms_stream_merge(
         )
         return cms_sketch(wc, width=width, depth=depth)
 
-    def apply_batch(batch_df: DataFrame, bid: int) -> None:
-        sp = batch_df.sparkSession
-        # Snapshot keyed by BATCH ID: a replayed batch (at-least-once
-        # foreachBatch) merges from the same predecessor (max version
-        # strictly below bid) and OVERWRITES cms_v{bid} — byte-identical
-        # rewrite instead of a non-idempotent double-add.
-        prevs = [v for v in versions() if v < bid]
-        batch_sketch = sketch_of(batch_df)
-        if not prevs:
-            merged = batch_sketch
-        else:
-            prev = sp.read.parquet(os.path.join(d, f"cms_v{prevs[-1]}"))
-            merged = cms_merge(prev, batch_sketch)
-        merged.write.mode("overwrite").parquet(
-            os.path.join(d, f"cms_v{bid}")
+    with _demo_dir(demo_dir, "cms_stream_") as d:
+        src_dir = os.path.join(d, "tokens")
+        src = _stage_jsonl(
+            spark, src_dir, "value string", [[(w,) for w in b] for b in batches]
         )
 
-    src = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
-    with _pinned_shuffle(spark, 8):
-        q = (
+        def apply_batch(batch_df: DataFrame, bid: int) -> None:
+            sp = batch_df.sparkSession
+            # Snapshot keyed by BATCH ID: a replayed batch (at-least-once
+            # foreachBatch) merges from the same predecessor (max version
+            # strictly below bid) and OVERWRITES cms_v{bid} — byte-identical
+            # rewrite instead of a non-idempotent double-add.
+            prevs = [v for v in _versions(d, "cms_v") if v < bid]
+            batch_sketch = sketch_of(batch_df)
+            if not prevs:
+                merged = batch_sketch
+            else:
+                prev = sp.read.parquet(os.path.join(d, f"cms_v{prevs[-1]}"))
+                merged = cms_merge(prev, batch_sketch)
+            merged.write.mode("overwrite").parquet(
+                os.path.join(d, f"cms_v{bid}")
+            )
+
+        _run_to_end(
+            spark,
             src.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(d, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", os.path.join(d, "_checkpoint")),
+            8,
         )
-        q.awaitTermination()
 
-    merged = spark.read.parquet(os.path.join(d, f"cms_v{latest_version()}"))
-    allw = spark.read.format("text").load(src_dir)
-    exact = allw.groupBy(F.col("value").alias("word")).agg(
-        F.count(F.lit(1)).alias("exact_n")
-    )
-    one_shot = cms_sketch(exact.select("word", F.col("exact_n").alias("n")),
-                          width=width, depth=depth)
-    est_m = cms_lookup(exact.select("word"), merged, width=width, depth=depth)
-    est_o = (
-        cms_lookup(exact.select("word"), one_shot, width=width, depth=depth)
-        .withColumnRenamed("est", "est_once")
-    )
-    total = exact.agg(F.sum("exact_n").alias("big_n"))
-    out = (
-        exact.join(est_m, "word").join(est_o, "word")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "word", "exact_n",
-            (F.col("est") >= F.col("exact_n")).alias("never_underestimates"),
-            (
-                F.col("est")
-                <= F.col("exact_n") + (F.col("big_n") * 8) / width + 1
-            ).alias("within_eps"),
-            (F.col("est") == F.col("est_once")).alias("merge_exact"),
+        last = _versions(d, "cms_v")[-1]
+        merged = spark.read.parquet(os.path.join(d, f"cms_v{last}"))
+        allw = spark.read.schema("value string").json(src_dir)
+        exact = allw.groupBy(F.col("value").alias("word")).agg(
+            F.count(F.lit(1)).alias("exact_n")
         )
-    )
-    rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+        one_shot = cms_sketch(exact.select("word", F.col("exact_n").alias("n")),
+                              width=width, depth=depth)
+        est_m = cms_lookup(exact.select("word"), merged, width=width, depth=depth)
+        est_o = (
+            cms_lookup(exact.select("word"), one_shot, width=width, depth=depth)
+            .withColumnRenamed("est", "est_once")
+        )
+        total = exact.agg(F.sum("exact_n").alias("big_n"))
+        out = (
+            exact.join(est_m, "word").join(est_o, "word")
+            .crossJoin(F.broadcast(total))
+            .select(
+                "word", "exact_n",
+                (F.col("est") >= F.col("exact_n")).alias("never_underestimates"),
+                (
+                    F.col("est")
+                    <= F.col("exact_n") + (F.col("big_n") * 8) / width + 1
+                ).alias("within_eps"),
+                (F.col("est") == F.col("est_once")).alias("merge_exact"),
+            )
+        )
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 def ivm_stream_join(
@@ -1300,106 +1066,65 @@ def ivm_stream_join(
     key has no B rows (a join-empty delta). Final view:
     HIGH (2 rows, 800 cents), LOW (1 row, 400 cents).
     """
-    import json
-    import os
-    import re as _re
-    import tempfile
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        IntegerType, LongType, StringType, StructField, StructType,
-    )
-
-    d = demo_dir or tempfile.mkdtemp(prefix="ivm_stream_")
-    src_dir = os.path.join(d, "deltas")
-    os.makedirs(src_dir, exist_ok=True)
-    b_dir = os.path.join(d, "base_b")
-    if not os.path.isdir(b_dir):
-        spark.createDataFrame(
-            [(1, 100), (1, 50), (2, 200), (3, 300), (4, 400), (5, 500)],
-            "k long, cents long",
-        ).write.mode("overwrite").parquet(b_dir)
-    v0 = os.path.join(d, "view_v0")
-    if not os.path.isdir(v0):
-        a_old = spark.createDataFrame(
-            [(1, "HIGH"), (2, "LOW"), (3, "HIGH")], "k long, prio string"
-        )
-        b = spark.read.parquet(b_dir)
-        a_old.join(b, "k").groupBy("prio").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum("cents").cast("bigint").alias("cents_total"),
-        ).write.mode("overwrite").parquet(v0)
-
-    def write_batch(name: str, rows: list, mtime: int) -> None:
-        path = os.path.join(src_dir, name)
-        if not os.path.exists(path):
-            with open(path, "w") as f:
-                for k, prio, sign in rows:
-                    f.write(json.dumps(
-                        {"k": k, "prio": prio, "sign": sign}
-                    ) + "\n")
-        os.utime(path, (mtime, mtime))
-
-    write_batch("b1.json", [(4, "LOW", 1), (5, "HIGH", 1)],
-                mtime=1_700_000_000)
-    write_batch("b2.json", [(1, "HIGH", -1)], mtime=1_700_000_600)
-    write_batch("b3.json", [(2, "LOW", -1), (6, "LOW", 1)],
-                mtime=1_700_001_200)
-
-    schema = StructType([
-        StructField("k", LongType()),
-        StructField("prio", StringType()),
-        StructField("sign", IntegerType()),
-    ])
-
-    def versions() -> list:
-        return sorted(
-            int(m.group(1))
-            for f in os.listdir(d)
-            if (m := _re.fullmatch(r"view_v(\d+)", f))
-        )
-
-    def apply_batch(batch_df: DataFrame, bid: int) -> None:
-        sp = batch_df.sparkSession
-        target = bid + 1
-        prev = max(v for v in versions() if v < target)
-        view = sp.read.parquet(os.path.join(d, f"view_v{prev}"))
-        b = sp.read.parquet(b_dir)
-        delta = (
-            batch_df.join(b, "k")
-            .groupBy("prio")
-            .agg(
-                F.sum("sign").cast("bigint").alias("n_rows"),
-                F.sum(F.col("sign") * F.col("cents")).cast("bigint")
-                .alias("cents_total"),
+    with _demo_dir(demo_dir, "ivm_stream_") as d:
+        b_dir = os.path.join(d, "base_b")
+        if not os.path.isdir(b_dir):
+            spark.createDataFrame(
+                [(1, 100), (1, 50), (2, 200), (3, 300), (4, 400), (5, 500)],
+                "k long, cents long",
+            ).write.mode("overwrite").parquet(b_dir)
+        v0 = os.path.join(d, "view_v0")
+        if not os.path.isdir(v0):
+            a_old = spark.createDataFrame(
+                [(1, "HIGH"), (2, "LOW"), (3, "HIGH")], "k long, prio string"
             )
-        )
-        merged = (
-            view.unionByName(delta)
-            .groupBy("prio")
-            .agg(
-                F.sum("n_rows").cast("bigint").alias("n_rows"),
-                F.sum("cents_total").cast("bigint").alias("cents_total"),
-            )
-            .where(F.col("n_rows") > 0)
-        )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(d, f"view_v{target}")
+            b = spark.read.parquet(b_dir)
+            a_old.join(b, "k").groupBy("prio").agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+                F.sum("cents").cast("bigint").alias("cents_total"),
+            ).write.mode("overwrite").parquet(v0)
+        src = _stage_jsonl(
+            spark, os.path.join(d, "deltas"), "k long, prio string, sign int", [
+                [(4, "LOW", 1), (5, "HIGH", 1)],
+                [(1, "HIGH", -1)],
+                [(2, "LOW", -1), (6, "LOW", 1)],
+            ],
         )
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(src_dir)
-    )
-    with _pinned_shuffle(spark, 8):
-        q = (
+        def apply_batch(batch_df: DataFrame, bid: int) -> None:
+            sp = batch_df.sparkSession
+            target = bid + 1
+            prev = max(v for v in _versions(d, "view_v") if v < target)
+            view = sp.read.parquet(os.path.join(d, f"view_v{prev}"))
+            b = sp.read.parquet(b_dir)
+            delta = (
+                batch_df.join(b, "k")
+                .groupBy("prio")
+                .agg(
+                    F.sum("sign").cast("bigint").alias("n_rows"),
+                    F.sum(F.col("sign") * F.col("cents")).cast("bigint")
+                    .alias("cents_total"),
+                )
+            )
+            merged = (
+                view.unionByName(delta)
+                .groupBy("prio")
+                .agg(
+                    F.sum("n_rows").cast("bigint").alias("n_rows"),
+                    F.sum("cents_total").cast("bigint").alias("cents_total"),
+                )
+                .where(F.col("n_rows") > 0)
+            )
+            merged.write.mode("overwrite").parquet(
+                os.path.join(d, f"view_v{target}")
+            )
+
+        _run_to_end(
+            spark,
             src.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(d, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", os.path.join(d, "_checkpoint")),
+            8,
         )
-        q.awaitTermination()
-    out = spark.read.parquet(os.path.join(d, f"view_v{max(versions())}"))
-    rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+        last = _versions(d, "view_v")[-1]
+        out = spark.read.parquet(os.path.join(d, f"view_v{last}"))
+        return spark.createDataFrame(out.collect(), out.schema)

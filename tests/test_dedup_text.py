@@ -1347,20 +1347,23 @@ def test_source_overlap_matrix_identical_disjoint_empty(spark):
 
 
 def test_bpe_train_batched_batch1_replays_sequential(spark):
-    """batch=1 must be EXACTLY bpe_train: same argmax, same tie-break,
-    same application — the equivalence anchor for the batched path."""
+    """batch=1 must be EXACTLY sequential BPE: same argmax, same
+    tie-break, same application — the equivalence anchor for the batched
+    path. The expected table is the one the separate sequential trainer
+    produced before the batched body replaced it."""
     from gene_level_metadata_pipeline_spark.operators.textanalysis import (
         bpe_train,
-        bpe_train_batched,
     )
 
     docs = spark.createDataFrame(
         [(1, "abab abab abx"), (2, "abab abx aaa zqzq zq")],
         "doc_id long, text string",
     )
-    seq = [tuple(r) for r in bpe_train(docs, rounds=5).collect()]
-    b1 = [tuple(r) for r in bpe_train_batched(docs, rounds=5, batch=1).collect()]
+    seq = [(1, "a", "b", 8), (2, "ab", "ab", 3), (3, "z", "q", 3),
+           (4, "a", "a", 2), (5, "ab", "x", 2)]
+    b1 = [tuple(r) for r in bpe_train(docs, rounds=5, batch=1).collect()]
     assert seq == b1 and len(seq) > 0
+    assert [tuple(r) for r in bpe_train(docs, rounds=5).collect()] == seq
 
 
 def test_bpe_train_batched_disjoint_selection(spark):
@@ -1372,14 +1375,14 @@ def test_bpe_train_batched_disjoint_selection(spark):
     (a,b) [tie-break beats (b,c) on sym_a] then skip (b,c) [shares b]
     and take (x,y)."""
     from gene_level_metadata_pipeline_spark.operators.textanalysis import (
-        bpe_train_batched,
+        bpe_train,
     )
 
     docs = spark.createDataFrame(
         [(1, "abc abc abc abc xy xy xy")], "doc_id long, text string"
     )
     out = [tuple(r) for r in
-           bpe_train_batched(docs, rounds=1, batch=2).collect()]
+           bpe_train(docs, rounds=1, batch=2).collect()]
     assert out == [(1, "a", "b", 4), (2, "x", "y", 3)]
 
 
@@ -1389,12 +1392,12 @@ def test_bpe_train_batched_merged_symbol_blocked(spark):
     pick's merged concatenation (the a+b guard matters from job 2 on,
     when multi-char symbols exist in the vocabulary)."""
     from gene_level_metadata_pipeline_spark.operators.textanalysis import (
-        bpe_train_batched,
+        bpe_train,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     out = [tuple(r) for r in
-           bpe_train_batched(docs, rounds=2, batch=4).collect()]
+           bpe_train(docs, rounds=2, batch=4).collect()]
     assert len(out) >= 4
     # reconstruct per-job batches (4 per job) and check the invariant
     for j in (0, 1):
@@ -1409,12 +1412,12 @@ def test_bpe_train_batched_bad_batch_raises(spark):
     import pytest as _pytest
 
     from gene_level_metadata_pipeline_spark.operators.textanalysis import (
-        bpe_train_batched,
+        bpe_train,
     )
 
     docs = spark.createDataFrame([(1, "ab")], "doc_id long, text string")
     with _pytest.raises(ValueError):
-        bpe_train_batched(docs, batch=0)
+        bpe_train(docs, batch=0)
 
 
 class TestLinearClassifier:
