@@ -140,8 +140,8 @@ def retract_aggregate(
     sum_col: str = "total",
 ) -> DataFrame:
     """Retractable incremental aggregate maintenance — the
-    deletion-aware sibling of the insert-only partial-aggregate merge
-    (``delta_agg_merge``): a maintained (key, count, sum) aggregate
+    deletion-aware sibling of the insert-only partial-aggregate merge:
+    a maintained (key, count, sum) aggregate
     absorbs a CDC fact feed where each row INSERTS or RETRACTS one
     fact, without rescanning the base facts.
 
@@ -149,8 +149,8 @@ def retract_aggregate(
     collapses to one signed partial aggregate per key (map-side
     combine), then a single full-outer merge with the maintained
     table adds the partials — counts are exact bigints and sums stay
-    DECIMAL through the merge (associative, order-independent), the
-    delta_agg_merge identity. Keys whose count reaches zero drop out
+    DECIMAL through the merge (associative, order-independent), so the
+    merge equals a full recompute. Keys whose count reaches zero drop out
     (full retraction); keys driven NEGATIVE (retracting facts that
     were never aggregated — an upstream bug) are also dropped rather
     than silently emitted, and callers auditing for them should count

@@ -202,12 +202,11 @@ def flag_outliers(
     group — the numeric-curation gate (drop documents whose
     length/score is pathological FOR ITS STRATUM, not globally).
 
-    Moments come from exact DECIMAL sums (sum, sum of squares — the
-    stats_profile discipline), so mean and population variance are
-    order-independent and an external engine derives bit-identical
-    flags; the group aggregate broadcasts back onto the rows (one
-    shuffle for the moments, none for the flagging). Groups of size 1
-    have zero variance — never flagged.
+    Moments come from exact DECIMAL sums (sum, sum of squares), so mean
+    and population variance are order-independent and an external engine
+    derives bit-identical flags; the group aggregate broadcasts back onto
+    the rows (one shuffle for the moments, none for the flagging). Groups
+    of size 1 have zero variance — never flagged.
 
     Adds ``z_score`` (rounded 4dp, NULL when the group variance is 0)
     and ``is_outlier``. The moments re-attach is a NULL-SAFE equi-join

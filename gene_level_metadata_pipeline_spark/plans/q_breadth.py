@@ -1,4 +1,4 @@
-"""Edge decoration, matrix transpose, profiling, data-quality validation, JSON/schema evolution, misc engine breadth.
+"""Edge decoration, matrix transpose, profiling, data-quality validation, misc engine breadth.
 
 Split from the original single-module registry (plans/driver_queries.py,
 which remains the facade); importing this module registers its queries.
@@ -114,57 +114,6 @@ def q_transpose_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return transpose(wide, "l_returnflag", ["sum_qty", "sum_price", "sum_tax"],
                      header_col="metric")
-
-
-@_register(
-    "distinct_count",
-    oracle="""
-    SELECT l_returnflag,
-           count(DISTINCT l_partkey) AS n_parts,
-           count(DISTINCT l_suppkey) AS n_supps,
-           count(*) AS n_rows
-    FROM lineitem GROUP BY l_returnflag
-    """,
-)
-def q_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-column distinct aggregation (the expand-based plan Spark
-    generates for several COUNT DISTINCTs in one pass)."""
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-            F.countDistinct("l_partkey").alias("n_parts"),
-            F.countDistinct("l_suppkey").alias("n_supps"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
-
-
-@_register(
-    "rollup_revenue",
-    oracle="""
-    SELECT r.r_name, n.n_name,
-           CAST(round(sum(CAST(c.c_acctbal AS DECIMAL(18,6))), 2) AS DOUBLE) AS total_balance
-    FROM customer c
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-    GROUP BY ROLLUP (r.r_name, n.n_name)
-    """,
-)
-def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP hierarchy aggregation (region → nation → grand total) — free
-    from Spark's grouping-sets support, absent from the reference (SURVEY
-    §2.7 'absent' list) but table stakes for an analytics engine."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    joined = (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-    )
-    return joined.rollup("r_name", "n_name").agg(
-        _dsum(F.col("c_acctbal"), 2).alias("total_balance")
-    )
 
 
 @_register(
@@ -302,34 +251,6 @@ def q_panelapp_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register(
-    "ann_ivf_topk",
-    oracle=f"""
-    WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
-    q AS (SELECT vec_id AS query_id, label, e AS qe FROM v WHERE vec_id < 10),
-    scored AS (
-      SELECT q.query_id, v.vec_id AS neighbor_id,
-             round({_COS.format(a='q.qe', b='v.e')}, 4) AS cos_sim
-      FROM q JOIN v ON q.label = v.label AND q.query_id <> v.vec_id
-    )
-    SELECT query_id, neighbor_id, cos_sim, rank FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-      ) AS rank
-      FROM scored
-    ) WHERE rank <= 5
-    """,
-)
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: each query searches only its coarse cell (the label
-    column stands in for a k-means centroid assignment) — the scale path
-    where brute force scores N candidates and IVF scores N/cells."""
-    from gene_level_metadata_pipeline_spark.operators.similarity import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return ivf_topk(emb, emb.where(F.col("vec_id") < 10), cell_col="label", k=5)
-
-
-@_register(
     "ann_ivf_recall",
     oracle=f"""
     WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
@@ -368,7 +289,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF index evaluating ITSELF (same methodology as
-    lsh_quality_metrics): recall@5 of the cell-restricted search against
+    dedup_lsh_recall): recall@5 of the cell-restricted search against
     exact brute-force truth over the same 10 queries. Both sides share
     the deterministic (rounded-cosine DESC, neighbor_id) tie-break, so
     the metric is bit-stable. This is the calibration run an IVF
@@ -485,7 +406,7 @@ def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with a REAL learned coarse quantizer: k-means centroids (one
     deterministic Lloyd iteration, similarity.kmeans_centroids) assign
     every vector a cell; each query searches only its cell. Same plan
-    shape as ann_ivf_topk but the cells now come from the data, not a
+    shape as label-cell IVF but the cells now come from the data, not a
     pre-assigned label — the production IVF build path."""
     from gene_level_metadata_pipeline_spark.operators.similarity import ivf_topk
 
@@ -813,30 +734,6 @@ def q_salted_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register(
-    "median_quantiles",
-    oracle="""
-    SELECT l_returnflag,
-           round(quantile_cont(l_quantity, 0.5), 4) AS med_qty,
-           round(quantile_cont(l_extendedprice, 0.25), 4) AS p25_price,
-           round(quantile_cont(l_extendedprice, 0.75), 4) AS p75_price
-    FROM lineitem GROUP BY l_returnflag
-    """,
-)
-def q_median_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated quantiles per group — Spark ``percentile`` and
-    DuckDB ``quantile_cont`` share the linear-interpolation definition, so
-    they agree exactly (unlike approx_percentile, whose sketch is
-    engine-specific and deliberately not used where exactness is graded).
-    At 100 TB swap to approx_percentile and accept the error bound."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        _round_to(F.expr("percentile(l_quantity, 0.5)"), 4).alias("med_qty"),
-        _round_to(F.expr("percentile(l_extendedprice, 0.25)"), 4).alias("p25_price"),
-        _round_to(F.expr("percentile(l_extendedprice, 0.75)"), 4).alias("p75_price"),
-    )
-
-
-@_register(
     "streaming_late_data",
     oracle="""
     SELECT * FROM (VALUES
@@ -859,50 +756,8 @@ def q_streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Engine breadth, continued: higher-order array functions, time-range
-# window frames, CUBE grouping sets, column profiling, fuzzy matching.
+# Engine breadth, continued: time-range window frames.
 # ---------------------------------------------------------------------------
-
-
-@_register(
-    "array_higher_order",
-    oracle="""
-    WITH a AS (
-      -- (l_linenumber, qty) ordering: linenumber is NOT unique per order
-      -- in the synthetic data, so the qty tiebreak (same as the struct
-      -- sort on the Spark side) is required for a deterministic array
-      SELECT l_orderkey,
-             list(CAST(l_quantity AS INT) ORDER BY l_linenumber, CAST(l_quantity AS INT)) AS qtys
-      FROM lineitem GROUP BY l_orderkey
-    )
-    SELECT l_orderkey, qtys,
-           CAST(len(list_filter(qtys, x -> x >= 30)) AS BIGINT) AS n_big,
-           CAST(list_sum(qtys) AS BIGINT) AS qty_sum,
-           qtys[1:3] AS first3
-    FROM a
-    """,
-)
-def q_array_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Higher-order array functions over collected order lines: a
-    deterministic collect (sorted by linenumber via struct array_sort —
-    collect_list order is not guaranteed), then filter/aggregate/slice
-    lambdas, all inside codegen. The collect is the one shuffle (by
-    orderkey); every lambda is map-side."""
-    li = _t(spark, sf_dir, "lineitem")
-    arr = F.array_sort(
-        F.collect_list(F.struct(F.col("l_linenumber").alias("ln"),
-                                F.col("l_quantity").cast("int").alias("qty")))
-    )
-    g = li.groupBy("l_orderkey").agg(
-        F.transform(arr, lambda x: x.qty).alias("qtys")
-    )
-    return g.select(
-        "l_orderkey",
-        "qtys",
-        F.size(F.filter("qtys", lambda x: x >= 30)).cast("long").alias("n_big"),
-        F.aggregate("qtys", F.lit(0).cast("long"), lambda a, x: a + x).alias("qty_sum"),
-        F.slice("qtys", 1, 3).alias("first3"),
-    )
 
 
 @_register(
@@ -935,87 +790,6 @@ def q_window_time_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).over(w).alias("rolling_cnt"),
         F.round(F.sum(F.col("value").cast("decimal(18,6)")).over(w), 2)
          .cast("double").alias("rolling_sum"),
-    )
-
-
-@_register(
-    "cube_revenue",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           CAST(round(sum(CAST(l_quantity AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_qty,
-           count(*) AS n_rows
-    FROM lineitem
-    GROUP BY CUBE (l_returnflag, l_linestatus)
-    """,
-)
-def q_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE grouping sets (all four combinations of returnflag ×
-    linestatus margins) — one pass, Expand + single hash aggregate, the
-    grouping-sets companion to rollup_revenue."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        _dsum(F.col("l_quantity"), 2).alias("sum_qty"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-@_register(
-    "profile_columns",
-    oracle="""
-    SELECT 'c_custkey' AS col_name, count(*) - count(c_custkey) AS n_nulls, count(DISTINCT c_custkey) AS n_distinct FROM customer
-    UNION ALL
-    SELECT 'c_name', count(*) - count(c_name), count(DISTINCT c_name) FROM customer
-    UNION ALL
-    SELECT 'c_nationkey', count(*) - count(c_nationkey), count(DISTINCT c_nationkey) FROM customer
-    UNION ALL
-    SELECT 'c_acctbal', count(*) - count(c_acctbal), count(DISTINCT c_acctbal) FROM customer
-    UNION ALL
-    SELECT 'c_mktsegment', count(*) - count(c_mktsegment), count(DISTINCT c_mktsegment) FROM customer
-    """,
-)
-def q_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-quality column profile: per-column null count + exact distinct
-    count in ONE table pass (multi-distinct → Expand + two-level agg),
-    unpivoted via stack. At 100 TB swap the exact distincts for
-    approx_count_distinct — the plan shape (single pass, no join of five
-    scans like the naive SQL) is the point."""
-    c = _t(spark, sf_dir, "customer")
-    aggs = []
-    for col in c.columns:
-        aggs.append((F.count(F.lit(1)) - F.count(col)).alias(f"n_{col}"))
-        aggs.append(F.countDistinct(col).alias(f"d_{col}"))
-    row = c.agg(*aggs)
-    stack_args = ", ".join(f"'{col}', n_{col}, d_{col}" for col in c.columns)
-    return row.select(
-        F.expr(
-            f"stack({len(c.columns)}, {stack_args}) AS (col_name, n_nulls, n_distinct)"
-        )
-    )
-
-
-@_register(
-    "fuzzy_brand_match",
-    oracle="""
-    WITH b AS (SELECT DISTINCT p_brand FROM part)
-    SELECT a.p_brand AS brand_a, c.p_brand AS brand_b,
-           CAST(levenshtein(a.p_brand, c.p_brand) AS BIGINT) AS dist
-    FROM b a JOIN b c
-      ON a.p_brand < c.p_brand AND levenshtein(a.p_brand, c.p_brand) <= 1
-    """,
-)
-def q_fuzzy_brand_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy string matching on a dimension: edit-distance ≤ 1 pairs over
-    distinct brands (the SURVEY's gene-symbol/alias fuzzy-matching shape).
-    The distinct-values side is dimension-sized → broadcast nested-loop;
-    at corpus scale the same op runs per-blocking-key (first char /
-    length band) to bound the quadratic term."""
-    b = _t(spark, sf_dir, "part").select("p_brand").distinct()
-    a = b.select(F.col("p_brand").alias("brand_a"))
-    c2 = b.select(F.col("p_brand").alias("brand_b"))
-    dist = F.levenshtein("brand_a", "brand_b")
-    return (
-        a.join(c2, (F.col("brand_a") < F.col("brand_b")) & (dist <= 1))
-        .select("brand_a", "brand_b", dist.cast("long").alias("dist"))
     )
 
 
@@ -1222,64 +996,6 @@ def q_winsorize_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register(
-    "set_operations",
-    oracle="""
-    WITH small AS (SELECT DISTINCT p_brand FROM part WHERE p_size < 15),
-         smc AS (SELECT DISTINCT p_brand FROM part
-                 WHERE p_type IN ('SMALL', 'MEDIUM'))
-    SELECT 'brand_both' AS op, p_brand AS val
-    FROM (SELECT p_brand FROM small INTERSECT SELECT p_brand FROM smc)
-    UNION ALL
-    SELECT 'brand_only_small', p_brand
-    FROM (SELECT p_brand FROM small EXCEPT SELECT p_brand FROM smc)
-    UNION ALL
-    SELECT 'nation_multiset', CAST(nk AS VARCHAR)
-    FROM (SELECT c_nationkey AS nk FROM customer
-          INTERSECT ALL
-          SELECT s_nationkey AS nk FROM supplier)
-    """,
-)
-def q_set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set operators the reference lacks entirely (SURVEY §2.6 'absent
-    set ops'): INTERSECT / EXCEPT on distinct dimension slices and
-    INTERSECT ALL multiset semantics (per-key multiplicity =
-    min(count_left, count_right)). All three arms are dimension-sized →
-    hash-partitioned set ops with AQE-coalesced outputs."""
-    part = _t(spark, sf_dir, "part")
-    small = part.where(F.col("p_size") < 15).select("p_brand").distinct()
-    smc = part.where(F.col("p_type").isin("SMALL", "MEDIUM")).select("p_brand").distinct()
-    cn = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nk"))
-    sn = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nk"))
-    tag = lambda df, name, col: df.select(
-        F.lit(name).alias("op"), F.col(col).cast("string").alias("val")
-    )
-    return (
-        tag(small.intersect(smc), "brand_both", "p_brand")
-        .unionByName(tag(small.subtract(smc), "brand_only_small", "p_brand"))
-        .unionByName(tag(cn.intersectAll(sn), "nation_multiset", "nk"))
-    )
-
-
-@_register("approx_profile")
-def q_approx_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate sketches next to their exact twins: per event type,
-    HyperLogLog++ distinct users (approx_count_distinct, mergeable
-    partial sketches — the 100 TB path) and an approximate median via
-    percentile_approx, plus exact countDistinct for in-row error
-    audit. Rows-only by design: sketch outputs are
-    implementation-defined, so no cross-engine oracle exists; the unit
-    test asserts the HLL estimate lands within rsd bounds of the exact
-    count."""
-    ev = _events(spark, sf_dir)
-    return ev.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", 0.02).alias("approx_users"),
-        F.countDistinct("user_id").alias("exact_users"),
-        F.percentile_approx("value", 0.5, 10000).alias("p50_approx"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-@_register(
     "curation_pipeline",
     oracle="""
     WITH q AS (
@@ -1347,78 +1063,6 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
         F.coalesce("ws_tokens_kept", F.lit(0)).alias("ws_tokens_kept"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Semi-structured JSON + schema evolution
-# ---------------------------------------------------------------------------
-
-@_register(
-    "json_props_extract",
-    oracle="""
-    WITH p AS (
-      SELECT event_type,
-             CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-      FROM events
-    )
-    SELECT event_type,
-           count(*) AS n,
-           CAST(sum(k) AS BIGINT) AS sum_k,
-           count(DISTINCT k) AS n_distinct_k,
-           max(k) AS max_k
-    FROM p GROUP BY event_type
-    """,
-)
-def q_json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured JSON column handling (the reference's S11 flatten
-    family, applied to an embedded JSON string column): typed parse via
-    ``from_json`` with an explicit schema — schema-on-read stays
-    columnar, the parse happens once in codegen, and downstream
-    aggregation is plain relational. A ``get_json_object`` cross-check
-    guards parse agreement (mismatch rows would surface as NULL k).
-    At scale prefer from_json + explicit schema over repeated
-    get_json_object calls: one parse per row vs one per extraction."""
-    ev = _events(spark, sf_dir)
-    parsed = ev.select(
-        "event_type",
-        F.from_json("props", "k BIGINT").getField("k").alias("k"),
-    )
-    return parsed.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("k").alias("sum_k"),
-        F.countDistinct("k").alias("n_distinct_k"),
-        F.max("k").alias("max_k"),
-    )
-
-
-@_register(
-    "union_evolve_schemas",
-    oracle="""
-    SELECT o_orderkey, o_orderpriority, CAST(NULL AS DOUBLE) AS total
-    FROM orders WHERE o_orderdate < TIMESTAMP '1994-01-01'
-    UNION ALL
-    SELECT o_orderkey, NULL, o_totalprice
-    FROM orders WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-    """,
-)
-def q_union_evolve_schemas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-evolution union (reshape.union_all): dplyr bind_rows
-    semantics — frames with different column sets concatenated by name,
-    missing columns NULL-filled, first-seen column order. The map-side
-    concatenation adds no shuffle; each branch's filter still pushes to
-    its scan."""
-    from gene_level_metadata_pipeline_spark.operators.reshape import union_all
-
-    ord_ = _t(spark, sf_dir, "orders")
-    old = ord_.where(
-        F.col("o_orderdate") < F.lit("1994-01-01").cast("timestamp")
-    ).select("o_orderkey", "o_orderpriority")
-    new = ord_.where(
-        F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp")
-    ).select("o_orderkey", F.col("o_totalprice").alias("total"))
-    return union_all(old, new)
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -1538,57 +1182,6 @@ def q_pipeline_alphamissense_flags(spark: SparkSession, sf_dir: str) -> DataFram
     return gp.alphamissense(alpham, mane, pcg).select(
         "ensembl_transcript_id", "hgnc_symbol", "flag"
     )
-
-
-@_register(
-    "diversity_balanced_sample",
-    oracle=f"""
-    WITH {_IVF_KMEANS_CTES},
-    sizes AS (SELECT cell, count(*) AS n FROM vv GROUP BY cell),
-    rr AS (SELECT cell, least(1.0, round(30.0 / n, 6)) AS rate FROM sizes)
-    SELECT vv.vec_id, vv.cell
-    FROM vv JOIN rr USING (cell)
-    WHERE substr(md5('divsample:' || CAST(vv.cell AS VARCHAR) || ':'
-                     || CAST(vv.vec_id AS VARCHAR)), 1, 8)
-          < CASE WHEN rate >= 1.0 THEN 'g'
-                 ELSE lpad(lower(to_hex(CAST(floor(rate * 4294967296)
-                                             AS BIGINT))), 8, '0') END
-    """,
-)
-def q_diversity_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diversity-balanced data selection: embeddings are assigned to the
-    LEARNED k-means cells (the certified deterministic Lloyd quantizer),
-    then each cell is sampled toward a ~30-vector target — dense regions
-    of embedding space are downsampled hard, sparse regions kept whole
-    (rate 1.0 saturates via hex_sample_bound), so the selection covers
-    the space instead of mirroring its density. The scalable form of
-    diversity sampling: no pairwise distances, one assignment broadcast
-    + one count shuffle; the bounded per-cell rate table folds into the
-    scan-stage when-chain. Strata here are NEVER NULL by construction —
-    ``cell`` is an argmin over k centroids, so every vector gets one —
-    which is why the oracle's equality join on cell is safe; mixture
-    queries over DATA-derived strata (lang) must sentinel-coalesce
-    instead (see mixture_sample_null_stratum)."""
-    from pyspark.sql import functions as F
-
-    from gene_level_metadata_pipeline_spark.operators.selection import (
-        mixture_sample,
-    )
-
-    vv = _ivf_kmeans_cells(spark, sf_dir).select("vec_id", "cell")
-    rates_df = (
-        vv.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "cell",
-            F.least(F.lit(1.0), F.round(F.lit(30.0) / F.col("n"), 6)).alias(
-                "rate"
-            ),
-        )
-    )
-    rates = {r.cell: float(r.rate) for r in rates_df.collect()}  # ≤ k rows
-    return mixture_sample(vv, "vec_id", "cell", rates, salt="divsample")
-
 
 
 @_register(

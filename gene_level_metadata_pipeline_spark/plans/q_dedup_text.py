@@ -579,7 +579,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-
 @_register(
     "ann_brute_force_topk",
     oracle=f"""
@@ -919,30 +918,6 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 @_register(
-    "multimodal_binary_meta",
-    oracle="""
-    SELECT doc_id,
-           'image/fake' AS modality,
-           octet_length(encode(text)) AS n_bytes
-    FROM documents
-    """,
-)
-def q_multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Opaque binary payload + typed metadata struct — the multimodal
-    column contract (payload stays out of this projection)."""
-    from gene_level_metadata_pipeline_spark.operators.multimodal import (
-        attach_binary_payload,
-    )
-
-    df = attach_binary_payload(_t(spark, sf_dir, "documents"), "text", "doc_id")
-    return df.select(
-        "doc_id",
-        F.col("meta.modality").alias("modality"),
-        F.col("meta.n_bytes").alias("n_bytes"),
-    )
-
-
-@_register(
     "multimodal_features",
     oracle="""
     WITH h AS (SELECT doc_id, hex(encode(text)) AS hx,
@@ -1120,83 +1095,6 @@ def q_text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# LLM-corpus ops: token-window chunking, vocabulary top-k
-# ---------------------------------------------------------------------------
-
-@_register(
-    "chunk_documents",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, string_split(text, ' ') AS toks,
-             len(string_split(text, ' ')) AS n
-      FROM documents
-    ),
-    s AS (
-      SELECT doc_id, toks, n,
-             unnest(generate_series(0, greatest(n - 1, 0), 40)) AS start
-      FROM t
-    )
-    SELECT doc_id,
-           start // 40 AS chunk_idx,
-           CAST(least(start + 50, n) - start AS BIGINT) AS n_chunk_tokens,
-           array_to_string(toks[start + 1 : least(start + 50, n)], ' ')
-             AS chunk_text
-    FROM s
-    """,
-)
-def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-window chunking (textanalysis.chunk_documents): 50-token
-    windows every 40 tokens (10-token overlap) over every document —
-    sequence → explode → slice, all codegen, zero shuffles."""
-    from gene_level_metadata_pipeline_spark.operators.textanalysis import (
-        chunk_documents,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return chunk_documents(docs, "text", "doc_id", size=50, stride=40)
-
-
-@_register(
-    "vocab_top_words",
-    oracle="""
-    WITH wc AS (
-      SELECT w AS word, count(*) AS n
-      FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-      WHERE w <> ''
-      GROUP BY w
-    ),
-    ranked AS (
-      SELECT word, n,
-             CAST(row_number() OVER (ORDER BY n DESC, word) AS BIGINT)
-               AS rank
-      FROM wc
-    )
-    SELECT word, n, rank FROM ranked WHERE rank <= 50
-    """,
-)
-def q_vocab_top_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary: exact top-50 words by frequency with a total
-    deterministic order (count desc, word asc — ties at the boundary
-    cannot flap). explode → hash agg (map-side partial) → TakeOrdered
-    top-k, never a global sort; the rank is stamped after the k-row
-    result is already bounded."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    wc = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    top = wc.orderBy(F.col("n").desc(), F.col("word")).limit(50)
-    w = Window.orderBy(F.col("n").desc(), F.col("word"))
-    return top.select(
-        "word", "n", F.row_number().over(w).cast("long").alias("rank")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Global ordered prefix sums: token-budget selection + sequence packing
 # ---------------------------------------------------------------------------
 
@@ -1242,46 +1140,6 @@ def q_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_chars", "n_tokens",
         F.col("running_total").cast("double"),
     )
-
-
-@_register(
-    "pack_sequences",
-    oracle="""
-    WITH d AS (
-      SELECT doc_id,
-             CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
-                  AS BIGINT) AS n_tokens
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id, n_tokens,
-             sum(CAST(n_tokens AS DECIMAL(28,6))) OVER (ORDER BY doc_id)
-               AS rt
-      FROM d
-    )
-    SELECT doc_id, n_tokens,
-           CAST(floor((CAST(rt AS DOUBLE) - n_tokens) / 512.0) AS BIGINT)
-             AS bin_id
-    FROM c
-    """,
-)
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing into fixed 512-token context bins by exclusive
-    prefix sum (bin = floor(tokens-before-this-doc / 512)) — the
-    parallel approximation of greedy first-fit packing: document order
-    is preserved, each bin overflows by at most one straddling document,
-    and the plan is two shuffles (range partition + 32-row offset
-    window) regardless of corpus size. Token sums are integers, exact
-    in both decimal and double, so floor() agrees across engines."""
-    from gene_level_metadata_pipeline_spark.operators.selection import pack_sequences
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.size(F.filter(F.split("text", " "), lambda x: x != "")).cast("long")
-         .alias("n_tokens"),
-    )
-    packed = pack_sequences(docs, [F.col("doc_id")], "n_tokens", 512)
-    return packed.select("doc_id", "n_tokens", "bin_id")
 
 
 @_register(
@@ -1401,54 +1259,6 @@ def q_pack_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mapping = pack_concat_chunks(counted, [F.col("doc_id")], "n_tokens", 512)
     return materialize_chunks(mapping, docs)
-
-
-@_register(
-    "pack_materialize",
-    oracle="""
-    WITH d AS (
-      SELECT doc_id, text,
-             CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
-                  AS BIGINT) AS n_tokens
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id, text, n_tokens,
-             sum(CAST(n_tokens AS DECIMAL(28,6))) OVER (ORDER BY doc_id)
-               AS rt
-      FROM d
-    ),
-    b AS (
-      SELECT doc_id, text,
-             CAST(floor((CAST(rt AS DOUBLE) - n_tokens) / 512.0) AS BIGINT)
-               AS bin
-      FROM c
-    )
-    SELECT bin, count(*) AS n_docs,
-           string_agg(text, '<|eos|>' ORDER BY doc_id, text) AS packed_text
-    FROM b GROUP BY bin
-    """,
-)
-def q_pack_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The packing pipeline end-to-end: token counts → 512-token bin
-    assignment (distributed prefix sum, pack_sequences) → materialized
-    packed training rows (selection.materialize_packed: one shuffle on
-    the bin id, in-bin order made deterministic by sorting collected
-    structs — the A6 ordered string-agg discipline applied to corpus
-    packing). The oracle rebuilds the same bins with a naive global
-    window and string_agg ORDER BY."""
-    from gene_level_metadata_pipeline_spark.operators.selection import (
-        materialize_packed,
-        pack_sequences,
-    )
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "text",
-        F.size(F.filter(F.split("text", " "), lambda x: x != "")).cast("long")
-         .alias("n_tokens"),
-    )
-    packed = pack_sequences(docs, [F.col("doc_id")], "n_tokens", 512)
-    return materialize_packed(packed, "bin_id", ["doc_id"], "text")
 
 
 @_register(
@@ -1848,8 +1658,8 @@ def q_text_bigram_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative graph ranking: 3 PageRank power iterations over the
-    supplier co-occurrence graph (same ≥3-shared-orders edges as
-    graph_triangles), certified EXACTLY against a hash oracle because the
+    supplier co-occurrence graph (edges between suppliers sharing ≥3
+    orders), certified EXACTLY against a hash oracle because the
     whole recurrence runs in bigint micro-units (operators.graph.pagerank
     — integer init/contribution/update, no floats anywhere). The oracle
     unrolls the identical recurrence as three CTE rounds."""
@@ -1914,8 +1724,6 @@ def q_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("zy").alias("min_y"), F.max("zy").alias("max_y"),
         )
     )
-
-
 
 
 @_register(
@@ -2089,33 +1897,6 @@ def q_c4_clean_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gene_level_metadata_pipeline_spark.operators.textanalysis import c4_clean
 
     return c4_clean(_t(spark, sf_dir, "documents"), "text", "doc_id")
-
-
-@_register(
-    "temperature_mixture_rates",
-    oracle="""
-    WITH c AS (
-      SELECT lang AS stratum, count(*) AS n_docs FROM documents GROUP BY lang
-    ), m AS (SELECT min(n_docs) AS nmin FROM c)
-    SELECT stratum, n_docs,
-           round(sqrt(nmin * 1.0 / n_docs), 6) AS sample_rate
-    FROM c, m
-    """,
-)
-def q_temperature_mixture_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-based domain reweighting (selection.
-    temperature_mixture_rates, α=0.5): per-language sampling rates
-    ∝ sqrt(n_min/n) so small languages are upsampled toward a flatter
-    mix. One groupBy shuffle + a broadcast 1-row min — the scalar never
-    touches the driver; sqrt (not pow) keeps the rate IEEE-identical
-    across engines."""
-    from gene_level_metadata_pipeline_spark.operators.selection import (
-        temperature_mixture_rates,
-    )
-
-    return temperature_mixture_rates(
-        _t(spark, sf_dir, "documents"), "lang", alpha=0.5
-    )
 
 
 @_register(

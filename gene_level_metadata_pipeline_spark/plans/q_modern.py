@@ -1,4 +1,4 @@
-"""Array / map / modern-SQL breadth (higher-order functions, PIVOT/UNPIVOT, TVFs, sketches).
+"""Skew-salted join, int8 embedding quantization and quantized top-k, cogrouped as-of join.
 
 Split from the original single-module registry (plans/driver_queries.py,
 which remains the facade); importing this module registers its queries.
@@ -23,424 +23,8 @@ from gene_level_metadata_pipeline_spark.plans.registry import (
 )
 
 # ---------------------------------------------------------------------------
-# Array / map / modern-SQL breadth (Spark 4 surface a complete engine owes
-# its users even though the reference never touches it)
+# Skew, quantized-embedding and cogrouped-pandas operators
 # ---------------------------------------------------------------------------
-
-@_register(
-    "hof_array_suite",
-    oracle="""
-    WITH a AS (
-      SELECT l_orderkey,
-             list(CAST(l_quantity AS BIGINT) ORDER BY CAST(l_quantity AS BIGINT)) AS qtys
-      FROM lineitem GROUP BY l_orderkey
-    )
-    SELECT l_orderkey,
-           len(qtys) AS n_items,
-           list_sum(qtys)::BIGINT AS fold_sum,
-           len(list_filter(qtys, x -> x >= 30)) AS big_cnt,
-           len(list_filter(qtys, x -> x >= 45)) > 0 AS any_ge45,
-           len(list_filter(qtys, x -> x <= 0)) = 0 AS all_pos,
-           list_transform(qtys, x -> x * 2)[1] AS head_doubled,
-           list_sum(list_transform(qtys, x -> x * x))::BIGINT AS sq_sum
-    FROM a
-    """,
-)
-def q_hof_array_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Higher-order functions over a per-order quantity array: aggregate
-    (fold), filter, exists, forall, transform, zip_with — the lambda
-    surface that makes array columns first-class without UDFs. All of it
-    is codegen'd JVM-side (zero EvalPython); the only shuffle is the
-    orderkey groupBy that builds the array. array_sort(collect_list)
-    makes the array deterministic across partitionings; every derived
-    value is order-insensitive anyway, by construction."""
-    li = _t(spark, sf_dir, "lineitem")
-    a = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_list(F.col("l_quantity").cast("long"))).alias("qtys")
-    )
-    return a.select(
-        "l_orderkey",
-        F.size("qtys").cast("long").alias("n_items"),
-        F.aggregate("qtys", F.lit(0).cast("long"), lambda acc, x: acc + x).alias("fold_sum"),
-        F.size(F.filter("qtys", lambda x: x >= 30)).cast("long").alias("big_cnt"),
-        F.exists("qtys", lambda x: x >= 45).alias("any_ge45"),
-        F.forall("qtys", lambda x: x > 0).alias("all_pos"),
-        F.element_at(F.transform("qtys", lambda x: x * 2), 1).alias("head_doubled"),
-        F.aggregate(
-            F.zip_with("qtys", "qtys", lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("sq_sum"),
-    )
-
-
-@_register(
-    "map_type_suite",
-    oracle="""
-    WITH per AS (
-      SELECT o_custkey, o_orderstatus, count(*) AS n
-      FROM orders GROUP BY o_custkey, o_orderstatus
-    )
-    SELECT o_custkey,
-           count(*) AS n_statuses,
-           coalesce(max(CASE WHEN o_orderstatus = 'O' THEN n END), 0) AS open_cnt,
-           coalesce(max(CASE WHEN o_orderstatus = 'F' THEN n END), 0) AS filled_cnt,
-           count(*) FILTER (WHERE n > 1) AS repeated_statuses,
-           sum(n)::BIGINT AS total_orders
-    FROM per GROUP BY o_custkey
-    """,
-)
-def q_map_type_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MapType as a first-class value: build a status→count map per
-    customer with map_from_entries, then read it back via element_at,
-    size, map_filter, and aggregate over map_values. The reference's
-    KV-pair tables (SURVEY §1.1, S11) stay long; this certifies the
-    alternative representation Spark offers when per-key access beats
-    another explode. The map itself never leaves the plan — output is
-    plain columns, so the oracle is conditional aggregation."""
-    per = (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_custkey", "o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    m = per.groupBy("o_custkey").agg(
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct("o_orderstatus", "n")))
-        ).alias("m")
-    )
-    return m.select(
-        "o_custkey",
-        F.size("m").cast("long").alias("n_statuses"),
-        F.coalesce(F.element_at("m", "O"), F.lit(0)).alias("open_cnt"),
-        F.coalesce(F.element_at("m", "F"), F.lit(0)).alias("filled_cnt"),
-        F.size(F.map_filter("m", lambda k, v: v > 1)).cast("long").alias("repeated_statuses"),
-        F.aggregate(
-            F.map_values("m"), F.lit(0).cast("long"), lambda acc, x: acc + x
-        ).alias("total_orders"),
-    )
-
-
-@_register(
-    "listagg_sql",
-    oracle="""
-    SELECT r_name,
-           string_agg(n_name, '|' ORDER BY n_name) AS nations,
-           string_agg(DISTINCT substr(n_name, 1, 1), '' ORDER BY substr(n_name, 1, 1))
-             AS initials
-    FROM nation JOIN region ON n_regionkey = r_regionkey
-    GROUP BY r_name
-    """,
-)
-def q_listagg_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native listagg (new in Spark 4.0) with WITHIN GROUP ordering and a
-    DISTINCT variant — the SQL-standard spelling of the reference's A6
-    ordered string aggregation (string_agg_ordered certifies the
-    DataFrame composition; this certifies the aggregate function). The
-    WITHIN GROUP clause is what makes the result deterministic across
-    partitionings — listagg without it is explicitly unordered."""
-    _t(spark, sf_dir, "nation").createOrReplaceTempView("nation_la")
-    _t(spark, sf_dir, "region").createOrReplaceTempView("region_la")
-    return spark.sql("""
-        SELECT r_name,
-               listagg(n_name, '|') WITHIN GROUP (ORDER BY n_name) AS nations,
-               listagg(DISTINCT substr(n_name, 1, 1), '')
-                 WITHIN GROUP (ORDER BY substr(n_name, 1, 1)) AS initials
-        FROM nation_la JOIN region_la ON n_regionkey = r_regionkey
-        GROUP BY r_name
-    """)
-
-
-@_register(
-    "percentile_family",
-    oracle="""
-    SELECT n_name,
-           round(CAST(median(c_acctbal) AS DOUBLE), 2) AS med,
-           round(CAST(percentile_cont(0.25) WITHIN GROUP (ORDER BY c_acctbal) AS DOUBLE), 2) AS p25,
-           CAST(percentile_disc(0.75) WITHIN GROUP (ORDER BY c_acctbal) AS DOUBLE) AS p75_disc,
-           count(*) AS n
-    FROM customer JOIN nation ON c_nationkey = n_nationkey
-    GROUP BY n_name
-    """,
-)
-def q_percentile_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact percentile aggregates per nation: median, interpolated
-    percentile_cont, and percentile_disc (the order-statistic variant —
-    returns an actual data value, no interpolation). Exact percentiles
-    require a per-group sort; at 100 TB the approx twin
-    (approx_percentile, t-digest, see approx_profile) is the default and
-    these are the audit path. Interpolation arithmetic is the identical
-    IEEE expression in both engines; median/p25 are rounded to 2 digits
-    to absorb the one-ulp divide divergence."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            _round_to(F.median("c_acctbal"), 2).alias("med"),
-            _round_to(F.percentile("c_acctbal", F.lit(0.25)), 2).alias("p25"),
-            F.expr("percentile_disc(0.75) WITHIN GROUP (ORDER BY c_acctbal)")
-            .cast("double").alias("p75_disc"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-
-
-@_register(
-    "try_arithmetic",
-    oracle="""
-    SELECT l_linestatus,
-           count(*) AS n,
-           count(*) FILTER (WHERE l_extendedprice / NULLIF(l_quantity - l_quantity, 0) IS NULL)
-             AS div0_nulls,
-           count(*) FILTER (WHERE TRY_CAST(l_returnflag AS INT) IS NULL) AS badcast_nulls,
-           count(*) FILTER (WHERE CASE WHEN l_orderkey > 1
-                                       THEN NULL
-                                       ELSE 9223372036854775806 + l_orderkey END IS NULL)
-             AS overflow_nulls,
-           round(CAST(sum(CAST(
-             round(l_extendedprice / NULLIF(l_quantity, 0) * 100, 0) / 100
-             AS DECIMAL(18,6))) AS DOUBLE), 2) AS unit_price_sum
-    FROM lineitem GROUP BY l_linestatus
-    """,
-)
-def q_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANSI-mode-safe arithmetic: try_divide / try_cast / try_add return
-    NULL where strict SQL raises (÷0, malformed cast, bigint overflow).
-    Spark 4 runs ANSI mode ON by default, so a 100 TB job that hits one
-    bad row 6 hours in ABORTS unless the pipeline speaks try_*; these are
-    the engine's sanctioned escape hatches, graded per-group so the
-    oracle pins exactly which rows nulled. DuckDB has no try_add —
-    its oracle side models the overflow analytically (every orderkey > 1
-    overflows 2^63-2)."""
-    li = _t(spark, sf_dir, "lineitem")
-    unit = F.try_divide(F.col("l_extendedprice"), F.col("l_quantity"))
-    return li.groupBy("l_linestatus").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(F.try_divide(
-            F.col("l_extendedprice"),
-            F.col("l_quantity") - F.col("l_quantity")).isNull(), 1)).alias("div0_nulls"),
-        F.count(F.when(F.expr("try_cast(l_returnflag AS INT)").isNull(), 1)).alias("badcast_nulls"),
-        F.count(F.when(F.try_add(F.lit(9223372036854775806), F.col("l_orderkey")).isNull(), 1))
-        .alias("overflow_nulls"),
-        F.round(F.sum((F.round(unit * 100, 0) / 100).cast("decimal(18,6)")), 2)
-        .cast("double").alias("unit_price_sum"),
-    )
-
-
-@_register(
-    "lateral_topk",
-    oracle="""
-    SELECT c.c_custkey, x.o_orderkey AS top_orderkey, x.o_totalprice AS top_price
-    FROM customer c,
-         LATERAL (SELECT o_orderkey, o_totalprice FROM orders
-                  WHERE o_custkey = c.c_custkey
-                  ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) x
-    """,
-)
-def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated LATERAL subquery (Spark 4 SQL): each customer's single
-    most expensive order, tie-broken by orderkey. The SQL text is IDENTICAL
-    on both engines (modulo view names). Catalyst decorrelates the
-    per-row ORDER BY ... LIMIT 1 into a window rank over one orders scan —
-    same physical shape as the DataFrame row_number pattern
-    (window_rank_suite) — rather than executing |customer| scans the way
-    the syntax reads; inner joins drop customers with no orders."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_lt")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_lt")
-    return spark.sql("""
-        SELECT c.c_custkey, x.o_orderkey AS top_orderkey, x.o_totalprice AS top_price
-        FROM customer_lt c,
-             LATERAL (SELECT o_orderkey, o_totalprice FROM orders_lt
-                      WHERE o_custkey = c.c_custkey
-                      ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) x
-    """)
-
-
-@_register(
-    "sql_pivot_unpivot",
-    oracle="""
-    SELECT o_orderpriority, o_orderstatus AS status,
-           count(*) AS n,
-           round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
-    FROM orders GROUP BY o_orderpriority, o_orderstatus
-    """,
-)
-def q_sql_pivot_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL PIVOT syntax (explicit IN list — PLANS.md lesson 6) widens
-    status counts+revenue per priority, then SQL UNPIVOT melts it back to
-    long form. Absent (priority, status) combos become NULL cells under
-    PIVOT; UNPIVOT's default EXCLUDE NULLS drops them again, so the
-    roundtrip is exactly the plain GROUP BY the oracle runs. Multi-measure
-    pivot produces struct-suffixed columns (status_n, status_revenue);
-    UNPIVOT's (n, revenue) FOR status IN ((o_n, o_rev) AS 'O', ...) maps
-    them back."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_pu")
-    return spark.sql("""
-        WITH wide AS (
-          SELECT * FROM (
-            SELECT o_orderpriority, o_orderstatus, o_totalprice FROM orders_pu
-          )
-          PIVOT (
-            count(*) AS n,
-            CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS rev
-            FOR o_orderstatus IN ('O', 'F', 'P')
-          )
-        )
-        SELECT o_orderpriority, status, n, revenue
-        FROM wide
-        UNPIVOT (
-          (n, revenue) FOR status IN ((`O_n`, `O_rev`) AS `O`,
-                                      (`F_n`, `F_rev`) AS `F`,
-                                      (`P_n`, `P_rev`) AS `P`)
-        )
-    """)
-
-
-@_register(
-    "null_safe_join",
-    oracle="""
-    WITH a AS (
-      SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN NULL
-                  ELSE o_orderpriority END AS pk,
-             count(*) AS n_orders
-      FROM orders GROUP BY 1
-    ),
-    b AS (
-      SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN NULL
-                  ELSE o_orderpriority END AS pk,
-             round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
-      FROM orders GROUP BY 1
-    )
-    SELECT a.pk, a.n_orders, b.revenue
-    FROM a JOIN b ON a.pk IS NOT DISTINCT FROM b.pk
-    """,
-)
-def q_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Null-safe equality join (<=> / eqNullSafe): NULL keys MATCH each
-    other instead of vanishing, the semantics dimension normal equi-joins
-    silently drop rows on. One priority is nulled on both sides; the
-    null-safe join keeps it (5 rows, not 4). Catalyst still plans <=> as
-    a hash join (null-safe keys hash like values) — not the nested-loop
-    fallback a theta join would cost."""
-    o = _t(spark, sf_dir, "orders")
-    pk = F.when(F.col("o_orderpriority") == "1-URGENT", F.lit(None)).otherwise(
-        F.col("o_orderpriority")
-    )
-    a = o.groupBy(pk.alias("pk")).agg(F.count(F.lit(1)).alias("n_orders"))
-    b = o.groupBy(pk.alias("pk")).agg(
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
-        .cast("double").alias("revenue")
-    )
-    return a.join(b, a.pk.eqNullSafe(b.pk)).select(a.pk, "n_orders", "revenue")
-
-
-@_register(
-    "group_by_all_offset",
-    oracle="""
-    SELECT o_orderpriority, o_orderstatus, count(*) AS n
-    FROM orders
-    GROUP BY ALL
-    ORDER BY ALL
-    LIMIT 6 OFFSET 3
-    """,
-)
-def q_group_by_all_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUP BY ALL / ORDER BY ALL / LIMIT-OFFSET pagination — modern SQL
-    shorthand (DuckDB pioneered it; Spark 3.4+ adopted it) running as
-    IDENTICAL text on both engines. ORDER BY ALL totally orders the
-    result, which is the precondition that makes OFFSET pagination
-    deterministic; Spark plans the offset into the same single-partition
-    TakeOrdered step as the limit — no global sort materializes."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_gba")
-    return spark.sql("""
-        SELECT o_orderpriority, o_orderstatus, count(*) AS n
-        FROM orders_gba
-        GROUP BY ALL
-        ORDER BY ALL
-        LIMIT 6 OFFSET 3
-    """)
-
-
-@_register(
-    "transpose_native",
-    oracle="""
-    SELECT 'revenue' AS key,
-           round(CAST(sum(CAST(CASE WHEN r_name = 'AFRICA' THEN o_totalprice END
-             AS DECIMAL(18,6))) AS DOUBLE), 2) AS "AFRICA",
-           round(CAST(sum(CAST(CASE WHEN r_name = 'AMERICA' THEN o_totalprice END
-             AS DECIMAL(18,6))) AS DOUBLE), 2) AS "AMERICA",
-           round(CAST(sum(CAST(CASE WHEN r_name = 'ASIA' THEN o_totalprice END
-             AS DECIMAL(18,6))) AS DOUBLE), 2) AS "ASIA",
-           round(CAST(sum(CAST(CASE WHEN r_name = 'EUROPE' THEN o_totalprice END
-             AS DECIMAL(18,6))) AS DOUBLE), 2) AS "EUROPE",
-           round(CAST(sum(CAST(CASE WHEN r_name = 'MIDDLE EAST' THEN o_totalprice END
-             AS DECIMAL(18,6))) AS DOUBLE), 2) AS "MIDDLE EAST"
-    FROM orders
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation ON c_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
-    """,
-)
-def q_transpose_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native DataFrame.transpose (new in Spark 4.0): flip a 5-row
-    (region, revenue) aggregate into one wide row keyed by the former
-    column names. Transpose COLLECTS the first column to the driver to
-    name the output columns — fine on a dimension-grain aggregate (5
-    rows), catastrophic on a fact table; the engine's long-form melt
-    (R4, transpose_matrix) remains the scale path for genuine matrices
-    (SURVEY §4 'matrix ops in long form')."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    agg = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
-            .cast("double").alias("revenue")
-        )
-        .orderBy("r_name")
-    )
-    return agg.transpose().withColumnRenamed("key", "key")
-
-
-@_register(
-    "string_breadth",
-    oracle="""
-    SELECT n_name,
-           levenshtein(n_name, 'UNITED STATES') AS lev_us,
-           translate(n_name, 'AEIOU', 'aeiou') AS devowel,
-           lpad(CAST(n_nationkey AS VARCHAR), 4, '0') AS padded_key,
-           reverse(n_name) AS rev_name,
-           repeat(substr(n_name, 1, 1), 3) AS tripled_initial,
-           CAST(ascii(n_name) AS BIGINT) AS first_byte,
-           length(n_name) AS name_len
-    FROM nation
-    """,
-)
-def q_string_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String-function breadth beyond the reference's regex family (§2.10):
-    levenshtein edit distance (the building block for fuzzy gene-symbol
-    alias matching — blocked nearest-alias joins at scale pair it with a
-    first-letter or length band), translate, lpad (zero-padding IDs for
-    lexicographic = numeric sort order), reverse, repeat, ascii, length.
-    All JVM built-ins, map-side only — zero shuffles in this plan."""
-    n = _t(spark, sf_dir, "nation")
-    return n.select(
-        "n_name",
-        F.levenshtein("n_name", F.lit("UNITED STATES")).cast("long").alias("lev_us"),
-        F.translate("n_name", "AEIOU", "aeiou").alias("devowel"),
-        F.lpad(F.col("n_nationkey").cast("string"), 4, "0").alias("padded_key"),
-        F.reverse("n_name").alias("rev_name"),
-        F.repeat(F.substring("n_name", 1, 1), 3).alias("tripled_initial"),
-        F.ascii("n_name").cast("long").alias("first_byte"),
-        F.length("n_name").cast("long").alias("name_len"),
-    )
-
 
 @_register(
     "salted_join_revenue",
@@ -616,581 +200,6 @@ def q_cogroup_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .applyInPandas(
             merge,
             schema="user_id bigint, event_id bigint, right_value double, right_us bigint",
-        )
-    )
-
-
-@_register(
-    "redact_pii",
-    oracle="""
-    WITH aug AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 3 = 0
-                  THEN text || ' contact user' || CAST(doc_id AS VARCHAR)
-                       || '@example.com or +1-555-'
-                       || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                  ELSE text END AS t
-      FROM documents
-    )
-    SELECT doc_id,
-           len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))
-             AS n_emails,
-           len(regexp_extract_all(t, '\\+[0-9]{1,2}-[0-9]{3}-[0-9]{4}')) AS n_phones,
-           length(regexp_replace(regexp_replace(t,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-             '\\+[0-9]{1,2}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g')) AS redacted_len,
-           NOT contains(regexp_replace(t,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'), '@')
-             AS email_clean
-    FROM aug
-    """,
-)
-def q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII redaction for training corpora: email + phone patterns found,
-    replaced with typed placeholders, and audited (match counts + a
-    post-redaction cleanliness probe). The synthetic corpus carries no
-    PII, so both engines deterministically inject doc_id-derived
-    addresses into every third document first — the redaction machinery
-    (global regexp_replace, regexp_count/extract_all, residue check) is
-    what's certified. Patterns stay in the Java∩RE2 regex intersection;
-    DuckDB's regexp_replace needs the explicit 'g' flag where Spark's is
-    global by default. Map-side only — zero shuffles."""
-    email = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-    phone = r"\+[0-9]{1,2}-[0-9]{3}-[0-9]{4}"
-    d = _t(spark, sf_dir, "documents")
-    aug = d.withColumn(
-        "t",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(
-                F.col("text"), F.lit(" contact user"),
-                F.col("doc_id").cast("string"), F.lit("@example.com or +1-555-"),
-                F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-            ),
-        ).otherwise(F.col("text")),
-    )
-    red = F.regexp_replace(
-        F.regexp_replace(F.col("t"), email, "<EMAIL>"), phone, "<PHONE>"
-    )
-    return aug.select(
-        "doc_id",
-        F.regexp_count(F.col("t"), F.lit(email)).cast("long").alias("n_emails"),
-        F.regexp_count(F.col("t"), F.lit(phone)).cast("long").alias("n_phones"),
-        F.length(red).cast("long").alias("redacted_len"),
-        (~F.regexp_replace(F.col("t"), email, "<EMAIL>").contains("@")).alias("email_clean"),
-    )
-
-
-@_register(
-    "sql_udf_scalar_tvf",
-    oracle="""
-    SELECT n_name,
-           upper(substr(lower(n_name), 1, 1)) || substr(lower(n_name), 2)
-             AS sentence_name,
-           i
-    FROM nation, LATERAL (
-      SELECT CAST(unnest(generate_series(1, CAST(n_nationkey % 3 + 1 AS INT))) AS INT) AS i
-    ) t
-    """,
-)
-def q_sql_udf_scalar_tvf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL-defined UDFs (new in Spark 4.0): a scalar function (the
-    reference's X13 sentence_case — no Catalyst built-in exists, and a
-    SQL UDF keeps it codegen-inlined where a Python UDF would break the
-    stage) and a table-valued function applied with correlated LATERAL
-    (per-nation row replication). Both are declared in SQL, registered in
-    the session catalog, and inline into the optimized plan — zero
-    EvalPython. DuckDB oracles them with the expanded expressions (its
-    macro system is the analogue)."""
-    _t(spark, sf_dir, "nation").createOrReplaceTempView("nation_su")
-    spark.sql("""
-        CREATE OR REPLACE TEMPORARY FUNCTION sent_case(s STRING) RETURNS STRING
-        RETURN concat(upper(substring(lower(s), 1, 1)), substring(lower(s), 2))
-    """)
-    spark.sql("""
-        CREATE OR REPLACE TEMPORARY FUNCTION rep_n(n INT) RETURNS TABLE(i INT)
-        RETURN SELECT explode(sequence(1, n)) AS i
-    """)
-    return spark.sql("""
-        SELECT n_name, sent_case(n_name) AS sentence_name, i
-        FROM nation_su, LATERAL rep_n(CAST(n_nationkey % 3 + 1 AS INT))
-    """)
-
-
-@_register(
-    "param_sql_filter",
-    oracle="""
-    SELECT o_orderpriority, count(*) AS n,
-           round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
-    FROM orders
-    WHERE o_orderstatus = 'F' AND o_totalprice >= 50000
-    GROUP BY o_orderpriority
-    """,
-)
-def q_param_sql_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Named-parameter SQL (spark.sql(..., args={...})): parameters bind
-    as typed literals in the analyzed plan — injection-safe by
-    construction and constant-folded like any literal, so predicate
-    pushdown sees plain comparisons (status/price reach PushedFilters).
-    The oracle inlines the same values."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_pq")
-    return spark.sql(
-        """
-        SELECT o_orderpriority, count(*) AS n,
-               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
-        FROM orders_pq
-        WHERE o_orderstatus = :status AND o_totalprice >= :floor
-        GROUP BY o_orderpriority
-        """,
-        args={"status": "F", "floor": 50000},
-    )
-
-
-@_register(
-    "generator_tvf_suite",
-    oracle="""
-    WITH a AS (
-      SELECT n_name AS src, CAST(i - 1 AS INT) AS pos, 'elem' AS k,
-             CAST([n_nationkey, n_regionkey,
-                   n_nationkey + n_regionkey][i] AS VARCHAR) AS v
-      FROM nation, (SELECT unnest(generate_series(1, 3)) AS i)
-    ),
-    b AS (
-      SELECT n_name, 0, 'rk', CAST(n_regionkey AS VARCHAR) FROM nation
-      UNION ALL
-      SELECT n_name, 1, 'nk', CAST(n_nationkey AS VARCHAR) FROM nation
-    ),
-    c AS (
-      SELECT n_name, -1, 'name', n_name FROM nation
-      UNION ALL
-      SELECT n_name, -1, 'keysum',
-             CAST(n_nationkey + n_regionkey AS VARCHAR) FROM nation
-    )
-    SELECT * FROM a UNION ALL SELECT * FROM b UNION ALL SELECT * FROM c
-    """,
-)
-def q_generator_tvf_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Generator (table-valued) function breadth (§2.6 row-expansion
-    general forms): posexplode (element + ordinal — the positional twin
-    of R1's separate_rows), inline (array<struct> → columns, the typed
-    way to expand packed repeated groups), and stack (N-column unpivot
-    literal, the SQL-text twin of melt). One generator per SELECT is a
-    Spark analyzer rule, so the three live in unioned branches; each
-    branch stays a map-side Generate node — the union introduces no
-    exchange, and the whole plan is scan→generate→union with zero
-    shuffles."""
-    n = _t(spark, sf_dir, "nation")
-    a = n.select(
-        F.col("n_name").alias("src"),
-        F.posexplode(
-            F.array(
-                F.col("n_nationkey"),
-                F.col("n_regionkey"),
-                F.col("n_nationkey") + F.col("n_regionkey"),
-            )
-        ).alias("pos", "val"),
-    ).select(
-        "src",
-        F.col("pos").cast("int").alias("pos"),
-        F.lit("elem").alias("k"),
-        F.col("val").cast("string").alias("v"),
-    )
-    b = n.select(
-        F.col("n_name").alias("src"),
-        F.inline(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("pos"),
-                    F.lit("rk").alias("k"),
-                    F.col("n_regionkey").cast("string").alias("v"),
-                ),
-                F.struct(
-                    F.lit(1).alias("pos"),
-                    F.lit("nk").alias("k"),
-                    F.col("n_nationkey").cast("string").alias("v"),
-                ),
-            )
-        ),
-    )
-    c = n.selectExpr(
-        "n_name AS src",
-        "CAST(-1 AS INT) AS pos",
-        "stack(2, 'name', n_name, 'keysum',"
-        " CAST(n_nationkey + n_regionkey AS STRING)) AS (k, v)",
-    )
-    return a.unionAll(b).unionAll(c)
-
-
-@_register(
-    "bitwise_suite",
-    oracle="""
-    SELECT o_orderpriority,
-           count(*) AS n,
-           bit_and(o_orderkey) AS k_and,
-           bit_or(o_orderkey) AS k_or,
-           bit_xor(o_orderkey) AS k_xor,
-           CAST(bit_count(bit_or(o_orderkey)) AS BIGINT) AS or_bits,
-           (bit_xor(o_orderkey) & 1023) AS xor_low,
-           (~bit_and(o_orderkey)) AS and_not,
-           (bit_and(o_orderkey) << 1) AS and_shl,
-           (bit_or(o_orderkey) >> 2) AS or_shr
-    FROM orders
-    GROUP BY o_orderpriority
-    """,
-)
-def q_bitwise_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bitwise scalar + aggregate family (beyond the reference's scalar
-    surface, §2.10): bit_and/bit_or/bit_xor aggregates — mergeable
-    map-side like any semigroup, so the plan is one partial+final
-    hash aggregate — plus scalar &, ~, shifts and bit_count on the
-    aggregated values. Bit-aggregates are how flag columns (set
-    membership masks, permission bits, bloom words) fold at 100 TB:
-    8 bytes of state per group regardless of row count."""
-    o = _t(spark, sf_dir, "orders")
-    agg = o.groupBy("o_orderpriority").agg(
-        F.count("*").alias("n"),
-        F.bit_and("o_orderkey").alias("k_and"),
-        F.bit_or("o_orderkey").alias("k_or"),
-        F.bit_xor("o_orderkey").alias("k_xor"),
-    )
-    return agg.select(
-        "o_orderpriority",
-        "n",
-        "k_and",
-        "k_or",
-        "k_xor",
-        F.bit_count("k_or").cast("bigint").alias("or_bits"),
-        F.col("k_xor").bitwiseAND(F.lit(1023)).alias("xor_low"),
-        F.bitwise_not("k_and").alias("and_not"),
-        F.shiftleft(F.col("k_and"), 1).alias("and_shl"),
-        F.shiftright(F.col("k_or"), 2).alias("or_shr"),
-    )
-
-
-@_register(
-    "cube_grouping",
-    oracle="""
-    SELECT o_orderstatus, o_orderpriority,
-           CAST(grouping(o_orderstatus) AS INT) AS g_status,
-           CAST(grouping(o_orderpriority) AS INT) AS g_prio,
-           count(*) AS n,
-           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2)
-                AS DOUBLE) AS revenue
-    FROM orders
-    GROUP BY CUBE(o_orderstatus, o_orderpriority)
-    """,
-)
-def q_cube_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE grouping sets + grouping() disambiguation flags (completes
-    the grouping-sets family next to `rollup_revenue`): all four
-    (status, priority) marginals in ONE pass — Spark expands the cube
-    into a single Expand node feeding one hash aggregate, so the fact
-    is scanned once however many grouping sets are requested, the same
-    property that makes multi-marginal 100 TB reporting a single job.
-    grouping(col)=1 marks the rolled-up NULL apart from a data NULL.
-    Identical SQL text runs on both engines (only the view name
-    differs)."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_cube_pq")
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority,
-               CAST(grouping(o_orderstatus) AS INT) AS g_status,
-               CAST(grouping(o_orderpriority) AS INT) AS g_prio,
-               count(*) AS n,
-               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2)
-                    AS DOUBLE) AS revenue
-        FROM orders_cube_pq
-        GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        """
-    )
-
-
-@_register(
-    "crosstab_status_priority",
-    oracle="""
-    SELECT o_orderstatus AS o_orderstatus_o_orderpriority,
-           CAST(count(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS BIGINT) AS "1-URGENT",
-           CAST(count(*) FILTER (WHERE o_orderpriority = '2-HIGH') AS BIGINT) AS "2-HIGH",
-           CAST(count(*) FILTER (WHERE o_orderpriority = '3-MEDIUM') AS BIGINT) AS "3-MEDIUM",
-           CAST(count(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') AS BIGINT) AS "4-NOT SPECIFIED",
-           CAST(count(*) FILTER (WHERE o_orderpriority = '5-LOW') AS BIGINT) AS "5-LOW"
-    FROM orders
-    GROUP BY o_orderstatus
-    """,
-)
-def q_crosstab_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """df.stat.crosstab — pairwise contingency table (the df.stat twin of
-    R2 pivot_wider with count fill). Internally one groupBy on the pair
-    + a driver-side pivot of the DISTINCT column-value set, so it is
-    safe exactly when that set is small (here: 5 priorities); at 100 TB
-    the row-label side streams through a single hash aggregate while
-    the column side must stay enumerable — same contract as any pivot.
-    The oracle spells it as filtered counts, which is also the shape
-    Spark compiles the pivot into."""
-    o = _t(spark, sf_dir, "orders")
-    return o.stat.crosstab("o_orderstatus", "o_orderpriority")
-
-
-@_register(
-    "json_export",
-    oracle="""
-    SELECT n_name,
-           CAST(to_json(struct_pack(
-               key := n_nationkey, name := n_name,
-               ids := [n_regionkey, n_nationkey])) AS VARCHAR) AS js_struct,
-           CAST(to_json([
-               struct_pack(k := 'region', v := n_regionkey),
-               struct_pack(k := 'nation', v := n_nationkey)
-           ]) AS VARCHAR) AS js_arr
-    FROM nation
-    """,
-)
-def q_json_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """to_json serialization (the export inverse of `json_props_extract`'s
-    from_json): struct → object with field order preserved, array<struct>
-    → object array — byte-identical compact JSON across engines, which is
-    what makes JSONL a safe interchange sink for nested rows (K2's
-    general form). Pure codegen projection, zero shuffles."""
-    n = _t(spark, sf_dir, "nation")
-    return n.select(
-        "n_name",
-        F.to_json(
-            F.struct(
-                F.col("n_nationkey").alias("key"),
-                F.col("n_name").alias("name"),
-                F.array(F.col("n_regionkey"), F.col("n_nationkey")).alias("ids"),
-            )
-        ).alias("js_struct"),
-        F.to_json(
-            F.array(
-                F.struct(
-                    F.lit("region").alias("k"), F.col("n_regionkey").alias("v")
-                ),
-                F.struct(
-                    F.lit("nation").alias("k"), F.col("n_nationkey").alias("v")
-                ),
-            )
-        ).alias("js_arr"),
-    )
-
-
-@_register(
-    "string_format_family",
-    oracle="""
-    SELECT n_name,
-           printf('%s|%04d', n_name, n_nationkey) AS tagged,
-           array_to_string(
-             list_transform(string_split(lower(n_name), ' '),
-                            w -> upper(w[1:1]) || w[2:]),
-             ' ') AS title_case,
-           CAST(list_position([n_regionkey, n_nationkey, 99],
-                              n_nationkey) AS INT) AS self_pos,
-           concat_ws('/', n_name, CAST(n_regionkey AS VARCHAR)) AS joined
-    FROM nation
-    """,
-)
-def q_string_format_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """format_string (printf templating — the typed alternative to string
-    concat chains for ID minting), initcap (X13 sentence_case's per-word
-    cousin; the oracle spells Spark's exact per-word semantics with a
-    DuckDB lambda), array_position (1-based, 0 when absent — matching
-    SQL FIND_IN_SET conventions), concat_ws. All map-side codegen."""
-    n = _t(spark, sf_dir, "nation")
-    return n.select(
-        "n_name",
-        F.format_string("%s|%04d", F.col("n_name"), F.col("n_nationkey")).alias(
-            "tagged"
-        ),
-        F.initcap(F.lower("n_name")).alias("title_case"),
-        F.array_position(
-            F.array(F.col("n_regionkey"), F.col("n_nationkey"), F.lit(99)),
-            F.col("n_nationkey"),
-        ).cast("int").alias("self_pos"),
-        F.concat_ws("/", F.col("n_name"), F.col("n_regionkey").cast("string")).alias(
-            "joined"
-        ),
-    )
-
-
-@_register(
-    "datetime_epoch_family",
-    oracle="""
-    SELECT DISTINCT CAST(o_orderdate AS DATE) AS order_date,
-           make_date(year(o_orderdate), month(o_orderdate), 1) AS month_start,
-           CAST((year(o_orderdate) - 1995) * 12
-                + (month(o_orderdate) - 1) AS DOUBLE) AS months_since_95,
-           CAST(epoch(CAST(CAST(o_orderdate AS DATE) AS TIMESTAMP))
-                AS BIGINT) AS epoch_s,
-           strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d 00:00:00')
-               AS rendered,
-           CAST(o_orderdate AS DATE)
-             + CAST(CASE WHEN (8 - isodow(o_orderdate)) % 7 = 0 THEN 7
-                         ELSE (8 - isodow(o_orderdate)) % 7 END
-                    AS INTEGER) AS next_monday,
-           CAST(dayofweek(o_orderdate) + 1 AS INT) AS dow_sun1
-    FROM orders
-    """,
-)
-def q_datetime_epoch_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Epoch/calendar scalar family completing `datetime_functions`
-    (§2.10 X20 temporal corner): make_date construction, months_between
-    on month boundaries (integral doubles — the only hash-safe use of
-    its fractional semantics), unix_timestamp/from_unixtime epoch
-    roundtrip, next_day, and Sunday=1 dayofweek alignment (Spark's
-    convention, spelled as dow+1 in DuckDB). Self-sufficient: pins UTC
-    so date→timestamp epoch agrees with DuckDB's timezone-free dates —
-    the same session contract as `_events`."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    o = (
-        _t(spark, sf_dir, "orders")
-        .select(F.to_date("o_orderdate").alias("order_date"))
-        .distinct()
-    )
-    ts = F.col("order_date").cast("timestamp")
-    return o.select(
-        "order_date",
-        F.make_date(F.year("order_date"), F.month("order_date"), F.lit(1)).alias(
-            "month_start"
-        ),
-        F.months_between(
-            F.make_date(F.year("order_date"), F.month("order_date"), F.lit(1)),
-            F.make_date(F.lit(1995), F.lit(1), F.lit(1)),
-        ).alias("months_since_95"),
-        F.unix_timestamp(ts).alias("epoch_s"),
-        F.from_unixtime(F.unix_timestamp(ts), "yyyy-MM-dd HH:mm:ss").alias(
-            "rendered"
-        ),
-        F.next_day("order_date", "Mon").alias("next_monday"),
-        F.dayofweek("order_date").cast("int").alias("dow_sun1"),
-    )
-
-
-@_register(
-    "theta_set_analytics",
-    oracle="""
-    WITH a AS (SELECT DISTINCT o_custkey % 997 AS v FROM orders
-               WHERE o_orderstatus = 'O'),
-         b AS (SELECT DISTINCT o_custkey % 997 AS v FROM orders
-               WHERE o_orderstatus = 'F')
-    SELECT (SELECT count(*) FROM a) AS n_open,
-           (SELECT count(*) FROM b) AS n_filled,
-           (SELECT count(*) FROM
-              (SELECT v FROM a UNION SELECT v FROM b)) AS n_union,
-           (SELECT count(*) FROM
-              (SELECT v FROM a INTERSECT SELECT v FROM b)) AS n_both,
-           (SELECT count(*) FROM
-              (SELECT v FROM a EXCEPT SELECT v FROM b)) AS n_only_open
-    """,
-)
-def q_theta_set_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theta sketches (Spark 4.1 DataSketches): DISTINCT-set algebra —
-    union, intersection, difference cardinalities — from two one-pass
-    mergeable sketches instead of three DISTINCT shuffles. THE pattern
-    for 100 TB audience overlap ("users in corpus A and B"): build
-    per-partition sketches map-side, merge 4 KB states, never shuffle
-    raw keys; sketches persist as binary columns so daily sketches roll
-    up to any window. Below k=4096 retained entries a theta sketch is
-    in exact mode (θ=1, every hash kept), so with the key domain
-    bounded to 997 the estimates ARE the exact counts at every SF —
-    which is what lets DuckDB's exact set ops oracle a sketch query."""
-    o = _t(spark, sf_dir, "orders")
-    sk = o.agg(
-        F.expr(
-            "theta_sketch_agg(CASE WHEN o_orderstatus = 'O'"
-            " THEN o_custkey % 997 END)"
-        ).alias("sa"),
-        F.expr(
-            "theta_sketch_agg(CASE WHEN o_orderstatus = 'F'"
-            " THEN o_custkey % 997 END)"
-        ).alias("sb"),
-    )
-    return sk.select(
-        F.expr("CAST(theta_sketch_estimate(sa) AS BIGINT)").alias("n_open"),
-        F.expr("CAST(theta_sketch_estimate(sb) AS BIGINT)").alias("n_filled"),
-        F.expr(
-            "CAST(theta_sketch_estimate(theta_union(sa, sb)) AS BIGINT)"
-        ).alias("n_union"),
-        F.expr(
-            "CAST(theta_sketch_estimate(theta_intersection(sa, sb)) AS BIGINT)"
-        ).alias("n_both"),
-        F.expr(
-            "CAST(theta_sketch_estimate(theta_difference(sa, sb)) AS BIGINT)"
-        ).alias("n_only_open"),
-    )
-
-
-@_register(
-    "approx_topk_exact_regime",
-    oracle="""
-    SELECT o_orderpriority AS priority, count(*) AS n
-    FROM orders
-    GROUP BY o_orderpriority
-    """,
-)
-def q_approx_topk_exact_regime(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_top_k (Spark 4.1 frequent-items sketch): heavy hitters in
-    one pass with bounded state — the streaming-safe, mergeable upgrade
-    of freqItems. When distinct items ≤ maxItemsTracked the sketch
-    tracks every item exactly (no eviction ⇒ exact counts — the regime
-    this 5-value column is permanently in), so the top-5 IS the exact
-    group-by; above it, counts become lower bounds with a documented
-    error cap. Exploded to rows so the unordered hash compare ignores
-    the sketch's count-desc tie order."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.agg(F.expr("approx_top_k(o_orderpriority, 5)").alias("tk"))
-        .select(F.explode("tk").alias("e"))
-        .select(
-            F.col("e.item").alias("priority"),
-            F.col("e.count").cast("bigint").alias("n"),
-        )
-    )
-
-
-@_register(
-    "collated_group_count",
-    oracle="""
-    WITH mixed AS (
-      SELECT CASE WHEN p_partkey % 2 = 0 THEN upper(p_type) ELSE p_type END
-               AS t,
-             p_partkey
-      FROM part
-    )
-    SELECT lower(t) AS type_key, count(*) AS n,
-           CAST(sum(CASE WHEN t = upper(t) THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_upper
-    FROM mixed GROUP BY lower(t)
-    """,
-)
-def q_collated_group_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 collation surface: grouping ON a UTF8_LCASE-collated
-    column — the engine's hash/compare is collation-aware, no lower()
-    rewrite. Mixed-case input is manufactured (even part keys upper-
-    cased) so the collated group genuinely merges case variants;
-    n_upper proves both forms landed in one group. The output key is
-    normalized with lower() because a collated group's representative
-    value is whichever variant the aggregation saw first — collation-
-    correct but nondeterministic, exactly what an oracle-stable query
-    must not emit."""
-    p = _t(spark, sf_dir, "part").select(
-        F.when(F.col("p_partkey") % 2 == 0, F.upper("p_type"))
-        .otherwise(F.col("p_type"))
-        .alias("t")
-    )
-    return (
-        p.groupBy(F.collate(F.col("t"), "UTF8_LCASE").alias("k"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.when(F.col("t") == F.upper("t"), 1).otherwise(0)
-            ).cast("bigint").alias("n_upper"),
-        )
-        .select(
-            # lower() of a collated value stays collated — re-collate to the
-            # default so the output schema is plain `string` for the driver
-            F.collate(F.lower("k"), "UTF8_BINARY").alias("type_key"),
-            "n",
-            "n_upper",
         )
     )
 

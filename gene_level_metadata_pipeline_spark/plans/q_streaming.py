@@ -246,7 +246,8 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     third stateful mechanism next to tumbling-window aggregation and
     applyInPandasWithState). The watermark-punctuation flush drains all
     open sessions at the end of the bounded replay, so the result equals
-    the batch events_session_windows query and shares its oracle."""
+    the batch session-window aggregation, which the lag-based island
+    oracle derives."""
     from gene_level_metadata_pipeline_spark.streaming.windows import (
         session_window_counts_stream,
     )

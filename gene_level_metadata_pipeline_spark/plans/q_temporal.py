@@ -1287,15 +1287,14 @@ def q_seasonal_mae_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct users per sliding window (6-hour windows, 90-min
-    slide): the audience-reach counterpart of events_sliding_windows
-    (which counts rows). Spark's ``window`` replicates each event into
+    slide): the audience-reach counterpart of a per-window row count. Spark's ``window`` replicates each event into
     its 4 containing windows map-side; the per-window distinct is one
     expanded aggregate. The oracle reproduces the replication with the
     explicit 0..3 cross join and a DISTINCT projection. Output bounds
     are exact epoch micros. At 100 TB exact sliding distinct is the
     expensive-by-definition aggregate (state is the per-window user
     set) — this query IS the exact-regime baseline that the theta /
-    k-minima sketches in theta_set_analytics and corpus_overlap_est
+    k-minima sketches (corpus_overlap_est)
     approximate when the set no longer fits."""
     ev = _events(spark, sf_dir)
     w = F.window("ts", "6 hours", "90 minutes")
@@ -1979,8 +1978,7 @@ def q_conversion_latency_quantiles(
     single-window attribution plan (temporal.attribute_last_touch — no
     conversions x touches self-join); quantiles use Spark
     ``percentile`` / DuckDB ``quantile_cont``, which share the exact
-    linear-interpolation definition (the median_quantiles precedent —
-    never approx_percentile where exactness is graded). The divide-
+    linear-interpolation definition (never approx_percentile where exactness is graded). The divide-
     then-round shape is identical in both engines."""
     from gene_level_metadata_pipeline_spark.operators.temporal import (
         attribute_last_touch,
@@ -2080,7 +2078,7 @@ def q_weighted_median_order_value(
     over the collapsed (group, value) table plus a min. All exact
     bigints (prices in cents, weights are counts; the half test is
     cum*2 >= tot, never a double 0.5), so the hash match is trivial —
-    the integer-threshold sibling of the interpolated median_quantiles.
+    the integer-threshold sibling of the interpolated median.
     At 100 TB the windowed table is |distinct values| per group, not
     |rows|."""
     from pyspark.sql.window import Window

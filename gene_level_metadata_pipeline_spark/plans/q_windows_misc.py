@@ -1,4 +1,4 @@
-"""Sliding/session windows, snapshot CDC, graph, k-means assignment, generators, multi-source harmonization, misc.
+"""Snapshot CDC, graph, k-means assignment, multi-source harmonization, misc.
 
 Split from the original single-module registry (plans/driver_queries.py,
 which remains the facade); importing this module registers its queries.
@@ -13,9 +13,6 @@ from gene_level_metadata_pipeline_spark.materialize import (
     materialize as _materialize,
 )
 from gene_level_metadata_pipeline_spark.operators.harmonize import harmonize, spine
-from gene_level_metadata_pipeline_spark.plans.q_dedup_text import (
-    _minhash_oracle,
-)
 from gene_level_metadata_pipeline_spark.plans.registry import (
     ORACLE,
     QUERIES,
@@ -30,151 +27,8 @@ from gene_level_metadata_pipeline_spark.plans.registry import (
 )
 
 # ---------------------------------------------------------------------------
-# Sliding / session windows + snapshot CDC
+# Snapshot CDC
 # ---------------------------------------------------------------------------
-
-@_register(
-    "events_sliding_windows",
-    oracle="""
-    WITH ev AS (SELECT epoch_us(ts) AS us, value FROM events),
-    x AS (
-      SELECT us, value,
-             (us // 900000000) * 900000000 - k * 900000000 AS ws
-      FROM ev CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS k)
-    )
-    SELECT ws AS ws_us, ws + 3600000000 AS we_us,
-           count(*) AS n,
-           CAST(round(sum(CAST(value AS DECIMAL(18,6))), 2) AS DOUBLE)
-             AS total
-    FROM x GROUP BY ws
-    """,
-)
-def q_events_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding (hopping) windows: 1-hour windows advancing every 15
-    minutes — each event lands in exactly 4 windows (Spark's ``window``
-    with a slide replicates map-side, then one hash aggregate; the
-    oracle reproduces the replication with an explicit 0..3 cross
-    join). Epoch-aligned starts, micros arithmetic, decimal sums."""
-    ev = _events(spark, sf_dir)
-    w = F.window("ts", "1 hour", "15 minutes")
-    return ev.groupBy(w.alias("w")).agg(
-        F.count(F.lit(1)).alias("n"),
-        _dsum(F.col("value"), 2).alias("total"),
-    ).select(
-        F.unix_micros("w.start").alias("ws_us"),
-        F.unix_micros("w.end").alias("we_us"),
-        "n",
-        "total",
-    )
-
-
-@_register(
-    "events_session_windows",
-    oracle="""
-    WITH ev AS (SELECT user_id, epoch_us(ts) AS us, value FROM events),
-    o AS (
-      SELECT user_id, us, value,
-             CASE WHEN lag(us) OVER w IS NULL
-                    OR us - lag(us) OVER w >= 1800000000
-                  THEN 1 ELSE 0 END AS brk
-      FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY us)
-    ),
-    g AS (
-      SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY us
-                               ROWS UNBOUNDED PRECEDING) AS sid
-      FROM o
-    )
-    SELECT user_id,
-           min(us) AS session_start_us,
-           max(us) + 1800000000 AS session_end_us,
-           count(*) AS n,
-           CAST(round(sum(CAST(value AS DECIMAL(18,6))), 2) AS DOUBLE)
-             AS total
-    FROM g GROUP BY user_id, sid
-    """,
-)
-def q_events_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Built-in session windows (``F.session_window``, 30-minute gap):
-    merges events whose inter-arrival gap is under the timeout; the
-    window end is last-event + gap (end-exclusive, so a gap of exactly
-    30 min starts a new session). The oracle derives identical sessions
-    via lag-based island detection — the same semantics the batch
-    ``sessionize`` operator certifies, now through Spark's native
-    session-window aggregation (one shuffle on user_id + merging agg)."""
-    ev = _events(spark, sf_dir)
-    return ev.groupBy(
-        "user_id", F.session_window("ts", "30 minutes").alias("sw")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        _dsum(F.col("value"), 2).alias("total"),
-    ).select(
-        "user_id",
-        F.unix_micros("sw.start").alias("session_start_us"),
-        F.unix_micros("sw.end").alias("session_end_us"),
-        "n",
-        "total",
-    )
-
-
-@_register(
-    "events_session_windows_dynamic",
-    oracle="""
-    WITH ev AS (
-      SELECT user_id, epoch_us(ts) AS us,
-             CASE WHEN event_type = 'purchase' THEN 3600000000
-                  ELSE 1800000000 END AS gap
-      FROM events
-    ),
-    o AS (
-      SELECT user_id, us, gap,
-             max(us + gap) OVER (
-               PARTITION BY user_id ORDER BY us
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-             ) AS prev_end
-      FROM ev
-    ),
-    f AS (
-      SELECT *, CASE WHEN prev_end IS NULL OR us >= prev_end
-                     THEN 1 ELSE 0 END AS brk
-      FROM o
-    ),
-    g AS (
-      SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY us
-                               ROWS UNBOUNDED PRECEDING) AS sid
-      FROM f
-    )
-    SELECT user_id, min(us) AS session_start_us,
-           max(us + gap) AS session_end_us, count(*) AS n
-    FROM g GROUP BY user_id, sid
-    """,
-)
-def q_events_session_windows_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dynamic-gap session windows (Spark 3.2+): the gap is a per-event
-    EXPRESSION — purchases hold a session open 60 minutes, everything
-    else 30. Each event contributes the interval [ts, ts+gap); Spark
-    merges overlapping intervals per key, so session end is
-    max(ts_i + gap_i), and an event starting exactly at the running
-    end opens a new session (end-exclusive). The oracle replays the
-    same interval-union with a running max over preceding ends —
-    order-insensitive math, so us-ties need no tiebreak."""
-    ev = _events(spark, sf_dir)
-    # session_window's dynamic gap must be CalendarIntervalType — ANSI
-    # INTERVAL literals are DayTimeIntervalType, so build via make_interval
-    gap = F.when(
-        F.col("event_type") == "purchase",
-        F.expr("make_interval(0, 0, 0, 0, 0, 60, 0)"),
-    ).otherwise(F.expr("make_interval(0, 0, 0, 0, 0, 30, 0)"))
-    return (
-        ev.groupBy("user_id", F.session_window("ts", gap).alias("sw"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "user_id",
-            F.unix_micros("sw.start").alias("session_start_us"),
-            F.unix_micros("sw.end").alias("session_end_us"),
-            "n",
-        )
-    )
-
 
 @_register(
     "snapshot_diff_orders",
@@ -233,50 +87,6 @@ def q_snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return snapshot_diff(old, new, "o_orderkey")
-
-
-@_register(
-    "graph_triangles",
-    oracle="""
-    WITH os AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-    pairs AS (
-      SELECT a.l_suppkey AS u, b.l_suppkey AS v, count(*) AS n
-      FROM os a JOIN os b
-        ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-      GROUP BY a.l_suppkey, b.l_suppkey
-    ),
-    edges AS (SELECT u, v FROM pairs WHERE n >= 3)
-    SELECT (SELECT count(*) FROM edges) AS n_edges,
-           (SELECT count(*)
-            FROM edges e1
-            JOIN edges e2 ON e1.v = e2.u
-            JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v) AS n_triangles
-    """,
-)
-def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relational graph analytics beyond component labeling: build a
-    supplier co-occurrence graph (suppliers sharing ≥3 orders; edges
-    stored once with u < v) and count triangles with the classic
-    two-join enumeration — each triangle counted exactly once because
-    every edge is oriented low→high. The per-order self-join is bounded
-    by order fan-out (≈4 suppliers/order ⇒ ≤6 pairs); the triangle join
-    runs on the sparsified edge set. At 100 TB the standard mitigation
-    is degree-ordered orientation (orient edges from lower-degree to
-    higher-degree node) which bounds the join fan-out by sqrt(m)."""
-    edges = (
-        _cooccur_pairs(
-            _t(spark, sf_dir, "lineitem"), "l_orderkey", "l_suppkey"
-        )
-        .where(F.col("n") >= 3)
-        .select("u", "v")
-    )
-    e1 = edges.select(F.col("u").alias("x"), F.col("v").alias("y"))
-    e2 = edges.select(F.col("u").alias("y"), F.col("v").alias("z"))
-    e3 = edges.select(F.col("u").alias("x"), F.col("v").alias("z"))
-    tri = e1.join(e2, "y").join(e3, ["x", "z"]).agg(
-        F.count(F.lit(1)).alias("n_triangles")
-    )
-    return edges.agg(F.count(F.lit(1)).alias("n_edges")).join(tri)
 
 
 @_register(
@@ -353,28 +163,6 @@ def q_read_xml_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register(
-    "posexplode_tokens",
-    oracle="""
-    SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, toks[i] AS word
-    FROM (
-      SELECT doc_id, string_split(text, ' ') AS toks
-      FROM documents WHERE doc_id < 20
-    ), unnest(generate_series(1, len(toks))) AS g(i)
-    """,
-)
-def q_posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordinal explode (posexplode): token stream with positions — the
-    WITH ORDINALITY form of R1's separate_rows, needed whenever token
-    order carries meaning (n-gram reconstruction, positional vocab).
-    Map-side only, zero shuffles."""
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 20)
-    return docs.select(
-        "doc_id",
-        F.posexplode(F.split("text", " ")).alias("pos", "word"),
-    ).withColumn("pos", F.col("pos").cast("long"))
-
-
-@_register(
     "substring_dup_spans",
     oracle="""
     WITH t AS (
@@ -423,77 +211,6 @@ def q_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_occ"),
         )
         .where(F.col("n_docs") >= 2)
-    )
-
-
-@_register(
-    "delta_agg_merge",
-    oracle="""
-    SELECT o_custkey,
-           count(*) AS n_orders,
-           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE)
-             AS total_spend
-    FROM orders GROUP BY o_custkey
-    """,
-)
-def q_delta_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental aggregate maintenance: a pre-1997 base aggregate
-    merged with a 1997+ delta aggregate via partial-aggregate combine
-    (counts add; DECIMAL sums add associatively — the reason sums stay
-    decimal until the final round). The merged result provably equals
-    the full-scan aggregate (the oracle IS the full scan) — certifying
-    the merge identity a 100 TB rollup relies on to avoid rescans; the
-    same shape maintains the base against daily deltas forever."""
-    ord_ = _t(spark, sf_dir, "orders")
-    cut = F.lit("1997-01-01").cast("timestamp")
-
-    def part(df):
-        return df.groupBy("o_custkey").agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,6)")).alias("t"),
-        )
-
-    base = part(ord_.where(F.col("o_orderdate") < cut))
-    delta = part(ord_.where(F.col("o_orderdate") >= cut))
-    return (
-        base.unionByName(delta)
-        .groupBy("o_custkey")
-        .agg(F.sum("n_orders").alias("n_orders"), F.sum("t").alias("t"))
-        .select(
-            "o_custkey",
-            "n_orders",
-            F.round("t", 2).cast("double").alias("total_spend"),
-        )
-    )
-
-
-@_register(
-    "grouping_sets_revenue",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus)
-                AS BIGINT) AS gid,
-           count(*) AS n_rows,
-           CAST(round(sum(CAST(l_quantity AS DECIMAL(18,6))), 2) AS DOUBLE)
-             AS sum_qty
-    FROM lineitem
-    GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-    """,
-)
-def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arbitrary GROUPING SETS (each single margin + grand total — a
-    shape neither ROLLUP nor CUBE produces) with grouping_id
-    disambiguating real NULLs from subtotal NULLs. One Expand + one
-    hash aggregate, same single-pass plan family as rollup_revenue /
-    cube_revenue."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupingSets(
-        [["l_returnflag"], ["l_linestatus"], []],
-        "l_returnflag", "l_linestatus",
-    ).agg(
-        F.grouping_id().alias("gid"),
-        F.count(F.lit(1)).alias("n_rows"),
-        _dsum(F.col("l_quantity"), 2).alias("sum_qty"),
     )
 
 
@@ -590,7 +307,7 @@ def q_normalize_text_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_encode_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize-to-ids — the final text→model-input step: a frequency-
     ranked vocabulary (top 30 words here; top 50k in production) built
-    with the vocab_top_words machinery, broadcast-joined onto the
+    from exact word counts, broadcast-joined onto the
     position-exploded token stream, re-assembled into an ordered id
     array per document with out-of-vocabulary words mapped to -1.
     Shuffles: vocab agg + the doc_id re-assembly; the vocab join itself
@@ -930,263 +647,6 @@ def q_harmonize_catalog_width(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register(
-    "pivot_multi_values",
-    oracle="""
-    SELECT o_orderstatus,
-           count(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 END)
-             AS urgent_n,
-           CAST(round(sum(CASE WHEN o_orderpriority = '1-URGENT'
-                               THEN CAST(o_totalprice AS DECIMAL(18,6))
-                          END), 2) AS DOUBLE) AS urgent_total,
-           count(CASE WHEN o_orderpriority = '5-LOW' THEN 1 END) AS low_n,
-           CAST(round(sum(CASE WHEN o_orderpriority = '5-LOW'
-                               THEN CAST(o_totalprice AS DECIMAL(18,6))
-                          END), 2) AS DOUBLE) AS low_total
-    FROM orders GROUP BY o_orderstatus
-    """,
-)
-def q_pivot_multi_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R2's general form — pivot_wider(values_from = c(v1, v2)): one
-    pivot producing TWO value columns per pivoted key (count and sum
-    here). Explicit pivot values keep Spark from running a distinct
-    pre-scan; the whole thing is a single hash aggregate with
-    conditional partials — identical to the oracle's CASE form."""
-    ord_ = _t(spark, sf_dir, "orders")
-    out = (
-        ord_.groupBy("o_orderstatus")
-        .pivot("o_orderpriority", ["1-URGENT", "5-LOW"])
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            _dsum(F.col("o_totalprice"), 2).alias("total"),
-        )
-    )
-    return out.select(
-        "o_orderstatus",
-        F.col("1-URGENT_n").alias("urgent_n"),
-        F.col("1-URGENT_total").alias("urgent_total"),
-        F.col("5-LOW_n").alias("low_n"),
-        F.col("5-LOW_total").alias("low_total"),
-    )
-
-
-@_register(
-    "packed_kv_parse",
-    oracle="""
-    WITH pairs AS (
-      SELECT p_partkey,
-             unnest(string_split(
-               'size=' || CAST(p_size AS VARCHAR) || ';brand=' || p_brand
-               || ';type=' || p_type, ';')) AS kv
-      FROM part WHERE p_partkey < 200
-    )
-    SELECT p_partkey,
-           split_part(kv, '=', 1) AS attr_key,
-           split_part(kv, '=', 2) AS attr_val
-    FROM pairs
-    """,
-)
-def q_packed_kv_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Packed key=value attribute strings → long (key, value) rows via
-    str_to_map + map explode — the reference's pipe-packed multi-value
-    idiom (R1) generalized to keyed packing. The packed string is built
-    from part attributes so the oracle derives the identical input; the
-    parse is map-side (str_to_map + explode, no Python, no shuffle)."""
-    part = _t(spark, sf_dir, "part").where(F.col("p_partkey") < 200)
-    packed = F.concat(
-        F.lit("size="), F.col("p_size").cast("string"),
-        F.lit(";brand="), F.col("p_brand"),
-        F.lit(";type="), F.col("p_type"),
-    )
-    return part.select(
-        "p_partkey",
-        F.explode(F.str_to_map(packed, F.lit(";"), F.lit("="))).alias(
-            "attr_key", "attr_val"
-        ),
-    )
-
-
-@_register(
-    "window_value_suite",
-    oracle="""
-    SELECT o_custkey, o_orderkey,
-           first_value(o_orderkey) OVER w AS first_ok,
-           last_value(o_orderkey) OVER
-             (PARTITION BY o_custkey ORDER BY o_orderkey
-              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-             AS last_ok,
-           nth_value(o_orderkey, 2) OVER
-             (PARTITION BY o_custkey ORDER BY o_orderkey
-              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-             AS second_ok,
-           round(percent_rank() OVER w, 6) AS pr
-    FROM orders
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey)
-    """,
-)
-def q_window_value_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Value-window completion of window_rank_suite: first/last/nth value
-    over full-partition frames plus percent_rank — all four functions
-    share ONE custkey sort exchange (unique orderkey ordering keeps
-    every result deterministic)."""
-    from pyspark.sql import Window
-
-    ord_ = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
-    wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return ord_.select(
-        "o_custkey", "o_orderkey",
-        F.first("o_orderkey").over(w).alias("first_ok"),
-        F.last("o_orderkey").over(wfull).alias("last_ok"),
-        F.nth_value("o_orderkey", 2).over(wfull).alias("second_ok"),
-        F.round(F.percent_rank().over(w), 6).alias("pr"),
-    )
-
-
-@_register(
-    "bool_agg_flags",
-    oracle="""
-    SELECT l_orderkey,
-           bool_or(l_returnflag = 'R') AS any_returned,
-           bool_and(l_quantity < 45) AS all_small,
-           CAST(max_by(l_partkey, l_linenumber * 100000000 + l_partkey)
-                AS BIGINT) AS last_part
-    FROM lineitem GROUP BY l_orderkey
-    """,
-)
-def q_bool_agg_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boolean / argmax aggregates: any/every flags per order plus the
-    deterministic max_by — one hash aggregate with map-side partials.
-    (l_orderkey, l_linenumber) is NOT unique in this data, so the argmax
-    ordering composites the partkey in as a scalar tie-break (struct
-    orderings aren't portable to the oracle engine)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_orderkey").agg(
-        F.bool_or(F.col("l_returnflag") == "R").alias("any_returned"),
-        F.bool_and(F.col("l_quantity") < 45).alias("all_small"),
-        F.max_by(
-            "l_partkey",
-            F.col("l_linenumber").cast("long") * 100000000 + F.col("l_partkey"),
-        ).alias("last_part"),
-    )
-
-
-@_register(
-    "array_set_ops",
-    oracle="""
-    WITH a AS (
-      SELECT l_orderkey, list_sort(list(DISTINCT l_linenumber)) AS lns
-      FROM lineitem WHERE l_orderkey < 400 GROUP BY l_orderkey
-    )
-    SELECT l_orderkey, lns,
-           list_sort(list_filter(lns, x -> x IN (1, 2, 3))) AS kept,
-           list_sort(list_filter(lns, x -> x NOT IN (1, 2, 3))) AS extra,
-           len(lns) AS n_lines
-    FROM a
-    """,
-)
-def q_array_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array set operations against a constant set: per-order distinct
-    line numbers intersected with / subtracted by {1,2,3} — results
-    array_sort-ed on BOTH engines because set-op output order is
-    implementation-defined (the determinism rule every array-valued
-    oracle follows)."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 400)
-    base = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_linenumber")).alias("lns")
-    )
-    const = F.array(F.lit(1), F.lit(2), F.lit(3))
-    return base.select(
-        "l_orderkey", "lns",
-        F.array_sort(F.array_intersect("lns", const)).alias("kept"),
-        F.array_sort(F.array_except("lns", const)).alias("extra"),
-        F.size("lns").cast("long").alias("n_lines"),
-    )
-
-
-@_register(
-    "datetime_functions",
-    oracle="""
-    SELECT o_orderkey,
-           CAST(year(o_orderdate) AS INTEGER) AS yr,
-           CAST(month(o_orderdate) AS INTEGER) AS mo,
-           CAST(dayofweek(o_orderdate) + 1 AS INTEGER) AS dow,
-           strftime(o_orderdate + INTERVAL 30 DAY, '%Y-%m-%d') AS due,
-           strftime(last_day(CAST(o_orderdate AS DATE)), '%Y-%m-%d')
-             AS month_end,
-           CAST(date_diff('day', DATE '1995-01-01',
-                          CAST(o_orderdate AS DATE)) AS INTEGER) AS days_since
-    FROM orders WHERE o_orderkey < 600
-    """,
-)
-def q_datetime_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date/time scalar family (absent from the reference — SURVEY
-    §2.10 'date/time: none' — but table stakes for an engine): year /
-    month / day-of-week extraction, interval arithmetic, month end,
-    day difference. DuckDB numbers dayofweek from 0=Sunday vs Spark's
-    1=Sunday — the oracle shifts by one; all date math happens on the
-    calendar date so session timezones cannot perturb it."""
-    ord_ = _t(spark, sf_dir, "orders").where(F.col("o_orderkey") < 600)
-    d = F.to_date("o_orderdate")
-    return ord_.select(
-        "o_orderkey",
-        F.year(d).alias("yr"),
-        F.month(d).alias("mo"),
-        F.dayofweek(d).alias("dow"),
-        F.date_format(F.date_add(d, 30), "yyyy-MM-dd").alias("due"),
-        F.date_format(F.last_day(d), "yyyy-MM-dd").alias("month_end"),
-        F.datediff(d, F.lit("1995-01-01").cast("date")).alias("days_since"),
-    )
-
-
-@_register(
-    "stats_profile",
-    oracle="""
-    WITH m AS (
-      SELECT l_returnflag,
-             count(*) AS n,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sq,
-             CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(28,6)))
-                  AS DOUBLE) AS sqq,
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
-               AS sp,
-             CAST(sum(CAST(l_quantity * l_extendedprice AS DECIMAL(28,6)))
-                  AS DOUBLE) AS sqp
-      FROM lineitem GROUP BY l_returnflag
-    )
-    SELECT l_returnflag, n,
-           round((sqq - sq * sq / n) / (n - 1), 4) AS var_qty,
-           round((sqp - sq * sp / n) / (n - 1), 4) AS covar_qty_price
-    FROM m
-    """,
-)
-def q_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical aggregates the PORTABLE way: built-in stddev/corr
-    accumulate doubles in partition order, so two engines (or two runs
-    with different partitionings) disagree in the last ulp. Here the
-    raw moments (Σx, Σx², Σxy) aggregate in exact DECIMAL — associative,
-    order-free — and variance/covariance assemble from them in identical
-    double arithmetic. One hash aggregate; same cost family as _dsum."""
-    li = _t(spark, sf_dir, "lineitem")
-    q = F.col("l_quantity")
-    p = F.col("l_extendedprice")
-    m = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(q.cast("decimal(18,6)")).cast("double").alias("sq"),
-        F.sum((q * q).cast("decimal(28,6)")).cast("double").alias("sqq"),
-        F.sum(p.cast("decimal(18,6)")).cast("double").alias("sp"),
-        F.sum((q * p).cast("decimal(28,6)")).cast("double").alias("sqp"),
-    )
-    n = F.col("n")
-    return m.select(
-        "l_returnflag", "n",
-        _round_to((F.col("sqq") - F.col("sq") * F.col("sq") / n) / (n - 1), 4)
-            .alias("var_qty"),
-        _round_to((F.col("sqp") - F.col("sq") * F.col("sp") / n) / (n - 1), 4)
-            .alias("covar_qty_price"),
-    )
-
-
-@_register(
     "streaming_static_enrich",
     oracle="""
     SELECT e.event_id, e.user_id, e.event_type, c.c_mktsegment AS tier
@@ -1205,38 +665,6 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return stream_static_enrich(spark, sf_dir)
-
-
-@_register(
-    "variant_props_extract",
-    oracle="""
-    WITH p AS (
-      SELECT user_id,
-             CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-      FROM events WHERE user_id < 20
-    )
-    SELECT user_id, count(*) AS n, CAST(sum(k) AS BIGINT) AS sum_k
-    FROM p GROUP BY user_id
-    """,
-)
-def q_variant_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured extraction through Spark 4's VARIANT type
-    (try_parse_json → try_variant_get): schema-flexible like a raw JSON
-    string but stored as a typed binary encoding, so repeated path
-    extraction skips re-parsing — the modern default for
-    schema-on-read columns. Same relational tail as json_props_extract;
-    the oracle is engine-neutral JSON extraction."""
-    ev = _events(spark, sf_dir).where(F.col("user_id") < 20)
-    parsed = ev.select(
-        "user_id",
-        F.try_variant_get(
-            F.try_parse_json("props"), "$.k", "bigint"
-        ).alias("k"),
-    )
-    return parsed.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("k").alias("sum_k"),
-    )
 
 
 @_register(
@@ -1308,153 +736,6 @@ def q_streaming_pages_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.createDataFrame(rows, out.schema)
     spark.catalog.dropTempView(name)
     return df
-
-
-_JACCARD_TRUTH_SQL = """
-    WITH words AS (SELECT doc_id, lang, string_split(text, ' ') AS ws FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id, lang, array_to_string(ws[i:i+2], ' ') AS shingle
-      FROM words, (SELECT unnest(generate_series(1, len(ws)-2)) AS i)
-      WHERE len(ws) >= 3
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-      FROM sh a JOIN sh b
-        ON a.shingle = b.shingle AND a.lang = b.lang AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT doc_a, doc_b
-    FROM common
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common) >= 0.5
-"""
-
-
-@_register(
-    "lsh_quality_metrics",
-    oracle=f"""
-    WITH cands AS ({_minhash_oracle()}),
-    truth AS ({_JACCARD_TRUTH_SQL}),
-    tp AS (
-      SELECT count(*) AS n_tp
-      FROM cands JOIN truth USING (doc_a, doc_b)
-    )
-    SELECT (SELECT count(*) FROM truth) AS n_truth,
-           (SELECT count(*) FROM cands) AS n_cands,
-           n_tp,
-           round(n_tp * 1.0 / (SELECT count(*) FROM cands), 4) AS precision,
-           round(n_tp * 1.0 / (SELECT count(*) FROM truth), 4) AS recall
-    FROM tp
-    """,
-)
-def q_lsh_quality_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measure, don't guess — the dedup stack evaluating ITSELF: MinHash
-    LSH candidates (8 hashes × 4 bands) scored against exact
-    language-blocked Jaccard ≥ 0.5 ground truth; one row of
-    precision/recall. The exact-truth side is the expensive shingle
-    join you'd never run on the full corpus — here it runs on the test
-    slice to calibrate the cheap candidate generator, which is precisely
-    how LSH parameters get validated before a 100 TB run (then
-    lsh_params picks bands/rows for the chosen operating point)."""
-    from gene_level_metadata_pipeline_spark.operators.dedup import (
-        minhash_candidate_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    cands = minhash_candidate_pairs(docs, "text", "doc_id",
-                                    n=3, num_hashes=8, bands=4)
-    truth = ngram_jaccard_pairs(docs, "text", "doc_id",
-                                n=3, threshold=0.5, block_by="lang"
-                                ).select("doc_a", "doc_b")
-    tp = cands.join(truth, ["doc_a", "doc_b"]).agg(
-        F.count(F.lit(1)).alias("n_tp")
-    )
-    n_truth = truth.agg(F.count(F.lit(1)).alias("n_truth"))
-    n_cands = cands.agg(F.count(F.lit(1)).alias("n_cands"))
-    return (
-        n_truth.join(n_cands).join(tp)
-        .select(
-            "n_truth", "n_cands", "n_tp",
-            _round_to(F.col("n_tp") / F.col("n_cands"), 4).alias("precision"),
-            _round_to(F.col("n_tp") / F.col("n_truth"), 4).alias("recall"),
-        )
-    )
-
-
-@_register(
-    "funnel_stages",
-    oracle="""
-    WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-    s1 AS (
-      SELECT user_id, min(us) AS t1 FROM ev
-      WHERE event_type = 'view' GROUP BY user_id
-    ),
-    s2 AS (
-      SELECT e.user_id, min(e.us) AS t2
-      FROM ev e JOIN s1 ON e.user_id = s1.user_id
-      WHERE e.event_type = 'click' AND e.us > s1.t1
-      GROUP BY e.user_id
-    ),
-    s3 AS (
-      SELECT e.user_id, min(e.us) AS t3
-      FROM ev e JOIN s2 ON e.user_id = s2.user_id
-      WHERE e.event_type = 'purchase' AND e.us > s2.t2
-      GROUP BY e.user_id
-    ),
-    staged AS (
-      SELECT u.user_id,
-             CASE WHEN s3.t3 IS NOT NULL THEN 3
-                  WHEN s2.t2 IS NOT NULL THEN 2
-                  WHEN s1.t1 IS NOT NULL THEN 1
-                  ELSE 0 END AS stage
-      FROM (SELECT DISTINCT user_id FROM ev) u
-      LEFT JOIN s1 USING (user_id)
-      LEFT JOIN s2 USING (user_id)
-      LEFT JOIN s3 USING (user_id)
-    )
-    SELECT stage, count(*) AS n_users FROM staged GROUP BY stage
-    """,
-)
-def q_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel analysis (view → click-after-view →
-    purchase-after-that-click): per-user event arrays folded through a
-    three-state machine with ONE aggregate lambda — a single user_id
-    shuffle and no self-joins, versus the oracle's three join-aggregate
-    rounds (same answer, the relational formulation). The fold carries
-    (stage, t1, t2) through the time-sorted events; epoch-micros keep
-    both engines on identical integers."""
-    ev = _events(spark, sf_dir).select(
-        "user_id", "event_type", F.unix_micros("ts").alias("us")
-    )
-    arr = F.array_sort(
-        F.collect_list(F.struct(F.col("us"), F.col("event_type").alias("et")))
-    )
-    init = F.struct(
-        F.lit(0).alias("stage"),
-        F.lit(None).cast("long").alias("t1"),
-        F.lit(None).cast("long").alias("t2"),
-    )
-
-    def step(acc, e):
-        adv1 = (acc.stage == 0) & (e.et == "view")
-        adv2 = (acc.stage == 1) & (e.et == "click") & (e.us > acc.t1)
-        adv3 = (acc.stage == 2) & (e.et == "purchase") & (e.us > acc.t2)
-        return F.struct(
-            F.when(adv1, 1).when(adv2, 2).when(adv3, 3)
-             .otherwise(acc.stage).alias("stage"),
-            F.when(adv1, e.us).otherwise(acc.t1).alias("t1"),
-            F.when(adv2, e.us).otherwise(acc.t2).alias("t2"),
-        )
-
-    staged = ev.groupBy("user_id").agg(
-        F.aggregate(arr, init, step).getField("stage").alias("stage")
-    )
-    return staged.groupBy("stage").agg(F.count(F.lit(1)).alias("n_users"))
-
-
 
 
 @_register(
@@ -2487,8 +1768,7 @@ def q_order_lead_time_percentiles(
     (ship-before-order rows surface instead of silently averaging in).
     Day arithmetic is exact epoch-day bigints on the NTZ dates (no
     timezone surface); percentiles are the exact interpolated pair
-    (Spark percentile == DuckDB quantile_cont, the median_quantiles
-    precedent). Orders is the small side of the fact-fact join and
+    (Spark percentile == DuckDB quantile_cont). Orders is the small side of the fact-fact join and
     broadcasts at these SFs; at 100 TB it's the bucketed-join case
     test_bucketing pins."""
     li = _t(spark, sf_dir, "lineitem").where(
@@ -2688,8 +1968,7 @@ def q_agg_retract_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     price — via one signed partial aggregate + one full-outer merge,
     never a fact rescan. The oracle IS the full recompute over the
     surviving facts, so the hash match certifies the retraction
-    identity (including customers whose counts hit zero and drop out).
-    The deletion-aware completion of delta_agg_merge."""
+    identity (including customers whose counts hit zero and drop out)."""
     from gene_level_metadata_pipeline_spark.operators.harmonize import (
         retract_aggregate,
     )
@@ -2728,8 +2007,7 @@ def q_agg_retract_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_approx_distinct_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Certifies HyperLogLog++'s RELATIVE-ERROR GUARANTEE with an exact
     oracle — the approx_percentile_bound pattern applied to
-    approx_count_distinct, closing the other half of approx_profile's
-    rows-only sketch pair: the HLL estimate itself never leaves Spark
+    approx_count_distinct: the HLL estimate itself never leaves Spark
     (implementation-defined); what ships is the exact distinct count
     (both engines) plus a BOOLEAN asserting the estimate landed within
     5x its configured rsd (0.02 -> 10%, a ~5-sigma tail for the HLL++
@@ -2775,9 +2053,7 @@ def q_approx_percentile_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaves Spark; what ships is the exact p50 (both engines) plus a
     BOOLEAN asserting the sketch landed within its documented rank
     error (accuracy=100 -> rank error <= n/100). The oracle emits TRUE
-    unconditionally, so any guarantee violation hash-mismatches. The
-    exact-regime companion to approx_profile's rows-only check —
-    stronger, because THIS one is value-hashed. Rank check is exact
+    unconditionally, so any guarantee violation hash-mismatches. Rank check is exact
     integer arithmetic on micro-units (|#{v <= approx} - n/2| within
     n/100 + 1 of the target, the GK-sketch contract)."""
     ev = _events(spark, sf_dir).where(F.col("value").isNotNull())

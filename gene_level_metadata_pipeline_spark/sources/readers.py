@@ -105,7 +105,8 @@ def fetch_to_staging(url: str, staging_dir: str | None = None) -> str:
 def _maybe_unzip(path: str) -> str:
     """S7: ``readr::read_tsv('*.zip')`` transparently unzips (IW:22-23).
 
-    The first member is extracted once per archive version: the staging
+    The first file member is extracted once per archive version (directory
+    entries, as ``zip -r`` writes for a folder, are skipped): the staging
     dir is keyed on the archive's resolved path, size and mtime, so later
     reads of an unchanged archive reuse the extracted file instead of
     leaving a fresh copy behind each time. The member is written to a
@@ -121,7 +122,9 @@ def _maybe_unzip(path: str) -> str:
     ).hexdigest()[:16]
     out_dir = os.path.join(tempfile.gettempdir(), f"spark_graft_unzip_{key}")
     with zipfile.ZipFile(real) as zf:
-        member = zf.namelist()[0]
+        member = next((i.filename for i in zf.infolist() if not i.is_dir()), None)
+        if member is None:
+            raise ValueError(f"{path}: zip archive holds no file member")
         # basename only: a member name must not escape the staging dir
         dest = os.path.join(out_dir, os.path.basename(member))
         if os.path.exists(dest):

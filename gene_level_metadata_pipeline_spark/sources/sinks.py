@@ -26,11 +26,11 @@ def write_bronze(
     root: str,
     source: str,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> str:
-    """K1: one Parquet dataset per source under ``root/source`` (I:30 ×16)."""
+    """K1: one Parquet dataset per source under ``root/source`` (I:30 ×16),
+    replaced on every write."""
     path = f"{root.rstrip('/')}/{source}"
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -66,7 +66,6 @@ def write_compacted(
     path: str,
     target_rows_per_file: int,
     exact: bool = False,
-    mode: str = "overwrite",
 ) -> int:
     """Write parquet with bounded file sizes — the small-files mitigation.
 
@@ -89,11 +88,11 @@ def write_compacted(
     if exact:
         n = df.count()
         parts = max(1, math.ceil(n / target_rows_per_file))
-        df.repartition(parts).write.mode(mode).parquet(path)
+        df.repartition(parts).write.mode("overwrite").parquet(path)
     else:
         (
             df.write.option("maxRecordsPerFile", target_rows_per_file)
-            .mode(mode)
+            .mode("overwrite")
             .parquet(path)
         )
     return len([f for f in os.listdir(path) if f.endswith(".parquet")])

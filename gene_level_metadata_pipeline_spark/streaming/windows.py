@@ -383,8 +383,8 @@ def session_window_counts_stream(
     passes stay in state — so the run reuses the watermark-punctuation
     flush (``_stage_with_flush_sentinel``): the sentinel advances the
     final watermark past every real session's end, all sessions emit,
-    and the result provably equals the batch ``events_session_windows``
-    query, whose oracle it shares.
+    and the result provably equals the batch ``F.session_window``
+    aggregation over the same events.
 
     Returns (user_id, session_start_us, session_end_us, n, total).
     """

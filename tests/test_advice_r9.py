@@ -96,5 +96,7 @@ def test_check_oracle_npass_excludes_zero_row_rows_only(tmp_path):
     # and the live source carries the corrected expression
     import pathlib
 
-    src = pathlib.Path("/root/repo/tools/check_oracle.py").read_text()
+    src = (
+        pathlib.Path(__file__).resolve().parents[1] / "tools" / "check_oracle.py"
+    ).read_text()
     assert 'v.get("rows_only") and v.get("rows_match")' in src

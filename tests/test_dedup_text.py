@@ -639,8 +639,7 @@ def test_remove_dup_spans_drops_shared_boilerplate(spark):
 def test_triangle_count_known_graph(spark):
     """K4 has 4 triangles; attaching a pendant edge adds none. The
     operator canonicalizes edge direction, so reversed/duplicate input
-    edges must not change the count (graph_triangles certifies the same
-    enumeration relationally; this pins the reusable operator)."""
+    edges must not change the count."""
     from gene_level_metadata_pipeline_spark.operators.graph import (
         triangle_count,
     )

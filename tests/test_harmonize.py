@@ -125,3 +125,15 @@ def test_retract_aggregate_zero_and_negative_counts_drop(spark):
     out = {r["k"]: (r["n"], float(r["total"]))
            for r in retract_aggregate(base, feed, "k", "v").collect()}
     assert out == {3: (1, 7.0)}
+
+
+def test_union_all_binds_frames_by_name(spark):
+    """bind_rows semantics: columns matched by name, a column absent from
+    one frame NULL-filled, output columns in first-seen order."""
+    from gene_level_metadata_pipeline_spark.operators.reshape import union_all
+
+    old = spark.createDataFrame([(1, "HIGH")], ["k", "priority"])
+    new = spark.createDataFrame([(2.5, 2)], ["total", "k"])
+    out = union_all(old, new)
+    assert out.columns == ["k", "priority", "total"]
+    assert sorted(map(tuple, out.collect())) == [(1, "HIGH", None), (2, None, 2.5)]

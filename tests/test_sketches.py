@@ -1,9 +1,9 @@
 """DataSketches surface (Spark 4.1): HLL and theta sketch properties.
 
 HLL estimates are approximate above the sketch's exact regime, so they
-are certified by error bound + mergeability rather than a value oracle —
-the exact-regime theta and approx_top_k twins ARE hash-oracled in the
-registry (`theta_set_analytics`, `approx_topk_exact_regime`).
+are certified by error bound + mergeability rather than a value oracle.
+The theta sketch's exact regime is pinned against the exact distinct
+count, and approx_top_k by its heavy-hitter guarantee.
 """
 
 from __future__ import annotations
@@ -52,9 +52,8 @@ def test_hll_partial_sketches_merge_to_global(spark):
 
 def test_theta_exact_regime_equals_exact_distinct(spark):
     """A theta sketch below k=4096 retained hashes keeps θ=1 (no
-    sampling): its estimate IS the exact distinct count — the property
-    `theta_set_analytics` relies on to stay oracle-checkable at any SF
-    with a bounded key domain."""
+    sampling): its estimate IS the exact distinct count — what keeps a
+    theta query over a bounded key domain hash-checkable at any SF."""
     o = spark.read.parquet(f"{SF}/orders.parquet")
     exact = o.selectExpr("o_custkey % 997 AS v").distinct().count()
     assert exact < 4096

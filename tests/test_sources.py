@@ -517,6 +517,42 @@ def test_read_delim_zip_extracts_once(spark, tmp_path, monkeypatch):
     assert [p.name for p in extracted[0].iterdir()] == ["genes.tsv"]
 
 
+def test_read_delim_zip_skips_directory_entries(spark, tmp_path, monkeypatch):
+    """A ``zip -r`` archive of a folder lists the folder first; the reader
+    extracts the first file member, not the directory entry."""
+    import zipfile
+
+    from gene_level_metadata_pipeline_spark.sources.readers import read_delim
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    z = tmp_path / "folder.zip"
+    with zipfile.ZipFile(z, "w") as zf:
+        zf.writestr("data/", "")
+        zf.writestr("data/x.tsv", "symbol\tn\nG1\t1\nG2\t2\n")
+    assert zipfile.ZipFile(z).namelist() == ["data/", "data/x.tsv"]
+    df = read_delim(spark, str(z))
+    assert [tuple(r) for r in df.collect()] == [("G1", 1), ("G2", 2)]
+
+
+def test_read_delim_zip_without_file_member_raises(spark, tmp_path, monkeypatch):
+    """An archive holding only directories fails loudly, naming the archive."""
+    import zipfile
+
+    import pytest
+
+    from gene_level_metadata_pipeline_spark.sources.readers import read_delim
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    z = tmp_path / "empty_dirs.zip"
+    with zipfile.ZipFile(z, "w") as zf:
+        zf.writestr("data/", "")
+        zf.writestr("data/sub/", "")
+    with pytest.raises(ValueError, match="empty_dirs.zip"):
+        read_delim(spark, str(z))
+
+
 def test_fetch_to_staging_round_trip(tmp_path):
     """A staged fetch copies the source bytes unchanged (file:// URL)."""
     from gene_level_metadata_pipeline_spark.sources.readers import (

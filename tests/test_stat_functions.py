@@ -2,9 +2,7 @@
 
 These four are impl- or seed-defined (sketches and seeded sampling), so
 they are certified by bounds and determinism rather than a DuckDB hash
-oracle — the same split as `approx_profile` vs its exact twins. The
-exact contingency-table member (`crosstab`) IS hash-oracled:
-`crosstab_status_priority` in the registry.
+oracle.
 """
 
 from __future__ import annotations
@@ -91,8 +89,7 @@ def test_approx_quantile_error_bound(spark):
 
 def test_corr_matches_exact_moments(spark):
     """df.stat.corr (Pearson) equals the moment formula computed with
-    exact decimal sums — closing the loop with the registry's
-    order-independent `stats_profile` covariance."""
+    exact decimal sums."""
     li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
         F.col("l_quantity").cast("double").alias("x"),
         F.col("l_extendedprice").cast("double").alias("y"),

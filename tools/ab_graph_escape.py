@@ -31,13 +31,11 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF = os.environ.get("AB_SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "certification", "escape_ab_r10.json",
-)
+OUT = os.path.join(REPO, "certification", "escape_ab_r10.json")
 
 QUERIES = [
     "graph_sssp_weighted",
@@ -106,7 +104,7 @@ def main() -> int:
 
     sha = subprocess.run(
         ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
-        cwd="/root/repo",
+        cwd=REPO,
     ).stdout.strip()
     out = {
         "_meta": {

@@ -33,14 +33,12 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 REPS = 3
 KS = (8, 32, 128)
-OUT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "certification", "oph_speedup_r10.json",
-)
+OUT = os.path.join(REPO, "certification", "oph_speedup_r10.json")
 
 
 def main() -> None:

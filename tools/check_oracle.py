@@ -40,7 +40,8 @@ import pickle
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
@@ -48,7 +49,7 @@ TABLES = (
     "documents embeddings"
 ).split()
 
-CACHE_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".oracle_cache")
+CACHE_DIR = os.path.join(REPO, ".oracle_cache")
 CACHE_ON = os.environ.get("ORACLE_CACHE", "1") != "0"
 
 
@@ -266,7 +267,7 @@ def main() -> int:
         try:
             sha = subprocess.run(
                 ["git", "rev-parse", "HEAD"], capture_output=True,
-                text=True, cwd="/root/repo",
+                text=True, cwd=REPO,
             ).stdout.strip()
         except Exception:  # noqa: BLE001
             sha = None

@@ -30,12 +30,10 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-OUT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "certification", "rbh_blocked_r10.json",
-)
+OUT = os.path.join(REPO, "certification", "rbh_blocked_r10.json")
 
 
 def _vectors(spark, n, dim, salt):
@@ -143,7 +141,7 @@ def main() -> int:
 
     sha = subprocess.run(
         ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
-        cwd="/root/repo",
+        cwd=REPO,
     ).stdout.strip()
     out = {"_meta": {"git_sha": sha, "n_fail": len(failures),
                      "failures": failures}, **res}

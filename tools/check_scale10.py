@@ -41,15 +41,15 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import check_oracle as co  # noqa: E402 — comparison machinery reuse
 import stress_scale as ss  # noqa: E402 — replica builder reuse
 
 OUT_PATH = os.environ.get("SCALE10_OUT") or os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "certification", "scale10_sweep.json",
+    REPO, "certification", "scale10_sweep.json"
 )
 
 # Families whose scale-sensitive primitive is invisible to a plan scan.

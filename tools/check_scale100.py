@@ -35,16 +35,14 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF01 = "/root/testdata/sf0.1"
 DIR10 = "/tmp/spark_graft_stress_sf1"
 DIR100 = "/tmp/spark_graft_stress_sf10"
-OUT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "certification", "scale100_sweep.json",
-)
+OUT = os.path.join(REPO, "certification", "scale100_sweep.json")
 
 QUERIES = [
     "dedup_set_similarity_exact",
@@ -165,7 +163,7 @@ def main() -> int:
 
     sha = subprocess.run(
         ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
-        cwd="/root/repo",
+        cwd=REPO,
     ).stdout.strip()
     out = {
         "_meta": {

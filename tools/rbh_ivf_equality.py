@@ -28,13 +28,11 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-OUT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "certification", "rbh_ivf_equality.json",
-)
+OUT = os.path.join(REPO, "certification", "rbh_ivf_equality.json")
 
 
 def run_split(spark, emb, method: str, probes: int = 2, **kw):
@@ -82,7 +80,7 @@ def main() -> int:
     out: dict = {"_meta": {
         "git_sha": subprocess.run(
             ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
-            cwd="/root/repo",
+            cwd=REPO,
         ).stdout.strip(),
         "panel_split": "vec_id % 17",
         "ivf_params": "n_cells=sqrt(corpus), probes=2 (operator defaults)",

@@ -14,10 +14,12 @@ Usage: python tools/stress_grid.py     (writes nothing)
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def points(spark, n: int, side: float):

@@ -37,7 +37,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF = "/root/testdata/sf0.1"
 # STRESS_DIR override lets the 100x sweep build its replica beside the

@@ -32,7 +32,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 DIR = "/tmp/spark_graft_stress_skew"
 N_NODES = 2_000_000

@@ -4,14 +4,15 @@
 # cache per (SQL, data) so the vanilla legs re-run only the Spark side.
 # Usage: bash tools/sweep_surfaces.sh [logdir]
 set -u
+REPO=$(cd "$(dirname "$0")/.." && pwd)
 LOG=${1:-/tmp/sweep_r9}
 # Round tag for the committed full-registry artifact: default to the
 # short git sha so a re-run can never silently overwrite an artifact
 # whose FILENAME claims a different round (ADVICE r8); set SWEEP_ROUND
 # (e.g. r09) when producing the round-stamped committed name.
-ROUND=${SWEEP_ROUND:-$(git -C /root/repo rev-parse --short HEAD)}
+ROUND=${SWEEP_ROUND:-$(git -C "$REPO" rev-parse --short HEAD)}
 mkdir -p "$LOG"
-cd /root/repo
+cd "$REPO"
 run() {
   local name=$1; shift
   echo "=== $name start $(date +%H:%M:%S)"
