@@ -42,18 +42,18 @@ def sentence_case(col: Column | str) -> Column:
     return F.concat(F.upper(F.substring(low, 1, 1)), F.substring(low, 2, 2_000_000))
 
 
-def extract_first(col: Column | str, pattern: str, group: int = 1) -> Column:
-    """``str_extract`` with stringr NA semantics (X7, ``T:387``):
-    NULL — not ``""`` — when the pattern does not match."""
+def extract_first(col: Column | str, pattern: str) -> Column:
+    """``str_extract`` with stringr NA semantics (X7, ``T:387``): capture
+    group 1, NULL — not ``""`` — when the pattern does not match."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.nullif(F.regexp_extract(c, pattern, group), F.lit(""))
+    return F.nullif(F.regexp_extract(c, pattern, 1), F.lit(""))
 
 
-def extract_all_joined(col: Column | str, pattern: str, sep: str = "; ") -> Column:
-    """``str_extract_all(...) |> paste(collapse=sep)`` (X9, ``T:356-363``):
-    every match of ``pattern``, joined in match order."""
+def extract_all_joined(col: Column | str, pattern: str) -> Column:
+    """``str_extract_all(...) |> paste(collapse="; ")`` (X9, ``T:356-363``):
+    every match of ``pattern``, joined by ``"; "`` in match order."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.array_join(F.regexp_extract_all(c, F.lit(f"({pattern})"), F.lit(1)), sep)
+    return F.array_join(F.regexp_extract_all(c, F.lit(f"({pattern})"), F.lit(1)), "; ")
 
 
 def strip_version_suffix(col: Column | str) -> Column:
@@ -120,8 +120,8 @@ def fill_sentinel(df: DataFrame, sentinel: str, cols: Sequence[str] | None = Non
     ])
 
 
-def flag_in(col: Column | str, values: Sequence, yes="y", no="n") -> Column:
+def flag_in(col: Column | str, values: Sequence) -> Column:
     """``ifelse(x %in% set, "y", "n")`` (X16, ``T:255``) as a literal IN —
     for big value sets use a broadcast semi-join flag instead."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.when(c.isin(list(values)), F.lit(yes)).otherwise(F.lit(no))
+    return F.when(c.isin(list(values)), F.lit("y")).otherwise(F.lit("n"))

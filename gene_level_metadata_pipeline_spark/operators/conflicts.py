@@ -11,8 +11,9 @@ Reference sites:
   * A3 null_conflicts — ``…:273-277`` (MGI viability: keep the key, null
     every non-key column for ambiguous keys, re-distinct)
   * A4 (drop duplicated keys) — ``scripts/tidy/temp-tidy-all-manuscript-files.R:46-47``
-    and ``:74-76``: the same rows as A2, so ``keep_unique`` serves it;
-    the audited dup list the reference anti-joins against is ``dup_keys``
+    and ``:74-76``: the same rows as A2, so ``keep_unique`` serves it
+    (the anti-join against the reference's audited dup list is folded
+    into its single window pass)
   * A5 prefer_flagged — ``scripts/tidy/temp-tidy-all-web-files.R:158-166``
     (groups of size 1 kept as-is; larger groups keep only rows where a flag
     column equals the preferred value)
@@ -23,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["keep_unique", "null_conflicts", "dup_keys", "prefer_flagged",
-           "golden_record"]
+__all__ = ["keep_unique", "null_conflicts", "prefer_flagged", "golden_record"]
 
 
 def _group_count(key: str | list[str]) -> Column:
@@ -43,12 +43,6 @@ def keep_unique(df: DataFrame, key: str | list[str]) -> DataFrame:
         .where(F.col("__n") == 1)
         .drop("__n")
     )
-
-
-def dup_keys(df: DataFrame, key: str | list[str]) -> DataFrame:
-    """The audit frame: keys with count > 1 (``TM:46``, ``T:273``)."""
-    keys = [key] if isinstance(key, str) else list(key)
-    return df.groupBy(*keys).count().where(F.col("count") > 1)
 
 
 def null_conflicts(df: DataFrame, key: str | list[str]) -> DataFrame:

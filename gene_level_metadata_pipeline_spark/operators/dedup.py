@@ -287,7 +287,6 @@ def dedup_against_history(
     text_col: str,
     id_col: str,
     expected_history: int | None = None,
-    fpp: float = 0.01,
 ) -> DataFrame:
     """Incremental exact dedup: keep only new documents whose content
     hash has never been seen in the history corpus.
@@ -297,9 +296,9 @@ def dedup_against_history(
     the history folds into a Bloom bitmask built WITH DataFrame ops
     (k salted xxhash64 positions per fingerprint → explode → bit_or per
     64-bit word: one map-side-combined aggregate over ≤ m/64 rows).
-    The finished sketch — whose size is set by ``expected_history`` /
-    ``fpp``, NOT by the data — is collected and embedded as an array
-    literal, so the k membership probes run inside the scan's
+    The finished sketch — whose size is set by ``expected_history`` at
+    a fixed 1% target fpp, NOT by the data — is collected and embedded
+    as an array literal, so the k membership probes run inside the scan's
     whole-stage codegen and discard the (1−fpp) of truly-new documents
     with zero shuffle; only the surviving sliver — actual dups plus
     ~fpp false positives — pays the exact anti-join confirm. The
@@ -338,7 +337,7 @@ def dedup_against_history(
     hist_fp = history.select(F.md5(F.col(text_col)).alias("fp"))
     if expected_history is None:
         expected_history = max(1, history.count())
-    arr, m, k = _history_bloom(hist_fp, expected_history, fpp)
+    arr, m, k = _history_bloom(hist_fp, expected_history, 0.01)
 
     fp_new = F.md5(F.col(text_col))
     probed = new.withColumn(
@@ -1001,7 +1000,7 @@ def _hex4_to_int(col):
     return v
 
 
-def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFrame:
+def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """16-bit SimHash per document: (id_col, simhash).
 
     Token weights = word occurrence counts; token hash = first 16 bits of
@@ -1019,11 +1018,11 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFr
                 F.col("cnt")
                 * (F.shiftright(F.col("hv"), j).bitwiseAND(F.lit(1)) * 2 - 1)
             ).alias(f"s{j}")
-            for j in range(bits)
+            for j in range(16)
         ]
     )
     sig = F.lit(0)
-    for j in range(bits):
+    for j in range(16):
         sig = sig + F.when(F.col(f"s{j}") > 0, F.lit(2 ** j)).otherwise(F.lit(0))
     return bit_sums.select(F.col(id_col), sig.alias("simhash"))
 

@@ -184,7 +184,6 @@ def bootstrap_mean_ci(
     value: str,
     id_col: str,
     replicates: int = 32,
-    scale: int = 10_000,
 ) -> DataFrame:
     """Per-group bootstrap confidence interval for the mean, with
     DETERMINISTIC hash resampling — the Poisson bootstrap (Efron's
@@ -197,7 +196,7 @@ def bootstrap_mean_ci(
     discipline: the hash IS the seed).
 
     Resampled means are exact fixed-point bigints
-    floor(sum(w*value)*scale / sum(w)); the interval is rank-based —
+    floor(sum(w*value)*10000 / sum(w)); the interval is rank-based —
     with the default 32 replicates, ranks 2 and 31 of the sorted means
     (a ~94% CI). Returns (group, n_rows, mean_scaled, ci_lo_scaled,
     ci_hi_scaled).
@@ -256,7 +255,7 @@ def bootstrap_mean_ci(
     agg = wide.selectExpr(
         "g", f"stack({replicates}, {stack_args}) AS (b, sw, nw)"
     ).where(F.col("nw") > 0)
-    num = F.col("sw") * F.lit(scale)
+    num = F.col("sw") * F.lit(10_000)
     mean_b = _floor_div_exact(num, F.col("nw")).cast("bigint")
     means = agg.select("g", "b", mean_b.alias("m"))
     rk = Window.partitionBy("g").orderBy("m", "b")
@@ -273,7 +272,7 @@ def bootstrap_mean_ci(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col(value).cast("bigint")).alias("sx"),
     )
-    pnum = F.col("sx") * F.lit(scale)
+    pnum = F.col("sx") * F.lit(10_000)
     point = base.select(
         "g", "n_rows",
         _floor_div_exact(pnum, F.col("n_rows"))
@@ -306,7 +305,6 @@ def cuped_adjust(
     arm_col: str = "arm",
     x_col: str = "x",
     y_col: str = "y",
-    theta_scale: int = 10 ** 6,
 ) -> DataFrame:
     """CUPED variance reduction (Deng et al. 2013) for per-unit
     experiment metrics: the industry-standard A/B adjustment — shift
@@ -318,7 +316,7 @@ def cuped_adjust(
     divisions over DECIMAL(38) sums — the closed forms
     theta = (n*Sxy - Sx*Sy) / (n*Sxx - Sx^2) and
     adj_a = (Sy_a*n*S - theta_s*(Sx_a*n - Sx*n_a)) / (n_a*n*S)
-    (S = theta_scale) never touch IEEE floats, so any engine with
+    (theta fixed point S = 10^6) never touch IEEE floats, so any engine with
     128-bit integer sums replays them bit-for-bit.
 
     Returns (arm, n_units, mean_y_scaled, adj_mean_y_scaled,
@@ -330,6 +328,7 @@ def cuped_adjust(
     one scan regardless of corpus size, the reason CUPED is standard
     at fleet scale."""
     dec = "decimal(38,0)"
+    s = F.lit(10 ** 6).cast(dec)
     u = units.select(
         F.col(arm_col).alias("arm"),
         F.col(x_col).cast("decimal(18,0)").alias("x"),
@@ -350,11 +349,10 @@ def cuped_adjust(
         "n", "sx", "sy",
         _floor_div_exact(
             (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-            * F.lit(theta_scale).cast(dec),
+            * s,
             F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"),
         ).cast(dec).alias("theta_s"),
     )
-    s = F.lit(theta_scale).cast(dec)
     j = per_arm.join(F.broadcast(pooled))
     return j.select(
         "arm",
@@ -455,7 +453,6 @@ def target_encode_kfold(
     target_col: str,
     id_col: str,
     folds: int = 5,
-    scale: int = 10_000,
 ) -> DataFrame:
     """K-fold (leave-fold-out) mean target encoding — the standard
     leakage-safe categorical feature for gradient models: a row in fold
@@ -463,7 +460,8 @@ def target_encode_kfold(
     f's rows, so no row's own target leaks into its feature. Folds are
     hash-assigned (md5 leading hex of the id — deterministic, engine-
     portable, the bootstrap discipline); encodings are exact
-    fixed-point floor divisions of (S_cat - S_fold) / (n_cat - n_fold).
+    fixed-point floor divisions of 10000 * (S_cat - S_fold) /
+    (n_cat - n_fold).
     A fold holding ALL of a category's rows gets NULL (no out-of-fold
     evidence), never a fabricated prior. Returns (cat, fold,
     n_out_of_fold, enc_scaled).
@@ -494,7 +492,7 @@ def target_encode_kfold(
         F.when(
             F.col("n_c") > F.col("n_f"),
             _floor_div_exact(
-                (F.col("s_c") - F.col("s_f")) * F.lit(scale),
+                (F.col("s_c") - F.col("s_f")) * F.lit(10_000),
                 F.col("n_c") - F.col("n_f"),
             ).cast("bigint"),
         ).alias("enc_scaled"),
@@ -507,7 +505,6 @@ def isotonic_fit(
     bucket_col: str = "bucket",
     sum_col: str = "s",
     n_col: str = "n",
-    scale: int = 10 ** 6,
 ) -> DataFrame:
     """Isotonic (monotone non-decreasing) calibration fit over scored
     buckets — the standard model-score calibrator (pool-adjacent-
@@ -515,10 +512,10 @@ def isotonic_fit(
     form: iso(i) = max_{j<=i} min_{k>=i} mean(y over buckets j..k),
     which equals the PAVA solution (Ayer et al. 1955 / Robertson-
     Wright-Dykstra 1988, the minimax characterization). Here every
-    pooled mean is the FLOORED fixed-point floor(S*scale/N) — floor is
+    pooled mean is the FLOORED fixed-point floor(S*10^6/N) — floor is
     monotone, so max-of-min of floored means is still monotone
     non-decreasing and differs from the rational PAVA value by < 1 ulp
-    at ``scale``; in exchange the whole fit is bigint-exact and
+    at 10^6; in exchange the whole fit is bigint-exact and
     hash-certifiable cross-engine, which a float PAVA never is.
 
     Input is the PRE-BUCKETED (bucket, sum_y, n) table (one corpus
@@ -563,7 +560,7 @@ def isotonic_fit(
         "j", "k",
         F.call_function(
             "div",
-            (F.col("cs_k") - F.col("ps_j")) * F.lit(scale),
+            (F.col("cs_k") - F.col("ps_j")) * F.lit(10 ** 6),
             F.col("cn_k") - F.col("pn_j"),
         ).alias("m"),
     )
@@ -577,7 +574,7 @@ def isotonic_fit(
     return b.join(iso, b["idx"] == iso["i"]).select(
         "bucket", "n",
         F.call_function(
-            "div", F.col("s") * F.lit(scale), F.col("n")
+            "div", F.col("s") * F.lit(10 ** 6), F.col("n")
         ).alias("mean_e6"),
         "iso_e6",
     )
@@ -587,7 +584,6 @@ def fdr_bh(
     df: DataFrame,
     p_col: str = "p_e6",
     key_col: str = "id",
-    scale: int = 10 ** 6,
     alpha_e6: int = 50_000,
     num_partitions: int | None = None,
 ) -> DataFrame:
@@ -597,9 +593,9 @@ def fdr_bh(
     the kind of per-gene evidence a BH pass gates downstream).
 
     Input: one row per test with a FIXED-POINT p-value ``p_col``
-    (integer in [0, scale]) and a unique ``key_col`` tie-breaker.
+    (integer in [0, 10^6]) and a unique ``key_col`` tie-breaker.
     Output: (key, p_e6, rnk, adj_e6, reject) where
-    ``adj_e6 = min_{j >= i} floor(p_(j) * m / j)`` clipped at ``scale``
+    ``adj_e6 = min_{j >= i} floor(p_(j) * m / j)`` clipped at 10^6
     (BH adjusted p in the same fixed point; floor is monotone, so the
     step-up decision differs from rational BH only when the rational
     value straddles an adj ulp — the certified semantics is the floored
@@ -665,7 +661,7 @@ def fdr_bh(
         .withColumn(
             "raw_e6",
             F.least(
-                F.lit(scale).cast("bigint"),
+                F.lit(10 ** 6).cast("bigint"),
                 _floor_div_exact(F.col("p_e6") * F.col("_m"), F.col("rnk")),
             ),
         )
@@ -697,7 +693,7 @@ def fdr_bh(
             "key", "p_e6", "rnk",
             F.least(
                 F.col("_lmin"),
-                F.coalesce(F.col("_sufmin"), F.lit(scale).cast("bigint")),
+                F.coalesce(F.col("_sufmin"), F.lit(10 ** 6).cast("bigint")),
             ).alias("adj_e6"),
         )
         .withColumn(
@@ -713,7 +709,6 @@ def brier_decomposition(
     sum_col: str = "s",
     n_col: str = "n",
     pred_col: str = "p_e6",
-    scale: int = 10 ** 6,
 ) -> DataFrame:
     """Murphy (1973) Brier-score decomposition of a bucketed
     probabilistic predictor — RELIABILITY (calibration error),
@@ -723,7 +718,7 @@ def brier_decomposition(
     (pair with :func:`isotonic_fit`: feed the monotone fit as
     ``pred_col`` and REL measures what calibration left behind).
 
-    Exact fixed point at ``scale²`` (e12 for the e6 default), the
+    Exact fixed point at scale² = 10¹² (``pred_col`` is e6), the
     BH/isotonic floored-form discipline — each bucket's term is one
     exact integral division, so the whole decomposition is
     hash-certifiable:
@@ -757,7 +752,7 @@ def brier_decomposition(
         F.sum("s").cast("bigint").alias("tot_s"),
         F.sum("n").cast("bigint").alias("tot_n"),
     )
-    sc = F.lit(scale).cast(d38)
+    sc = F.lit(10 ** 6).cast(d38)
     t = b.crossJoin(F.broadcast(tot))
     big_n = F.col("tot_n").cast(d38)
     big_s = F.col("tot_s").cast(d38)

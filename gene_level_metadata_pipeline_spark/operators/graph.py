@@ -295,14 +295,14 @@ def _sssp_driver(
     return edges.sparkSession.createDataFrame(list(dist.items()), schema)
 
 
-def _kcore_driver(edges: DataFrame, k: int, max_iter: int) -> DataFrame | None:
+def _kcore_driver(edges: DataFrame, k: int) -> DataFrame | None:
     from pyspark.sql.types import LongType, StructField, StructType
 
     rows = edges.collect()
     if any(r[0] is None or r[1] is None for r in rows):
         return None
     es = {(r[0], r[1]) for r in rows}  # symmetric, like the frame
-    for _ in range(max_iter):
+    for _ in range(40):
         if not es:
             break
         deg: dict = {}
@@ -316,7 +316,7 @@ def _kcore_driver(edges: DataFrame, k: int, max_iter: int) -> DataFrame | None:
         es = nxt
     else:
         raise RuntimeError(
-            f"kcore: no fixpoint after {max_iter} peeling rounds"
+            "kcore: no fixpoint after 40 peeling rounds"
         )
     core_deg: dict = {}
     for u, _v in es:
@@ -362,8 +362,6 @@ def _lpa_driver(edges: DataFrame, rounds: int) -> DataFrame | None:
 def _pagerank_driver(
     edges: DataFrame,
     iterations: int,
-    scale: int,
-    damping_pct: int,
     seeds: DataFrame | None,
 ) -> DataFrame | None:
     from pyspark.sql.types import LongType, StructField, StructType
@@ -384,8 +382,8 @@ def _pagerank_driver(
     if n == 0:
         return spark.createDataFrame([], schema)
     if seeds is None:
-        init = scale // n
-        base = dict.fromkeys(deg, ((100 - damping_pct) * init) // 100)
+        init = 10 ** 12 // n
+        base = dict.fromkeys(deg, (15 * init) // 100)
         pr = dict.fromkeys(deg, init)
     else:
         if seeds.schema.fields[0].dataType != node_t:
@@ -408,8 +406,8 @@ def _pagerank_driver(
                 "personalized walk with an empty effective seed set "
                 "has no reset distribution"
             )
-        init = scale // len(eff)
-        seed_base = ((100 - damping_pct) * init) // 100
+        init = 10 ** 12 // len(eff)
+        seed_base = (15 * init) // 100
         base = {u: (seed_base if u in eff else 0) for u in deg}
         pr = {u: (init if u in eff else 0) for u in deg}
     for _ in range(iterations):
@@ -418,7 +416,7 @@ def _pagerank_driver(
         s = dict.fromkeys(deg, 0)
         for u, v in rows:
             s[v] += contrib[u]
-        pr = {u: base[u] + (damping_pct * s[u]) // 100 for u in deg}
+        pr = {u: base[u] + (85 * s[u]) // 100 for u in deg}
     return spark.createDataFrame(list(pr.items()), schema)
 
 
@@ -478,17 +476,16 @@ def pagerank(
     src: str = "u",
     dst: str = "v",
     iterations: int = 3,
-    scale: int = 10 ** 12,
-    damping_pct: int = 85,
     checkpoint_every: int = 4,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an undirected pair list, in exact
     integer arithmetic.
 
-    Ranks are carried as bigint micro-units (``scale`` = 1.0) and every
-    step is integer-only — init = scale // N, contribution = pr div
-    degree, update = (15% of init) + (85% of contribution sum) div 100 —
+    Ranks are carried as bigint micro-units (10^12 = 1.0) and every
+    step is integer-only at a fixed damping of 85% — init = 10^12 // N,
+    contribution = pr div degree, update = (15% of init) + (85% of
+    contribution sum) div 100 —
     so partial-aggregation order cannot perturb results and any SQL
     engine unrolling the same recurrence reproduces the bigints exactly
     (float PageRank diverges across engines in the last ulps; the tiny
@@ -521,8 +518,8 @@ def pagerank(
 
     ``seeds`` (optional, a 1-column frame of node ids) switches to
     PERSONALIZED PageRank: the reset mass — the initial ranks and the
-    per-round (100−damping)% teleport term — concentrates uniformly on
-    the seed nodes instead of all nodes (init = scale // |S| for seeds,
+    per-round 15% teleport term — concentrates uniformly on
+    the seed nodes instead of all nodes (init = 10^12 // |S| for seeds,
     0 otherwise), so ranks measure proximity TO THE SEED SET (the "find
     items related to this known-good set" query). Still exact bigint
     arithmetic: the per-node base rides the node frame as a broadcast-
@@ -540,7 +537,7 @@ def pagerank(
     )
     n_edges = edges.count()
     if n_edges <= _DRIVER_EDGE_CAP:
-        out = _pagerank_driver(edges, iterations, scale, damping_pct, seeds)
+        out = _pagerank_driver(edges, iterations, seeds)
         if out is not None:
             return out
     with sized_shuffle(edges.sparkSession, n_edges) as sz:
@@ -554,10 +551,10 @@ def pagerank(
             )
         nodes = deg.select(F.col("u").alias("node"), "d")
         if seeds is None:
-            init = scale // n
+            init = 10 ** 12 // n
             nodes = nodes.withColumn(
                 "__base",
-                F.lit(((100 - damping_pct) * init) // 100).cast("long"),
+                F.lit((15 * init) // 100).cast("long"),
             )
             pr = nodes.select("node", F.lit(init).cast("long").alias("pr"))
         else:
@@ -574,8 +571,8 @@ def pagerank(
                     "personalized walk with an empty effective seed set "
                     "has no reset distribution"
                 )
-            init = scale // ns
-            seed_base = ((100 - damping_pct) * init) // 100
+            init = 10 ** 12 // ns
+            seed_base = (15 * init) // 100
             nodes = nodes.withColumn(
                 "__base",
                 F.when(F.col("__is_seed"), F.lit(seed_base))
@@ -602,7 +599,7 @@ def pagerank(
                     "node",
                     (
                         F.col("__base")
-                        + F.expr(f"({damping_pct} * coalesce(s, 0)) div 100")
+                        + F.expr("(85 * coalesce(s, 0)) div 100")
                     ).cast("long").alias("pr"),
                 )
             )
@@ -808,7 +805,6 @@ def kcore(
     k: int,
     src: str = "u",
     dst: str = "v",
-    max_iter: int = 40,
 ) -> DataFrame:
     """The k-core of an undirected simple graph: the maximal subgraph in
     which every node has degree >= ``k`` — the standard "dense backbone"
@@ -828,7 +824,7 @@ def kcore(
     Rounds eagerly localCheckpoint (lineage truncation, the
     connected_components discipline) and ride an Observation for the
     edge count, so convergence detection costs no extra job. Raises if
-    ``max_iter`` rounds don't converge (fail loud, never silently
+    40 rounds don't converge (fail loud, never silently
     return a non-core)."""
     from gene_level_metadata_pipeline_spark.sizing import sized_shuffle
 
@@ -847,11 +843,11 @@ def kcore(
     )
     n_edges = edges.count()
     if n_edges <= _DRIVER_EDGE_CAP:
-        out = _kcore_driver(edges, k, max_iter)
+        out = _kcore_driver(edges, k)
         if out is not None:
             return out
     with sized_shuffle(edges.sparkSession, n_edges):
-        for _ in range(max_iter):
+        for _ in range(40):
             if n_edges == 0:
                 break
             deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
@@ -871,7 +867,7 @@ def kcore(
             edges, n_edges = nxt, n_next
         else:
             raise RuntimeError(
-                f"kcore: no fixpoint after {max_iter} peeling rounds"
+                "kcore: no fixpoint after 40 peeling rounds"
             )
     return edges.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).alias("core_deg")
@@ -964,7 +960,6 @@ def hits_bipartite(
     src: str = "u",
     dst: str = "v",
     iterations: int = 2,
-    scale: int = 10 ** 6,
 ) -> DataFrame:
     """HITS hubs-and-authorities over a bipartite edge list (src side =
     hubs, dst side = authorities) in EXACT integer arithmetic — the
@@ -976,11 +971,11 @@ def hits_bipartite(
     The float HITS normalizes by the L2 norm each half-step (not
     engine-reproducible: sqrt + order-dependent sums); here every
     half-step renormalizes by integer division against the CURRENT MAX
-    (``x * scale // max(x)``) — max is exact, division floors
-    identically everywhere, and the invariant max-score == ``scale``
+    (``x * 10^6 // max(x)``) — max is exact, division floors
+    identically everywhere, and the invariant max-score == 10^6
     bounds the bigints, so any SQL engine unrolling the same recurrence
     reproduces the scores bit-for-bit. Returns (node, side, score)
-    with side ∈ {'hub', 'authority'}, score in [0, scale].
+    with side ∈ {'hub', 'authority'}, score in [0, 10^6].
 
     Scale shape: each half-step is one edges⋈scores join (shuffle on
     the joined side's key) + a grouped sum + a 1-row max broadcast —
@@ -993,7 +988,7 @@ def hits_bipartite(
     e = edges.select(F.col(src).alias("eu"), F.col(dst).alias("ev")).distinct()
     e = e.localCheckpoint(eager=True)
     hubs = e.select("eu").distinct().withColumn(
-        "h", F.lit(scale).cast("bigint")
+        "h", F.lit(10 ** 6).cast("bigint")
     )
     auth = None
     for _ in range(iterations):
@@ -1011,7 +1006,7 @@ def hits_bipartite(
         raw_a = raw_a.localCheckpoint(eager=True)
         mx_a = raw_a.agg(F.max("ra").alias("__m"))
         auth = raw_a.join(F.broadcast(mx_a)).select(
-            "ev", F.expr(f"ra * {scale} div __m").alias("a")
+            "ev", F.expr("ra * 1000000 div __m").alias("a")
         ).localCheckpoint(eager=True)
         raw_h = (
             e.join(auth, "ev")
@@ -1021,7 +1016,7 @@ def hits_bipartite(
         raw_h = raw_h.localCheckpoint(eager=True)
         mx_h = raw_h.agg(F.max("rh").alias("__m"))
         hubs = raw_h.join(F.broadcast(mx_h)).select(
-            "eu", F.expr(f"rh * {scale} div __m").alias("h")
+            "eu", F.expr("rh * 1000000 div __m").alias("h")
         ).localCheckpoint(eager=True)
     return hubs.select(
         F.col("eu").alias("node"), F.lit("hub").alias("side"),

@@ -89,7 +89,6 @@ def cdc_apply(
     key: str | list[str],
     version_col: str = "version",
     op_col: str = "op",
-    delete_op: str = "delete",
 ) -> DataFrame:
     """Apply a change-data-capture feed onto a snapshot — the lakehouse
     MERGE with tombstones that plain :func:`upsert` lacks: the feed may
@@ -99,7 +98,7 @@ def cdc_apply(
     Per key, the change with the highest ``version_col`` wins (ties
     break to the LAST op in ascending ``op_col`` order — deterministic;
     feeds with unique versions per key never hit it). If the winner's
-    ``op_col`` equals ``delete_op`` the key is dropped; otherwise the
+    ``op_col`` equals ``"delete"`` the key is dropped; otherwise the
     winner's row replaces the snapshot row (or inserts it). Snapshot
     rows with no change survive untouched.
 
@@ -120,7 +119,7 @@ def cdc_apply(
             "__w"
         )
     )
-    upserts = winners.where(F.col("__w.__op") != delete_op).select(
+    upserts = winners.where(F.col("__w.__op") != "delete").select(
         *[F.col(f"__w.{c}").alias(c) for c in payload]
     )
     kept = snapshot.join(
@@ -135,7 +134,6 @@ def retract_aggregate(
     key: str | list[str],
     value_col: str,
     op_col: str = "op",
-    delete_op: str = "delete",
     count_col: str = "n",
     sum_col: str = "total",
 ) -> DataFrame:
@@ -145,7 +143,8 @@ def retract_aggregate(
     absorbs a CDC fact feed where each row INSERTS or RETRACTS one
     fact, without rescanning the base facts.
 
-    Deletes contribute (-1, -value); inserts (+1, +value); the feed
+    Deletes (``op_col == "delete"``) contribute (-1, -value); every
+    other op inserts (+1, +value); the feed
     collapses to one signed partial aggregate per key (map-side
     combine), then a single full-outer merge with the maintained
     table adds the partials — counts are exact bigints and sums stay
@@ -159,7 +158,7 @@ def retract_aggregate(
     exactly what the oracle twin does.
     """
     keys = [key] if isinstance(key, str) else list(key)
-    sign = F.when(F.col(op_col) == delete_op, F.lit(-1)).otherwise(F.lit(1))
+    sign = F.when(F.col(op_col) == "delete", F.lit(-1)).otherwise(F.lit(1))
     d = deltas.groupBy(*keys).agg(
         F.sum(sign).alias("__dn"),
         F.sum(

@@ -322,11 +322,11 @@ def materialize_packed(
     bin_col: str,
     order_by: list[str],
     text_col: str,
-    sep: str = "<|eos|>",
 ) -> DataFrame:
     """Materialize packed context rows: per bin, the documents joined in
-    order with a separator token — the final step of sample packing
-    (pack_sequences assigns bins; this emits the actual training rows).
+    order with the ``<|eos|>`` separator token — the final step of
+    sample packing (pack_sequences assigns bins; this emits the actual
+    training rows).
 
     One shuffle on the bin id; the in-bin order is made deterministic by
     sorting the collected (order_key, text) structs, so the packed text
@@ -345,7 +345,8 @@ def materialize_packed(
             "bin",
             "n_docs",
             F.array_join(
-                F.transform(F.col("_parts"), lambda s: s[text_col]), sep
+                F.transform(F.col("_parts"), lambda s: s[text_col]),
+                "<|eos|>",
             ).alias("packed_text"),
         )
     )
@@ -470,7 +471,6 @@ def stratified_take(
     key_col: str,
     stratum_col: str,
     k: int,
-    salt: str = "take",
 ) -> DataFrame:
     """EXACT-k per-stratum sampling: keep the ``k`` rows of each stratum
     whose salted hash ranks lowest — the fixed-budget counterpart to the
@@ -478,7 +478,7 @@ def stratified_take(
     where a Bernoulli rate only hits the budget in expectation).
 
     Deterministic and engine-reproducible: rank = ``row_number`` over
-    ``(md5(salt:key), key)`` within the stratum, so re-runs, other
+    ``(md5("take:" || key), key)`` within the stratum, so re-runs, other
     engines, and ANY partitioning select the identical rows; adding rows
     to one stratum never perturbs another stratum's selection, and
     growing ``k`` only ever ADDS rows (nested samples, the property that
@@ -498,7 +498,7 @@ def stratified_take(
     if k < 1:
         raise ValueError(f"stratified_take: k={k} must be >= 1")
     h = F.md5(
-        F.concat(F.lit(salt + ":"), F.col(key_col).cast("string"))
+        F.concat(F.lit("take:"), F.col(key_col).cast("string"))
     )
     # asc_nulls_last = DuckDB's default NULL ordering (Spark would sort
     # a NULL hash/key FIRST and silently re-rank the stratum)
@@ -578,13 +578,13 @@ def stratified_weighted_take(
     stratum_col: str,
     weight_col: str,
     k: int,
-    salt: str = "wtake",
 ) -> DataFrame:
     """EXACT-k weighted sampling WITHIN each stratum — the fixed-budget
     weighted mixer: "exactly k documents per language, drawn with
     probability proportional to weight". Composes the
     :func:`weighted_take_k` Efraimidis-Spirakis key (deterministic
-    md5-derived uniforms, ln(u)/w, engine-identical doubles) with the
+    uniforms from md5("wtake:" || key), ln(u)/w, engine-identical
+    doubles) with the
     :func:`stratified_take` per-stratum window rank, and inherits both
     contracts: NULL strata form their own group, NULL/non-positive
     weights are unsampleable, strata are independent (adding rows to
@@ -601,7 +601,7 @@ def stratified_weighted_take(
         raise ValueError(f"stratified_weighted_take: k={k} must be >= 1")
     v = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(salt + ":"), F.col(key_col).cast("string"))),
+            F.md5(F.concat(F.lit("wtake:"), F.col(key_col).cast("string"))),
             1, 8,
         ),
         16, 10,
@@ -695,8 +695,6 @@ def mixture_reweight_mw(
     domain_col: str,
     stat_col: str,
     rounds: int = 4,
-    scale: int = 10 ** 6,
-    max_step_e6: int = 250_000,
 ) -> DataFrame:
     """Multiplicative-weights domain-mixture reweighting — the DoReMi
     shape (Xie et al. 2023) in exact integer arithmetic: start from
@@ -708,9 +706,9 @@ def mixture_reweight_mw(
         mix_t  = floor(sum_d w_t(d)*m(d) / sum_d w_t(d))
         rel(d) = floor(m(d)*1e6 / mix_t) - 1e6          # signed e6
         w_{t+1}(d) = max(1, floor(w_t(d) *
-                        (1e6 + clamp(rel, ±max_step_e6)) / 1e6))
+                        (1e6 + clamp(rel, ±250000)) / 1e6))
 
-    with m(d) = floor(sum(stat)*scale / n_d) the scaled per-domain
+    with m(d) = floor(sum(stat)*1e6 / n_d) the scaled per-domain
     mean. Every quantity is a bigint; every division has a POSITIVE
     divisor and numerator (the signed part is a subtraction, never a
     division), so Spark's integral `div` and DuckDB's `//` replay the
@@ -739,11 +737,11 @@ def mixture_reweight_mw(
     ).select(
         "domain", "n_rows",
         F.call_function(
-            "div", F.col("__s") * F.lit(scale), F.col("n_rows")
+            "div", F.col("__s") * F.lit(10 ** 6), F.col("n_rows")
         ).alias("m"),
     ).localCheckpoint(eager=True)
-    w = stats.withColumn("w", F.lit(scale).cast("bigint"))
     e6 = F.lit(10 ** 6).cast("bigint")
+    w = stats.withColumn("w", e6)
     for _ in range(rounds):
         tot = w.agg(
             F.sum(F.col("w") * F.col("m")).alias("__sm"),
@@ -756,8 +754,8 @@ def mixture_reweight_mw(
             F.call_function("div", F.col("m") * e6, F.col("__mix")) - e6
         )
         relc = F.least(
-            F.lit(max_step_e6).cast("bigint"),
-            F.greatest(F.lit(-max_step_e6).cast("bigint"), rel),
+            F.lit(250_000).cast("bigint"),
+            F.greatest(F.lit(-250_000).cast("bigint"), rel),
         )
         w = w.crossJoin(F.broadcast(tot)).select(
             "domain", "n_rows", "m",
@@ -781,7 +779,6 @@ def rendezvous_assign(
     df: DataFrame,
     id_col: str,
     n_shards: int,
-    salt: str = "hrw",
 ) -> DataFrame:
     """Rendezvous (highest-random-weight, Thaler-Ravishankar 1998)
     shard assignment: every key scores each shard with an
@@ -793,7 +790,7 @@ def rendezvous_assign(
     (key % N, which reshuffles ~everything) cannot give; pinned by a
     hypothesis test.
 
-    Weight = the first-8-hex-digit integer of md5('{salt}:{shard}:{key}')
+    Weight = the first-8-hex-digit integer of md5('hrw:{shard}:{key}')
     (the stable_sample idiom — pure function of (shard, key), bit-equal
     in any engine with md5); argmax via one max_by over a sortable
     (weight, -shard) struct, ties to the smaller shard id. The shard
@@ -814,7 +811,7 @@ def rendezvous_assign(
         F.substring(
             F.md5(
                 F.concat_ws(
-                    ":", F.lit(salt), F.col("shard").cast("string"),
+                    ":", F.lit("hrw"), F.col("shard").cast("string"),
                     F.col("key").cast("string"),
                 )
             ),
@@ -950,7 +947,6 @@ def dsir_gumbel_select(
     id_col: str,
     k: int,
     logw_col: str = "logw",
-    salt: str = "dsir",
 ) -> DataFrame:
     """Deterministic Gumbel-top-k resampling over DSIR log-weights —
     exact-k sampling WITHOUT replacement where selection probability
@@ -958,7 +954,7 @@ def dsir_gumbel_select(
     log-space twin of weighted_take_k's Efraimidis-Spirakis key, which
     would need exp(logw) and under/overflows at corpus-scale
     log-ratios). Made engine-reproducible the ``stable_sample`` way:
-    u in (0,1] derives from md5(salt:id), g = -ln(-ln(u)), and the k
+    u in (0,1] derives from md5("dsir:" || id), g = -ln(-ln(u)), and the k
     largest (logw + g) win with ties (a 2^-32 event) broken on the id.
 
     Scale: global top-k plans as TakeOrderedAndProject (per-partition
@@ -969,7 +965,7 @@ def dsir_gumbel_select(
         raise ValueError(f"dsir_gumbel_select: k={k} must be >= 1")
     v = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))),
+            F.md5(F.concat(F.lit("dsir:"), F.col(id_col).cast("string"))),
             1, 8,
         ),
         16, 10,

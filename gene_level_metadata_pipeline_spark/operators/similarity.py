@@ -614,10 +614,9 @@ def semantic_near_dup(
 def quantize_embeddings(
     df: DataFrame,
     vec_col: str = "embedding",
-    salt_eps: float = 1e-12,
 ) -> DataFrame:
-    """Symmetric per-vector int8 quantization: scale = max|x| / 127,
-    q[i] = round(x[i] / scale) ∈ [-127, 127].
+    """Symmetric per-vector int8 quantization: scale = max(max|x| / 127,
+    1e-12), q[i] = round(x[i] / scale) ∈ [-127, 127].
 
     The 100 TB story: a float32 embedding column shrinks 4× (plus the
     per-vector scale), dot products run over int arithmetic, and IVF/LSH
@@ -629,7 +628,7 @@ def quantize_embeddings(
     scale/2 per element and checks reconstructed cosine ≈ 1.
     """
     absmax = F.array_max(F.transform(F.col(vec_col), lambda x: F.abs(x.cast("double"))))
-    scale = F.greatest(absmax / F.lit(127.0), F.lit(salt_eps))
+    scale = F.greatest(absmax / F.lit(127.0), F.lit(1e-12))
     out = df.withColumn("q_scale", scale)
     return out.withColumn(
         "q_vec",
@@ -1046,7 +1045,6 @@ def pca_top_component(
     id_col: str = "vec_id",
     dim: int = 64,
     scale_down: int = 10,
-    iters: int = 3,
     k: int = 50,
     keep_cols: tuple[str, ...] = ("label",),
 ) -> DataFrame:
@@ -1061,7 +1059,7 @@ def pca_top_component(
     * the centered scaled covariance ``C = n * sum(x_i x_j) - S_i S_j``
       (= n^2 x covariance) is computed in ONE corpus pass over the
       per-row (i, j) pair expansion — exact integers, no divides;
-    * ``C' = C floordiv 10^scale_down`` caps magnitudes so ``iters``
+    * ``C' = C floordiv 10^scale_down`` caps magnitudes so the 3
       UNNORMALIZED power steps stay inside 128-bit/DECIMAL(38) range
       (normalizing each step needs a divide; skipping it changes only
       the scale of v, never its direction — and the fixed iteration
@@ -1121,7 +1119,7 @@ def pca_top_component(
         for (i, j) in sxx_rows
     }
     vec = {j: 1 for j in range(dim)}
-    for _ in range(iters):
+    for _ in range(3):
         vec = {
             i: sum(cp.get((i, j), 0) * vec.get(j, 0) for j in range(dim))
             for i in range(dim)
@@ -1160,13 +1158,13 @@ def grid_nn_join_2d(
     id_col: str = "vec_id",
     x_col: str = "x",
     y_col: str = "y",
-    cell_micro: int = 250_000,
 ) -> DataFrame:
     """Grid-bucketed 2-D nearest-neighbor self-join: the classic
     spatial-join pattern that replaces the O(N²) all-pairs distance
     matrix with a 9-cell candidate join. Points are snapped to integer
     MICRO-coordinates (round(coord*1e6) — exact bigint arithmetic from
-    there on), hashed to a square grid cell of side ``cell_micro``,
+    there on), hashed to a square grid cell of side 250000 micro-units
+    (0.25),
     and each point is compared only against points in its own cell and
     the 8 neighbors — the shuffle key is the cell id, so candidate
     work is local and quadratic only within a cell neighborhood.
@@ -1182,8 +1180,8 @@ def grid_nn_join_2d(
 
     Scale shape: one shuffle on cell id; the left side replicates 9×
     (the neighbor offsets), never the whole frame; dense-cell skew is
-    AQE's skew-join case and ``cell_micro`` is the knob (smaller cells
-    = more, smaller buckets). At 100 TB this is the plan you want —
+    AQE's skew-join case (smaller cells would mean more, smaller
+    buckets). At 100 TB this is the plan you want —
     candidate counts scale with local density, not corpus size.
     """
     offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
@@ -1194,8 +1192,8 @@ def grid_nn_join_2d(
     ).where(F.col("xm").isNotNull() & F.col("ym").isNotNull())
     cell = snapped.select(
         "pid", "xm", "ym",
-        F.floor(F.col("xm") / cell_micro).alias("cx"),
-        F.floor(F.col("ym") / cell_micro).alias("cy"),
+        F.floor(F.col("xm") / 250_000).alias("cx"),
+        F.floor(F.col("ym") / 250_000).alias("cy"),
     )
     probes = cell.select(
         "pid", "xm", "ym",
@@ -1936,7 +1934,6 @@ def dbscan_grid_2d(
     y_col: str = "y",
     eps_micro: int = 20_000,
     min_pts: int = 4,
-    max_iter: int = 20,
 ) -> DataFrame:
     """Deterministic grid-blocked DBSCAN in 2-D: density clustering as a
     COMPOSITION of already-certified pieces — the grid_nn_join_2d
@@ -2036,7 +2033,7 @@ def dbscan_grid_2d(
     )
 
     comps = connected_components(
-        core_edges, src="pid", dst="qid", max_iter=max_iter
+        core_edges, src="pid", dst="qid", max_iter=20
     )
     core_lab = (
         core.join(comps, core["pid"] == comps["doc_id"], "left")

@@ -86,23 +86,15 @@ def skew_scope(spark: SparkSession, advisory_bytes: int = 8 * 1024 * 1024):
                 spark.conf.set(k, v)
 
 
-def top_key_share(
-    df: DataFrame,
-    key: str,
-    sample_fraction: float | None = None,
-    seed: int = 42,
-) -> float:
+def top_key_share(df: DataFrame, key: str) -> float:
     """Share of rows held by the single hottest ``key`` value — the cheap
     histogram that decides whether a join needs skew mitigation. One
-    aggregation pass (map-side combine, key-cardinality-sized shuffle);
-    pass ``sample_fraction`` to bound the pass at 100 TB scale (seeded,
-    so re-runs agree). NULL keys count like any other value — a NULL hub
-    is still a straggler. Returns 0.0 for an empty frame."""
-    scanned = df if sample_fraction is None else df.sample(
-        fraction=sample_fraction, seed=seed
-    )
+    aggregation pass over the full frame (map-side combine,
+    key-cardinality-sized shuffle). NULL keys count like any other
+    value — a NULL hub is still a straggler. Returns 0.0 for an empty
+    frame."""
     row = (
-        scanned.groupBy(key)
+        df.groupBy(key)
         .agg(F.count(F.lit(1)).alias("__n"))
         .agg(F.max("__n").alias("__mx"), F.sum("__n").alias("__tot"))
         .first()
@@ -118,14 +110,13 @@ def hot_keys(
     hot_share: float = 0.05,
     top_k: int = 16,
     sample_fraction: float | None = None,
-    seed: int = 42,
 ) -> list:
     """Key VALUES holding at least ``hot_share`` of the rows (at most the
     ``top_k`` hottest) — the detection half of :func:`auto_skew_join`.
     One aggregation pass over the (optionally sampled) frame; the
     key-cardinality-sized count table is pinned with a localCheckpoint
     so the total and the top-k read it twice without rescanning the
-    input. Seeded sampling keeps re-runs identical.
+    input. Sampling is seeded (42), so re-runs are identical.
 
     Sampling bound (round-7, tests/test_property_skew.py): a Bernoulli
     sample at fraction f estimates a key's share with
@@ -139,7 +130,7 @@ def hot_keys(
     costs straggler time, never rows. Size ``sample_fraction`` so the
     hottest key you must catch keeps n_k*f >> 1/(margin^2)."""
     scanned = df if sample_fraction is None else df.sample(
-        fraction=sample_fraction, seed=seed
+        fraction=sample_fraction, seed=42
     )
     counts = (
         scanned.groupBy(F.col(key).alias("__k"))
@@ -166,7 +157,6 @@ def auto_skew_join(
     dim_key: str,
     how: str = "inner",
     hot_share: float = 0.05,
-    top_k: int = 16,
     salt_buckets: int = 32,
     sample_fraction: float | None = None,
 ) -> DataFrame:
@@ -174,7 +164,8 @@ def auto_skew_join(
     r5 task 5): callers no longer need to know they have a hub key.
 
     Detection: :func:`hot_keys` histograms the fact key (one cheap
-    aggregation; sampled at scale via ``sample_fraction``). No hot key
+    aggregation; sampled at scale via ``sample_fraction``) and salts at
+    most the 16 hottest keys. No hot key
     → the plain lazy join, zero plan change, stock session confs (which
     the r5 stress showed are what non-skewed work wants).
 
@@ -214,7 +205,7 @@ def auto_skew_join(
         )
     hot = hot_keys(
         fact, fact_key,
-        hot_share=hot_share, top_k=top_k, sample_fraction=sample_fraction,
+        hot_share=hot_share, top_k=16, sample_fraction=sample_fraction,
     )
     hot = [k for k in hot if k is not None]
     if not hot:
@@ -281,9 +272,8 @@ def salted_join(
     fact_key: str,
     dim_key: str,
     salt_buckets: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Replicate-small-side salted equi-join for known hot keys.
+    """Replicate-small-side salted inner equi-join for known hot keys.
 
     The fact side gets a deterministic salt in ``[0, salt_buckets)``
     (hash of the whole row — identical rows co-bucket, everything else
@@ -308,4 +298,4 @@ def salted_join(
     cond = (salted_fact[fact_key] == salted_dim[dim_key]) & (
         salted_fact["__salt"] == salted_dim["__salt"]
     )
-    return salted_fact.join(salted_dim, cond, how).drop("__salt")
+    return salted_fact.join(salted_dim, cond, "inner").drop("__salt")

@@ -103,10 +103,9 @@ def range_join(
     value_col: str,
     lo_col: str,
     hi_col: str,
-    how: str = "inner",
 ) -> DataFrame:
-    """Range (interval containment) join: fact rows matched to range rows
-    with ``lo <= value < hi``.
+    """Range (interval containment) inner join: fact rows matched to
+    range rows with ``lo <= value < hi``.
 
     The ranges side is broadcast (band tables are small by construction) —
     a BroadcastNestedLoopJoin whose inner predicate is evaluated
@@ -118,53 +117,45 @@ def range_join(
     cond: Column = (F.col(lo_col) <= F.col(value_col)) & (
         F.col(value_col) < F.col(hi_col)
     )
-    return facts.join(F.broadcast(ranges), cond, how)
+    return facts.join(F.broadcast(ranges), cond, "inner")
 
 
 def hierarchical_rollup(
     df: DataFrame,
     ts_col: str,
     value_col: str,
-    grains: tuple[str, ...] = ("hour", "day"),
 ) -> DataFrame:
-    """Hypertable-style continuous-aggregate rollup: multi-grain time
-    aggregates where each coarser grain is computed FROM the next finer
-    grain's partials, not by rescanning the facts.
+    """Hypertable-style continuous-aggregate rollup: hour and day
+    aggregates where the day grain is computed FROM the hour grain's
+    partials, not by rescanning the facts.
 
-    Returns (grain, bucket_start, n, total) for every grain. The fact
-    table is scanned ONCE (finest grain); day-from-hour etc. aggregate
-    ~24x fewer rows per step — the exact maintenance shape a continuous
+    Returns (grain, bucket_start, n, total) for both grains. The fact
+    table is scanned ONCE (hour grain); day-from-hour aggregates ~24x
+    fewer rows — the exact maintenance shape a continuous
     aggregate/materialized rollup uses at 100 TB. Sums stay in decimal so
     re-aggregation is exact.
     """
-    finest = grains[0]
-    cur = (
-        df.groupBy(F.date_trunc(finest, F.col(ts_col)).alias("bucket"))
+    hour = (
+        df.groupBy(F.date_trunc("hour", F.col(ts_col)).alias("bucket"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col(value_col).cast("decimal(18,6)")).alias("total"),
         )
     )
-    out = cur.select(
-        F.lit(finest).alias("grain"),
-        F.date_format("bucket", "yyyy-MM-dd HH:mm:ss").alias("bucket_start"),
-        "n",
-        F.round("total", 2).cast("double").alias("total"),
+    day = (
+        hour.groupBy(F.date_trunc("day", F.col("bucket")).alias("bucket"))
+        .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
     )
-    for grain in grains[1:]:
-        cur = (
-            cur.groupBy(F.date_trunc(grain, F.col("bucket")).alias("bucket"))
-            .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
+
+    def tidy(cur: DataFrame, grain: str) -> DataFrame:
+        return cur.select(
+            F.lit(grain).alias("grain"),
+            F.date_format("bucket", "yyyy-MM-dd HH:mm:ss").alias("bucket_start"),
+            "n",
+            F.round("total", 2).cast("double").alias("total"),
         )
-        out = out.unionByName(
-            cur.select(
-                F.lit(grain).alias("grain"),
-                F.date_format("bucket", "yyyy-MM-dd HH:mm:ss").alias("bucket_start"),
-                "n",
-                F.round("total", 2).cast("double").alias("total"),
-            )
-        )
-    return out
+
+    return tidy(hour, "hour").unionByName(tidy(day, "day"))
 
 
 def funnel_steps(
@@ -249,13 +240,13 @@ def retention_cohorts(
     events: DataFrame,
     user_col: str,
     ts_col: str,
-    week_us: int = 7 * 24 * 3600 * 1_000_000,
 ) -> DataFrame:
     """Weekly retention-cohort matrix: users grouped by the calendar
     week of their FIRST event (date_trunc('week') — Monday start in
     both Spark and DuckDB), counted in each whole-week offset from that
     first event. The offset is integer microsecond arithmetic
-    (floor((us - first_us) / week_us)), not calendar recursion, so both
+    (floor((us - first_us) / week_us), week_us = 7·24·3600·10⁶), not
+    calendar recursion, so both
     engines derive the identical long. Returns (cohort_week,
     week_offset, n_users) — offset 0 is the cohort size itself.
 
@@ -273,7 +264,7 @@ def retention_cohorts(
             F.date_trunc("week", F.col("__first")).alias("cohort_week"),
             F.floor(
                 (F.unix_micros("__ts") - F.unix_micros("__first"))
-                / F.lit(week_us)
+                / F.lit(7 * 24 * 3600 * 1_000_000)
             ).alias("week_offset"),
             F.col("__u"),
         )

@@ -28,7 +28,6 @@ __all__ = [
     "token_counts",
     "fingerprint",
     "stable_sample",
-    "stratified_stable_sample",
     "tf_idf_keywords",
     "repetition_scores",
     "pii_redact",
@@ -124,26 +123,18 @@ def gopher_quality_flags(
     text_col: str,
     id_col: str,
     min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_wl: float = 3.0,
-    max_mean_wl: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_ratio: float = 0.9,
-    max_ellipsis_ratio: float = 0.3,
-    min_alpha_ratio: float = 0.8,
-    max_dup_line_ratio: float = 0.3,
 ) -> DataFrame:
     """The published Gopher-style document-quality rule stack (Rae et al.
     2021 §A1.1 heuristics, public), each rule a Catalyst array
     expression over one scan — no shuffle, no Python:
 
-    * word count within [min_words, max_words];
-    * mean word length within [min_mean_wl, max_mean_wl];
-    * symbol-to-word ratio (``#`` and ``...`` marks) ≤ max_symbol_ratio;
-    * fraction of lines starting with a bullet ≤ max_bullet_ratio;
-    * fraction of lines ending in an ellipsis ≤ max_ellipsis_ratio;
-    * fraction of words containing an alphabetic char ≥ min_alpha_ratio;
-    * duplicate-line fraction ≤ max_dup_line_ratio.
+    * word count within [min_words, 100000];
+    * mean word length within [3, 10];
+    * symbol-to-word ratio (``#`` and ``...`` marks) ≤ 0.1;
+    * fraction of lines starting with a bullet ≤ 0.9;
+    * fraction of lines ending in an ellipsis ≤ 0.3;
+    * fraction of words containing an alphabetic char ≥ 0.8;
+    * duplicate-line fraction ≤ 0.3.
 
     Returns per-rule ratios (rounded 4dp — the cross-engine-stable form)
     plus the per-rule booleans and the conjunction ``gopher_ok``.
@@ -201,14 +192,14 @@ def gopher_quality_flags(
     )
     flags = {
         "words_ok": (F.col("n_words") >= min_words)
-        & (F.col("n_words") <= max_words),
-        "mean_wl_ok": (F.col("mean_word_len") >= min_mean_wl)
-        & (F.col("mean_word_len") <= max_mean_wl),
-        "symbol_ok": F.col("symbol_ratio") <= max_symbol_ratio,
-        "bullet_ok": F.col("bullet_ratio") <= max_bullet_ratio,
-        "ellipsis_ok": F.col("ellipsis_ratio") <= max_ellipsis_ratio,
-        "alpha_ok": F.col("alpha_word_ratio") >= min_alpha_ratio,
-        "dup_line_ok": F.col("dup_line_ratio") <= max_dup_line_ratio,
+        & (F.col("n_words") <= 100_000),
+        "mean_wl_ok": (F.col("mean_word_len") >= 3.0)
+        & (F.col("mean_word_len") <= 10.0),
+        "symbol_ok": F.col("symbol_ratio") <= 0.1,
+        "bullet_ok": F.col("bullet_ratio") <= 0.9,
+        "ellipsis_ok": F.col("ellipsis_ratio") <= 0.3,
+        "alpha_ok": F.col("alpha_word_ratio") >= 0.8,
+        "dup_line_ok": F.col("dup_line_ratio") <= 0.3,
     }
     for name, expr in flags.items():
         out = out.withColumn(name, F.coalesce(expr, F.lit(False)))
@@ -228,11 +219,10 @@ def c4_clean(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    min_words_per_line: int = 3,
 ) -> DataFrame:
     """C4-style line-level cleaning (Raffel et al. 2020 §2.2 heuristics,
     public): keep only lines that end in terminal punctuation, carry at
-    least ``min_words_per_line`` words, and do not mention "javascript";
+    least 3 words, and do not mention "javascript";
     drop the whole page if it contains a curly brace (code marker) or
     the phrase "lorem ipsum".
 
@@ -256,7 +246,7 @@ def c4_clean(
         )
         & (
             F.size(F.filter(F.split(l, " "), lambda w: w != ""))
-            >= min_words_per_line
+            >= 3
         )
         & ~F.contains(F.lower(l), F.lit("javascript")),
     )
@@ -290,16 +280,16 @@ def token_counts(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def fingerprint(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
+def fingerprint(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Deterministic document fingerprint: the lexicographic minimum md5
-    over word n-gram shingles (a 1-hash MinHash — the rolling-hash
+    over word 3-gram shingles (a 1-hash MinHash — the rolling-hash
     fingerprint of the survey's north-star list). Equal fingerprints ⇒
     shared rarest shingle hash; used as a cheap near-dup blocking key.
     Computed array-natively — no explode, no shuffle. Returns
-    (id, fingerprint); documents with fewer than n words are excluded."""
+    (id, fingerprint); documents with fewer than 3 words are excluded."""
     from gene_level_metadata_pipeline_spark.operators.dedup import shingle_array
 
-    grams = shingle_array(text_col, n)
+    grams = shingle_array(text_col, 3)
     return df.where(F.size(grams) > 0).select(
         F.col(id_col),
         F.array_min(F.transform(grams, lambda s: F.md5(s))).alias("fingerprint"),
@@ -519,11 +509,9 @@ def hex_sample_bound(fraction: float) -> str:
     return format(int(fraction * 16 ** 8), "08x")
 
 
-def stable_sample(
-    df: DataFrame, key_col: str, fraction: float, salt: str = "sample"
-) -> DataFrame:
+def stable_sample(df: DataFrame, key_col: str, fraction: float) -> DataFrame:
     """Deterministic hash-based Bernoulli sample: keep rows whose
-    md5(salt || key) hex prefix falls under the fraction threshold.
+    md5("sample:" || key) hex prefix falls under the fraction threshold.
 
     Unlike ``DataFrame.sample`` this is reproducible across runs, engines,
     and partitionings — the property a training-data pipeline needs so a
@@ -532,23 +520,7 @@ def stable_sample(
     SQL engine selects the identical row set.
     """
     bound = hex_sample_bound(fraction)
-    h = F.md5(F.concat(F.lit(salt + ":"), F.col(key_col).cast("string")))
-    return df.where(F.substring(h, 1, 8) < F.lit(bound))
-
-
-def stratified_stable_sample(
-    df: DataFrame, key_col: str, stratum_col: str, fraction: float,
-    salt: str = "sample",
-) -> DataFrame:
-    """Per-stratum deterministic sample: same hash predicate, but the
-    stratum participates in the hash so selection is independent across
-    strata (a document keeps/loses membership only if its own stratum's
-    fraction changes)."""
-    bound = hex_sample_bound(fraction)
-    h = F.md5(
-        F.concat(F.lit(salt + ":"), F.col(stratum_col).cast("string"),
-                 F.lit(":"), F.col(key_col).cast("string"))
-    )
+    h = F.md5(F.concat(F.lit("sample:"), F.col(key_col).cast("string")))
     return df.where(F.substring(h, 1, 8) < F.lit(bound))
 
 
@@ -593,16 +565,16 @@ def tf_idf_keywords(
     )
 
 
-def repetition_scores(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
+def repetition_scores(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Intra-document repetition score: fraction of duplicated word
-    n-grams (Gopher-style repetition filter). dup_fraction = 1 −
+    3-grams (Gopher-style repetition filter). dup_fraction = 1 −
     distinct-grams / total-grams; high values flag boilerplate or
     degenerate generations. Entirely array-native per row — a pure map,
     ZERO shuffles at any scale. Returns (id, n_grams, n_unique_grams,
-    dup_fraction); documents shorter than n words are excluded."""
+    dup_fraction); documents shorter than 3 words are excluded."""
     from gene_level_metadata_pipeline_spark.operators.dedup import shingle_array
 
-    grams = shingle_array(text_col, n, distinct=False)
+    grams = shingle_array(text_col, 3, distinct=False)
     g = df.select(F.col(id_col), grams.alias("grams")).where(F.size("grams") > 0)
     total = F.size("grams").cast("long")
     uniq = F.size(F.array_distinct(F.col("grams"))).cast("long")
@@ -669,17 +641,14 @@ def decontaminate(
     bench: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 5,
-    max_shared_grams: int = 0,
 ) -> DataFrame:
     """Benchmark decontamination — the removal half of
-    :func:`contamination_check`: drop every document sharing more than
-    ``max_shared_grams`` distinct word n-grams with the evaluation
-    corpus (default 0: ANY overlap removes). The contaminated-id set is
+    :func:`contamination_check`: drop every document sharing ANY word
+    5-gram with the evaluation corpus. The contaminated-id set is
     an anti join, so clean documents never shuffle; the detection side
     keeps its broadcast-benchmark shape."""
-    hits = contamination_check(df, bench, text_col, id_col, n)
-    bad = hits.where(F.col("n_shared_grams") > max_shared_grams).select(
+    hits = contamination_check(df, bench, text_col, id_col, 5)
+    bad = hits.where(F.col("n_shared_grams") > 0).select(
         id_col
     )
     return df.join(bad, id_col, "left_anti")
@@ -808,13 +777,12 @@ def train_split(
     df: DataFrame,
     key_col: str,
     fractions: tuple[float, float, float] = (0.8, 0.1, 0.1),
-    salt: str = "split",
 ) -> DataFrame:
     """Deterministic train/val/test assignment — the dataset-split op a
     training pipeline runs last.
 
     Same engine-portable machinery as ``stable_sample``: the md5 hex
-    prefix of (salt, key) is binned by the cumulative fractions, so a
+    prefix of "split:" || key is binned by the cumulative fractions, so a
     document's split membership is a pure function of its key —
     reproducible across runs, engines, partitionings, and additions of
     other documents (no global shuffle, no count dependency). Appends a
@@ -825,7 +793,7 @@ def train_split(
     b1 = hex_sample_bound(fractions[0])
     b2 = hex_sample_bound(fractions[0] + fractions[1])
     h = F.substring(
-        F.md5(F.concat(F.lit(salt + ":"), F.col(key_col).cast("string"))),
+        F.md5(F.concat(F.lit("split:"), F.col(key_col).cast("string"))),
         1, 8,
     )
     return df.withColumn(
@@ -985,13 +953,11 @@ def bm25_topk(
     query_col: str = "query",
     qid_col: str = "qid",
     k: int = 5,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 top-k document retrieval per query — the lexical-retrieval
     complement to the embedding ANN family (the standard first-stage
     ranker; Robertson/Spärck Jones probabilistic idf with the Okapi
-    saturation/length normalization, k1=1.2 b=0.75 defaults).
+    saturation/length normalization at the fixed k1=1.2, b=0.75).
 
     Scale shape: ``queries`` is a small frame (a broadcast dimension —
     retrieval workloads score thousands of queries against billions of
@@ -1032,6 +998,7 @@ def bm25_topk(
     idf = F.log(
         (F.col("__n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
+    k1, b = 1.2, 0.75
     sat = (F.col("cnt") * (k1 + 1)) / (
         F.col("cnt")
         + k1 * (1 - b + b * F.col("len") / F.col("__avglen"))
@@ -1109,8 +1076,12 @@ def unigram_logprob_scores(
 # safe symbol-boundary marker for the BPE wrapped-string representation.
 _BPE_SEP = "\x1f"
 
+# Longest [a-z]+ word that bpe_train learns from and bpe_encode counts —
+# one value, so both halves of the tokenizer see the same vocabulary.
+_BPE_MAX_WORD_LEN = 20
 
-def _bpe_wrapped_words(docs: DataFrame, text_col: str, max_word_len: int):
+
+def _bpe_wrapped_words(docs: DataFrame, text_col: str):
     """Word-frequency table in the wrapped-string symbol representation
     (every symbol delimited by unit separators on both sides) — the
     starting state of :func:`bpe_train`.
@@ -1123,7 +1094,7 @@ def _bpe_wrapped_words(docs: DataFrame, text_col: str, max_word_len: int):
                 F.expr(f"regexp_extract_all(lower({text_col}), '[a-z]+', 0)")
             ).alias("w")
         )
-        .where(F.length("w").between(1, max_word_len))
+        .where(F.length("w").between(1, _BPE_MAX_WORD_LEN))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select(
@@ -1162,7 +1133,6 @@ def bpe_train(
     docs: DataFrame,
     text_col: str = "text",
     rounds: int = 4,
-    max_word_len: int = 20,
     batch: int = 1,
 ) -> DataFrame:
     """Byte-pair-encoding merge training — the tokenizer-training core of
@@ -1172,7 +1142,8 @@ def bpe_train(
     one row per merge, exact bigint counts; ``round`` is the global
     1-based merge index.
 
-    Word model: lowercase ``[a-z]+`` tokens (length <= ``max_word_len``),
+    Word model: lowercase ``[a-z]+`` tokens (length <= 20,
+    ``_BPE_MAX_WORD_LEN``),
     merges stay word-internal (no end-of-word marker — documented
     divergence from the classic </w> variant). Ties in the argmax break
     on (count DESC, sym_a ASC, sym_b ASC) — fully deterministic, so any
@@ -1220,7 +1191,7 @@ def bpe_train(
         raise ValueError(f"bpe_train: batch={batch} must be >= 1")
     sep = _BPE_SEP
     spark = docs.sparkSession
-    words = _bpe_wrapped_words(docs, text_col, max_word_len)
+    words = _bpe_wrapped_words(docs, text_col)
     merges: list[tuple[int, str, str, int]] = []
     for _ in range(rounds):
         cands = _bpe_pair_counts(words).limit(batch * 8).collect()
@@ -1257,13 +1228,14 @@ def bpe_encode(
     merges: DataFrame | list[tuple[str, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_word_len: int = 20,
 ) -> DataFrame:
     """Apply learned BPE merges to the corpus and account tokens per
     document — the tokenizer-APPLICATION half of :func:`bpe_train`
     (train learns the merge table; encode measures what it buys).
     Returns (id, n_words, n_chars, n_tokens, compression) per document
-    with >= 1 word, where ``compression = chars/token`` rounded to 6dp
+    with >= 1 word of at most 20 letters (``_BPE_MAX_WORD_LEN``, the
+    training vocabulary's bound), where ``compression = chars/token``
+    rounded to 6dp
     (higher = better merges) and the counts are exact bigints.
 
     ``merges`` is the bpe_train output frame (collected driver-side —
@@ -1295,7 +1267,7 @@ def bpe_encode(
                 F.expr(f"regexp_extract_all(lower({text_col}), '[a-z]+', 0)")
             ).alias("w"),
         )
-        .where(F.length("w").between(1, max_word_len))
+        .where(F.length("w").between(1, _BPE_MAX_WORD_LEN))
         .groupBy("__id", "w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1409,15 +1381,18 @@ def _hard_sigmoid(z):
     )
 
 
+# Hash-feature width of the linear classifier — one value, so a model
+# trained by linear_classifier_train always matches the buckets that
+# linear_classifier_score hashes.
+_LINEAR_N_FEATURES = 16
+
+
 def linear_classifier_train(
     docs: DataFrame,
     text_col: str = "text",
     label_col: str = "lang",
-    positive: str = "en",
     id_col: str = "doc_id",
-    n_features: int = 16,
     rounds: int = 3,
-    lr: str = "0.001",
 ) -> DataFrame:
     """Train a binary linear classifier on hashing-trick features by
     full-batch gradient descent — the fastText-style model-in-the-loop
@@ -1425,19 +1400,20 @@ def linear_classifier_train(
     model scores every document; CCNet/Gopher-class pipelines use
     exactly this shape), as a DISTRIBUTED iterative DataFrame program:
     per round, one (doc) aggregation computes every document's margin,
-    one (bucket) aggregation computes the full gradient, and the ~
-    ``n_features``-row weight vector round-trips through the driver
-    (bounded by construction — the header-peek discipline, same as the
+    one (bucket) aggregation computes the full gradient, and the
+    16-row (``_LINEAR_N_FEATURES``) weight vector round-trips through
+    the driver (bounded by construction — the header-peek discipline, same as the
     Lloyd and BPE trainers).
 
     Arithmetic contract: everything is exact DECIMAL — features are
     integer sign-hash counts, the link is :func:`_hard_sigmoid`
-    (piecewise linear), the learning rate is a decimal literal, and
+    (piecewise linear), the learning rate is the decimal literal 0.001,
+    and
     each round re-quantizes weights to scale 12. No floats, no
     transcendentals, no divides ⇒ an unrolled SQL CTE chain replays
     training bit-for-bit in any engine (the oracle twin in
     plans/q_dedup_text.py does exactly that). Labels: ``y = 1`` where
-    ``label_col == positive`` else 0 (NULL ⇒ 0).
+    ``label_col == "en"`` else 0 (NULL ⇒ 0).
 
     Update rule per round (classic LSM/perceptron hybrid — with the
     clamped link the gradient is the residual):
@@ -1445,7 +1421,7 @@ def linear_classifier_train(
     with ``p_i = clamp(0.5 + (w·x_i)/4, 0, 1)``.
 
     Scale: the corpus is touched twice per round (margin pass, gradient
-    pass) through a checkpointed O(docs × n_features) sparse feature
+    pass) through a checkpointed O(docs × 16) sparse feature
     table; the only driver state is the weight vector. Rounds are
     sequential by nature (SGD dependency), but each round is two
     shuffles regardless of corpus size — at 100 TB you cap rounds, not
@@ -1455,10 +1431,10 @@ def linear_classifier_train(
     from decimal import Decimal
 
     spark = docs.sparkSession
-    feats = feature_hash(docs, text_col, id_col, n_features)
+    feats = feature_hash(docs, text_col, id_col, _LINEAR_N_FEATURES)
     y = docs.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("__yid"),
-        F.when(F.col(label_col) == positive, 1)
+        F.when(F.col(label_col) == "en", 1)
         .otherwise(0)
         .cast("decimal(2,0)")
         .alias("__y"),
@@ -1473,8 +1449,8 @@ def linear_classifier_train(
         )
         .localCheckpoint(eager=True)  # re-scanned twice per round
     )
-    w: dict[int, Decimal] = {j: Decimal(0) for j in range(n_features)}
-    lr_lit = F.lit(lr).cast("decimal(4,3)")
+    w: dict[int, Decimal] = {j: Decimal(0) for j in range(_LINEAR_N_FEATURES)}
+    lr_lit = F.lit("0.001").cast("decimal(4,3)")
     for _ in range(rounds):
         wdf = F.broadcast(
             spark.createDataFrame(
@@ -1506,7 +1482,7 @@ def linear_classifier_train(
             .cast("decimal(24,12)")
             .alias("w"),
         )
-        for row in upd.collect():  # <= n_features rows — bounded
+        for row in upd.collect():  # <= _LINEAR_N_FEATURES rows — bounded
             w[int(row["bucket"])] = row["w"]
     return spark.createDataFrame(
         sorted(w.items()), "bucket bigint, w decimal(24,12)"
@@ -1518,7 +1494,6 @@ def linear_classifier_score(
     weights: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_features: int = 16,
 ) -> DataFrame:
     """Score every document with a :func:`linear_classifier_train` model:
     hash features, one broadcast join against the tiny weight vector,
@@ -1527,7 +1502,7 @@ def linear_classifier_score(
     zero-margin ``p = 0.5`` (and therefore ``pred = 1`` — the clamp's
     decision boundary is inclusive). Returns (id, score DOUBLE rounded
     6dp, pred int)."""
-    feats = feature_hash(docs, text_col, id_col, n_features)
+    feats = feature_hash(docs, text_col, id_col, _LINEAR_N_FEATURES)
     z = (
         feats.join(F.broadcast(weights), "bucket")
         .groupBy(id_col)
@@ -1672,19 +1647,17 @@ def cms_lookup(
 
 def rrf_fuse(
     *rankings: DataFrame,
-    rrf_k: int = 60,
-    scale: int = 10 ** 9,
     topk: int = 5,
 ) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009) of two or more
     per-query rankings — the standard hybrid-retrieval combiner (BM25 +
     ANN, sparse + dense) that needs NO score calibration: each ranker
-    contributes 1/(rrf_k + rank) per (query, doc), missing docs
+    contributes 1/(60 + rank) per (query, doc), missing docs
     contribute 0, and the fused top-k is re-ranked on the summed
     contribution. Inputs are (qid, doc_id, rank) frames; returns
     (qid, doc_id, fused_e9, fused_rank) for the per-query top ``topk``.
 
-    Contributions are FIXED-POINT bigints — floor(scale/(rrf_k+rank))
+    Contributions are FIXED-POINT bigints — floor(10^9/(60+rank))
     — so the fused scores are exact integers any engine reproduces
     (IEEE 1/(k+r) sums are order-dependent; integer sums are not).
     Ties break on (fused DESC, doc_id ASC), a total order.
@@ -1703,7 +1676,7 @@ def rrf_fuse(
     for r in rankings:
         c = r.select(
             "qid", "doc_id",
-            F.expr(f"{scale} div ({rrf_k} + rank)").cast("bigint").alias(
+            F.expr("1000000000 div (60 + rank)").cast("bigint").alias(
                 "contrib"
             ),
         )
@@ -1888,9 +1861,6 @@ def kneser_ney_bigram(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    d_num: int = 3,
-    d_den: int = 4,
-    scale: int = 10 ** 12,
     min_count: int = 1,
 ) -> DataFrame:
     """Interpolated Kneser-Ney bigram language model, trained corpus-
@@ -1903,12 +1873,11 @@ def kneser_ney_bigram(
         P(w2|w1) = max(c(w1,w2) - D, 0)/c(w1)
                    + (D·N1+(w1·)/c(w1)) · N1+(·w2)/T
 
-    with discount D = d_num/d_den (default 3/4) and T the number of
-    distinct bigram types. Every quantity is an integer, so with the
-    discount kept RATIONAL the probability is the exact fraction
-       (max(d_den·c12 − d_num, 0)·T + d_num·N1+(w1·)·N1+(·w2))
-       / (d_den·c(w1)·T)
-    floored at ``scale`` — DECIMAL(38,0) intermediates (≈4e26 at a
+    with discount D = 3/4 and T the number of distinct bigram types.
+    Every quantity is an integer, so with the discount kept RATIONAL
+    the probability is the exact fraction
+       (max(4·c12 − 3, 0)·T + 3·N1+(w1·)·N1+(·w2)) / (4·c(w1)·T)
+    floored at 10^12 — DECIMAL(38,0) intermediates (≈4e26 at a
     10M-token corpus, well inside 38 digits; the HUGEINT PCA
     discipline), so the trained model is hash-certifiable cross-engine,
     which a float KN never is.
@@ -1944,15 +1913,15 @@ def kneser_ney_bigram(
     d38 = "decimal(38,0)"
     num = (
         F.greatest(
-            F.lit(d_den) * F.col("c12") - F.lit(d_num), F.lit(0)
+            F.lit(4) * F.col("c12") - F.lit(3), F.lit(0)
         ).cast(d38)
         * F.col("t").cast(d38)
-        + F.lit(d_num).cast(d38)
+        + F.lit(3).cast(d38)
         * F.col("nfol").cast(d38)
         * F.col("nprec").cast(d38)
-    ) * F.lit(scale).cast(d38)
+    ) * F.lit(10 ** 12).cast(d38)
     den = (
-        F.lit(d_den).cast(d38) * F.col("c1").cast(d38)
+        F.lit(4).cast(d38) * F.col("c1").cast(d38)
         * F.col("t").cast(d38)
     )
     return (

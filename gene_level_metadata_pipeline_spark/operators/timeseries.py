@@ -26,8 +26,6 @@ def resample_locf(
     ts_col: str,
     value_col: str,
     tie_col: str,
-    step: str = "1 hour",
-    grain: str = "hour",
     step_us: int | None = None,
 ) -> DataFrame:
     """Resample an irregular series onto a regular time grid, filling
@@ -39,8 +37,8 @@ def resample_locf(
     first observation). Ties at one (key, ts) are resolved
     deterministically by the greatest ``tie_col`` (``max_by``).
 
-    Two axis modes: timestamp ``ts_col`` with ``step``/``grain``
-    (interval sequence from ``date_trunc(grain, min)``), or — when
+    Two axis modes: timestamp ``ts_col`` on an hourly grid (interval
+    sequence of ``1 hour`` steps from ``date_trunc('hour', min)``), or — when
     ``step_us`` is given — a numeric axis (epoch micros or any long),
     aligning the origin with integer arithmetic ``min - min % step_us``.
     The numeric mode sidesteps timezone semantics entirely and is the
@@ -66,10 +64,10 @@ def resample_locf(
         seq = F.sequence("__t0", "__t1", F.lit(step_us))
     else:
         bounds = df.agg(
-            F.date_trunc(grain, F.min(ts_col)).alias("__t0"),
+            F.date_trunc("hour", F.min(ts_col)).alias("__t0"),
             F.max(ts_col).alias("__t1"),
         )
-        seq = F.sequence("__t0", "__t1", F.expr(f"interval {step}"))
+        seq = F.sequence("__t0", "__t1", F.expr("interval 1 hour"))
     grid = (
         df.select(key_col)
         .distinct()

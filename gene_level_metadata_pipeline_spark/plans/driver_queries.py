@@ -4,9 +4,8 @@ Every implemented SURVEY.md §2 operator as a named (spark, sf_dir) ->
 DataFrame callable plus a DuckDB oracle SQL string, split into per-family
 modules (q_core / q_tpch / q_ingest / q_streaming / q_dedup_text /
 q_temporal / q_breadth / q_windows_misc / q_modern). Importing this module
-imports them all, which registers every query; the public surface
-(QUERIES, ORACLE, helpers) is unchanged from the original single-module
-registry.
+imports them all, which registers every query; its public surface is
+QUERIES and ORACLE (the helpers live in ``plans.registry``).
 
 Driver contract conventions (see __spark_entry__.py):
   * every computed column is aliased identically in the Spark plan and the
@@ -21,14 +20,6 @@ from __future__ import annotations
 from gene_level_metadata_pipeline_spark.plans.registry import (  # noqa: F401
     ORACLE,
     QUERIES,
-    QueryFn,
-    _COS,
-    _davg,
-    _dsum,
-    _events,
-    _register,
-    _round_to,
-    _t,
 )
 
 # importing each family module registers its queries (order preserved)

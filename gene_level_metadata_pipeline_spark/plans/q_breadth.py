@@ -12,12 +12,8 @@ from gene_level_metadata_pipeline_spark.materialize import (
     materialize as _materialize,
 )
 
-from gene_level_metadata_pipeline_spark.operators.harmonize import harmonize, spine
 from gene_level_metadata_pipeline_spark.plans.registry import (
-    ORACLE,
-    QUERIES,
     _COS,
-    _davg,
     _dsum,
     _events,
     _register,

@@ -11,9 +11,6 @@ from pyspark.sql import functions as F
 
 from gene_level_metadata_pipeline_spark.operators.harmonize import harmonize, spine
 from gene_level_metadata_pipeline_spark.plans.registry import (
-    ORACLE,
-    QUERIES,
-    _COS,
     _davg,
     _dsum,
     _events,

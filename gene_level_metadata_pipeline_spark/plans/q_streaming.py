@@ -9,17 +9,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gene_level_metadata_pipeline_spark.operators.harmonize import harmonize, spine
 from gene_level_metadata_pipeline_spark.plans.registry import (
-    ORACLE,
-    QUERIES,
-    _COS,
-    _davg,
-    _dsum,
     _events,
     _register,
     _round_to,
-    _t,
 )
 
 # ---------------------------------------------------------------------------

@@ -14,8 +14,6 @@ from gene_level_metadata_pipeline_spark.materialize import (
 )
 from gene_level_metadata_pipeline_spark.operators.harmonize import harmonize, spine
 from gene_level_metadata_pipeline_spark.plans.registry import (
-    ORACLE,
-    QUERIES,
     _COS,
     _cooccur_pairs,
     _davg,

@@ -211,6 +211,10 @@ def hourly_event_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _FLUSH_SENTINEL_UID = -(2**40)  # impossible user_id reserved for the punctuation row
 
+# Inactivity gap that closes a session — one value, so the custom
+# sessionizer and the native session_window demo cut identical sessions.
+_SESSION_GAP_MINUTES = 30
+
 
 def _stage_with_flush_sentinel(
     spark: SparkSession, static: DataFrame, sf_dir: str, gap_minutes: int
@@ -282,14 +286,13 @@ def _without_sentinel(t: DataFrame) -> DataFrame:
 def sessionize_stream(
     spark: SparkSession,
     sf_dir: str,
-    gap_minutes: int = 30,
     flush_final: bool = True,
 ) -> DataFrame:
     """Stateful streaming sessionization via applyInPandasWithState.
 
     The custom-stateful-operator slice: per-user sessions with a
-    ``gap_minutes`` inactivity timeout, state = (session start, last seen,
-    count), emitted on event-time timeout. The watermark bounds state.
+    30-minute (``_SESSION_GAP_MINUTES``) inactivity timeout, state =
+    (session start, last seen, count), emitted on event-time timeout. The watermark bounds state.
 
     With ``flush_final=True`` (default) a watermark-punctuation sentinel
     (see ``_stage_with_flush_sentinel``) drains every open session when
@@ -308,12 +311,14 @@ def sessionize_stream(
     stage_dir = None
     if flush_final:
         # None when events is empty: nothing to flush, no sentinel template
-        stage_dir = _stage_with_flush_sentinel(spark, static, sf_dir, gap_minutes)
+        stage_dir = _stage_with_flush_sentinel(
+            spark, static, sf_dir, _SESSION_GAP_MINUTES
+        )
     if stage_dir is not None:
         src = spark.readStream.schema(static.schema).parquet(stage_dir)
     ev = normalize_event_ts(src).withWatermark("ts", "1 hour")
 
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = _SESSION_GAP_MINUTES * 60 * 1_000_000
 
     def fn(key, pdf_iter, state):
         import pandas as pd
@@ -368,12 +373,12 @@ def sessionize_stream(
 
 
 def session_window_counts_stream(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 30
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Native streaming session windows: ``F.session_window`` under a
-    watermark in append mode — Spark's built-in window-MERGE state
-    (distinct from the tumbling-window state of
-    ``hourly_event_counts_stream`` and the custom
+    """Native streaming session windows: ``F.session_window`` with the
+    30-minute ``_SESSION_GAP_MINUTES`` gap under a watermark in append
+    mode — Spark's built-in window-MERGE state (distinct from the
+    tumbling-window state of ``hourly_event_counts_stream`` and the custom
     ``applyInPandasWithState`` sessionizer): per-key session windows
     merge as events arrive and emit once the watermark passes a
     session's end.
@@ -390,14 +395,18 @@ def session_window_counts_stream(
     """
     _events_confs(spark)
     static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stage_dir = _stage_with_flush_sentinel(spark, static, sf_dir, gap_minutes)
+    stage_dir = _stage_with_flush_sentinel(
+        spark, static, sf_dir, _SESSION_GAP_MINUTES
+    )
     try:
         src = spark.readStream.schema(static.schema).parquet(stage_dir)
         ev = normalize_event_ts(src).withWatermark("ts", "1 hour")
         agg = (
             ev.groupBy(
                 "user_id",
-                F.session_window("ts", f"{gap_minutes} minutes").alias("sw"),
+                F.session_window(
+                    "ts", f"{_SESSION_GAP_MINUTES} minutes"
+                ).alias("sw"),
             )
             .agg(
                 F.count(F.lit(1)).alias("n"),

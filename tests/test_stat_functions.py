@@ -36,7 +36,8 @@ def test_sample_by_stratified_seeded(spark):
     """sampleBy: per-stratum Bernoulli sampling — seeded ⇒ reproducible
     (same rows both calls), unlisted strata dropped entirely, and each
     kept stratum lands near its requested fraction. The nondeterministic
-    sibling of the registry's hash-based `stratified_stable_sample`."""
+    sibling of the hash-based `stable_sample` and the per-stratum
+    `selection.stratified_take`."""
     o = spark.read.parquet(f"{SF}/orders.parquet").select(
         "o_orderkey", "o_orderstatus"
     )

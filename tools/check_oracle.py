@@ -10,8 +10,8 @@ Usage:  python tools/check_oracle.py [query ...]
         python tools/check_oracle.py --json certification/oracle_full_<round>.json
 
 ``--json PATH`` additionally writes a machine-readable artifact in the
-driver's CORRECTNESS row shape — ``{"_meta": {git_sha, n_registered,
-sf_dir, ...}, "<query>": {rows_match, schema_match, hash_match,
+driver's CORRECTNESS row shape — ``{"_meta": {git_sha, git_dirty,
+n_registered, sf_dir, ...}, "<query>": {rows_match, schema_match, hash_match,
 spark_rows, oracle_rows, err}}`` — so every round ships a committed
 full-registry equivalent of the driver's (frozen, 50-query) draw
 (VERDICT r7 task 7). Rows-only queries get ``"rows_only": true`` with
@@ -264,13 +264,23 @@ def main() -> int:
         import json as _json
         import subprocess
 
-        try:
-            sha = subprocess.run(
-                ["git", "rev-parse", "HEAD"], capture_output=True,
-                text=True, cwd=REPO,
-            ).stdout.strip()
-        except Exception:  # noqa: BLE001
-            sha = None
+        def git(*args):
+            try:
+                return subprocess.run(
+                    ["git", *args], capture_output=True, text=True,
+                    cwd=REPO, check=True,
+                ).stdout.strip()
+            except Exception:  # noqa: BLE001
+                return None
+
+        sha = git("rev-parse", "HEAD")
+        # the sha names the commit, not the tree that ran: flag a run
+        # whose package or driver entry point differs from that commit
+        changes = git(
+            "status", "--porcelain", "--",
+            "gene_level_metadata_pipeline_spark", "__spark_entry__.py",
+        )
+        dirty = None if changes is None else changes != ""
         # a rows-only entry counts as a pass only when it actually
         # produced rows — otherwise the artifact would overstate
         # passes relative to the console's zero-rows WARNING (ADVICE r8)
@@ -280,7 +290,8 @@ def main() -> int:
             or (v.get("rows_only") and v.get("rows_match"))
         )
         out = {"_meta": {
-            "git_sha": sha, "n_registered": len(qs), "n_checked": len(report),
+            "git_sha": sha, "git_dirty": dirty,
+            "n_registered": len(qs), "n_checked": len(report),
             "n_pass": n_pass, "n_fail": len(failures), "sf_dir": SF_DIR,
             "vanilla": vanilla,
         }}
