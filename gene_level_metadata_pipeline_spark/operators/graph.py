@@ -31,7 +31,6 @@ def connected_components(
     pairs: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Component labels for every node appearing in ``pairs``.
 
@@ -40,8 +39,8 @@ def connected_components(
     Each round combines neighbor-min propagation with pointer jumping
     (``label ← label[label]``), so convergence is O(log diameter) rounds,
     not O(diameter) — a 30-node path converges in ~6 rounds instead of 30.
-    Converges when a round changes no label; raises if ``max_iter`` is hit
-    first.
+    Converges when a round changes no label; raises if 20 rounds
+    (``_CC_MAX_ITER``) pass first.
 
     Per-round shuffles are SELF-SIZED: the materialized edge count sizes
     ``spark.sql.shuffle.partitions`` for the loop (``sizing.sized_shuffle``,
@@ -64,7 +63,7 @@ def connected_components(
     if n_edges <= _DRIVER_EDGE_CAP:
         return _cc_driver(edges)
     with sized_shuffle(edges.sparkSession, n_edges):
-        return _cc_loop(edges, max_iter)
+        return _cc_loop(edges)
 
 
 # Small-graph escape: below this edge count the graph collects to the
@@ -121,7 +120,14 @@ def _cc_driver(edges: DataFrame) -> DataFrame:
     return edges.sparkSession.createDataFrame(out, schema)
 
 
-def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
+# Round cap of the distributed component loop: with pointer jumping a
+# round roughly halves the remaining diameter, so 20 rounds cover any
+# realistic dup graph; hitting it raises rather than returning labels
+# that have not converged.
+_CC_MAX_ITER = 20
+
+
+def _cc_loop(edges: DataFrame) -> DataFrame:
     """The per-round body of :func:`connected_components`; runs inside
     the sized-shuffle window, and every round (and the returned frame)
     is an eager localCheckpoint — fully materialized before the window
@@ -152,7 +158,7 @@ def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ITER):
         neighbor_min = (
             edges.join(labels, edges.v == labels.node)
             .groupBy(F.col("u").alias("n"))
@@ -196,7 +202,7 @@ def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
         ).localCheckpoint(eager=True)
         # sum over an EMPTY frame observes NULL, not 0 — coalesce it, or a
         # zero-pair input (a clean corpus: no near-dups found) would spin
-        # max_iter checkpoint jobs and then raise instead of returning the
+        # _CC_MAX_ITER checkpoint jobs and then raise instead of returning the
         # empty label frame
         changed = obs.get["changed"] or 0
         labels = new_labels.drop("__old")
@@ -236,7 +242,7 @@ def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
             .localCheckpoint(eager=True)
         )
     raise RuntimeError(
-        f"connected_components: no convergence in {max_iter} iterations"
+        f"connected_components: no convergence in {_CC_MAX_ITER} iterations"
     )
 
 
