@@ -54,6 +54,17 @@ __all__ = [
 HEX = "0123456789abcdef"
 
 
+def _hex4_to_int(col, start: int = 1):
+    """Four hex chars of an md5 from 1-based ``start`` → 16-bit int, via
+    arithmetic that any SQL engine reproduces (no conv() dependency in
+    the oracle)."""
+    v = F.lit(0)
+    for k in range(4):
+        digit = F.instr(F.lit(HEX), F.substring(col, start + k, 1)) - 1
+        v = v * 16 + digit
+    return v
+
+
 def shingle_array(text_col, n: int = 3, distinct: bool = True):
     """Column of word n-gram shingles (array<string>) for a text column —
     the no-shuffle building block shared by the dedup family. DISTINCT by
@@ -360,33 +371,22 @@ def dedup_against_history(
     return definitely_new.unionByName(confirmed_new)
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
-    block_by: str | None = None,
+def _shingle_overlap(
+    df: DataFrame, text_col: str, id_col: str, block_by: str | None
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs: (doc_a, doc_b, jaccard).
-
-    shingle-join → per-pair intersection count → |A∪B| by inclusion-
-    exclusion. Quadratic in shingle-bucket size — the two scale levers:
-      * ``block_by``: only compare documents sharing this column
-        (language, length band, source); shrinks every bucket by the
-        blocking factor and is how exact Jaccard stays tractable;
-      * gate behind MinHash candidates (minhash_candidate_pairs) and run
-        Jaccard only as the confirm stage.
-    """
-    cols = [F.col(id_col), F.explode(shingle_array(text_col, n)).alias("shingle")]
+    """(doc_a, doc_b, n_common, na, nb) for every document pair sharing
+    a word 3-gram shingle (within one ``block_by`` value when given):
+    the shingle self-join count behind :func:`ngram_jaccard_pairs` and
+    :func:`ngram_containment_pairs`, with each side's shingle count."""
+    cols = [F.col(id_col), F.explode(shingle_array(text_col)).alias("shingle")]
     join_keys = ["shingle"]
     if block_by is not None:
         cols.append(F.col(block_by).alias("__blk"))
         join_keys = ["shingle", "__blk"]
     # sh feeds sizes AND both join sides: checkpoint the thin
     # (id, shingle) frame so the text explode runs once, not 3-4 times
-    # (the set_similarity_join diamond-reuse fix, r10-opt; the before
-    # plan carried 4 Generate + 8 scan nodes for one tokenization).
+    # (the before plan carried 4 Generate + 8 scan nodes for one
+    # tokenization).
     sh = df.select(*cols).transform(_materialize)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.withColumnRenamed(id_col, "doc_a")
@@ -397,10 +397,30 @@ def ngram_jaccard_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sa = sizes.toDF("doc_a", "na")
-    sb = sizes.toDF("doc_b", "nb")
+    return common.join(sizes.toDF("doc_a", "na"), "doc_a").join(
+        sizes.toDF("doc_b", "nb"), "doc_b"
+    )
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    threshold: float = 0.5,
+    block_by: str | None = None,
+) -> DataFrame:
+    """Exact word 3-gram Jaccard near-dup pairs: (doc_a, doc_b, jaccard).
+
+    shingle-join → per-pair intersection count → |A∪B| by inclusion-
+    exclusion. Quadratic in shingle-bucket size — the two scale levers:
+      * ``block_by``: only compare documents sharing this column
+        (language, length band, source); shrinks every bucket by the
+        blocking factor and is how exact Jaccard stays tractable;
+      * gate behind MinHash candidates (minhash_candidate_pairs) and run
+        Jaccard only as the confirm stage.
+    """
     jac = (
-        common.join(sa, "doc_a").join(sb, "doc_b")
+        _shingle_overlap(df, text_col, id_col, block_by)
         .withColumn(
             "jaccard",
             F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common")),
@@ -411,18 +431,18 @@ def ngram_jaccard_pairs(
 
 
 def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3,
+    df: DataFrame, text_col: str, id_col: str,
     num_hashes: int = 8, grams_col: str | None = None,
 ) -> DataFrame:
     """MinHash signature per document: (id_col, h0..h{k-1}).
 
-    h_i = lexicographic MIN over shingles of an 8-hex-char (32-bit) slice
-    of md5('{i div 4}:' || shingle) — each md5 digest yields FOUR
-    independent 32-bit hash functions, so k hashes cost ceil(k/4) md5
-    evaluations per shingle instead of k. Hashing is the dominant
-    executor cost of minhash at corpus scale; the 4x reduction is the
-    difference between one pass and four over every byte of a 100 TB
-    corpus. 32-bit mins are ample: P(two docs collide on one min by
+    h_i = lexicographic MIN over word 3-gram shingles of an 8-hex-char
+    (32-bit) slice of md5('{i div 4}:' || shingle) — each md5 digest
+    yields FOUR independent 32-bit hash functions, so k hashes cost
+    ceil(k/4) md5 evaluations per shingle instead of k. Hashing is the
+    dominant executor cost of minhash at corpus scale; the 4x reduction
+    is the difference between one pass and four over every byte of a
+    100 TB corpus. 32-bit mins are ample: P(two docs collide on one min by
     chance) ~ |shingles|/2^32, and LSH banding requires r simultaneous
     collisions. Computed entirely inside one projection with ZERO
     shuffles: a ``transform`` materializes the per-shingle digests once
@@ -431,18 +451,19 @@ def minhash_signatures(
     ``aggregate`` traversal carries all k running minima in a struct
     accumulator (k separate array_min columns would make Catalyst
     re-inline — and recompute — the shingle array k times; measured 2x
-    slower). Documents with fewer than n words have no shingles and are
+    slower). Documents with fewer than 3 words have no shingles and are
     excluded, matching the exploded-form semantics.
 
-    ``grams_col`` (r10-opt): name of a column already holding the
-    distinct shingle array — callers that ALSO need the shingles
-    (near_dup_pairs' exact confirm) compute them once, checkpoint, and
-    pass the column name so the shingle HOF does not re-run inside the
-    signature projection. Must be exactly ``shingle_array(text_col, n)``
-    of the same text for results to be identical."""
+    ``grams_col``: name of a column already holding the distinct
+    shingle array — callers that ALSO need the shingles (the exact
+    confirms of near_dup_pairs and near_dup_against_history) compute
+    them once (:func:`_shingled`) and pass the column name so the
+    shingle HOF does not re-run inside the signature projection. Must
+    be exactly ``shingle_array(text_col)`` of the same text for
+    results to be identical."""
     grams = (
         F.col(grams_col) if grams_col is not None
-        else shingle_array(text_col, n)
+        else shingle_array(text_col)
     )
     n_salts = (num_hashes + 3) // 4
     hashed = F.transform(
@@ -476,7 +497,7 @@ def minhash_signatures(
 
 
 def minhash_signatures_oph(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3, num_hashes: int = 8
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int = 8
 ) -> DataFrame:
     """One-permutation MinHash with deterministic rotation densification
     (Shrivastava & Li, ICML 2014; densification offsets per Shrivastava,
@@ -525,19 +546,13 @@ def minhash_signatures_oph(
             f"minhash_signatures_oph: num_hashes={num_hashes} must be in "
             "[1, 65536] (the bin index is a 16-bit digest slice)"
         )
-    grams = shingle_array(text_col, n)
+    grams = shingle_array(text_col)
     hashed = F.transform(grams, lambda s: F.md5(s))
-
-    def _bin(hx):
-        v = F.lit(0)
-        for p in range(4):
-            v = v * 16 + (F.instr(F.lit(HEX), F.substring(hx, 9 + p, 1)) - 1)
-        return v % num_hashes
-
     pairs = F.transform(
         hashed,
         lambda hx: F.struct(
-            F.substring(hx, 1, 8).alias("v"), _bin(hx).alias("b")
+            F.substring(hx, 1, 8).alias("v"),
+            (_hex4_to_int(hx, 9) % num_hashes).alias("b"),
         ),
     )
     init = F.struct(*[F.lit("g").alias(f"h{i}") for i in range(num_hashes)])
@@ -592,16 +607,14 @@ def minhash_candidate_pairs_oph(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
-    num_hashes: int = 8,
     bands: int = 4,
     max_bucket_size: int | None = 1000,
     observation=None,
     oversize: str = "drop",
 ) -> DataFrame:
-    """LSH banding over ONE-PERMUTATION minhash signatures — the
-    hash-once twin of :func:`minhash_candidate_pairs` (identical
-    banding, cap, star and telemetry machinery via
+    """LSH banding over 8-slot ONE-PERMUTATION minhash signatures of
+    word 3-grams — the hash-once twin of :func:`minhash_candidate_pairs`
+    (the same banded-LSH core: :func:`_band_buckets` +
     :func:`_banded_bucket_pairs`; see both docstrings). Same s-curve
     tuning; the only semantic difference is the estimator behind each
     signature slot (per-bin min of one permutation + rotation
@@ -610,42 +623,14 @@ def minhash_candidate_pairs_oph(
     k-fold reduction in hash-function EVALUATIONS — see the signature
     docstring for why that reduction is not a throughput win on this
     engine (committed A/B)."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"minhash_candidate_pairs_oph: num_hashes={num_hashes} must "
-            f"be divisible by bands={bands} (trailing hashes would be "
-            "paid for but silently unused)"
-        )
-    if observation is not None and max_bucket_size is None:
-        raise ValueError(
-            "minhash_candidate_pairs_oph: observation requires "
-            "max_bucket_size (no cap means no metrics; Observation.get "
-            "would never return)"
-        )
-    if oversize not in ("drop", "star"):
-        raise ValueError(
-            f"minhash_candidate_pairs_oph: oversize={oversize!r} must be "
-            "'drop' or 'star'"
-        )
-    rows = num_hashes // bands
-    sig = minhash_signatures_oph(df, text_col, id_col, n, num_hashes)
-    band_structs = [
-        F.struct(
-            F.lit(bidx).alias("band"),
-            F.md5(
-                F.concat_ws(",", *[F.col(f"h{bidx * rows + j}") for j in range(rows)])
-            ).alias("band_hash"),
-        )
-        for bidx in range(bands)
-    ]
-    buckets = sig.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("bb")
-    ).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash")
+    _check_lsh(
+        "minhash_candidate_pairs_oph", 8, bands, max_bucket_size,
+        observation, oversize,
     )
+    sig = minhash_signatures_oph(df, text_col, id_col)
     return _banded_bucket_pairs(
-        buckets, id_col, max_bucket_size, observation, oversize,
-        caller="minhash_candidate_pairs_oph",
+        _band_buckets(sig, id_col, _slots(8), bands),
+        id_col, max_bucket_size, observation, oversize,
     )
 
 
@@ -653,7 +638,6 @@ def minhash_candidate_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
     num_hashes: int = 8,
     bands: int = 4,
     max_bucket_size: int | None = 1000,
@@ -661,13 +645,17 @@ def minhash_candidate_pairs(
     oversize: str = "drop",
     grams_col: str | None = None,
 ) -> DataFrame:
-    """LSH banding over MinHash signatures → candidate near-dup pairs.
+    """LSH banding over MinHash signatures of word 3-grams → candidate
+    near-dup pairs.
 
     Signature split into ``bands`` bands of ``num_hashes/bands`` rows; band
     hash = md5 of the concatenated member hashes; docs sharing any
     (band, band_hash) bucket become a candidate pair. Returns distinct
     (doc_a, doc_b). Tune bands/rows for the target similarity threshold
-    (s-curve: P(candidate) = 1-(1-s^r)^b).
+    (s-curve: P(candidate) = 1-(1-s^r)^b). ``num_hashes`` and ``bands``
+    must both be >= 1 with ``bands`` dividing ``num_hashes``
+    (``ValueError`` otherwise — an empty band hashes ``md5('')`` and
+    would bucket every document together).
 
     ``max_bucket_size`` is the runaway-bucket cap — the skew lever for
     boilerplate-heavy corpora (cookie banners, licence headers, template
@@ -688,85 +676,169 @@ def minhash_candidate_pairs(
     ``max_bucket_size=None`` disables the cap and the window (the exact
     pre-cap plan).
 
-    ``oversize`` chooses what happens to buckets ABOVE the cap
-    (VERDICT r8 item 7 — the fixed-cap-at-scale audit): ``"drop"``
-    (default, the historical behavior) discards them entirely;
-    ``"star"`` emits each oversized bucket as a STAR instead — every
-    member paired with the bucket's MINIMUM doc id — which is O(|bucket|)
-    rows (one window ``min`` reusing the cap window's exchange, never
-    the collect_set buffer), deterministic, and keeps the whole bucket
-    CONNECTED for downstream component-finding. The audit's finding:
-    bucket occupancy for template/boilerplate content is EXTENSIVE in
-    corpus size, so at 10-100x a fixed cap starts dropping true
-    near-dup clusters (the winnow_overlap_pairs yield-to-zero cliff,
-    measured in the r8 10x sweep) — but a PROPORTIONAL bucket cap is
-    the wrong fix here because pair volume is quadratic in the cap
-    (frac·n docs → (frac·n)² pairs from one bucket kills an executor at
-    exactly the scale the cap exists for). Star mode is the
-    scale-stable policy: linear pair volume at any corpus size, every
-    member still reachable from the hub, the recall trade (member-pairs
-    within an oversized bucket are only connected THROUGH the hub, not
-    directly) explicit and engine-replayable.
+    ``oversize`` chooses what happens to buckets ABOVE the cap:
+    ``"drop"`` (default) discards them entirely; ``"star"`` emits each
+    oversized bucket as a STAR instead — every member paired with the
+    bucket's MINIMUM doc id — which is O(|bucket|) rows (one window
+    ``min`` reusing the cap window's exchange, never the collect_set
+    buffer), deterministic, and keeps the whole bucket CONNECTED for
+    downstream component-finding. Bucket occupancy for
+    template/boilerplate content is EXTENSIVE in corpus size, so at
+    10-100x a fixed cap starts dropping true near-dup clusters — but a
+    PROPORTIONAL bucket cap is the wrong fix here because pair volume
+    is quadratic in the cap (frac·n docs → (frac·n)² pairs from one
+    bucket kills an executor at exactly the scale the cap exists for).
+    Star mode is the scale-stable policy: linear pair volume at any
+    corpus size, every member still reachable from the hub, the recall
+    trade (member-pairs within an oversized bucket are only connected
+    THROUGH the hub, not directly) explicit and engine-replayable.
 
     Pass a ``pyspark.sql.Observation`` as ``observation`` to count what
     the cap did: after any action on the result, ``observation.get``
     holds ``lsh_capped_max_bucket`` (largest bucket seen, capped or not)
-    plus — per ``oversize`` mode (ADVICE r9: star mode does NOT discard,
-    so its metric must not claim data loss) — ``lsh_capped_rows``
+    plus — per ``oversize`` mode (star mode does NOT discard, so its
+    metric must not claim data loss) — ``lsh_capped_rows``
     (``oversize='drop'``: bucket-membership rows discarded) or
     ``lsh_starred_rows`` (``oversize='star'``: rows rewired to the hub
     star instead of pair-expanded; nothing dropped).
     :func:`warn_capped_buckets` turns either into a ``warnings.warn``
     with mode-correct wording."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"minhash_candidate_pairs: num_hashes={num_hashes} must be "
-            f"divisible by bands={bands} (trailing hashes would be paid "
-            "for but silently unused)"
-        )
-    rows = num_hashes // bands
-    sig = minhash_signatures(
-        df, text_col, id_col, n, num_hashes, grams_col=grams_col
+    _check_lsh(
+        "minhash_candidate_pairs", num_hashes, bands, max_bucket_size,
+        observation, oversize,
     )
-    # One generator projection, not a union of per-band selects: a union
-    # would re-derive the whole shingle+signature subplan once per band
-    # (and the self-join doubles that again) — explode keeps it a single
-    # pass over one signature computation.
-    band_structs = [
-        F.struct(
-            F.lit(bidx).alias("band"),
-            F.md5(
-                F.concat_ws(",", *[F.col(f"h{bidx * rows + j}") for j in range(rows)])
-            ).alias("band_hash"),
-        )
-        for bidx in range(bands)
-    ]
-    buckets = sig.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash"))
-    # Pair generation WITHOUT a self-join: group each bucket, emit ordered
-    # in-bucket pairs from the sorted id array. A self-join would recompute
-    # the whole signature subplan for each side; this shape computes it
-    # once and shuffles only (band, band_hash, ids). Buckets are small by
-    # construction (that is the point of banding) — a runaway bucket from
-    # boilerplate content is the skew case, pre-filtered by the
-    # max_bucket_size window below BEFORE the collect_set buffer.
-    if observation is not None and max_bucket_size is None:
-        # fail loud: with no cap there is nothing to observe, and an
-        # Observation that never attaches makes a later
-        # warn_capped_buckets (Observation.get) block forever
-        raise ValueError(
-            "minhash_candidate_pairs: observation requires max_bucket_size "
-            "(no cap means no metrics; Observation.get would never return)"
-        )
+    sig = minhash_signatures(
+        df, text_col, id_col, num_hashes=num_hashes, grams_col=grams_col
+    )
+    return _banded_bucket_pairs(
+        _band_buckets(sig, id_col, _slots(num_hashes), bands),
+        id_col, max_bucket_size, observation, oversize,
+    )
+
+
+def _check_lsh(
+    caller: str,
+    num_hashes: int | None,
+    bands: int | None,
+    max_bucket_size: int | None,
+    observation=None,
+    oversize: str = "drop",
+    min_bucket: int = 2,
+) -> None:
+    """The one argument check of the banded-LSH family; every error
+    names ``caller``. ``num_hashes``/``bands`` is the signature shape
+    (the 64 bits of a perceptual hash for images; ``None`` for the
+    sign-LSH and k-means cell caps, which have no bands): both >= 1 and
+    the width divisible by the band count. ``oversize`` is 'drop' or
+    'star'. The cap is ``None`` or at least ``min_bucket`` — 2, as a
+    pair needs two documents per bucket, except the history cap of
+    :func:`near_dup_against_history`, where a lone history document
+    still matches new ones — and an Observation requires a cap (with no
+    cap there is nothing to observe, and an Observation that never
+    attaches makes a later :func:`warn_capped_buckets` block forever).
+    """
+    if num_hashes is not None:
+        if num_hashes < 1 or bands < 1:
+            raise ValueError(
+                f"{caller}: num_hashes={num_hashes} and bands={bands} "
+                "must both be >= 1 (an empty band hashes md5('') and "
+                "would bucket every document together)"
+            )
+        if num_hashes % bands != 0:
+            raise ValueError(
+                f"{caller}: num_hashes={num_hashes} must be divisible by "
+                f"bands={bands} (trailing hashes would be paid for but "
+                "silently unused, ragged bands would weight them unevenly)"
+            )
     if oversize not in ("drop", "star"):
         raise ValueError(
-            f"minhash_candidate_pairs: oversize={oversize!r} must be "
-            "'drop' or 'star'"
+            f"{caller}: oversize={oversize!r} must be 'drop' or 'star'"
         )
-    return _banded_bucket_pairs(
-        buckets, id_col, max_bucket_size, observation, oversize,
-        caller="minhash_candidate_pairs",
+    if max_bucket_size is None:
+        if observation is not None:
+            raise ValueError(
+                f"{caller}: observation requires max_bucket_size (no cap "
+                "means no metrics; Observation.get would never return)"
+            )
+    elif max_bucket_size < min_bucket:
+        raise ValueError(
+            f"{caller}: max_bucket_size={max_bucket_size} must be >= "
+            f"{min_bucket}, or None to disable the cap"
+        )
+
+
+def _slots(num_hashes: int) -> list:
+    """The MinHash signature columns h0..h{k-1}, in slot order."""
+    return [F.col(f"h{i}") for i in range(num_hashes)]
+
+
+def _md5_band(cols: list):
+    """MinHash band hash: md5 of the comma-joined member minima."""
+    return F.md5(F.concat_ws(",", *cols))
+
+
+def _band_buckets(
+    sig: DataFrame, id_col: str, slots: list, bands: int, band_hash=_md5_band
+) -> DataFrame:
+    """(id, band, band_hash) LSH bucket membership: the signature
+    ``slots`` (columns of ``sig``, in order) split into ``bands`` equal
+    bands, each hashed by ``band_hash`` (list of columns → one column).
+    One generator projection, not a union of per-band selects: a union
+    would re-derive the whole signature subplan once per band (and the
+    pair stage doubles that again) — explode keeps it a single pass over
+    one signature computation."""
+    rows = len(slots) // bands
+    return sig.select(
+        F.col(id_col),
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    band_hash(slots[b * rows:(b + 1) * rows]).alias(
+                        "band_hash"
+                    ),
+                )
+                for b in range(bands)
+            ])
+        ).alias("__b"),
+    ).select(
+        id_col,
+        F.col("__b.band").alias("band"),
+        F.col("__b.band_hash").alias("band_hash"),
+    )
+
+
+def _bucket_sizes(
+    buckets: DataFrame,
+    keys: list,
+    max_bucket_size: int,
+    observation,
+    oversize: str = "drop",
+) -> DataFrame:
+    """``buckets`` with each row tagged by its bucket's size, ``__bsz`` —
+    a window ``count`` over the bucket ``keys`` (it reuses the pair
+    stage's exchange, and its sort spills, unlike an agg buffer) — and
+    the cap's Observation attached: ``lsh_capped_rows`` (rows over
+    ``max_bucket_size`` in drop mode), ``lsh_starred_rows`` (the same
+    count in star mode, where nothing is discarded) and
+    ``lsh_capped_max_bucket``. Each caller keeps its own range of sizes:
+    [2, cap] for pair generation, [1, cap] for the history side of
+    :func:`near_dup_against_history`."""
+    from pyspark.sql.window import Window
+
+    buckets = buckets.withColumn(
+        "__bsz", F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    )
+    if observation is None:
+        return buckets
+    over = F.count_if(F.col("__bsz") > max_bucket_size)
+    none = F.count_if(F.lit(False))  # aggregate-typed zero
+    star = oversize == "star"
+    return buckets.observe(
+        observation,
+        (none if star else over).alias("lsh_capped_rows"),
+        (over if star else none).alias("lsh_starred_rows"),
+        F.coalesce(F.max("__bsz"), F.lit(0)).alias("lsh_capped_max_bucket"),
     )
 
 
@@ -776,70 +848,49 @@ def _banded_bucket_pairs(
     max_bucket_size: int | None,
     observation,
     oversize: str,
-    caller: str,
 ) -> DataFrame:
-    """The shared banded-LSH pair core (r10: factored out of
-    :func:`minhash_candidate_pairs` so the perceptual-hash image path
-    reuses the identical cap/star/telemetry machinery): takes an
-    (id, band, band_hash) bucket-membership frame and emits distinct
-    (doc_a, doc_b) candidate pairs — window-capped runaway buckets,
-    drop or star oversize policy, Observation metrics, sorted-id
-    in-bucket pair explosion (never a self-join). See the minhash
-    docstring for the full rationale of each piece."""
+    """The banded-LSH pair stage: takes an (id, band, band_hash)
+    bucket-membership frame (:func:`_band_buckets`) and emits distinct
+    (doc_a, doc_b) candidate pairs — window-capped runaway buckets
+    (:func:`_bucket_sizes`), drop or star oversize policy, sorted-id
+    in-bucket pair explosion (never a self-join, which would recompute
+    the signature subplan for each side). See
+    :func:`minhash_candidate_pairs` for the rationale of each piece."""
     star_pairs = None
     if max_bucket_size is not None:
-        if max_bucket_size < 2:
-            raise ValueError(
-                f"{caller}: max_bucket_size={max_bucket_size} "
-                "must be >= 2 (a pair needs two docs per bucket) or None "
-                "to disable the cap"
-            )
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("band", "band_hash")
-        buckets = buckets.withColumn("__bsz", F.count(F.lit(1)).over(w))
-        if observation is not None:
-            over = F.count_if(F.col("__bsz") > max_bucket_size)
-            none = F.count_if(F.lit(False))  # aggregate-typed zero
-            buckets = buckets.observe(
-                observation,
-                # star mode STARS oversized rows (kept, rewired to the
-                # hub); drop mode discards them — name the metric for
-                # what actually happened (ADVICE r9)
-                (none if oversize == "star" else over).alias(
-                    "lsh_capped_rows"
-                ),
-                (over if oversize == "star" else none).alias(
-                    "lsh_starred_rows"
-                ),
-                F.coalesce(F.max("__bsz"), F.lit(0)).alias(
-                    "lsh_capped_max_bucket"
-                ),
-            )
+        buckets = _bucket_sizes(
+            buckets, ["band", "band_hash"], max_bucket_size, observation,
+            oversize,
+        )
         if oversize == "star":
             # Star mode SPLITS the windowed bucket frame into two
             # consumers (the star branch and the capped main branch),
             # and without a materialization point each branch re-ran
             # the ENTIRE upstream pipeline — signatures (the expensive
             # per-shingle fold), banding, exchange, and the size
-            # window (r10-opt: interleaved A/B measured 3.59 -> 0.63s
-            # min at sf0.1 from this one checkpoint; runtime exchange
-            # reuse did NOT recover the duplication across the union's
+            # window (interleaved A/B measured 3.59 -> 0.63s min at
+            # sf0.1 from this one checkpoint; runtime exchange reuse
+            # did NOT recover the duplication across the union's
             # branches). Drop mode keeps a single consumer and needs no
             # barrier. NOT applied when an Observation is attached: a
             # checkpoint materializes outside a SQL execution, so the
             # CollectMetrics node's values never reach the Observation
             # (measured: lsh_starred_rows read 0) — telemetry callers
-            # keep the pre-existing two-branch compute instead of
-            # silently losing their metrics.
+            # keep the two-branch compute instead of silently losing
+            # their metrics.
             if observation is None:
                 buckets = buckets.transform(_materialize)
+            from pyspark.sql.window import Window
+
             # oversized buckets become hub stars: member ⟷ min(id) —
             # the second window shares the first's (band, band_hash)
             # exchange, and pair volume is |bucket|, never |bucket|²
             star_pairs = (
                 buckets.where(F.col("__bsz") > max_bucket_size)
-                .withColumn("__hub", F.min(id_col).over(w))
+                .withColumn(
+                    "__hub",
+                    F.min(id_col).over(Window.partitionBy("band", "band_hash")),
+                )
                 .where(F.col(id_col) != F.col("__hub"))
                 .select(
                     F.col("__hub").alias("doc_a"),
@@ -874,22 +925,26 @@ def _banded_bucket_pairs(
 
 
 def warn_capped_buckets(observation) -> int:
-    """Read a bucket-cap ``observation`` (from
-    :func:`minhash_candidate_pairs`, or the embedding-family caps in
-    ``operators.similarity`` — same metric names) AFTER an action on its
-    result and ``warnings.warn`` if the bucket cap touched anything.
-    Returns the number of affected bucket-membership rows — discarded
-    in ``oversize='drop'`` mode (``lsh_capped_rows``), rewired to the
-    hub star in ``oversize='star'`` mode (``lsh_starred_rows``; the
-    warning says starred, not dropped — ADVICE r9). Producers without a
-    star mode simply never emit ``lsh_starred_rows``.
-    (``Observation.get`` blocks until the first action completes — call
-    this post-action, e.g. after the write/collect of the pairs.)"""
+    """Read a bucket-cap ``observation`` AFTER an action on its result
+    and ``warnings.warn`` if the bucket cap touched anything. Its three
+    producers share one cap (:func:`_bucket_sizes`) and its metric
+    names: the MinHash banding (:func:`minhash_candidate_pairs`,
+    :func:`minhash_candidate_pairs_oph`, :func:`near_dup_pairs`), the
+    perceptual-hash image banding
+    (``operators.multimodal.image_near_dup_pairs``) and the embedding
+    bucket and cell caps (``operators.similarity.sign_lsh_pairs``,
+    ``embedding_near_dup``, ``semantic_near_dup``). Returns the number
+    of affected bucket-membership rows — discarded in
+    ``oversize='drop'`` mode (``lsh_capped_rows``), rewired to the hub
+    star in ``oversize='star'`` mode (``lsh_starred_rows``; the warning
+    says starred, not dropped). (``Observation.get`` blocks until the
+    first action completes — call this post-action, e.g. after the
+    write/collect of the pairs.)"""
     import warnings
 
     metrics = observation.get
     dropped = int(metrics["lsh_capped_rows"])
-    starred = int(metrics.get("lsh_starred_rows", 0))
+    starred = int(metrics["lsh_starred_rows"])
     biggest = int(metrics["lsh_capped_max_bucket"])
     if dropped > 0:
         warnings.warn(
@@ -911,24 +966,63 @@ def warn_capped_buckets(observation) -> int:
     return dropped + starred
 
 
+def _shingled(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, __sh): each document's distinct word 3-gram array, documents
+    without one left out, materialized — the one shingle pass that feeds
+    a near-dup operator's MinHash signatures (via ``grams_col``) AND its
+    exact Jaccard confirm, which join on different keys, so nothing
+    between them is exchange-reusable."""
+    return (
+        df.select(F.col(id_col), shingle_array(text_col).alias("__sh"))
+        .where(F.size("__sh") > 0)
+        .transform(_materialize)
+    )
+
+
+def _jaccard_confirm(
+    cands: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    id_col: str,
+    a: str,
+    b: str,
+    threshold: float,
+) -> DataFrame:
+    """Exact Jaccard confirm of candidate pairs ``cands`` (a, b): each
+    side's shingle array from :func:`_shingled` attached by id (two
+    candidate-sized joins), |A∩B| / |A∪B| by ``array_intersect`` inside
+    codegen. Returns (a, b, jaccard >= threshold, rounded to 4 dp)."""
+    left = sh_a.select(F.col(id_col).alias(a), F.col("__sh").alias("__sha"))
+    right = sh_b.select(F.col(id_col).alias(b), F.col("__sh").alias("__shb"))
+    return (
+        cands.join(left, a)
+        .join(right, b)
+        .withColumn("n_common", F.size(F.array_intersect("__sha", "__shb")))
+        .withColumn(
+            "jaccard",
+            F.col("n_common")
+            / (F.size("__sha") + F.size("__shb") - F.col("n_common")),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select(a, b, F.round("jaccard", 4).alias("jaccard"))
+    )
+
+
 def near_dup_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
     threshold: float = 0.5,
-    num_hashes: int = 8,
-    bands: int = 4,
     confirm: str | None = "jaccard",
     max_bucket_size: int | None = 1000,
     observation=None,
     oversize: str = "drop",
 ) -> DataFrame:
     """Scale-safe near-duplicate pairs: MinHash-LSH candidate generation,
-    exact n-gram Jaccard CONFIRM restricted to the candidates — the
+    exact word 3-gram Jaccard CONFIRM restricted to the candidates — the
     default entry point composing the two halves the module docstring
     prescribes ("always run MinHash candidates first at scale, Jaccard
-    only to confirm").
+    only to confirm"). Signatures are 8 MinHash slots in 4 bands of 2.
 
     Returns (doc_a, doc_b, jaccard) with ``jaccard >= threshold``.
     ``confirm=None`` returns the raw LSH candidates (no jaccard column).
@@ -937,20 +1031,23 @@ def near_dup_pairs(
     :func:`minhash_candidate_pairs` — banded, bucketed, never all-pairs.
     The confirm stage does NOT re-join on shingles (that would be the
     quadratic bucket join this function exists to avoid); it attaches
-    each side's distinct-shingle ARRAY to the candidate pair (two
-    shuffles of candidates ⋈ per-doc arrays, both keyed on doc id) and
-    computes |A∩B| / |A∪B| with ``array_intersect`` inside codegen.
-    Candidate volume is s-curve-bounded by the banding, so both joins
-    are candidate-sized, not corpus-sized; AQE broadcasts the candidate
-    side when it is small enough.
+    each side's distinct-shingle ARRAY to the candidate pair
+    (:func:`_jaccard_confirm`). Candidate volume is s-curve-bounded by
+    the banding, so both joins are candidate-sized, not corpus-sized;
+    AQE broadcasts the candidate side when it is small enough. The
+    shingle arrays are computed once (:func:`_shingled`) for the
+    signatures and the confirm.
 
     False positives from banding are removed by the exact confirm; false
     NEGATIVES (true near-dups the LSH never bucketed together) are the
-    recall trade-off tuned via num_hashes/bands (``lsh_params``).
+    recall trade-off of the fixed banding.
     """
+    _check_lsh(
+        "near_dup_pairs", 8, 4, max_bucket_size, observation, oversize
+    )
     if confirm is None:
         return minhash_candidate_pairs(
-            df, text_col, id_col, n, num_hashes, bands,
+            df, text_col, id_col,
             max_bucket_size=max_bucket_size, observation=observation,
             oversize=oversize,
         )
@@ -959,45 +1056,13 @@ def near_dup_pairs(
             f"near_dup_pairs: unknown confirm stage {confirm!r} "
             "(expected 'jaccard' or None)"
         )
-    # The shingle arrays feed THREE consumers — the signature pipeline
-    # and both confirm sides — and the confirm sides join on different
-    # keys, so nothing below them is exchange-reusable. Compute the
-    # per-doc array once (thin: one row per document), checkpoint it,
-    # and hand the column to the signature pipeline via grams_col
-    # (r10-opt; the before plan re-ran the shingle HOF 3x).
-    grams = shingle_array(text_col, n)
-    sh = df.select(F.col(id_col), grams.alias("__sh")).where(
-        F.size("__sh") > 0
-    ).transform(_materialize)
+    sh = _shingled(df, text_col, id_col)
     cands = minhash_candidate_pairs(
-        sh, text_col, id_col, n, num_hashes, bands,
+        sh, text_col, id_col,
         max_bucket_size=max_bucket_size, observation=observation,
         oversize=oversize, grams_col="__sh",
     )
-    a = sh.select(F.col(id_col).alias("doc_a"), F.col("__sh").alias("__sha"))
-    b = sh.select(F.col(id_col).alias("doc_b"), F.col("__sh").alias("__shb"))
-    return (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("n_common", F.size(F.array_intersect("__sha", "__shb")))
-        .withColumn(
-            "jaccard",
-            F.col("n_common")
-            / (F.size("__sha") + F.size("__shb") - F.col("n_common")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
-    )
-
-
-def _hex4_to_int(col):
-    """First-4-hex-chars of an md5 → 16-bit int, via arithmetic that any
-    SQL engine reproduces (no conv() dependency in the oracle)."""
-    v = F.lit(0)
-    for k in range(4):
-        digit = F.instr(F.lit(HEX), F.substring(col, k + 1, 1)) - 1
-        v = v * 16 + digit
-    return v
+    return _jaccard_confirm(cands, sh, sh, id_col, "doc_a", "doc_b", threshold)
 
 
 def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -1081,25 +1146,36 @@ def corpus_overlap_minhash(
     non-NULL min is false, two empty corpora estimate 0.0 — there is no
     meaningful Jaccard between empty sets).
     """
-    if num_hashes < 1:
-        raise ValueError(
-            f"corpus_overlap_minhash: num_hashes={num_hashes} must be >= 1"
-        )
+    caller = "corpus_overlap_minhash"
+    sa = a.agg(*_salted_mins(caller, text_col, num_hashes, "__a"))
+    sb = b.agg(*_salted_mins(caller, text_col, num_hashes, "__b"))
+    return _sketch_estimate(sa.join(F.broadcast(sb)), [], num_hashes)
 
-    def sketch(df: DataFrame, prefix: str) -> DataFrame:
-        fp = F.md5(F.col(text_col))
-        return df.agg(
-            *[
-                F.min(F.md5(F.concat(F.lit(f"{s}:"), fp))).alias(
-                    f"{prefix}{s}"
-                )
-                for s in range(num_hashes)
-            ]
-        )
-    sa = sketch(a, "__a")
-    sb = sketch(b, "__b")
-    # null-safe equality: an empty corpus's NULL minimum must count as a
-    # non-match (plain == yields NULL and poisons the sum into NULL)
+
+def _salted_mins(
+    caller: str, text_col: str, num_hashes: int, prefix: str
+) -> list:
+    """The k salted-md5 minima over the exact text fingerprints as
+    aggregate expressions ``{prefix}0..{prefix}{k-1}`` — one sketch of
+    a corpus (or of each group) for :func:`corpus_overlap_minhash` and
+    :func:`source_overlap_matrix`; ``caller`` names the function in the
+    ``num_hashes < 1`` error."""
+    if num_hashes < 1:
+        raise ValueError(f"{caller}: num_hashes={num_hashes} must be >= 1")
+    fp = F.md5(F.col(text_col))
+    return [
+        F.min(F.md5(F.concat(F.lit(f"{s}:"), fp))).alias(f"{prefix}{s}")
+        for s in range(num_hashes)
+    ]
+
+
+def _sketch_estimate(
+    paired: DataFrame, keys: list, num_hashes: int
+) -> DataFrame:
+    """(*keys, k, n_match, jaccard_est) over a frame that sets sketch
+    ``__a{s}`` beside sketch ``__b{s}`` (:func:`_salted_mins`). The
+    match test is null-safe: an empty corpus's NULL minimum counts as a
+    non-match (plain == yields NULL and poisons the sum into NULL)."""
     matches = sum(
         (
             F.col(f"__a{s}").isNotNull()
@@ -1107,17 +1183,13 @@ def corpus_overlap_minhash(
         ).cast("long")
         for s in range(num_hashes)
     )
-    return (
-        sa.join(F.broadcast(sb))
-        .select(
-            F.lit(num_hashes).cast("long").alias("k"),
-            matches.alias("n_match"),
-        )
-        .select(
-            "k",
-            "n_match",
-            F.round(F.col("n_match") / F.col("k"), 4).alias("jaccard_est"),
-        )
+    return paired.select(
+        *keys,
+        F.lit(num_hashes).cast("long").alias("k"),
+        matches.alias("n_match"),
+    ).select(
+        *keys, "k", "n_match",
+        F.round(F.col("n_match") / F.col("k"), 4).alias("jaccard_est"),
     )
 
 
@@ -1200,7 +1272,6 @@ def ngram_containment_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
     threshold: float = 0.8,
     block_by: str | None = None,
 ) -> DataFrame:
@@ -1225,29 +1296,8 @@ def ngram_containment_pairs(
     at full corpus scale run it on the suspect slice (e.g. docs whose
     spans already matched in ``substring_dup_spans``).
     """
-    cols = [F.col(id_col), F.explode(shingle_array(text_col, n)).alias("shingle")]
-    join_keys = ["shingle"]
-    if block_by is not None:
-        cols.append(F.col(block_by).alias("__blk"))
-        join_keys = ["shingle", "__blk"]
-    # sh feeds sizes AND both join sides: checkpoint the thin
-    # (id, shingle) frame so the text explode runs once, not 3-4 times
-    # (the set_similarity_join diamond-reuse fix, r10-opt; the before
-    # plan carried 4 Generate + 8 scan nodes for one tokenization).
-    sh = df.select(*cols).transform(_materialize)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.withColumnRenamed(id_col, "doc_a")
-    b = sh.withColumnRenamed(id_col, "doc_b")
-    common = (
-        a.join(b, join_keys)
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.toDF("doc_a", "na")
-    sb = sizes.toDF("doc_b", "nb")
     return (
-        common.join(sa, "doc_a").join(sb, "doc_b")
+        _shingle_overlap(df, text_col, id_col, block_by)
         .withColumn("c_ab", F.round(F.col("n_common") / F.col("na"), 4))
         .withColumn("c_ba", F.round(F.col("n_common") / F.col("nb"), 4))
         .withColumn("containment", F.greatest("c_ab", "c_ba"))
@@ -1256,47 +1306,12 @@ def ngram_containment_pairs(
     )
 
 
-def _band_rows(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    num_hashes: int,
-    bands: int,
-) -> DataFrame:
-    """(id, band, band_hash) LSH bucket membership — the banding
-    projection of :func:`minhash_candidate_pairs`, factored for callers
-    that band TWO frames (incremental new-vs-history) instead of
-    self-joining one. Same band hash construction (md5 of the
-    comma-joined member minima), same one-generator-projection shape."""
-    rows = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, n, num_hashes)
-    band_structs = [
-        F.struct(
-            F.lit(bidx).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",", *[F.col(f"h{bidx * rows + j}") for j in range(rows)]
-                )
-            ).alias("band_hash"),
-        )
-        for bidx in range(bands)
-    ]
-    return sig.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("__b")
-    ).select(id_col, F.col("__b.band").alias("band"),
-             F.col("__b.band_hash").alias("band_hash"))
-
-
 def near_dup_against_history(
     new: DataFrame,
     history: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
     threshold: float = 0.5,
-    num_hashes: int = 8,
-    bands: int = 4,
     max_history_bucket: int | None = 1000,
 ) -> DataFrame:
     """Incremental NEAR-duplicate detection: which new-batch documents
@@ -1306,41 +1321,39 @@ def near_dup_against_history(
     itself (that work happened when those docs arrived); only the
     new x history bipartite candidates are generated.
 
-    Both sides band identically (:func:`_band_rows`); candidates come
-    from the (band, band_hash) equi-join of new bands against history
-    bands — cost ~ |new| x bucket occupancy, independent of |history|²
-    — then the exact n-gram Jaccard confirm runs on candidates only
-    (array_intersect per pair, the near_dup_pairs discipline). Returns
-    (new_id, hist_id, jaccard >= threshold).
+    Both sides band identically (8 MinHash slots of word 3-grams in 4
+    bands of 2, the :func:`near_dup_pairs` shape); candidates come from
+    the (band, band_hash) equi-join of new bands against history bands
+    — cost ~ |new| x bucket occupancy, independent of |history|² — then
+    the exact Jaccard confirm runs on candidates only
+    (:func:`_jaccard_confirm`, over the same shingle arrays the
+    signatures were built from). Returns (new_id, hist_id,
+    jaccard >= threshold).
 
     ``max_history_bucket`` is the boilerplate lever on the HISTORY side
     (a template bucket holding a million archived docs would fan every
     matching new doc out a million ways); oversized history buckets
-    drop whole, same cap semantics as minhash_candidate_pairs. New-side
-    buckets are per-batch small by construction.
+    drop whole, same cap window as minhash_candidate_pairs. Singleton
+    history buckets stay: a lone history document still matches new
+    ones, so the cap may be 1. New-side buckets are per-batch small by
+    construction.
     """
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"near_dup_against_history: num_hashes={num_hashes} must be "
-            f"divisible by bands={bands}"
-        )
-    nb = _band_rows(new, text_col, id_col, n, num_hashes, bands).select(
-        F.col(id_col).alias("new_id"), "band", "band_hash"
+    _check_lsh(
+        "near_dup_against_history", 8, 4, max_history_bucket, min_bucket=1
     )
-    hb = _band_rows(history, text_col, id_col, n, num_hashes, bands).select(
-        F.col(id_col).alias("hist_id"), "band", "band_hash"
-    )
-    if max_history_bucket is not None:
-        if max_history_bucket < 1:
-            raise ValueError(
-                f"near_dup_against_history: max_history_bucket="
-                f"{max_history_bucket} must be >= 1"
-            )
-        from pyspark.sql.window import Window
 
-        w = Window.partitionBy("band", "band_hash")
+    def banded(df: DataFrame, side: str):
+        sh = _shingled(df, text_col, id_col)
+        sig = minhash_signatures(sh, text_col, id_col, grams_col="__sh")
+        return sh, _band_buckets(sig, id_col, _slots(8), 4).select(
+            F.col(id_col).alias(side), "band", "band_hash"
+        )
+
+    sh_new, nb = banded(new, "new_id")
+    sh_hist, hb = banded(history, "hist_id")
+    if max_history_bucket is not None:
         hb = (
-            hb.withColumn("__bsz", F.count(F.lit(1)).over(w))
+            _bucket_sizes(hb, ["band", "band_hash"], max_history_bucket, None)
             .where(F.col("__bsz") <= max_history_bucket)
             .drop("__bsz")
         )
@@ -1349,22 +1362,8 @@ def near_dup_against_history(
         .select("new_id", "hist_id")
         .distinct()
     )
-    grams = shingle_array(text_col, n)
-    sh_new = new.select(F.col(id_col).alias("new_id"), grams.alias("__sha"))
-    sh_hist = history.select(
-        F.col(id_col).alias("hist_id"), grams.alias("__shb")
-    )
-    return (
-        cands.join(sh_new, "new_id")
-        .join(sh_hist, "hist_id")
-        .withColumn("n_common", F.size(F.array_intersect("__sha", "__shb")))
-        .withColumn(
-            "jaccard",
-            F.col("n_common")
-            / (F.size("__sha") + F.size("__shb") - F.col("n_common")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("new_id", "hist_id", F.round("jaccard", 4).alias("jaccard"))
+    return _jaccard_confirm(
+        cands, sh_new, sh_hist, id_col, "new_id", "hist_id", threshold
     )
 
 
@@ -1389,44 +1388,16 @@ def source_overlap_matrix(
     in any engine; an empty/NULL-text source has NULL minima which
     match nothing.
     """
-    if num_hashes < 1:
-        raise ValueError(
-            f"source_overlap_matrix: num_hashes={num_hashes} must be >= 1"
-        )
-    fp = F.md5(F.col(text_col))
-    sk = df.groupBy(F.col(group_col).alias("__g")).agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{s}:"), fp))).alias(f"__m{s}")
-            for s in range(num_hashes)
-        ]
+    a = df.groupBy(F.col(group_col).alias("src_a")).agg(
+        *_salted_mins("source_overlap_matrix", text_col, num_hashes, "__a")
     )
-    a = sk.select(
-        F.col("__g").alias("src_a"),
-        *[F.col(f"__m{s}").alias(f"__a{s}") for s in range(num_hashes)],
+    b = a.select(
+        F.col("src_a").alias("src_b"),
+        *[F.col(f"__a{s}").alias(f"__b{s}") for s in range(num_hashes)],
     )
-    b = sk.select(
-        F.col("__g").alias("src_b"),
-        *[F.col(f"__m{s}").alias(f"__b{s}") for s in range(num_hashes)],
-    )
-    matches = sum(
-        (
-            F.col(f"__a{s}").isNotNull()
-            & F.col(f"__a{s}").eqNullSafe(F.col(f"__b{s}"))
-        ).cast("long")
-        for s in range(num_hashes)
-    )
-    return (
-        a.join(F.broadcast(b), F.col("src_a") < F.col("src_b"))
-        .select(
-            "src_a",
-            "src_b",
-            F.lit(num_hashes).cast("long").alias("k"),
-            matches.alias("n_match"),
-        )
-        .select(
-            "src_a", "src_b", "k", "n_match",
-            F.round(F.col("n_match") / F.col("k"), 4).alias("jaccard_est"),
-        )
+    return _sketch_estimate(
+        a.join(F.broadcast(b), F.col("src_a") < F.col("src_b")),
+        ["src_a", "src_b"], num_hashes,
     )
 
 
@@ -1434,14 +1405,13 @@ def set_similarity_join(
     tokens: DataFrame,
     id_col: str = "doc_id",
     token_col: str = "w",
-    threshold_num: int = 1,
-    threshold_den: int = 2,
 ) -> DataFrame:
     """EXACT Jaccard-threshold self-join with PREFIX FILTERING (the
     PPJoin family, Chaudhuri/Xiao 2006-2011) — the third point in the
     dedup design space beside the hash-exact groupBy (exact duplicates
     only) and MinHash LSH (probabilistic recall): every pair with
-    Jaccard >= tn/td, no false negatives, without the quadratic join.
+    Jaccard >= tn/td = 1/2, no false negatives, without the quadratic
+    join.
 
     The prefix-filter theorem: order each set by a GLOBAL token order
     (ascending document frequency, rarest first — ties on the token);
@@ -1513,17 +1483,10 @@ def set_similarity_join(
         )
         .join(sizes, "id")
     )
+    tn, td = 1, 2
     # prefix length |s| - ceil(tn*|s|/td) + 1, ceil via (a+b-1) div b
-    p = (
-        F.col("sz")
-        - F.expr(
-            f"(sz * {threshold_num} + {threshold_den} - 1) "
-            f"div {threshold_den}"
-        )
-        + 1
-    )
+    p = F.col("sz") - F.expr(f"(sz * {tn} + {td} - 1) div {td}") + 1
     prefix = ranked.where(F.col("rn") <= p).select("id", "tok", "rn", "sz")
-    tn, td = threshold_num, threshold_den
     occ = (
         prefix.alias("x")
         .join(prefix.alias("y"), "tok")
@@ -1571,8 +1534,8 @@ def set_similarity_join(
         .join(sizes.select(F.col("id").alias("b"),
                            F.col("sz").alias("sb")), "b")
         .where(
-            (threshold_den + threshold_num) * F.col("inter_n")
-            >= threshold_num * (F.col("sa") + F.col("sb"))
+            (td + tn) * F.col("inter_n")
+            >= tn * (F.col("sa") + F.col("sb"))
         )
         .select(
             "a", "b", "inter_n",
@@ -1767,13 +1730,11 @@ def sorted_neighborhood_pairs(
     df: DataFrame,
     key_col: str,
     id_col: str,
-    window: int = 5,
-    max_distance: int = 2,
 ) -> DataFrame:
     """Sorted-neighborhood entity-resolution blocking (Hernández &
     Stolfo 1995): rank records by a sort key and compare each record
-    only against its ``window`` nearest ranks, then confirm candidates
-    with exact Levenshtein <= ``max_distance``. The classic COMPLEMENT
+    only against its w = 5 nearest ranks, then confirm candidates
+    with exact Levenshtein <= 2. The classic COMPLEMENT
     to :func:`fuzzy_dup_pairs`' deletion neighborhood — SNM is
     recall-lossy by DESIGN (a typo in the first character sorts far
     away) but its candidate count is exactly n·w regardless of value
@@ -1796,9 +1757,7 @@ def sorted_neighborhood_pairs(
         running_sum,
     )
 
-    w = int(window)
-    if w < 1:
-        raise ValueError(f"sorted_neighborhood_pairs: window={w} < 1")
+    w = 5
     recs = (
         df.select(
             F.col(key_col).cast("string").alias("k"),
@@ -1837,7 +1796,7 @@ def sorted_neighborhood_pairs(
     )
     return (
         cands.withColumn("distance", F.levenshtein("k", "k2"))
-        .where(F.col("distance") <= int(max_distance))
+        .where(F.col("distance") <= 2)
         .select(
             F.least("rid", "rid2").alias("id_a"),
             F.greatest("rid", "rid2").alias("id_b"),

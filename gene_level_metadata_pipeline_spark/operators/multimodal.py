@@ -39,13 +39,21 @@ irreducible part of a pure-Python entropy decoder.
 
 from __future__ import annotations
 
+import sys as _sys
 from collections.abc import Iterator
 
+from pyspark import cloudpickle as _cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from gene_level_metadata_pipeline_spark.materialize import (
     materialize as _materialize,
 )
+
+# The mapInPandas stages call this module's decoders (_jpeg_decode and
+# its helpers). Pickled by reference, every Python worker would have to
+# import this package, which fails wherever it sits only on the main
+# process's sys.path; shipped by value, workers need only numpy/pandas.
+_cloudpickle.register_pickle_by_value(_sys.modules[__name__])
 
 __all__ = [
     "attach_binary_payload",
@@ -1070,7 +1078,6 @@ def image_near_dup_pairs(
     id_col: str = "doc_id",
     method: str = "ahash",
     bands: int = 4,
-    max_hamming: int = 6,
     max_bucket_size: int | None = 1000,
     observation=None,
     oversize: str = "drop",
@@ -1080,15 +1087,17 @@ def image_near_dup_pairs(
     exact Hamming confirm.
 
     Scale shape: the 64-bit hash splits into ``bands`` equal bit-bands
-    (identical copies share EVERY band; a pair within Hamming distance
-    d survives banding unless its differing bits hit every band — the
-    standard LSH recall s-curve), candidate generation is the SAME
-    window-capped / star-mode bucket core as the text MinHash path
-    (``dedup._banded_bucket_pairs`` — runaway buckets of boilerplate
-    images obey the same cap telemetry, :func:`dedup.warn_capped_buckets`
-    reads the same Observation), and only candidates pay the exact
-    64-bit Hamming distance (two thin joins on the id). Returns
-    (doc_a, doc_b, hamming) with ``hamming <= max_hamming``.
+    (``bands`` >= 1 and dividing 64; identical copies share EVERY band;
+    a pair within Hamming distance d survives banding unless its
+    differing bits hit every band — the standard LSH recall s-curve),
+    candidate generation is the SAME banded-LSH core as the text
+    MinHash path (``dedup._check_lsh``, ``dedup._band_buckets`` with the
+    band's bits concatenated as its hash, ``dedup._banded_bucket_pairs``
+    — runaway buckets of boilerplate images obey the same cap, star
+    mode and telemetry; :func:`dedup.warn_capped_buckets` reads the
+    same Observation), and only candidates pay the exact 64-bit Hamming
+    distance (two thin joins on the id). Returns (doc_a, doc_b,
+    hamming) with ``hamming <= 6``.
 
     Everything is exact integer arithmetic end-to-end, so the pipeline
     is engine-replayable — certified by the image_phash_near_dup
@@ -1096,7 +1105,9 @@ def image_near_dup_pairs(
     hashes identically by construction: the hash never sees bytes.
     """
     from gene_level_metadata_pipeline_spark.operators.dedup import (
+        _band_buckets,
         _banded_bucket_pairs,
+        _check_lsh,
     )
 
     if method not in ("ahash", "dhash"):
@@ -1104,22 +1115,10 @@ def image_near_dup_pairs(
             f"image_near_dup_pairs: method={method!r} must be "
             "'ahash' or 'dhash'"
         )
-    if 64 % bands != 0:
-        raise ValueError(
-            f"image_near_dup_pairs: bands={bands} must divide 64 "
-            "(ragged bands would silently weight bits unevenly)"
-        )
-    if oversize not in ("drop", "star"):
-        raise ValueError(
-            f"image_near_dup_pairs: oversize={oversize!r} must be "
-            "'drop' or 'star'"
-        )
-    if observation is not None and max_bucket_size is None:
-        raise ValueError(
-            "image_near_dup_pairs: observation requires max_bucket_size "
-            "(no cap means no metrics; Observation.get would never "
-            "return)"
-        )
+    _check_lsh(
+        "image_near_dup_pairs", 64, bands, max_bucket_size, observation,
+        oversize,
+    )
     if method == "ahash":
         # Staged form of ahash_bits: the interpreted HOF path has no
         # common-subexpression elimination across a lambda boundary, so
@@ -1159,30 +1158,13 @@ def image_near_dup_pairs(
             F.col(id_col),
             dhash_bits("pixels", "width", "height").alias("__bits"),
         ).transform(_materialize)  # reused by buckets AND confirms
-    rows = 64 // bands
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "",
-                *[
-                    F.col("__bits")[b * rows + j].cast("string")
-                    for j in range(rows)
-                ],
-            ).alias("band_hash"),
-        )
-        for b in range(bands)
-    ]
-    buckets = hashed.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("bb")
-    ).select(
-        id_col,
-        F.col("bb.band").alias("band"),
-        F.col("bb.band_hash").alias("band_hash"),
+    buckets = _band_buckets(
+        hashed, id_col,
+        [F.col("__bits")[i].cast("string") for i in range(64)], bands,
+        band_hash=lambda bits: F.concat_ws("", *bits),
     )
     cand = _banded_bucket_pairs(
-        buckets, id_col, max_bucket_size, observation, oversize,
-        caller="image_near_dup_pairs",
+        buckets, id_col, max_bucket_size, observation, oversize
     )
     ha = hashed.select(
         F.col(id_col).alias("__ia"), F.col("__bits").alias("__ba")
@@ -1206,7 +1188,7 @@ def image_near_dup_pairs(
                 lambda acc, x: acc + x,
             ).alias("hamming"),
         )
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= 6)
     )
 
 

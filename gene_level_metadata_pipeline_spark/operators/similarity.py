@@ -34,6 +34,10 @@ from pyspark.sql import functions as F
 from gene_level_metadata_pipeline_spark.materialize import (
     materialize as _materialize,
 )
+from gene_level_metadata_pipeline_spark.operators.dedup import (
+    _bucket_sizes,
+    _check_lsh,
+)
 
 __all__ = [
     "cosine",
@@ -162,50 +166,6 @@ def sign_bucket(vec_col, planes: int = 4) -> Column:
     return b
 
 
-def _cap_buckets(
-    b: DataFrame, bucket_cols: list, max_bucket_size: int | None, observation
-) -> DataFrame:
-    """Drop bucket groups outside [2, max_bucket_size] BEFORE the
-    intra-bucket self-join — the density-skew lever of the embedding
-    family, same contract and Observation metric names
-    (``lsh_capped_rows`` / ``lsh_capped_max_bucket``) as the MinHash
-    banding cap in ``operators.dedup.minhash_candidate_pairs``; read the
-    counters post-action with ``operators.dedup.warn_capped_buckets``.
-    Singleton buckets (size 1) produce no pairs either way, so excluding
-    them is result-invariant. ``None`` disables the cap and the window.
-    """
-    if max_bucket_size is None:
-        if observation is not None:
-            # fail loud: with no cap there is nothing to observe, and an
-            # Observation that never attaches makes a later
-            # warn_capped_buckets (Observation.get) block forever
-            raise ValueError(
-                "observation requires max_bucket_size (no cap means no "
-                "metrics; Observation.get would never return)"
-            )
-        return b
-    if max_bucket_size < 2:
-        raise ValueError(
-            f"max_bucket_size={max_bucket_size} must be >= 2 (a pair "
-            "needs two vectors per bucket) or None to disable the cap"
-        )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*bucket_cols)
-    b = b.withColumn("__bsz", F.count(F.lit(1)).over(w))
-    if observation is not None:
-        b = b.observe(
-            observation,
-            F.count_if(F.col("__bsz") > max_bucket_size).alias(
-                "lsh_capped_rows"
-            ),
-            F.coalesce(F.max("__bsz"), F.lit(0)).alias(
-                "lsh_capped_max_bucket"
-            ),
-        )
-    return b.where(F.col("__bsz").between(2, max_bucket_size)).drop("__bsz")
-
-
 def sign_lsh_pairs(
     vectors: DataFrame,
     id_col: str = "vec_id",
@@ -231,31 +191,50 @@ def sign_lsh_pairs(
     the target anyway (near-zero or degenerate embeddings all share one
     sign pattern the way boilerplate text shares one MinHash band):
     oversized buckets are dropped whole before the self-join, counted by
-    the optional ``observation`` (read with
+    the optional ``observation`` (the banded-LSH cap and metrics of
+    ``operators.dedup``; read with
     ``operators.dedup.warn_capped_buckets``). Default ``None`` — with
     only 2**planes buckets a silent cap could discard most of the
     corpus, so opting in is an explicit sizing decision here, unlike the
     banded-MinHash default where buckets are small by construction.
     """
+    _check_lsh("sign_lsh_pairs", None, None, max_bucket_size, observation)
     b = vectors.select(
         F.col(id_col), F.col(vec_col), sign_bucket(F.col(vec_col), planes).alias("bucket")
     )
-    b = _cap_buckets(b, ["bucket"], max_bucket_size, observation)
-    return _bucketed_cosine_pairs(b, "bucket", id_col, vec_col, threshold)
+    return _bucketed_cosine_pairs(
+        b, "bucket", id_col, vec_col, threshold, max_bucket_size, observation
+    )
 
 
 def _bucketed_cosine_pairs(
-    b: DataFrame, bucket_col: str, id_col: str, vec_col: str, threshold: float
+    b: DataFrame,
+    bucket_col: str,
+    id_col: str,
+    vec_col: str,
+    threshold: float,
+    max_bucket_size: int | None,
+    observation,
 ) -> DataFrame:
     """Intra-bucket all-pairs exact cosine ≥ threshold over a bucketed
     vector frame — the shared pair stage of the embedding dedup family
-    (shuffle key = the bucket column). Each side's cast + norm is hoisted
+    (shuffle key = the bucket column). With a ``max_bucket_size``, only
+    buckets of 2 to that many vectors pair (``dedup._bucket_sizes``, the
+    banded-LSH cap with its Observation metrics; singletons pair with
+    nothing either way); ``None`` disables the cap and its window. Each
+    side's cast + norm is hoisted
     BEFORE the self-join, so a vector in a b-member bucket pays one cast
     and one norm, not b of each; the pair then costs a single zip_with
     dot product. Association order matches :func:`cosine` exactly
     (dot / (norm_a * norm_b)), so results are bit-identical to scoring
     cosine per pair. NULL and NaN cosines never pass the threshold.
     Returns (vec_a, vec_b, cos_sim)."""
+    if max_bucket_size is not None:
+        b = (
+            _bucket_sizes(b, [bucket_col], max_bucket_size, observation)
+            .where(F.col("__bsz").between(2, max_bucket_size))
+            .drop("__bsz")
+        )
     b = _normed(
         b, vec_col, "q", F.col(bucket_col).alias("__bkt"), F.col(id_col)
     )
@@ -584,13 +563,13 @@ def semantic_near_dup(
     N/k. Returns (vec_id, canonical_id, is_canonical); filtering
     ``is_canonical`` keeps one vector per semantic-duplicate cluster.
     """
+    _check_lsh("semantic_near_dup", None, None, max_cell_size, observation)
     cent = kmeans_centroids(vectors, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
     vv = assign_cells(vectors, cent, id_col=id_col, vec_col=vec_col)
     b = vv.select(F.col(id_col), F.col(vec_col), F.col("cell"))
-    b = _cap_buckets(b, ["cell"], max_cell_size, observation)
-    pairs = _bucketed_cosine_pairs(b, "cell", id_col, vec_col, threshold).select(
-        "vec_a", "vec_b"
-    )
+    pairs = _bucketed_cosine_pairs(
+        b, "cell", id_col, vec_col, threshold, max_cell_size, observation
+    ).select("vec_a", "vec_b")
     return _canonicalize_pairs(vectors, pairs, id_col)
 
 

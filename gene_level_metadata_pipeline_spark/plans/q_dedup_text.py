@@ -187,7 +187,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return ngram_jaccard_pairs(
         _t(spark, sf_dir, "documents"), "text", "doc_id",
-        n=3, threshold=0.1, block_by="lang",
+        threshold=0.1, block_by="lang",
     )
 
 
@@ -246,8 +246,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return minhash_candidate_pairs(
-        _t(spark, sf_dir, "documents"), "text", "doc_id",
-        n=3, num_hashes=8, bands=4,
+        _t(spark, sf_dir, "documents"), "text", "doc_id", bands=4,
     )
 
 
@@ -331,8 +330,7 @@ def q_dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return minhash_candidate_pairs_oph(
-        _t(spark, sf_dir, "documents"), "text", "doc_id",
-        n=3, num_hashes=8, bands=4,
+        _t(spark, sf_dir, "documents"), "text", "doc_id", bands=4,
     )
 
 
@@ -398,7 +396,7 @@ def q_dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return minhash_candidate_pairs(
-        docs, "text", "doc_id", n=3, num_hashes=8, bands=4, max_bucket_size=10
+        docs, "text", "doc_id", bands=4, max_bucket_size=10
     )
 
 
@@ -482,7 +480,7 @@ def q_dedup_minhash_lsh_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return minhash_candidate_pairs(
-        docs, "text", "doc_id", n=3, num_hashes=8, bands=4,
+        docs, "text", "doc_id", bands=4,
         max_bucket_size=10, oversize="star",
     )
 
@@ -526,8 +524,7 @@ def q_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gene_level_metadata_pipeline_spark.operators.dedup import near_dup_pairs
 
     return near_dup_pairs(
-        _t(spark, sf_dir, "documents"), "text", "doc_id",
-        n=3, threshold=0.1, num_hashes=8, bands=4,
+        _t(spark, sf_dir, "documents"), "text", "doc_id", threshold=0.1,
     )
 
 
@@ -2420,10 +2417,8 @@ def q_dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    exact = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.1)
-    lsh = near_dup_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.1, num_hashes=8, bands=4
-    )
+    exact = ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.1)
+    lsh = near_dup_pairs(docs, "text", "doc_id", threshold=0.1)
     e = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     l = lsh.agg(F.count(F.lit(1)).alias("n_lsh"))
     return e.crossJoin(F.broadcast(l)).select(
@@ -2614,7 +2609,7 @@ def q_dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return ngram_containment_pairs(
         _t(spark, sf_dir, "documents"), "text", "doc_id",
-        n=3, threshold=0.2, block_by="lang",
+        threshold=0.2, block_by="lang",
     )
 
 
@@ -3297,7 +3292,7 @@ def q_dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_dup_against_history(
         d.where(F.col("doc_id") % 2 == 1),
         d.where(F.col("doc_id") % 2 == 0),
-        "text", "doc_id", n=3, threshold=0.1, num_hashes=8, bands=4,
+        "text", "doc_id", threshold=0.1,
     )
 
 
@@ -3691,7 +3686,6 @@ def q_dedup_set_similarity_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = word_shingles(docs, text_col="text", id_col="doc_id", n=3)
     return set_similarity_join(
         sh, id_col="doc_id", token_col="shingle",
-        threshold_num=1, threshold_den=2,
     )
 
 
@@ -3921,7 +3915,6 @@ def q_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = word_shingles(docs, text_col="text", id_col="doc_id", n=1)
     pairs = set_similarity_join(
         sh, id_col="doc_id", token_col="shingle",
-        threshold_num=1, threshold_den=2,
     )
     bucketed = pairs.groupBy(
         (F.col("jac_e6") - F.pmod("jac_e6", F.lit(100000)))
@@ -4856,7 +4849,6 @@ def q_er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer")
     return sorted_neighborhood_pairs(
         cust, key_col="c_name", id_col="c_custkey",
-        window=5, max_distance=2,
     )
 
 
@@ -5437,7 +5429,7 @@ def q_image_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(8).alias("height"),
         px.alias("pixels"),
     )
-    return image_near_dup_pairs(decoded, method="ahash", max_hamming=6)
+    return image_near_dup_pairs(decoded, method="ahash")
 
 
 @_register(

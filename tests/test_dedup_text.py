@@ -164,7 +164,7 @@ def test_ivf_topk_searches_only_own_cell(spark):
 
 def test_minhash_rejects_indivisible_bands(spark, docs):
     with pytest.raises(ValueError, match="divisible"):
-        dedup.minhash_candidate_pairs(docs, "text", "doc_id", num_hashes=8, bands=3)
+        dedup.minhash_candidate_pairs(docs, "text", "doc_id", bands=3)
 
 
 def test_multimodal_checksum_non_ascii(spark):
@@ -533,19 +533,19 @@ def test_near_dup_pairs_composes_lsh_and_jaccard(docs, spark):
     cands = {
         (r["doc_a"], r["doc_b"])
         for r in dedup.minhash_candidate_pairs(
-            docs, "text", "doc_id", n=3, num_hashes=8, bands=4
+            docs, "text", "doc_id", bands=4
         ).collect()
     }
     truth = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in dedup.ngram_jaccard_pairs(
-            docs, "text", "doc_id", n=3, threshold=0.1
+            docs, "text", "doc_id", threshold=0.1
         ).collect()
     }
     out = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in dedup.near_dup_pairs(
-            docs, "text", "doc_id", n=3, threshold=0.1
+            docs, "text", "doc_id", threshold=0.1
         ).collect()
     }
     assert out == {p: j for p, j in truth.items() if p in cands}

@@ -150,9 +150,7 @@ def test_image_near_dup_pairs_end_to_end():
     for method in ("ahash", "dhash"):
         got = {
             (r["doc_a"], r["doc_b"]): r["hamming"]
-            for r in mm.image_near_dup_pairs(
-                decoded, method=method, max_hamming=6
-            ).collect()
+            for r in mm.image_near_dup_pairs(decoded, method=method).collect()
         }
         assert got.get((1, 2)) == 0, (method, got)
         assert (1, 3) in got and got[(1, 3)] <= 6, (method, got)

@@ -504,3 +504,53 @@ def test_dc_fast_path_equals_general_idct():
         raw = encode_jpeg(8, 8, [[coef]])
         out = _decode([raw])[0]
         assert list(out["pixels"]) == _expected(8, 8, [[coef]]), dc
+
+
+_OFF_PATH_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from gene_level_metadata_pipeline_spark.operators.multimodal import (
+    decode_image, sample_frames,
+)
+from tests.test_jpeg_decode import _mk_avi, encode_jpeg
+
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+coef = [0] * 64
+coef[0] = 11
+raw = encode_jpeg(8, 8, [[coef]])
+img = spark.createDataFrame([(1, bytearray(raw))], "doc_id long, payload binary")
+avi = spark.createDataFrame(
+    [(7, bytearray(_mk_avi([raw, raw])))], "doc_id long, payload binary"
+)
+print("image", list(decode_image(img, codec="jpeg").collect()[0]["pixels"]))
+frames = sample_frames(avi, every_n=1, codec="mjpeg-avi").collect()
+print("frames", sorted(r["frame_idx"] for r in frames))
+spark.stop()
+"""
+
+
+def test_decoders_run_where_workers_cannot_import_the_package(tmp_path):
+    """decode_image's JPEG path and the MJPEG frame sampler run from a
+    working directory outside the checkout, with the package only on the
+    main process's sys.path: the Python workers get the decoders by
+    value."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parents[1])
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", _OFF_PATH_SCRIPT, repo],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    lines = out.stdout.splitlines()
+    assert f"image {[128 + 2 * 11] * 64}" in lines
+    assert "frames [0, 1]" in lines

@@ -45,7 +45,7 @@ def _pairs(df, oversize):
     )
 
     out = minhash_candidate_pairs(
-        df, "text", "doc_id", n=3, num_hashes=8, bands=4,
+        df, "text", "doc_id", bands=4,
         max_bucket_size=5, oversize=oversize,
     )
     return {tuple(r) for r in out.collect()}

@@ -72,7 +72,7 @@ def _sigs(k=8):
 
     spark = _get_spark()
     df = spark.createDataFrame(_DOCS, "doc_id bigint, text string")
-    rows = minhash_signatures_oph(df, "text", "doc_id", 3, k).collect()
+    rows = minhash_signatures_oph(df, "text", "doc_id", k).collect()
     return {r["doc_id"]: [r[f"h{i}"] for i in range(k)] for r in rows}
 
 
@@ -132,7 +132,7 @@ def test_validation_fails_loud():
     spark = _get_spark()
     df = spark.createDataFrame(_DOCS, "doc_id bigint, text string")
     with pytest.raises(ValueError, match="divisible"):
-        minhash_candidate_pairs_oph(df, "text", "doc_id", num_hashes=8, bands=3)
+        minhash_candidate_pairs_oph(df, "text", "doc_id", bands=3)
     with pytest.raises(ValueError, match="observation requires"):
         minhash_candidate_pairs_oph(
             df, "text", "doc_id", max_bucket_size=None, observation=object()
@@ -151,7 +151,7 @@ def test_k16_matches_python_replay():
 
     spark = _get_spark()
     df = spark.createDataFrame(_DOCS, "doc_id bigint, text string")
-    rows = minhash_signatures_oph(df, "text", "doc_id", 3, 16).collect()
+    rows = minhash_signatures_oph(df, "text", "doc_id", 16).collect()
     got = {r["doc_id"]: [r[f"h{i}"] for i in range(16)] for r in rows}
     for did, text in _DOCS:
         exp = _py_oph(text, k=16)

@@ -131,20 +131,6 @@ def _passed_params(defs) -> dict[tuple[str, str], set[str]]:
 # knobs no caller varies, kept when the literal guard came in. Shrink-only:
 # fold one and delete its line here; a parameter never joins this list.
 _DEFAULT_ONLY = {
-    "operators/dedup.py::minhash_candidate_pairs_oph(n)",
-    "operators/dedup.py::minhash_candidate_pairs_oph(num_hashes)",
-    "operators/dedup.py::near_dup_against_history(n)",
-    "operators/dedup.py::near_dup_against_history(num_hashes)",
-    "operators/dedup.py::near_dup_against_history(bands)",
-    "operators/dedup.py::near_dup_pairs(n)",
-    "operators/dedup.py::near_dup_pairs(num_hashes)",
-    "operators/dedup.py::near_dup_pairs(bands)",
-    "operators/dedup.py::ngram_containment_pairs(n)",
-    "operators/dedup.py::ngram_jaccard_pairs(n)",
-    "operators/dedup.py::set_similarity_join(threshold_num)",
-    "operators/dedup.py::set_similarity_join(threshold_den)",
-    "operators/dedup.py::sorted_neighborhood_pairs(window)",
-    "operators/dedup.py::sorted_neighborhood_pairs(max_distance)",
     "operators/drift.py::conformal_split_interval(alpha_pct)",
     "operators/drift.py::fdr_bh(alpha_e6)",
     "operators/drift.py::target_encode_kfold(folds)",
@@ -152,7 +138,6 @@ _DEFAULT_ONLY = {
     "operators/graph.py::sssp_weighted(weight)",
     "operators/layout.py::zorder_value(bits)",
     "operators/multimodal.py::decode_audio(head_n)",
-    "operators/multimodal.py::image_near_dup_pairs(max_hamming)",
     "operators/multimodal.py::sample_frames(frame_bytes)",
     "operators/selection.py::abc_classification(a_cut)",
     "operators/selection.py::abc_classification(b_cut)",

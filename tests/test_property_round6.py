@@ -54,7 +54,7 @@ def test_set_similarity_join_matches_quadratic(tbl):
     df = spark.createDataFrame(rows, "doc_id long, w string")
     got = {
         (r["a"], r["b"]): (r["inter_n"], r["union_n"])
-        for r in set_similarity_join(df, "doc_id", "w", 1, 2).collect()
+        for r in set_similarity_join(df, "doc_id", "w").collect()
     }
     want = {}
     for a, b in itertools.combinations(sorted(tbl), 2):

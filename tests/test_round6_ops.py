@@ -551,7 +551,7 @@ def test_set_similarity_join_exact_no_false_negatives(spark):
         + [(3, "t9")]
     )
     df = spark.createDataFrame(rows, "doc_id long, w string")
-    out = set_similarity_join(df, "doc_id", "w", 1, 2).collect()
+    out = set_similarity_join(df, "doc_id", "w").collect()
     assert len(out) == 1
     r = out[0]
     assert (r["a"], r["b"], r["inter_n"], r["union_n"]) == (1, 2, 3, 4)
@@ -571,7 +571,7 @@ def test_set_similarity_join_boundary_threshold(spark):
         + [(2, "a"), (2, "b"), (2, "d")]
     )
     df = spark.createDataFrame(rows, "doc_id long, w string")
-    out = set_similarity_join(df, "doc_id", "w", 1, 2).collect()
+    out = set_similarity_join(df, "doc_id", "w").collect()
     assert len(out) == 1 and out[0]["jac_e6"] == 500_000
 
 
