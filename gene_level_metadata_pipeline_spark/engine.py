@@ -39,14 +39,14 @@ class Engine:
         self.catalog = Catalog(spark)
 
     @classmethod
-    def local(cls, app_name: str = "gene-engine") -> "Engine":
+    def local(cls) -> "Engine":
         from gene_level_metadata_pipeline_spark.session import get_spark
 
-        return cls(get_spark(app_name))
+        return cls(get_spark("gene-engine"))
 
     # -- catalog / SQL ----------------------------------------------------
-    def put(self, name: str, df: DataFrame, cache: bool = False) -> DataFrame:
-        return self.catalog.put(name, df, cache=cache)
+    def put(self, name: str, df: DataFrame) -> DataFrame:
+        return self.catalog.put(name, df)
 
     def get(self, name: str) -> DataFrame:
         return self.catalog.get(name)

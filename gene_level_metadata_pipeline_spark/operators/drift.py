@@ -375,13 +375,12 @@ def conformal_split_interval(
     group: str,
     y_col: str,
     id_col: str,
-    alpha_pct: int = 10,
 ) -> DataFrame:
     """Split-conformal prediction interval per group (Vovk; Lei et al.
     2018): fit on the TRAIN split (even ids), take q = the
-    ceil((1-alpha)(n_cal+1))-th smallest absolute residual on the
+    ceil(0.9(n_cal+1))-th smallest absolute residual on the
     CALIBRATION split (odd ids) — then [pred ± q] carries a finite-
-    sample marginal coverage >= 1-alpha guarantee with NO distributional
+    sample marginal coverage >= 90% guarantee with NO distributional
     assumption. The fitted model here is the per-group train mean (the
     simplest regressor — the conformal wrapper is the operator; swap
     any predictor in). Everything is exact integer arithmetic: the
@@ -425,9 +424,7 @@ def conformal_split_interval(
         F.row_number().over(w).alias("rn"),
         F.count(F.lit(1)).over(Window.partitionBy("g")).alias("n_cal"),
     )
-    k = F.ceil(
-        (F.lit(100 - alpha_pct) * (F.col("n_cal") + 1)) / 100
-    ).cast("bigint")
+    k = F.ceil((F.lit(90) * (F.col("n_cal") + 1)) / 100).cast("bigint")
     q = ranked.where(F.col("rn") == F.least(k, F.col("n_cal"))).select(
         "g", "n_train", "n_cal", "pred_scaled",
         F.col("r").alias("q_resid"), k.alias("k_rank"),
@@ -452,9 +449,8 @@ def target_encode_kfold(
     cat_col: str,
     target_col: str,
     id_col: str,
-    folds: int = 5,
 ) -> DataFrame:
-    """K-fold (leave-fold-out) mean target encoding — the standard
+    """5-fold (leave-fold-out) mean target encoding — the standard
     leakage-safe categorical feature for gradient models: a row in fold
     f is encoded with the category's target mean computed WITHOUT fold
     f's rows, so no row's own target leaks into its feature. Folds are
@@ -468,7 +464,7 @@ def target_encode_kfold(
 
     Scale shape: ONE (cat, fold) aggregation; the category totals
     derive from it by a second tiny rollup — the encoding table is
-    |cats| x folds, broadcastable to the feature join that consumes
+    |cats| x 5, broadcastable to the feature join that consumes
     it."""
     h = F.conv(
         F.substring(F.md5(F.concat_ws(":", F.lit("fold"), F.col(id_col))),
@@ -478,7 +474,7 @@ def target_encode_kfold(
     per = df.select(
         F.col(cat_col).alias("cat"),
         F.col(target_col).cast("bigint").alias("t"),
-        F.pmod(h, F.lit(folds)).cast("int").alias("fold"),
+        F.pmod(h, F.lit(5)).cast("int").alias("fold"),
     ).groupBy("cat", "fold").agg(
         F.count(F.lit(1)).alias("n_f"),
         F.sum("t").alias("s_f"),
@@ -584,7 +580,6 @@ def fdr_bh(
     df: DataFrame,
     p_col: str = "p_e6",
     key_col: str = "id",
-    alpha_e6: int = 50_000,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Benjamini-Hochberg step-up FDR adjustment — the multiple-testing
@@ -600,7 +595,7 @@ def fdr_bh(
     step-up decision differs from rational BH only when the rational
     value straddles an adj ulp — the certified semantics is the floored
     form, replayed exactly by the oracle) and
-    ``reject = adj_e6 <= alpha_e6``.
+    ``reject = adj_e6 <= 50000`` (FDR level 0.05).
 
     Scale shape — never a single-task global window: the global rank is
     a distributed prefix COUNT (range repartition on (p, key), local
@@ -698,7 +693,7 @@ def fdr_bh(
         )
         .withColumn(
             "reject",
-            (F.col("adj_e6") <= F.lit(int(alpha_e6))).cast("boolean"),
+            (F.col("adj_e6") <= F.lit(50_000)).cast("boolean"),
         )
     )
 

@@ -365,9 +365,13 @@ def _lpa_driver(edges: DataFrame, rounds: int) -> DataFrame | None:
     )
 
 
+# Power iterations of pagerank, on both the distributed and the driver
+# path; the oracle replays the same 3-round unroll.
+_PAGERANK_ROUNDS = 3
+
+
 def _pagerank_driver(
     edges: DataFrame,
-    iterations: int,
     seeds: DataFrame | None,
 ) -> DataFrame | None:
     from pyspark.sql.types import LongType, StructField, StructType
@@ -416,7 +420,7 @@ def _pagerank_driver(
         seed_base = (15 * init) // 100
         base = {u: (seed_base if u in eff else 0) for u in deg}
         pr = {u: (init if u in eff else 0) for u in deg}
-    for _ in range(iterations):
+    for _ in range(_PAGERANK_ROUNDS):
         # all values non-negative, so Python // replays `div` exactly
         contrib = {u: pr[u] // deg[u] for u in deg}
         s = dict.fromkeys(deg, 0)
@@ -481,11 +485,10 @@ def pagerank(
     pairs: DataFrame,
     src: str = "u",
     dst: str = "v",
-    iterations: int = 3,
     checkpoint_every: int = 4,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over an undirected pair list, in exact
+    """3-iteration PageRank over an undirected pair list, in exact
     integer arithmetic.
 
     Ranks are carried as bigint micro-units (10^12 = 1.0) and every
@@ -503,7 +506,7 @@ def pagerank(
     is AQE's skew-join case. Lineage is truncated with an eager
     ``localCheckpoint`` every ``checkpoint_every`` rounds — NOT every
     round: each eager checkpoint blocks and materializes the full rank
-    frame, so for short unrolls (the default 3 iterations) checkpointing
+    frame, so for short unrolls (the 3 iterations here) checkpointing
     per round triples the number of blocking jobs for no lineage benefit.
     A plan a few joins deep is exactly what Catalyst handles; only
     unbounded growth needs truncation. N is materialized once (a count
@@ -543,7 +546,7 @@ def pagerank(
     )
     n_edges = edges.count()
     if n_edges <= _DRIVER_EDGE_CAP:
-        out = _pagerank_driver(edges, iterations, seeds)
+        out = _pagerank_driver(edges, seeds)
         if out is not None:
             return out
     with sized_shuffle(edges.sparkSession, n_edges) as sz:
@@ -590,7 +593,7 @@ def pagerank(
                 .otherwise(F.lit(0)).cast("long").alias("pr"),
             )
             nodes = nodes.drop("__is_seed")
-        for i in range(iterations):
+        for i in range(_PAGERANK_ROUNDS):
             prd = pr.join(nodes, "node")
             contrib = (
                 edges.join(prd, edges.u == prd.node)
@@ -616,7 +619,7 @@ def pagerank(
             if (
                 checkpoint_every > 0
                 and (i + 1) % checkpoint_every == 0
-                and (i + 1) < iterations
+                and (i + 1) < _PAGERANK_ROUNDS
             ):
                 pr = pr.localCheckpoint(eager=True)
         if sz.changed:
@@ -883,7 +886,7 @@ def kcore(
 def sssp_weighted(
     pairs: DataFrame,
     sources: DataFrame,
-    weight: str = "w",
+    weight_col: str = "w",
     src: str = "u",
     dst: str = "v",
     max_hops: int = 4,
@@ -910,13 +913,13 @@ def sssp_weighted(
 
     edges = pairs.select(
         F.col(src).alias("eu"), F.col(dst).alias("ev"),
-        F.col(weight).cast("bigint").alias("ew"),
+        F.col(weight_col).cast("bigint").alias("ew"),
     )
     if not directed:
         edges = edges.unionByName(
             pairs.select(
                 F.col(dst).alias("eu"), F.col(src).alias("ev"),
-                F.col(weight).cast("bigint").alias("ew"),
+                F.col(weight_col).cast("bigint").alias("ew"),
             )
         )
     edges = edges.distinct().localCheckpoint(eager=True)

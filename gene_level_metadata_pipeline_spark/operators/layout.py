@@ -21,19 +21,19 @@ from pyspark.sql import functions as F
 __all__ = ["zorder_value"]
 
 
-def zorder_value(cols: list[Column | str], bits: int = 8) -> Column:
-    """Morton interleave of the low ``bits`` bits of each column.
+def zorder_value(cols: list[Column | str]) -> Column:
+    """Morton interleave of the low 8 bits of each column.
 
     Bit i of column j lands at position i * len(cols) + j. Columns are
-    masked to ``bits`` bits first (callers bucket/scale real keys into
+    masked to 8 bits first (callers bucket/scale real keys into
     that range). Built-in shifts/masks only — stays in codegen.
     """
     ncols = len(cols)
     z = F.lit(0).cast("long")
     for j, c in enumerate(cols):
         col = (F.col(c) if isinstance(c, str) else c).cast("long")
-        masked = col % (1 << bits)
-        for i in range(bits):
+        masked = col % 256
+        for i in range(8):
             bit = F.floor(masked / (1 << i)) % 2
             z = z + bit * F.lit(1 << (i * ncols + j)).cast("long")
     return z

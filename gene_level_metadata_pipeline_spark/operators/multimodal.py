@@ -761,7 +761,6 @@ def decode_audio(
     df: DataFrame,
     payload_col: str = "payload",
     codec: str = "wav",
-    head_n: int = 8,
 ) -> DataFrame:
     """Decode audio payloads → (sample_rate, n_channels, sample_width,
     n_frames, peak, head_samples) via Arrow-batched mapInPandas.
@@ -771,7 +770,7 @@ def decode_audio(
     ``array('h')`` — no container codecs required — so the audio
     modality runs real bytes end-to-end: header fields come from the
     actual chunk structure, ``peak`` is the max absolute sample over
-    every decoded frame, ``head_samples`` the first ``head_n`` decoded
+    every decoded frame, ``head_samples`` the first 8 decoded
     int16 samples (interleaved channel order). All exact integers.
     Malformed payloads fail LOUD (wave.Error propagates) — silent
     nulls would hide corpus corruption. Compressed codecs (mp3/ogg/
@@ -815,7 +814,7 @@ def decode_audio(
                         recs.append((
                             doc_id, w.getframerate(), w.getnchannels(),
                             sw, n, peak,
-                            samples[:head_n].astype(int).tolist(),
+                            samples[:8].astype(int).tolist(),
                         ))
                 yield pd.DataFrame(recs, columns=[
                     "doc_id", "sample_rate", "n_channels", "sample_width",
@@ -877,7 +876,6 @@ def resize_image(df: DataFrame, width: int, height: int) -> DataFrame:
 def sample_frames(
     df: DataFrame,
     every_n: int = 30,
-    frame_bytes: int = 4,
     codec: str = "ffmpeg",
 ) -> DataFrame:
     """Sample every Nth frame from a video container payload.
@@ -895,7 +893,7 @@ def sample_frames(
     with no video chunks, and non-JPEG frame bytes fail LOUD.
     ``codec='ffmpeg'`` (inter-frame codecs: H.264 etc.) stays gated —
     ffmpeg is not in this container. ``codec='fake'`` treats the
-    payload as concatenated fixed-size frames of ``frame_bytes`` bytes —
+    payload as concatenated fixed-size frames of 4 bytes —
     the deterministic stand-in certifying the Spark-side contract: one
     input row fans out to one row per sampled frame (frame_idx, frame
     binary), payload dropped on output."""
@@ -973,7 +971,7 @@ def sample_frames(
     if codec != "fake":
         raise ValueError(f"sample_frames: unknown codec {codec!r}")
 
-    n_frames = F.floor(F.octet_length("payload") / F.lit(frame_bytes))
+    n_frames = F.floor(F.octet_length("payload") / F.lit(4))
     idxs = F.sequence(
         F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(every_n)
     )
@@ -985,8 +983,8 @@ def sample_frames(
             F.col("frame_idx").cast("long"),
             F.substring(
                 F.col("payload"),
-                (F.col("frame_idx") * frame_bytes + 1).cast("int"),
-                frame_bytes,
+                (F.col("frame_idx") * 4 + 1).cast("int"),
+                4,
             ).alias("frame"),
         )
     )

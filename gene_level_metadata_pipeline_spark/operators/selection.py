@@ -623,19 +623,17 @@ def abc_classification(
     df: DataFrame,
     key_col: str,
     value_col: str | Column,
-    a_cut: tuple[int, int] = (1, 2),
-    b_cut: tuple[int, int] = (4, 5),
 ) -> DataFrame:
     """Pareto / ABC contribution analysis: rank keys by contribution
     (descending), compute each key's cumulative share of the grand
-    total, and classify A (the head up to ``a_cut`` of the total), B
-    (up to ``b_cut``), C (the tail) — the classic 80/20 inventory and
+    total, and classify A (the head up to 50% of the total), B
+    (up to 80%), C (the tail) — the classic 80/20 inventory and
     corpus-source triage.
 
-    Cuts are RATIONAL pairs (numerator, denominator) — e.g. (1, 2) is
-    50% — so class boundaries are decided by the EXACT decimal
-    inequality cum * den <= total * num, never by comparing a rounded
-    double to 0.5 (a hash-match killer at the boundary). The cumulative
+    Cuts are RATIONAL — 1/2 and 4/5 — so class boundaries are decided
+    by the EXACT decimal inequalities cum * 2 <= total and
+    cum * 5 <= total * 4, never by comparing a rounded double to 0.5
+    (a hash-match killer at the boundary). The cumulative
     sum reuses ``running_sum`` (range-repartition + per-partition
     window + broadcast offsets — never a single-task global window);
     the grand total is a 1-row broadcast. Shuffles: one groupBy on the
@@ -658,15 +656,9 @@ def abc_classification(
     total = contrib.agg(
         F.sum("contribution").cast("decimal(28,6)").alias("__total")
     )
-    an, ad = a_cut
-    bn, bd = b_cut
     cls = (
-        F.when(
-            F.col("__cum") * F.lit(ad) <= F.col("__total") * F.lit(an), "A"
-        )
-        .when(
-            F.col("__cum") * F.lit(bd) <= F.col("__total") * F.lit(bn), "B"
-        )
+        F.when(F.col("__cum") * F.lit(2) <= F.col("__total"), "A")
+        .when(F.col("__cum") * F.lit(5) <= F.col("__total") * F.lit(4), "B")
         .otherwise("C")
     )
     return (
@@ -694,11 +686,10 @@ def mixture_reweight_mw(
     df: DataFrame,
     domain_col: str,
     stat_col: str,
-    rounds: int = 4,
 ) -> DataFrame:
     """Multiplicative-weights domain-mixture reweighting — the DoReMi
     shape (Xie et al. 2023) in exact integer arithmetic: start from
-    uniform domain weights, and each round move weight toward domains
+    uniform domain weights, and each of 4 rounds moves weight toward domains
     whose statistic sits above the current MIXTURE average (the
     weighted mean under the evolving weights), by a clamped relative
     step. The recurrence per round t:
@@ -742,7 +733,7 @@ def mixture_reweight_mw(
     ).localCheckpoint(eager=True)
     e6 = F.lit(10 ** 6).cast("bigint")
     w = stats.withColumn("w", e6)
-    for _ in range(rounds):
+    for _ in range(4):
         tot = w.agg(
             F.sum(F.col("w") * F.col("m")).alias("__sm"),
             F.sum("w").alias("__sw"),

@@ -350,10 +350,15 @@ def _score_cells(
         # `__dn == 0` evaluates to NULL there, the when() falls through
         # to otherwise(best), and the -inf init's lowest-centroid id
         # leaks (r4 advice). `NULL > 0` is NULL → when() yields NULL.
+        # A NaN element makes __dn NaN, which `> 0` passes (Spark orders
+        # NaN above every number), so NaN is excluded by name.
         .withColumn(
             "cell",
             F.when(
-                F.col("__dv").isNotNull() & (F.col("__dn") > 0), best
+                F.col("__dv").isNotNull()
+                & (F.col("__dn") > 0)
+                & ~F.isnan("__dn"),
+                best,
             ),
         )
         .drop("__cents", "__dv", "__dn")
@@ -371,7 +376,8 @@ def kmeans_centroids(
 
     Deterministic and oracle-reproducible by construction:
 
-    * seeds = the embeddings of the ``k`` lowest ids (no RNG);
+    * seeds = the embeddings of the ``k`` lowest ids (no RNG), skipping
+      vectors with a NaN element;
     * assignment = rounded-4dp cosine argmax, ties to the lowest cid;
     * re-estimation = per-component mean computed over DECIMAL(25,12)
       sums (order-independent exact arithmetic, so Spark and DuckDB get
@@ -386,15 +392,19 @@ def kmeans_centroids(
     v = vectors.select(
         F.col(id_col).alias("__vid"), _as_double(F.col(vec_col)).alias("__e")
     )
+    # a NaN centroid would score NaN against every vector, and the
+    # NaN-is-greatest argmax would hand it every vector
+    has_nan = F.coalesce(F.exists("__e", F.isnan), F.lit(False))
     centroids = (
-        v.orderBy("__vid")
+        v.where(~has_nan)
+        .orderBy("__vid")
         .limit(k)
         .select(F.col("__vid").alias("cid"), F.col("__e").alias("ce"))
     )
     for _ in range(iters):
         # zero-shuffle assignment keeps the embedding column in place —
         # no join-back to recover it before the re-estimation explode.
-        # Degenerate (NULL/zero-norm) vectors carry a NULL cell; exclude
+        # Degenerate (NULL/zero-norm/NaN) vectors carry a NULL cell; exclude
         # them so they neither form a phantom NULL centroid nor drag a
         # real centroid toward the origin.
         exploded = (
@@ -438,15 +448,18 @@ def assign_cells(
     return _score_cells(vectors, centroids, vec_col)
 
 
+# Neighbors per query of the two IVF searches (single- and multi-probe).
+_IVF_TOP_K = 5
+
+
 def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
     cell_col: str = "label",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    k: int = 5,
 ) -> DataFrame:
-    """IVF-style top-k: search only the query's coarse cell.
+    """IVF-style top-5: search only the query's coarse cell.
 
     ``cell_col`` is the inverted-file cell id — in production the nearest
     centroid from a k-means coarse quantizer; any pre-assigned partition id
@@ -467,14 +480,13 @@ def ivf_topk(
     pairs = v.join(F.broadcast(q), "__cell").where(
         F.col("query_id") != F.col("neighbor_id")
     )
-    return _top_k(_scored(pairs), k)
+    return _top_k(_scored(pairs), _IVF_TOP_K)
 
 
 def embedding_near_dup(
     vectors: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    planes: int = 4,
     threshold: float = 0.9,
     max_bucket_size: int | None = None,
     observation=None,
@@ -482,9 +494,9 @@ def embedding_near_dup(
     """Embedding-cosine near-duplicate canonicalization.
 
     The vector-space member of the dedup family (exact / Jaccard /
-    MinHash / SimHash live in operators.dedup): sign-LSH bucketing
-    proposes candidate pairs, exact cosine >= ``threshold`` confirms
-    them, and connected components collapse transitive near-dup chains
+    MinHash / SimHash live in operators.dedup): sign-LSH bucketing on
+    4 planes proposes candidate pairs, exact cosine >= ``threshold``
+    confirms them, and connected components collapse transitive near-dup chains
     (a~b, b~c => one cluster) to the minimum id — the same
     cluster-then-keep-one contract as ``graph.canonicalize_duplicates``.
 
@@ -497,7 +509,7 @@ def embedding_near_dup(
     driver.
     """
     pairs = sign_lsh_pairs(
-        vectors, id_col, vec_col, planes, threshold,
+        vectors, id_col, vec_col, threshold=threshold,
         max_bucket_size=max_bucket_size, observation=observation,
     )
     return _canonicalize_pairs(vectors, pairs, id_col)
@@ -530,7 +542,6 @@ def semantic_near_dup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 8,
-    iters: int = 1,
     threshold: float = 0.9,
     max_cell_size: int | None = None,
     observation=None,
@@ -549,7 +560,7 @@ def semantic_near_dup(
     k = 10⁵ keeps cells at ~10⁴), and cells follow the data's actual
     density instead of axis-aligned sign patterns. Pipeline:
 
-    1. deterministic Lloyd centroids (:func:`kmeans_centroids` —
+    1. one deterministic Lloyd step (:func:`kmeans_centroids` —
        lowest-id seeds, DECIMAL means, oracle-reproducible);
     2. cell assignment via broadcast cosine argmax (the vector table
        never shuffles for assignment);
@@ -564,7 +575,7 @@ def semantic_near_dup(
     ``is_canonical`` keeps one vector per semantic-duplicate cluster.
     """
     _check_lsh("semantic_near_dup", None, None, max_cell_size, observation)
-    cent = kmeans_centroids(vectors, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
+    cent = kmeans_centroids(vectors, k=k, id_col=id_col, vec_col=vec_col)
     vv = assign_cells(vectors, cent, id_col=id_col, vec_col=vec_col)
     b = vv.select(F.col(id_col), F.col(vec_col), F.col("cell"))
     pairs = _bucketed_cosine_pairs(
@@ -694,15 +705,14 @@ def pq_codebooks(
     dim: int,
     m: int = 8,
     k: int = 16,
-    iters: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Product-quantization codebooks (Jégou, Douze & Schmid, TPAMI
     2011): the vector is split into ``m`` consecutive sub-vectors and
-    each subspace learns its own ``k``-codeword quantizer by Lloyd's
-    algorithm — ``k**m`` effective cells from ``m*k`` stored centroids,
-    the memory-bounded ANN tier between int8 quantization (4×) and raw
+    each subspace learns its own ``k``-codeword quantizer by one step
+    of Lloyd's algorithm — ``k**m`` effective cells from ``m*k`` stored
+    centroids, the memory-bounded ANN tier between int8 quantization (4×) and raw
     floats: at m=8, k=16 a 64-dim float32 embedding compresses 64× to
     8 nibble codes plus one shared m*k*(dim/m) codebook.
 
@@ -716,7 +726,7 @@ def pq_codebooks(
     * re-estimation = per-component mean over DECIMAL(25,12) sums,
       rounded to 6 dp.
 
-    Scale shape per iteration: assignment is a broadcast fold (the
+    Scale shape: assignment is a broadcast fold (the
     codebook is m*k*(dim/m) = k*dim doubles — KB-sized at any
     realistic setting), re-estimation shuffles N*dim (s, cid, pos)
     rows — identical to one distributed Lloyd step. All ``m``
@@ -736,37 +746,34 @@ def pq_codebooks(
         .orderBy(id_col)
         .limit(k)
     )
-    codebooks = subs.join(F.broadcast(seed_ids), id_col).select(
+    seeds = subs.join(F.broadcast(seed_ids), id_col).select(
         "s", F.col(id_col).alias("cid"), F.col("x").alias("ce")
     )
-    for _ in range(iters):
-        assigned = _pq_assign(subs, codebooks, id_col).where(
-            F.col("code").isNotNull()
+    assigned = _pq_assign(subs, seeds, id_col).where(
+        F.col("code").isNotNull()
+    )
+    el = (
+        subs.join(assigned, [id_col, "s"])
+        .select("s", "code", F.posexplode("x").alias("pos", "xv"))
+    )
+    cm = el.groupBy("s", "code", "pos").agg(
+        F.round(
+            F.sum(F.col("xv").cast("decimal(25,12)")).cast("double")
+            / F.count(F.lit(1)),
+            6,
+        ).alias("mv")
+    )
+    return (
+        cm.groupBy("s", F.col("code").alias("cid"))
+        .agg(
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("pos", "mv"))),
+                lambda p: p.getField("mv"),
+            ).alias("ce")
         )
-        el = (
-            subs.join(assigned, [id_col, "s"])
-            .select("s", "code", F.posexplode("x").alias("pos", "xv"))
-        )
-        cm = el.groupBy("s", "code", "pos").agg(
-            F.round(
-                F.sum(F.col("xv").cast("decimal(25,12)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("mv")
-        )
-        codebooks = (
-            cm.groupBy("s", F.col("code").alias("cid"))
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "mv"))),
-                    lambda p: p.getField("mv"),
-                ).alias("ce")
-            )
-            # pin each Lloyd round's codebooks — the same per-round
-            # materialization discipline as kmeans_centroids
-            .transform(_materialize)
-        )
-    return codebooks
+        # pin the trained codebooks, which every encode pass re-reads
+        .transform(_materialize)
+    )
 
 
 def pq_encode(
@@ -917,14 +924,12 @@ def ivf_multiprobe_topk(
     cell_col: str = "cell",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    k: int = 5,
-    probes: int = 2,
 ) -> DataFrame:
-    """IVF top-k with multi-probe queries: ``vectors`` carry their
-    single assigned ``cell_col``; each query probes its ``probes``
+    """IVF top-5 with multi-probe queries: ``vectors`` carry their
+    single assigned ``cell_col``; each query probes its 2
     nearest cells and searches their union — recall strictly >= the
-    single-probe :func:`ivf_topk` at ``probes`` x the scored
-    candidates (still ~probes·N/cells per query, never N). Because
+    single-probe :func:`ivf_topk` at 2 x the scored
+    candidates (still ~2N/cells per query, never N). Because
     every vector lives in exactly ONE cell and a query's probe cells
     are distinct, the probe fan-out can never score the same
     (query, neighbor) pair twice — no dedup pass needed. Returns
@@ -936,7 +941,6 @@ def ivf_multiprobe_topk(
         ),
         centroids,
         vec_col="__q",
-        probes=probes,
     )
     q = _normed(probed, "__q", "q", "query_id", F.col("cell").alias("__cell"))
     v = _normed(
@@ -946,7 +950,7 @@ def ivf_multiprobe_topk(
     pairs = v.join(F.broadcast(q), "__cell").where(
         F.col("query_id") != F.col("neighbor_id")
     )
-    return _top_k(_scored(pairs), k)
+    return _top_k(_scored(pairs), _IVF_TOP_K)
 
 
 def pca_top_component(
@@ -954,7 +958,6 @@ def pca_top_component(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     dim: int = 64,
-    scale_down: int = 10,
     k: int = 50,
     keep_cols: tuple[str, ...] = ("label",),
 ) -> DataFrame:
@@ -969,7 +972,7 @@ def pca_top_component(
     * the centered scaled covariance ``C = n * sum(x_i x_j) - S_i S_j``
       (= n^2 x covariance) is computed in ONE corpus pass over the
       per-row (i, j) pair expansion — exact integers, no divides;
-    * ``C' = C floordiv 10^scale_down`` caps magnitudes so the 3
+    * ``C' = C floordiv 10^10`` caps magnitudes so the 3
       UNNORMALIZED power steps stay inside 128-bit/DECIMAL(38) range
       (normalizing each step needs a divide; skipping it changes only
       the scale of v, never its direction — and the fixed iteration
@@ -984,9 +987,9 @@ def pca_top_component(
     RELATIONAL certification path; at 100 TB you'd compute the Gram
     matrix with a BLAS ``mapInPandas`` partial (same merge shape:
     sum of per-partition d x d partials) or on a uniform sample, and
-    this operator is the oracle for either. ``scale_down`` must grow
-    ~2 digits per 10x rows to keep iterate growth bounded (documented:
-    f=10 certified to sf0.1; projections peak ~1e36 of the 1e38 cap).
+    this operator is the oracle for either. The 10^10 divisor must grow
+    ~2 digits per 10x rows to keep iterate growth bounded (certified to
+    sf0.1; projections peak ~1e36 of the 1e38 cap).
     """
     spark = emb.sparkSession
     v = emb.where(
@@ -1023,9 +1026,8 @@ def pca_top_component(
     sxx_rows = {(r["i"], r["j"]): int(r["sxx"]) for r in sxx.collect()}
     s_rows = {r["i"]: int(r["s"]) for r in sums.collect()}
     n = int(sums.agg(F.max("n")).collect()[0][0] or 0)
-    f = 10 ** scale_down
     cp = {
-        (i, j): (n * sxx_rows[(i, j)] - s_rows[i] * s_rows[j]) // f
+        (i, j): (n * sxx_rows[(i, j)] - s_rows[i] * s_rows[j]) // 10 ** 10
         for (i, j) in sxx_rows
     }
     vec = {j: 1 for j in range(dim)}

@@ -271,18 +271,17 @@ def salted_join(
     dim: DataFrame,
     fact_key: str,
     dim_key: str,
-    salt_buckets: int = 8,
 ) -> DataFrame:
     """Replicate-small-side salted inner equi-join for known hot keys.
 
-    The fact side gets a deterministic salt in ``[0, salt_buckets)``
+    The fact side gets a deterministic salt in ``[0, 8)``
     (hash of the whole row — identical rows co-bucket, everything else
-    spreads); the dim side is exploded ``salt_buckets``× so every
+    spreads); the dim side is exploded 8× so every
     (key, salt) pair exists. The join key becomes (key, salt), which
-    splits one hot key's row group across ``salt_buckets`` reducers.
+    splits one hot key's row group across 8 reducers.
 
-    Cost model: dim-side rows × salt_buckets extra shuffle volume buys
-    fact-side hot keys spread over salt_buckets tasks — worth it exactly
+    Cost model: dim-side rows × 8 extra shuffle volume buys
+    fact-side hot keys spread over 8 tasks — worth it exactly
     when the dim is small and the fact is skewed (hub proteins in STRING
     edges, SURVEY §4). AQE's skew-join split is the runtime alternative;
     salting is the static one that also works for non-sort-merge plans
@@ -290,10 +289,10 @@ def salted_join(
     the unsalted join (asserted in tests/test_skew_join.py).
     """
     salted_fact = fact.withColumn(
-        "__salt", F.pmod(F.hash(*fact.columns), F.lit(salt_buckets))
+        "__salt", F.pmod(F.hash(*fact.columns), F.lit(8))
     )
     salted_dim = dim.withColumn(
-        "__salt", F.explode(F.array([F.lit(i) for i in range(salt_buckets)]))
+        "__salt", F.explode(F.array([F.lit(i) for i in range(8)]))
     )
     cond = (salted_fact[fact_key] == salted_dim[dim_key]) & (
         salted_fact["__salt"] == salted_dim["__salt"]

@@ -337,16 +337,15 @@ def attribute_time_decay(
     type_col: str,
     conversion_types: list[str],
     touch_types: list[str],
-    max_days: int = 10,
 ) -> DataFrame:
     """Time-decay multi-touch attribution: every conversion splits its
-    credit across ALL strictly-prior touches within a ``max_days``
+    credit across ALL strictly-prior touches within a 10-day
     lookback, weighted by 2^-(whole days elapsed) — recent touches earn
     exponentially more, the standard middle ground between last-touch
     (all credit to one) and linear (equal split).
 
     EXACT arithmetic end-to-end: the weight is carried as the bigint
-    ``1 << (max_days - days)`` (days floored from the microsecond gap),
+    ``1 << (10 - days)`` (days floored from the microsecond gap),
     so numerator and denominator are integers any engine reproduces
     bit-for-bit; the only float is the final single division, rounded
     to 6dp — the pagerank/ewma hash-match discipline. Returns one row
@@ -387,14 +386,14 @@ def attribute_time_decay(
                 & (F.col("__tid") < F.col("conv_id"))
             )
         )
-        & (F.col("__cus") - F.col("__tus") < F.lit((max_days + 1) * day_us)),
+        & (F.col("__cus") - F.col("__tus") < F.lit(11 * day_us)),
     )
     # integer `div`, not float floor(/): exact whole-day buckets; the
     # SQL form because pyspark's shiftleft() only takes a literal int
     # shift, not a per-row Column
     w = F.expr(
         f"shiftleft(cast(1 as bigint), "
-        f"cast({max_days} - ((__cus - __tus) div {day_us}) as int))"
+        f"cast(10 - ((__cus - __tus) div {day_us}) as int))"
     )
     num = (
         j.withColumn("__w", w)

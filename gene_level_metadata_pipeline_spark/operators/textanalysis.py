@@ -524,10 +524,8 @@ def stable_sample(df: DataFrame, key_col: str, fraction: float) -> DataFrame:
     return df.where(F.substring(h, 1, 8) < F.lit(bound))
 
 
-def tf_idf_keywords(
-    df: DataFrame, text_col: str, id_col: str, top_k: int = 3
-) -> DataFrame:
-    """Top-k tf-idf keywords per document (SURVEY §7 Phase 7 text slice).
+def tf_idf_keywords(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Top-3 tf-idf keywords per document (SURVEY §7 Phase 7 text slice).
 
     tf = term count / document length; idf = ln(N / df) over the corpus.
     Two aggregations (term counts per doc; document frequency per term)
@@ -560,7 +558,7 @@ def tf_idf_keywords(
     rank_w = Window.partitionBy(id_col).orderBy(F.col("tfidf").desc(), F.col("w"))
     return (
         scored.withColumn("rank", F.row_number().over(rank_w).cast("long"))
-        .where(F.col("rank") <= top_k)
+        .where(F.col("rank") <= 3)
         .select(id_col, "w", "tfidf", "rank")
     )
 
@@ -612,18 +610,18 @@ def pii_redact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def contamination_check(
-    df: DataFrame, bench: DataFrame, text_col: str, id_col: str, n: int = 5
+    df: DataFrame, bench: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
     """Benchmark-contamination scan: for every candidate document, count
-    distinct word n-grams shared with an evaluation/benchmark corpus and
+    distinct word 5-grams shared with an evaluation/benchmark corpus and
     how many distinct benchmark docs are hit. The benchmark side is tiny
     relative to the corpus → distinct benchmark shingles broadcast, so
     the corpus side is a map-side semi-probe (no corpus shuffle before
     the per-doc agg). Returns (id, n_shared_grams, n_bench_docs)."""
     from gene_level_metadata_pipeline_spark.operators.dedup import word_shingles
 
-    cand = word_shingles(df, text_col, id_col, n)
-    bgrams = word_shingles(bench, text_col, id_col, n).withColumnRenamed(
+    cand = word_shingles(df, text_col, id_col, 5)
+    bgrams = word_shingles(bench, text_col, id_col, 5).withColumnRenamed(
         id_col, "bench_id"
     )
     return (
@@ -647,7 +645,7 @@ def decontaminate(
     5-gram with the evaluation corpus. The contaminated-id set is
     an anti join, so clean documents never shuffle; the detection side
     keeps its broadcast-benchmark shape."""
-    hits = contamination_check(df, bench, text_col, id_col, 5)
+    hits = contamination_check(df, bench, text_col, id_col)
     bad = hits.where(F.col("n_shared_grams") > 0).select(
         id_col
     )
@@ -695,13 +693,11 @@ def remove_dup_spans(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    size: int = 20,
-    min_docs: int = 2,
 ) -> DataFrame:
     """Cross-document boilerplate REMOVAL — the rewrite complement of the
     span detector (``substring_dup_spans`` reports repeated passages;
-    this drops them from the text). Non-overlapping ``size``-token
-    chunks; a full chunk whose md5 appears in ≥ ``min_docs`` distinct
+    this drops them from the text). Non-overlapping 20-token
+    chunks; a full chunk whose md5 appears in ≥ 2 distinct
     documents is boilerplate and is removed from every document; partial
     tail chunks are never candidates (they keep their text). Documents
     reduced to nothing surface with ``clean_text`` NULL.
@@ -724,13 +720,13 @@ def remove_dup_spans(
         F.lit(0).cast("long").alias("n_chunks_dropped"),
     )
     df = df.where(F.col(text_col).isNotNull())
-    chunks = chunk_documents(df, text_col, id_col, size=size, stride=size)
+    chunks = chunk_documents(df, text_col, id_col, size=20, stride=20)
     dup_hashes = (
-        chunks.where(F.col("n_chunk_tokens") == size)
+        chunks.where(F.col("n_chunk_tokens") == 20)
         .select(id_col, F.md5("chunk_text").alias("__h"))
         .groupBy("__h")
         .agg(F.countDistinct(id_col).alias("__nd"))
-        .where(F.col("__nd") >= min_docs)
+        .where(F.col("__nd") >= 2)
         .select("__h")
     )
     kept = chunks.join(
@@ -1700,14 +1696,13 @@ def term_overlap_topk(
     id_col: str,
     query_col: str = "query",
     qid_col: str = "qid",
-    k: int = 20,
 ) -> DataFrame:
     """Distinct-term-overlap ranking — the deliberately simple second
     ranker for fusion demos and a useful recall-oriented first stage:
     score(q, d) = |distinct query words present in d|, ties on doc_id.
     Same inverted-index probe shape as bm25_topk (queries broadcast
     onto the doc term table; only query-word postings survive).
-    Returns (qid, doc_id, overlap, rank) for the per-query top k."""
+    Returns (qid, doc_id, overlap, rank) for the per-query top 20."""
     from pyspark.sql import Window
 
     qw = queries.select(
@@ -1726,7 +1721,7 @@ def term_overlap_topk(
     )
     return (
         hits.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 20)
     )
 
 
@@ -1734,11 +1729,10 @@ def skipgram_pairs(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    window: int = 2,
 ) -> DataFrame:
     """Skip-gram (center, context) pair extraction — the word2vec /
     GloVe co-occurrence data generator: every ordered token pair at
-    distance 1..``window`` inside a document yields both (a→b) and
+    distance 1..2 inside a document yields both (a→b) and
     (b→a) training pairs, aggregated to (center, context, n). Token
     positions come from the raw whitespace split (empties keep their
     position, then drop — engine-independent positions), so any engine
@@ -1746,11 +1740,11 @@ def skipgram_pairs(
     exactly.
 
     Scale shape: the positional self-join keys on the document id with
-    a bounded position-range predicate — work is O(tokens × window)
+    a bounded position-range predicate — work is O(tokens × 2)
     and document-local (no cross-doc pairs, the shuffle key is the doc
     id), then one map-side-combinable aggregation onto the pair
     vocabulary. The classic formulation at 100 TB: pair generation
-    never materializes more than window rows per token."""
+    never materializes more than 2 rows per token."""
     toks = docs.select(
         F.col(id_col).alias("did"),
         F.posexplode(F.split(text_col, " ")).alias("p", "w"),
@@ -1763,7 +1757,7 @@ def skipgram_pairs(
     )
     ordered = a.join(b, "did").where(
         (F.col("pb") >= F.col("pa") + 1)
-        & (F.col("pb") <= F.col("pa") + window)
+        & (F.col("pb") <= F.col("pa") + 2)
     )
     sym = ordered.select(
         F.col("wa").alias("center"), F.col("wb").alias("context")
@@ -1781,7 +1775,6 @@ def mmr_diversify(
     candidates: DataFrame,
     sims: DataFrame,
     k: int = 3,
-    rel_weight: int = 100,
 ) -> DataFrame:
     """Maximal-marginal-relevance re-ranking (Carbonell & Goldstein
     1998) — the diversity stage of a retrieval stack: greedily pick the
@@ -1790,7 +1783,7 @@ def mmr_diversify(
     = (qid, doc_id, rel) fixed-point relevances, ``sims`` = (qid, a,
     b, sim) fixed-point pairwise similarities among the candidates
     (missing pair => similarity 0). Round 1 takes the max-relevance
-    candidate; round r scores the rest as rel*rel_weight - max(sim to
+    candidate; round r scores the rest as rel*100 - max(sim to
     selected) under the (score DESC, doc_id ASC) total order — every
     pick a pure function of the inputs, so a k-round unrolled SQL
     recurrence replays it exactly. Returns (qid, pick_order, doc_id).
@@ -1841,7 +1834,7 @@ def mmr_diversify(
         )
         scored = redundancy.select(
             "qid", "doc_id",
-            (F.col("rel") * rel_weight - F.col("red")).alias("score"),
+            (F.col("rel") * 100 - F.col("red")).alias("score"),
         )
         w = Window.partitionBy("qid").orderBy(
             F.col("score").desc(), F.col("doc_id").asc()

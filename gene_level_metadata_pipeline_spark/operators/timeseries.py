@@ -143,7 +143,6 @@ def rolling_zscore(
     value_col: str,
     tie_col: str,
     window: int = 20,
-    threshold: float = 3.0,
 ) -> DataFrame:
     """Rolling z-score anomaly detection per series — the streaming-
     telemetry data-quality gate (is this point surprising given the
@@ -162,7 +161,7 @@ def rolling_zscore(
     std get a NULL ``z`` and ``is_anomaly`` NULL (warm-up and
     constant-series rows are "don't know", not "normal").
 
-    Returns the input plus (z, is_anomaly). Scale: one shuffle on
+    Returns the input plus (z, is_anomaly = |z| > 3). Scale: one shuffle on
     ``key_col``; state per row is the O(window) frame — bounded,
     skew-safe for any realistic window size.
     """
@@ -194,7 +193,7 @@ def rolling_zscore(
     )
     return df.withColumn("z", z).withColumn(
         "is_anomaly",
-        F.when(F.col("z").isNotNull(), F.abs(F.col("z")) > threshold),
+        F.when(F.col("z").isNotNull(), F.abs(F.col("z")) > 3.0),
     )
 
 
@@ -498,15 +497,14 @@ def ohlc_bars(
     ts_col: str,
     id_col: str,
     value_col: str,
-    grain: str = "hour",
 ) -> DataFrame:
-    """Candlestick (OHLC) bars per key per time bucket: open/close are
+    """Candlestick (OHLC) bars per key per hour: open/close are
     the first/last observation in (ts, id) order, high/low the extremes
     — the standard series downsample. One hash aggregate (max_by /
     min_by on the (ts, id) struct — no window, no sort), so the plan is
     a map-side-combined groupBy at any scale. Deterministic because the
     (ts, id) struct is a total order. NULL values excluded; the bucket
-    is ``date_trunc(grain, ts)`` rendered as a string for
+    is ``date_trunc('hour', ts)`` rendered as a string for
     engine-neutral output.
     """
     order = F.struct(
@@ -517,7 +515,7 @@ def ohlc_bars(
         .groupBy(
             F.col(partition_by).alias("key"),
             F.date_format(
-                F.date_trunc(grain, F.col(ts_col)), "yyyy-MM-dd HH:mm:ss"
+                F.date_trunc("hour", F.col(ts_col)), "yyyy-MM-dd HH:mm:ss"
             ).alias("bucket"),
         )
         .agg(

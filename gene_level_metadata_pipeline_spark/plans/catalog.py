@@ -22,9 +22,7 @@ class Catalog:
         self.spark = spark
         self._tables: dict[str, DataFrame] = {}
 
-    def put(self, name: str, df: DataFrame, cache: bool = False) -> DataFrame:
-        if cache:
-            df = df.cache()
+    def put(self, name: str, df: DataFrame) -> DataFrame:
         df.createOrReplaceTempView(name)
         self._tables[name] = df
         return df

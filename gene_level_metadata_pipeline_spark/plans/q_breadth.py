@@ -301,7 +301,7 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
     truth = brute_force_topk(emb, queries, k=5).select("query_id", "neighbor_id")
-    approx = ivf_topk(emb, queries, cell_col="label", k=5).select(
+    approx = ivf_topk(emb, queries, cell_col="label").select(
         "query_id", "neighbor_id"
     )
     tp = truth.join(approx, ["query_id", "neighbor_id"]).agg(
@@ -319,13 +319,18 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Shared DuckDB CTE chain: one deterministic Lloyd iteration from the
-# vec_id<8 seeds to learned centroids and final cell assignments —
+# 8 lowest-id seeds to learned centroids and final cell assignments —
 # mirrors similarity.kmeans_centroids/assign_cells exactly (rounded-4dp
 # cosine argmax with lowest-cid ties; DECIMAL(25,12) component means
-# rounded to 6dp so both engines derive bit-identical centroids).
+# rounded to 6dp so both engines derive bit-identical centroids). A
+# vector with a NaN element seeds nothing and gets no cell.
+_HAS_NAN = "coalesce(list_bool_or(list_transform(e, x -> isnan(x))), false)"
 _IVF_KMEANS_CTES = f"""
     v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    seeds AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8),
+    seeds AS (
+      SELECT vec_id AS cid, e AS ce FROM v WHERE NOT {_HAS_NAN}
+      ORDER BY vec_id LIMIT 8
+    ),
     a1 AS (
       SELECT vec_id, cid FROM (
         SELECT v.vec_id, s.cid,
@@ -333,7 +338,7 @@ _IVF_KMEANS_CTES = f"""
                  PARTITION BY v.vec_id
                  ORDER BY round({_COS.format(a='v.e', b='s.ce')}, 4) DESC, s.cid
                ) AS rn
-        FROM v CROSS JOIN seeds s
+        FROM v CROSS JOIN seeds s WHERE NOT {_HAS_NAN}
       ) WHERE rn = 1
     ),
     el AS (
@@ -353,7 +358,7 @@ _IVF_KMEANS_CTES = f"""
                  PARTITION BY v.vec_id
                  ORDER BY round({_COS.format(a='v.e', b='c.ce')}, 4) DESC, c.cid
                ) AS rn
-        FROM v CROSS JOIN cent c
+        FROM v CROSS JOIN cent c WHERE NOT {_HAS_NAN}
       ) WHERE rn = 1
     ),
     vv AS (SELECT v.vec_id, v.e, cells.cell FROM v JOIN cells USING (vec_id))
@@ -408,7 +413,7 @@ def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vv = _ivf_kmeans_cells(spark, sf_dir)
     return ivf_topk(
-        vv, vv.where(F.col("vec_id") < 10), cell_col="cell", k=5
+        vv, vv.where(F.col("vec_id") < 10), cell_col="cell"
     )
 
 
@@ -465,7 +470,7 @@ def q_ann_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = brute_force_topk(
         vv.drop("cell"), queries.drop("cell"), k=5
     ).select("query_id", "neighbor_id")
-    approx = ivf_topk(vv, queries, cell_col="cell", k=5).select(
+    approx = ivf_topk(vv, queries, cell_col="cell").select(
         "query_id", "neighbor_id"
     )
     tp = truth.join(approx, ["query_id", "neighbor_id"]).agg(
@@ -586,7 +591,7 @@ def _pq_pieces(spark: SparkSession, sf_dir: str):
     emb = _t(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
-    cb = pq_codebooks(emb, dim=64, m=8, k=16, iters=1)
+    cb = pq_codebooks(emb, dim=64, m=8, k=16)
     codes = pq_encode(emb, cb, dim=64, m=8)
     return emb, cb, codes
 
@@ -1368,7 +1373,7 @@ def q_ann_ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = kmeans_centroids(emb, k=8, iters=1)
     vv = _ivf_kmeans_cells(spark, sf_dir)
     return ivf_multiprobe_topk(
-        vv, emb.where(F.col("vec_id") < 10), cent, k=5, probes=2
+        vv, emb.where(F.col("vec_id") < 10), cent
     )
 
 
@@ -1442,7 +1447,7 @@ def q_ann_ivf_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = brute_force_topk(emb, queries, k=5).select(
         "query_id", "neighbor_id"
     )
-    approx = ivf_multiprobe_topk(vv, queries, cent, k=5, probes=2).select(
+    approx = ivf_multiprobe_topk(vv, queries, cent).select(
         "query_id", "neighbor_id"
     )
     tp = truth.join(approx, ["query_id", "neighbor_id"]).agg(

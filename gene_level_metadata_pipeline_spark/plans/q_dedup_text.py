@@ -670,7 +670,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return embedding_near_dup(
-        _t(spark, sf_dir, "embeddings"), planes=4, threshold=0.15
+        _t(spark, sf_dir, "embeddings"), threshold=0.15
     )
 
 
@@ -801,7 +801,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return semantic_near_dup(
-        _t(spark, sf_dir, "embeddings"), k=8, iters=1, threshold=0.15
+        _t(spark, sf_dir, "embeddings"), k=8, threshold=0.15
     )
 
 
@@ -972,7 +972,7 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     df = attach_binary_payload(_t(spark, sf_dir, "documents"), "text", "doc_id")
-    frames = sample_frames(df, every_n=30, frame_bytes=4, codec="fake")
+    frames = sample_frames(df, every_n=30, codec="fake")
     return frames.select(
         "doc_id", "frame_idx", F.hex("frame").alias("frame_hex")
     )
@@ -1082,7 +1082,7 @@ def q_text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     bench = d.where(F.col("doc_id") % 97 == 0)
     cand = d.where(F.col("doc_id") % 97 != 0)
-    return contamination_check(cand, bench, "text", "doc_id", n=5)
+    return contamination_check(cand, bench, "text", "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1663,7 +1663,7 @@ def q_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("n") >= 3)
         .select("u", "v")
     )
-    pr = pagerank(und, iterations=3)
+    pr = pagerank(und)
     return pr.select(F.col("node").alias("suppkey"), F.col("pr").alias("pr_micro"))
 
 
@@ -1706,7 +1706,7 @@ def q_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_partkey") % 256).alias("zx"),
         (F.col("l_suppkey") % 256).alias("zy"),
     )
-    z = li.withColumn("zv", zorder_value(["zx", "zy"], bits=8))
+    z = li.withColumn("zv", zorder_value(["zx", "zy"]))
     return (
         z.groupBy((F.col("zv") / 4096).cast("long").alias("bucket"))
         .agg(
@@ -2017,7 +2017,7 @@ def q_remove_dup_spans_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return remove_dup_spans(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", size=20, min_docs=2
+        _t(spark, sf_dir, "documents"), "text", "doc_id"
     )
 
 
@@ -2564,7 +2564,7 @@ def q_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nodes = und.select("u").union(und.select("v")).distinct()
     seeds = nodes.where(F.col("u") % 10 == 0)
-    pr = pagerank(und, iterations=3, seeds=seeds)
+    pr = pagerank(und, seeds=seeds)
     return pr.select(F.col("node").alias("suppkey"), F.col("pr").alias("pr_micro"))
 
 
@@ -3992,7 +3992,7 @@ def q_audio_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unhex(F.concat(*sample_hex)),
     )
     wav = docs.select("doc_id", payload.alias("payload"))
-    dec = decode_audio(wav, payload_col="payload", codec="wav", head_n=8)
+    dec = decode_audio(wav, payload_col="payload", codec="wav")
     return dec.select(
         "doc_id", "sample_rate", "n_channels",
         "n_frames",

@@ -43,7 +43,7 @@ def q_salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = _t(spark, sf_dir, "lineitem").select("l_suppkey", "l_extendedprice", "l_discount")
     su = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    j = salted_join(li, su, "l_suppkey", "s_suppkey", salt_buckets=8)
+    j = salted_join(li, su, "l_suppkey", "s_suppkey")
     return j.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n_items"),
         _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),

@@ -144,7 +144,7 @@ def q_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_stream_interval_join,
     )
 
-    return stream_stream_interval_join(spark, sf_dir, minutes=30)
+    return stream_stream_interval_join(spark, sf_dir)
 
 
 @_register(

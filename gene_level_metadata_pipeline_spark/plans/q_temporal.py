@@ -380,7 +380,7 @@ def q_rolling_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _events(spark, sf_dir).select("event_id", "ts", "event_type", "value")
     return rolling_zscore(
-        ev, "event_type", "ts", "value", "event_id", window=20, threshold=3.0
+        ev, "event_type", "ts", "value", "event_id", window=20
     ).select("event_id", "event_type", "z", "is_anomaly")
 
 
@@ -971,7 +971,7 @@ def q_ohlc_bars_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = _events(spark, sf_dir)
-    return ohlc_bars(ev, "user_id", "ts", "event_id", "value", "hour")
+    return ohlc_bars(ev, "user_id", "ts", "event_id", "value")
 
 
 @_register(
@@ -2350,7 +2350,7 @@ def q_attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
     return attribute_time_decay(
         ev, "user_id", "ts", "event_id", "event_type",
-        ["purchase"], ["click", "view"], max_days=10,
+        ["purchase"], ["click", "view"],
     )
 
 

@@ -853,8 +853,6 @@ def q_abc_parts_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         li,
         "l_partkey",
         F.col("l_extendedprice") * (1 - F.col("l_discount")),
-        a_cut=(1, 2),
-        b_cut=(4, 5),
     )
     return out.select(
         F.col("key").alias("partkey"),
@@ -1881,7 +1879,7 @@ def q_graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     und = _part_cooccurrence_edges(spark, sf_dir, keep_weight=True)
     seed = und.agg(F.min("u").alias("node"))
-    out = sssp_weighted(und, seed, weight="w", max_hops=4, directed=False)
+    out = sssp_weighted(und, seed, weight_col="w", max_hops=4, directed=False)
     return out.select(F.col("node").alias("partkey"), F.col("dist"))
 
 
@@ -2444,8 +2442,7 @@ def q_rag_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qid bigint, query string",
     )
     bm = bm25_topk(docs, queries, text_col="text", id_col="doc_id", k=20)
-    ov = term_overlap_topk(docs, queries, text_col="text", id_col="doc_id",
-                           k=20)
+    ov = term_overlap_topk(docs, queries, text_col="text", id_col="doc_id")
     fused = rrf_fuse(
         bm.select("qid", "doc_id", "rank"),
         ov.select("qid", "doc_id", "rank"),
@@ -2666,7 +2663,7 @@ def q_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         skipgram_pairs,
     )
 
-    agg = skipgram_pairs(_t(spark, sf_dir, "documents"), window=2)
+    agg = skipgram_pairs(_t(spark, sf_dir, "documents"))
     w = Window.orderBy(F.col("n").desc(), F.col("center"), F.col("context"))
     return (
         agg.withColumn("rank", F.row_number().over(w).cast("bigint"))
@@ -2903,7 +2900,6 @@ def q_conformal_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return conformal_split_interval(
         base, group="o_orderpriority", y_col="y", id_col="o_orderkey",
-        alpha_pct=10,
     )
 
 
@@ -2964,7 +2960,7 @@ def q_target_encode_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return target_encode_kfold(
         base, cat_col="o_orderpriority", target_col="t",
-        id_col="o_orderkey", folds=5,
+        id_col="o_orderkey",
     ).withColumnRenamed("cat", "cat")
 
 
@@ -3136,7 +3132,7 @@ def q_rag_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("i * 1000000 div (na + nb - i)").alias("sim"),
         )
     )
-    return mmr_diversify(cand, sims, k=3, rel_weight=100)
+    return mmr_diversify(cand, sims, k=3)
 
 
 @_register(
@@ -3396,7 +3392,7 @@ def q_mixture_reweight_mw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     return mixture_reweight_mw(
-        docs, domain_col="source", stat_col="n_chars", rounds=4,
+        docs, domain_col="source", stat_col="n_chars",
     )
 
 
@@ -3540,7 +3536,7 @@ def q_fdr_bh_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long") % F.lit(1_000_001)
         ).alias("p_e6"),
     )
-    return fdr_bh(tests, p_col="p_e6", key_col="id", alpha_e6=50_000)
+    return fdr_bh(tests, p_col="p_e6", key_col="id")
 
 
 @_register(

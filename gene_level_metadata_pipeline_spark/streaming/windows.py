@@ -486,14 +486,12 @@ def asof_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_stream_interval_join(
-    spark: SparkSession, sf_dir: str, minutes: int = 30
-) -> DataFrame:
+def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream event-time interval join: click → purchase funnels.
 
     Joins two STREAMING sides (clicks and purchases filtered from the same
     source stream) on user_id with the purchase constrained to
-    [click.ts, click.ts + ``minutes``]. Both sides carry watermarks, so
+    [click.ts, click.ts + 30 minutes]. Both sides carry watermarks, so
     Spark bounds the join state: a buffered click is evicted once the
     purchase-side watermark passes click.ts + interval — the unbounded-
     stream contract that makes this run forever at 100 TB/day.
@@ -530,7 +528,7 @@ def stream_stream_interval_join(
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (
             F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {int(minutes)} MINUTES")
+            <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")
         ),
     ).select(
         "click_id",

@@ -157,7 +157,7 @@ def test_ivf_topk_searches_only_own_cell(spark):
         [(0, [1.0, 0.0], 0), (1, [0.9, 0.1], 0), (2, [1.0, 0.0], 1)],
         ["vec_id", "embedding", "label"],
     )
-    out = similarity.ivf_topk(vecs, vecs.where("vec_id = 0"), cell_col="label", k=5).collect()
+    out = similarity.ivf_topk(vecs, vecs.where("vec_id = 0"), cell_col="label").collect()
     neighbors = {r["neighbor_id"] for r in out}
     assert neighbors == {1}  # vec 2 is identical but lives in another cell
 
@@ -228,7 +228,7 @@ def test_tfidf_hand_checked(spark):
         ["doc_id", "text"],
     )
     out = {(r["doc_id"], r["w"]): r["tfidf"]
-           for r in tf_idf_keywords(df, "text", "doc_id", top_k=3).collect()}
+           for r in tf_idf_keywords(df, "text", "doc_id").collect()}
     # apple: tf 2/3, df 1 -> (2/3)*ln(2); banana: df 2 -> idf 0
     assert out[(1, "apple")] == round((2 / 3) * math.log(2), 6)
     assert out[(1, "banana")] == 0.0
@@ -251,7 +251,7 @@ def test_embedding_near_dup_transitive_chain(spark):
         ],
         ["vec_id", "embedding"],
     )
-    out = embedding_near_dup(df, planes=4, threshold=0.95)
+    out = embedding_near_dup(df, threshold=0.95)
     got = {r.vec_id: (r.canonical_id, r.is_canonical) for r in out.collect()}
     assert got == {1: (1, True), 2: (1, False), 3: (1, False), 4: (4, True)}
 
@@ -300,7 +300,7 @@ def test_contamination_check_counts_shared_grams(spark):
         ["doc_id", "text"],
     )
     out = {r["doc_id"]: r for r in
-           textanalysis.contamination_check(cand, bench, "text", "doc_id", n=5).collect()}
+           textanalysis.contamination_check(cand, bench, "text", "doc_id").collect()}
     # bench has 2 distinct 5-grams; doc 1 contains both
     assert out[1]["n_shared_grams"] == 2 and out[1]["n_bench_docs"] == 1
     assert 2 not in out
@@ -627,7 +627,7 @@ def test_remove_dup_spans_drops_shared_boilerplate(spark):
         "doc_id bigint, text string",
     )
     out = {r.doc_id: r for r in
-           remove_dup_spans(docs, "text", "doc_id", size=20).collect()}
+           remove_dup_spans(docs, "text", "doc_id").collect()}
     # the shared leading chunk vanishes from every doc; unique chunks stay
     assert out[1].clean_text == uniq_a + " tail"
     assert (out[1].n_chunks_kept, out[1].n_chunks_dropped) == (2, 1)
@@ -787,7 +787,7 @@ def test_semantic_near_dup_canonicalizes_within_cells(spark):
     out = {
         r["vec_id"]: (r["canonical_id"], r["is_canonical"])
         for r in similarity.semantic_near_dup(
-            vecs, k=2, iters=1, threshold=0.99
+            vecs, k=2, threshold=0.99
         ).collect()
     }
     assert out == {0: (0, True), 1: (1, True), 2: (0, False), 3: (1, False)}
@@ -798,7 +798,7 @@ def test_semantic_near_dup_canonicalizes_within_cells(spark):
     out2 = {
         r["vec_id"]: r["canonical_id"]
         for r in similarity.semantic_near_dup(
-            vecs, k=2, iters=1, threshold=0.99, max_cell_size=2
+            vecs, k=2, threshold=0.99, max_cell_size=2
         ).collect()
     }
     assert out2 == {0: 0, 1: 1, 2: 0, 3: 1}
@@ -1492,7 +1492,7 @@ class TestPcaTopComponent:
             rows, "vec_id bigint, embedding array<float>, label int"
         )
         got = pca_top_component(
-            df, dim=4, scale_down=10, k=3
+            df, dim=4, k=3
         ).collect()
         # top-|projection| docs are the extreme axis-0 vectors (the
         # projection is uncentered, so the axis-0 mean offset decides

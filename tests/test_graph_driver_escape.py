@@ -136,7 +136,7 @@ def test_cc_escape_equivalence(frames):
 def test_pagerank_escape_equivalence(frames):
     edf, _ = frames
     (dr, ds), (vr, vs) = _both_paths(
-        lambda: graph.pagerank(edf, iterations=3)
+        lambda: graph.pagerank(edf)
     )
     assert dr == vr and ds == vs
 
@@ -144,7 +144,7 @@ def test_pagerank_escape_equivalence(frames):
 def test_pagerank_personalized_escape_equivalence(frames):
     edf, seeds = frames
     (dr, ds), (vr, vs) = _both_paths(
-        lambda: graph.pagerank(edf, iterations=3, seeds=seeds)
+        lambda: graph.pagerank(edf, seeds=seeds)
     )
     assert dr == vr and ds == vs
 

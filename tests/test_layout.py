@@ -96,7 +96,7 @@ def test_zorder_bucket_envelopes_bounded(spark):
     df = spark.range(0, 4096).select(
         (F.col("id") % 256).alias("zx"), (F.floor(F.col("id") / 16) % 256).alias("zy")
     )
-    z = df.withColumn("zv", zorder_value(["zx", "zy"], bits=8))
+    z = df.withColumn("zv", zorder_value(["zx", "zy"]))
     stats = (
         z.groupBy((F.col("zv") / 4096).cast("long").alias("bucket"))
         .agg(

@@ -1,12 +1,19 @@
 """Every option has a caller: a static guard, no import, no Spark job.
 
-Scans the package's public module-level functions (outside the query
-modules ``plans/q_*.py``) and every call site in the package, ``tests/``,
-``tools/``, ``bench.py`` and ``perfbench/``. A defaulted parameter that no
-call site ever sets — by keyword, by position or through ``**kwargs`` —
-is a knob only its default has ever run: fold it into a constant inside
-the function instead. Passing the default itself as a literal
-(``max_iter=20`` where the default is 20) does not count as setting it.
+Scans the package's public module-level functions and the public methods
+of its public module-level classes (keyed ``Class.method``, ``self`` and
+``cls`` skipped), outside the query modules ``plans/q_*.py``, and every
+call site in the package, ``tests/``, ``tools/``, ``bench.py`` and
+``perfbench/``. A defaulted parameter that no call site ever sets — by
+keyword, by position or through ``**kwargs`` — is a knob only its default
+has ever run: fold it into a constant inside the function instead.
+Passing the default itself as a literal (``max_iter=20`` where the default
+is 20) does not count as setting it.
+
+A package function referenced as a value — passed as an argument,
+assigned, or stored in a container — may be called through that value
+with any arguments the guard cannot see, so every one of its parameters
+counts as set.
 
 Exempt by name, because they bind the caller's data rather than change
 what an operator computes: column bindings (``*_col``, ``*_cols``,
@@ -35,33 +42,44 @@ def _exempt(param: str) -> bool:
     )
 
 
-def _defaulted_params() -> dict[tuple[str, str], tuple[list[str], dict]]:
-    """(module, function) -> (positional parameter names, {defaulted name:
-    default expression})."""
+def _signature(node: ast.FunctionDef, bound: bool):
+    """(positional parameter names, {defaulted name: default expression});
+    a bound method's first parameter (``self``/``cls``) is not one a call
+    site passes."""
+    a = node.args
+    pos = [x.arg for x in a.posonlyargs + a.args]
+    dflt = dict(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+    dflt.update(
+        (x.arg, d) for x, d in zip(a.kwonlyargs, a.kw_defaults)
+        if d is not None
+    )
+    return (pos[1:] if bound else pos), dflt
+
+
+def _defaulted_params(sources) -> dict[tuple[str, str], tuple]:
+    """(module, function or Class.method) -> signature (see
+    :func:`_signature`), for every public function and public method of a
+    public class in ``sources``, an iterable of (module name, source
+    text)."""
     out = {}
-    for path in sorted(PKG.rglob("*.py")):
-        if path.parent.name == "plans" and path.name.startswith("q_"):
-            continue
-        rel = str(path.relative_to(REPO))
-        for node in ast.parse(path.read_text()).body:
-            if not isinstance(node, ast.FunctionDef) or node.name.startswith("_"):
+    for rel, text in sources:
+        for node in ast.parse(text).body:
+            if getattr(node, "name", "_").startswith("_"):
                 continue
-            a = node.args
-            pos = [x.arg for x in a.posonlyargs + a.args]
-            dflt = dict(zip(pos[len(pos) - len(a.defaults):], a.defaults))
-            dflt.update(
-                (x.arg, d) for x, d in zip(a.kwonlyargs, a.kw_defaults)
-                if d is not None
-            )
-            out[(rel, node.name)] = (pos, dflt)
+            if isinstance(node, ast.FunctionDef):
+                out[(rel, node.name)] = _signature(node, bound=False)
+            elif isinstance(node, ast.ClassDef):
+                for m in node.body:
+                    if not isinstance(m, ast.FunctionDef) or m.name[0] == "_":
+                        continue
+                    static = any(
+                        getattr(d, "id", None) == "staticmethod"
+                        for d in m.decorator_list
+                    )
+                    out[(rel, f"{node.name}.{m.name}")] = _signature(
+                        m, bound=not static
+                    )
     return out
-
-
-def _call_sites() -> list[Path]:
-    files = [REPO / "bench.py"]
-    for d in (PKG, REPO / "tests", REPO / "tools", REPO / "perfbench"):
-        files += sorted(d.rglob("*.py"))
-    return files
 
 
 def _literal(node):
@@ -82,13 +100,38 @@ def _sets(value, default) -> bool:
     return lit is None or lit != _literal(default)
 
 
-def _passed_params(defs) -> dict[tuple[str, str], set[str]]:
+def _ref_name(node):
+    """The name a Name or Attribute node refers to; None for other nodes."""
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    return None
+
+
+def _values(node) -> list:
+    """The expressions ``node`` passes as an argument, assigns, or stores
+    in a container: where a function named there is used as a value."""
+    if isinstance(node, ast.Call):
+        return node.args + [kw.value for kw in node.keywords]
+    if isinstance(node, (ast.Assign, ast.AnnAssign, ast.NamedExpr)):
+        return [node.value]
+    if isinstance(node, (ast.List, ast.Tuple, ast.Set)):
+        return node.elts
+    if isinstance(node, ast.Dict):
+        return node.values
+    return []
+
+
+def _passed_params(defs, sources) -> dict[tuple[str, str], set[str]]:
+    """The parameters of each definition in ``defs`` that some call site
+    in ``sources`` (module name, source text) sets."""
     by_name: dict[str, list[tuple[str, str]]] = {}
     for key in defs:
-        by_name.setdefault(key[1], []).append(key)
+        by_name.setdefault(key[1].rsplit(".", 1)[-1], []).append(key)
     passed: dict[tuple[str, str], set[str]] = {key: set() for key in defs}
-    for path in _call_sites():
-        tree = ast.parse(path.read_text())
+    for _rel, text in sources:
+        tree = ast.parse(text)
         alias = {
             a.asname: a.name
             for n in ast.walk(tree)
@@ -96,26 +139,29 @@ def _passed_params(defs) -> dict[tuple[str, str], set[str]]:
             for a in n.names
             if a.asname
         }
-        for call in ast.walk(tree):
-            if not isinstance(call, ast.Call):
+        for node in ast.walk(tree):
+            for value in _values(node):
+                # a function value: the call through it is out of sight
+                name = _ref_name(value)
+                for key in by_name.get(alias.get(name, name), ()):
+                    passed[key].update(defs[key][1])
+            if not isinstance(node, ast.Call):
                 continue
-            f = call.func
-            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-            name = alias.get(name, name)
-            for key in by_name.get(name, ()):
+            name = _ref_name(node.func)
+            for key in by_name.get(alias.get(name, name), ()):
                 pos, dflt = defs[key]
 
                 def note(param, value):
                     if _sets(value, dflt.get(param)):
                         passed[key].add(param)
 
-                for i, arg in enumerate(call.args):
+                for i, arg in enumerate(node.args):
                     if isinstance(arg, ast.Starred):
                         passed[key].update(pos[i:])
                         break
                     if i < len(pos):
                         note(pos[i], arg)
-                for kw in call.keywords:
+                for kw in node.keywords:
                     if kw.arg is not None:
                         note(kw.arg, kw.value)
                     elif isinstance(kw.value, ast.Dict):
@@ -127,60 +173,66 @@ def _passed_params(defs) -> dict[tuple[str, str], set[str]]:
     return passed
 
 
-# Parameters whose every call site passes the default literal itself: still
-# knobs no caller varies, kept when the literal guard came in. Shrink-only:
-# fold one and delete its line here; a parameter never joins this list.
-_DEFAULT_ONLY = {
-    "operators/drift.py::conformal_split_interval(alpha_pct)",
-    "operators/drift.py::fdr_bh(alpha_e6)",
-    "operators/drift.py::target_encode_kfold(folds)",
-    "operators/graph.py::pagerank(iterations)",
-    "operators/graph.py::sssp_weighted(weight)",
-    "operators/layout.py::zorder_value(bits)",
-    "operators/multimodal.py::decode_audio(head_n)",
-    "operators/multimodal.py::sample_frames(frame_bytes)",
-    "operators/selection.py::abc_classification(a_cut)",
-    "operators/selection.py::abc_classification(b_cut)",
-    "operators/selection.py::mixture_reweight_mw(rounds)",
-    "operators/similarity.py::embedding_near_dup(planes)",
-    "operators/similarity.py::ivf_multiprobe_topk(k)",
-    "operators/similarity.py::ivf_multiprobe_topk(probes)",
-    "operators/similarity.py::ivf_topk(k)",
-    "operators/similarity.py::pca_top_component(scale_down)",
-    "operators/similarity.py::pq_codebooks(iters)",
-    "operators/similarity.py::semantic_near_dup(iters)",
-    "operators/skew.py::salted_join(salt_buckets)",
-    "operators/temporal.py::attribute_time_decay(max_days)",
-    "operators/textanalysis.py::contamination_check(n)",
-    "operators/textanalysis.py::mmr_diversify(rel_weight)",
-    "operators/textanalysis.py::remove_dup_spans(size)",
-    "operators/textanalysis.py::remove_dup_spans(min_docs)",
-    "operators/textanalysis.py::skipgram_pairs(window)",
-    "operators/textanalysis.py::term_overlap_topk(k)",
-    "operators/textanalysis.py::tf_idf_keywords(top_k)",
-    "operators/timeseries.py::ohlc_bars(grain)",
-    "operators/timeseries.py::rolling_zscore(threshold)",
-    "streaming/windows.py::stream_stream_interval_join(minutes)",
-}
-
-
-def test_every_defaulted_parameter_has_a_caller():
-    defs = _defaulted_params()
-    passed = _passed_params(defs)
-    never_set = {
-        f"{Path(mod).relative_to(PKG.name)}::{fn}({p})"
+def _never_set(definitions, call_sites) -> set[str]:
+    """``module::function(param)`` for every non-exempt defaulted parameter
+    of ``definitions`` that no call in ``call_sites`` sets; both are
+    iterables of (module name, source text)."""
+    defs = _defaulted_params(definitions)
+    passed = _passed_params(defs, call_sites)
+    return {
+        f"{mod}::{fn}({p})"
         for (mod, fn), (_pos, dflt) in defs.items()
         for p in dflt
         if p not in passed[(mod, fn)] and not _exempt(p)
     }
-    new = sorted(never_set - _DEFAULT_ONLY)
-    assert not new, (
-        f"{len(new)} defaulted parameter(s) that no call site sets to a "
+
+
+def _package_definitions():
+    for path in sorted(PKG.rglob("*.py")):
+        if not (path.parent.name == "plans" and path.name.startswith("q_")):
+            yield str(path.relative_to(PKG)), path.read_text()
+
+
+def _repo_call_sites():
+    files = [REPO / "bench.py"]
+    for d in (PKG, REPO / "tests", REPO / "tools", REPO / "perfbench"):
+        files += sorted(d.rglob("*.py"))
+    for path in files:
+        yield str(path.relative_to(REPO)), path.read_text()
+
+
+def test_every_defaulted_parameter_has_a_caller():
+    never = sorted(_never_set(_package_definitions(), _repo_call_sites()))
+    assert not never, (
+        f"{len(never)} defaulted parameter(s) that no call site sets to a "
         "value other than the default — fold each into a constant inside "
-        "its function:\n  " + "\n  ".join(new)
+        "its function:\n  " + "\n  ".join(never)
     )
-    folded = sorted(_DEFAULT_ONLY - never_set)
-    assert not folded, (
-        "now set by a caller, folded or deleted — remove from "
-        "_DEFAULT_ONLY:\n  " + "\n  ".join(folded)
+
+
+_LIB = '''
+def op(df, key, k=5):
+    return df
+
+class Store:
+    def put(self, name, df, cache=False):
+        return df
+'''
+
+
+def test_a_call_through_a_function_value_sets_every_parameter():
+    direct = "op(df, 'id')\n"
+    through = "def run(fn):\n    return fn(df, 'id', 9)\nrun(op)\n"
+    lib = [("lib.py", _LIB)]
+    assert "lib.py::op(k)" in _never_set(lib, [("use.py", direct)])
+    assert "lib.py::op(k)" not in _never_set(lib, [("use.py", through)])
+
+
+def test_a_public_methods_never_set_parameter_is_reported():
+    default = "Store().put('t', df)\n"
+    set_it = "Store().put('t', df, True)\n"
+    lib = [("lib.py", _LIB)]
+    assert "lib.py::Store.put(cache)" in _never_set(lib, [("use.py", default)])
+    assert "lib.py::Store.put(cache)" not in _never_set(
+        lib, [("use.py", set_it)]
     )

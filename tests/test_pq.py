@@ -56,7 +56,7 @@ def _l2sq4(a, b):
 
 
 def _py_train_encode(X):
-    """Replay pq_codebooks(iters=1) + pq_encode."""
+    """Replay pq_codebooks (one Lloyd step) + pq_encode."""
     seeds = {s: {i: X[i, s * SUB:(s + 1) * SUB] for i in range(K)} for s in range(M)}
 
     def assign(cents):
@@ -97,7 +97,7 @@ def test_chain_matches_python_replay():
 
     X = _data()
     df = _df(X)
-    cb = pq_codebooks(df, dim=D, m=M, k=K, iters=1)
+    cb = pq_codebooks(df, dim=D, m=M, k=K)
     codes = pq_encode(df, cb, dim=D, m=M)
     cents, a2 = _py_train_encode(X)
 
@@ -143,7 +143,7 @@ def test_nan_subspace_gets_null_code_and_adc_excludes():
 
     X = _data()
     df = _df(X)
-    cb = pq_codebooks(df, dim=D, m=M, k=K, iters=1)
+    cb = pq_codebooks(df, dim=D, m=M, k=K)
     # poison vec 99: NaN in subspace 0 only
     bad = [float("nan")] + [0.1] * (D - 1)
     spark = _get_spark()
@@ -169,7 +169,7 @@ def test_duplicate_vector_achieves_minimum_adc_distance():
     X = _data()
     X2 = np.vstack([X, X[0]])  # vec N is a dup of vec 0
     df = _df(X2)
-    cb = pq_codebooks(df, dim=D, m=M, k=K, iters=1)
+    cb = pq_codebooks(df, dim=D, m=M, k=K)
     codes = pq_encode(df, cb, dim=D, m=M)
     # the dup shares every code with the query
     got = {(r["vec_id"], r["s"]): r["code"] for r in codes.collect()}
@@ -193,7 +193,7 @@ def test_wrong_width_vectors_excluded():
     ragged = _df(X).unionByName(
         spark.createDataFrame([(77, [1.0, 2.0])], "vec_id bigint, embedding array<double>")
     )
-    cb = pq_codebooks(ragged, dim=D, m=M, k=K, iters=1)
+    cb = pq_codebooks(ragged, dim=D, m=M, k=K)
     codes = pq_encode(ragged, cb, dim=D, m=M)
     assert codes.where(F.col("vec_id") == 77).count() == 0
 

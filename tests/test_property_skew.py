@@ -141,7 +141,7 @@ def test_mixture_reweight_mw_matches_python_replay(hist):
         r["domain"]: (r["n_rows"], r["stat_scaled"], r["w_final"],
                       r["w_share_e6"])
         for r in mixture_reweight_mw(
-            df, domain_col="domain", stat_col="x", rounds=4
+            df, domain_col="domain", stat_col="x"
         ).collect()
     }
 

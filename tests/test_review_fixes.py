@@ -290,7 +290,7 @@ def test_personalized_pagerank_contract(spark):
     pairs = spark.createDataFrame([(1, 2), (2, 3)], "u bigint, v bigint")
     seeds = spark.createDataFrame([(1,)], "node bigint")
     pr = {r["node"]: r["pr"] for r in
-          pagerank(pairs, iterations=3, seeds=seeds).collect()}
+          pagerank(pairs, seeds=seeds).collect()}
     assert set(pr) == {1, 2, 3}
     # the seed holds the teleport floor; node 3 (two hops out) gets only
     # link mass and must rank below the seed and its direct neighbor

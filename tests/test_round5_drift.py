@@ -107,7 +107,7 @@ def test_ohlc_first_last_extremes(spark):
         (1, _ts(30), 4, "a", 7.0),
     ]
     r = ohlc_bars(
-        _ev(spark, rows), "user_id", "ts", "event_id", "value", "hour"
+        _ev(spark, rows), "user_id", "ts", "event_id", "value"
     ).collect()[0]
     assert (r.n, r.open, r.close, r.high, r.low) == (4, 5.0, 7.0, 9.0, 1.0)
 
@@ -115,7 +115,7 @@ def test_ohlc_first_last_extremes(spark):
 def test_ohlc_same_ts_ties_break_on_id(spark):
     rows = [(1, _ts(0), 2, "a", 8.0), (1, _ts(0), 1, "a", 3.0)]
     r = ohlc_bars(
-        _ev(spark, rows), "user_id", "ts", "event_id", "value", "hour"
+        _ev(spark, rows), "user_id", "ts", "event_id", "value"
     ).collect()[0]
     assert (r.open, r.close) == (3.0, 8.0)
 

@@ -307,7 +307,7 @@ def test_skipgram_window_and_symmetry(spark):
         [(1, "a b c")], "doc_id long, text string"
     )
     out = {(r["center"], r["context"]): r["n"]
-           for r in skipgram_pairs(docs, window=2).collect()}
+           for r in skipgram_pairs(docs).collect()}
     # pairs within distance <=2: (a,b), (a,c), (b,c) — both directions
     assert out == {("a", "b"): 1, ("b", "a"): 1,
                    ("a", "c"): 1, ("c", "a"): 1,
@@ -325,7 +325,7 @@ def test_skipgram_empty_tokens_keep_positions(spark):
         [(1, "a  b c")], "doc_id long, text string"
     )
     out = {(r["center"], r["context"])
-           for r in skipgram_pairs(docs, window=2).collect()}
+           for r in skipgram_pairs(docs).collect()}
     assert ("a", "b") in out and ("b", "c") in out
     assert ("a", "c") not in out  # distance 3 > window
 
@@ -338,7 +338,7 @@ def test_skipgram_no_cross_document_pairs(spark):
     docs = spark.createDataFrame(
         [(1, "a"), (2, "b")], "doc_id long, text string"
     )
-    assert skipgram_pairs(docs, window=2).count() == 0
+    assert skipgram_pairs(docs).count() == 0
 
 
 # ----------------------------------------------------------- k-center
@@ -472,7 +472,7 @@ def test_target_encode_excludes_own_fold(spark):
 
     rows = [("a", i, 100 * (i + 1)) for i in range(50)]
     df = spark.createDataFrame(rows, "cat string, id long, t long")
-    out = target_encode_kfold(df, "cat", "t", "id", folds=5).collect()
+    out = target_encode_kfold(df, "cat", "t", "id").collect()
     tot_n, tot_s = 50, sum(100 * (i + 1) for i in range(50))
     assert len(out) == 5
     for r in out:
@@ -493,7 +493,7 @@ def test_target_encode_single_fold_category_gets_null(spark):
     # one row -> its category has rows in exactly one fold -> that
     # fold's encoding must be NULL (no out-of-fold evidence).
     df = spark.createDataFrame([("solo", 7, 123)], "cat string, id long, t long")
-    out = target_encode_kfold(df, "cat", "t", "id", folds=5).collect()
+    out = target_encode_kfold(df, "cat", "t", "id").collect()
     assert len(out) == 1
     assert out[0]["n_out_of_fold"] == 0 and out[0]["enc_scaled"] is None
 
@@ -516,7 +516,7 @@ def test_mmr_prefers_diverse_over_redundant(spark):
         "qid long, a long, b long, sim long",
     )
     out = {r["pick_order"]: r["doc_id"]
-           for r in mmr_diversify(cand, sims, k=3, rel_weight=100).collect()}
+           for r in mmr_diversify(cand, sims, k=3).collect()}
     assert out == {1: 1, 2: 3, 3: 2}
 
 

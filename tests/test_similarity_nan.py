@@ -46,16 +46,19 @@ def _links(name, spark):
             "cid bigint, ce array<double>",
         )
         out = s.ivf_multiprobe_topk(
-            s.assign_cells(df, cents), df, cents, probes=2
+            s.assign_cells(df, cents), df, cents
         )
     elif name == "sign_lsh_pairs":
         return [tuple(r) for r in s.sign_lsh_pairs(df).select(
             "vec_a", "vec_b"
         ).collect()]
     else:
+        # two cells, so each near-duplicate pair can share one; with
+        # more cells than finite vectors every vector is alone in its cell
+        kw = {"k": 2} if name == "semantic_near_dup" else {}
         return [
             (r["vec_id"], r["canonical_id"])
-            for r in getattr(s, name)(df).collect()
+            for r in getattr(s, name)(df, **kw).collect()
             if r["vec_id"] != r["canonical_id"]
         ]
     return [tuple(r) for r in out.select("query_id", "neighbor_id").collect()]
@@ -69,3 +72,28 @@ def test_nan_vector_is_never_a_neighbor_or_pair(spark, name):
     if name not in TOPK:
         # 1 and 3 are near-orthogonal: only a NaN link could join them
         assert not {(1, 3), (3, 1)} & set(links), (name, links)
+
+
+def test_nan_vector_gets_no_cell_and_moves_no_centroid(spark):
+    """At k=2 the seeds are vectors 1 and 2; vector 1 is alone in its
+    cell, so its centroid stays [1, 0, .2]. The NaN vector gets a NULL
+    cell like a NULL or zero-norm one, and a NaN vector with the lowest
+    id seeds nothing."""
+    from gene_level_metadata_pipeline_spark.operators import similarity as s
+
+    schema = "vec_id bigint, embedding array<double>"
+    df = spark.createDataFrame(ROWS, schema)
+    cents = s.kmeans_centroids(df, k=2)
+    assert {r["cid"]: r["ce"] for r in cents.collect()}[1] == [1.0, 0.0, 0.2]
+    cells = {
+        r["vec_id"]: r["cell"] for r in s.assign_cells(df, cents).collect()
+    }
+    assert cells == {1: 1, 2: 1, 3: 2, NAN_ID: None, 5: 2}
+
+    first = spark.createDataFrame(
+        [(0, [float("nan"), 1.0, 0.5])] + [r for r in ROWS if r[0] != NAN_ID],
+        schema,
+    )
+    assert sorted(
+        r["cid"] for r in s.kmeans_centroids(first, k=2).collect()
+    ) == [1, 2]

@@ -4,7 +4,7 @@ The salt only changes WHERE rows meet (which reducer), never WHICH rows
 match — asserted by exact multiset equality against the unsalted join.
 The physical assertion pins the mechanism: with broadcast disabled the
 salted plan sort-merge-joins on BOTH (key, salt) — a hot key hashes to
-``salt_buckets`` different reducers instead of one.
+8 different reducers instead of one.
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ def test_salted_join_equals_plain_join(spark):
         "s_suppkey", "s_nationkey"
     )
     plain = li.join(su, li.l_suppkey == su.s_suppkey)
-    salted = salted_join(li, su, "l_suppkey", "s_suppkey", salt_buckets=8)
+    salted = salted_join(li, su, "l_suppkey", "s_suppkey")
     assert _rows(salted) == _rows(plain)
 
 
@@ -46,7 +46,7 @@ def test_salted_join_shuffles_on_key_and_salt(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        j = salted_join(li, su, "l_suppkey", "s_suppkey", salt_buckets=8)
+        j = salted_join(li, su, "l_suppkey", "s_suppkey")
         j.count()
         plan = j._jdf.queryExecution().executedPlan().toString()
     finally:

@@ -128,7 +128,7 @@ def test_attribute_time_decay_weights_and_cutoff(spark):
         (r["touch_type"]): (r["w_num"], r["w_den"], r["credit"])
         for r in attribute_time_decay(
             ev, "user_id", "ts", "event_id", "event_type",
-            ["purchase"], ["click", "view"], max_days=10,
+            ["purchase"], ["click", "view"],
         ).collect()
     }
     den = 1024 + 512 + 1
@@ -151,7 +151,7 @@ def test_attribute_time_decay_no_prior_touch_yields_no_rows(spark):
     )
     assert attribute_time_decay(
         ev, "user_id", "ts", "event_id", "event_type",
-        ["purchase"], ["click"], max_days=10,
+        ["purchase"], ["click"],
     ).count() == 0
 
 

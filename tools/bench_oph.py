@@ -61,7 +61,7 @@ def main() -> None:
         best = float("inf")
         for _ in range(REPS):
             t0 = time.time()
-            fn(docs, "text", "doc_id", k).write.format("noop").mode(
+            fn(docs, "text", "doc_id", num_hashes=k).write.format("noop").mode(
                 "overwrite"
             ).save()
             best = min(best, time.time() - t0)

@@ -90,7 +90,7 @@ def main() -> None:
         return edges.join(attrs, edges.v == attrs.node)
 
     def salted():
-        return salted_join(edges, attrs, "v", "node", salt_buckets=8)
+        return salted_join(edges, attrs, "v", "node")
 
     variants = [
         ("plain (skew split off)", plain_join, {SKEW: "false", BCAST: "-1"}),
