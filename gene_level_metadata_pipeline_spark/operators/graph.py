@@ -1,18 +1,33 @@
-"""Graph operators for dedup clustering: connected components.
+"""Graph operators over edge lists: components, rankings, cores, paths
+and walks.
 
-Near-dup PAIRS (MinHash/Jaccard output) are only half the dedup story —
-the canonical-document step needs components: every document in a cluster
-maps to one representative. Implemented as iterative min-label propagation
-(the driver loop runs a Spark join+aggregate per iteration; iterations =
-graph diameter, typically <6 for dup clusters). At billions of edges the
-same loop is the standard large-star/small-star algorithm; AQE handles the
-per-iteration skew.
+Dedup clustering ends here: :func:`connected_components` and
+:func:`canonicalize_duplicates` map every near-dup cluster to one
+representative. The other operators (PageRank, HITS, k-core, k-truss,
+label propagation, BFS, weighted and temporal shortest paths, random
+walks, triangle and clustering counts) rank and carve the same edge
+lists. Every operator returns a DataFrame the caller keeps composing.
+
+Edges take two normal forms, each built in one place: ``_simple_edges``
+(one canonical ``u < v`` row per undirected edge) and ``_both_ways``
+(every edge in both orientations). The iterative operators run through
+one gate, ``_iterate``. A graph of at most ``_DRIVER_EDGE_CAP`` edges is
+collected to the driver, where a pure-Python twin replays the
+distributed recurrence exactly. The one punt rule: a NULL in any edge
+field, or a seed set that holds NULL, outnumbers the cap or is typed
+unlike the edge ids, sends the graph to the distributed loop, which
+stays the single source of truth for SQL NULL semantics. Larger graphs
+run the distributed loop with its shuffles sized from the edge count
+(``sizing.sized_shuffle``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from gene_level_metadata_pipeline_spark.sizing import sized_shuffle
 
 __all__ = [
     "connected_components",
@@ -24,7 +39,140 @@ __all__ = [
     "kcore",
     "sssp_weighted",
     "hits_bipartite",
+    "label_propagation",
+    "random_walks",
+    "temporal_reachability",
+    "truss_peel",
 ]
+
+
+# Small-graph escape: at or under this many edges the graph collects to
+# the driver (<= ~3 MB of longs, bounded by the constant, not the data)
+# and a twin finishes in microseconds, where the distributed loop pays
+# ~1.5 s of job latency per round whatever the size (13.8 s of round
+# overhead on dbscan's 12.6k-edge sf0.1 core graph). Interleaved A/B of
+# escape against loop measured 0.68-0.93 for every twin
+# (certification/escape_ab_r10.json); bfs_hops has no twin, its escape
+# measured 1.035. Read at call time, so tests can force either path.
+_DRIVER_EDGE_CAP = 200_000
+
+# Round cap of the distributed component loop: with pointer jumping a
+# round roughly halves the remaining diameter, so 20 rounds cover any
+# realistic dup graph; hitting it raises rather than returning labels
+# that have not converged.
+_CC_MAX_ITER = 20
+
+# Power iterations of pagerank, on both the distributed and the driver
+# path; the oracle replays the same 3-round unroll.
+_PAGERANK_ROUNDS = 3
+
+# Peeling rounds kcore allows before it raises instead of returning a
+# non-core.
+_KCORE_MAX_ROUNDS = 40
+_KCORE_NO_FIXPOINT = (
+    f"kcore: no fixpoint after {_KCORE_MAX_ROUNDS} peeling rounds"
+)
+
+_NO_SEED_IN_GRAPH = (
+    "pagerank: no seed node appears in the graph — a personalized walk "
+    "with an empty effective seed set has no reset distribution"
+)
+
+
+def _simple_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
+    """The simple undirected graph of ``pairs``: one ``(u, v)`` row with
+    ``u < v`` per edge; self-loops, NULL endpoints and duplicates drop."""
+    a, b = F.col(src), F.col(dst)
+    return (
+        pairs.where(a != b)
+        .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
+        .distinct()
+    )
+
+
+def _both_ways(
+    df: DataFrame,
+    a: str = "u",
+    b: str = "v",
+    names: tuple[str, str] = ("u", "v"),
+    payload: tuple = (),
+    directed: bool = False,
+) -> DataFrame:
+    """Edges ``(a, b)`` as the columns ``names``, followed by the
+    reversed ``(b, a)`` rows; every row carries the ``payload`` columns.
+    ``directed`` keeps the given orientation only."""
+    x, y = names
+    out = df.select(F.col(a).alias(x), F.col(b).alias(y), *payload)
+    if directed:
+        return out
+    return out.unionByName(
+        df.select(F.col(b).alias(x), F.col(a).alias(y), *payload)
+    )
+
+
+def _seed_ids(seeds: DataFrame, node_t) -> set | None:
+    """The distinct ids of ``seeds``' first column, or None to punt when
+    they are typed unlike the edge ids, outnumber the cap or hold NULL.
+    One job, not count + collect: the seed frame is often an
+    uncheckpointed subquery, which two actions would run twice."""
+    if seeds.schema.fields[0].dataType != node_t:
+        return None
+    rows = (
+        seeds.select(F.col(seeds.columns[0]))
+        .distinct()
+        .limit(_DRIVER_EDGE_CAP + 1)
+        .collect()
+    )
+    ids = {r[0] for r in rows}
+    if len(rows) > _DRIVER_EDGE_CAP or None in ids:
+        return None
+    return ids
+
+
+def _replay(edges, twin, fields, seeds) -> DataFrame | None:
+    """The driver path of :func:`_iterate`, or None to punt."""
+    node_t = edges.schema.fields[1].dataType
+    rows = edges.collect()
+    if any(f is None for r in rows for f in r):
+        return None
+    args = ()
+    if seeds is not None:
+        ids = _seed_ids(seeds, node_t)
+        if ids is None:
+            return None
+        args = (ids,)
+    schema = StructType([
+        StructField(name, dtype or node_t, nullable)
+        for name, dtype, nullable in fields
+    ])
+    return edges.sparkSession.createDataFrame(twin(rows, *args), schema)
+
+
+def _iterate(
+    edges: DataFrame, loop, twin=None, fields=(), seeds=None
+) -> DataFrame:
+    """Run an iterative operator over ``edges``.
+
+    The edges are checkpointed and counted. At or under the cap,
+    ``twin(rows)`` (``twin(rows, seed_ids)`` when ``seeds`` is given)
+    returns the output rows from the collected edges, framed by
+    ``fields``: (name, type, nullable) triples in which type None is the
+    edge id type. Otherwise, or when the punt rule fires,
+    ``loop(edges, n_edges)`` runs inside a ``sized_shuffle`` window. The
+    conf is read when a job runs, so when the sizing changed it the
+    loop's result is checkpointed before the window restores it.
+    """
+    edges = edges.localCheckpoint(eager=True)
+    n_edges = edges.count()
+    if twin is not None and n_edges <= _DRIVER_EDGE_CAP:
+        out = _replay(edges, twin, fields, seeds)
+        if out is not None:
+            return out
+    with sized_shuffle(edges.sparkSession, n_edges) as sz:
+        out = loop(edges, n_edges)
+        if sz.changed:
+            out = out.localCheckpoint(eager=True)
+    return out
 
 
 def connected_components(
@@ -44,54 +192,21 @@ def connected_components(
 
     Per-round shuffles are SELF-SIZED: the materialized edge count sizes
     ``spark.sql.shuffle.partitions`` for the loop (``sizing.sized_shuffle``,
-    restored on exit) — the round-4 30x stress measured the bend in the
-    marginal cost as shuffle spill and confirmed the partitions lever
-    removes it (73.3s → 60.0s; PLANS.md). The count is a cheap scan of the
-    already-checkpointed edge blocks; every round's frame is materialized
-    inside the sizing window by the per-round eager checkpoint, so no job
-    escapes to the old sizing.
+    restored on exit) — a 30x stress measured the bend in the marginal
+    cost as shuffle spill and confirmed the partitions lever removes it
+    (73.3s → 60.0s; PLANS.md).
     """
-    from gene_level_metadata_pipeline_spark.sizing import sized_shuffle
-
-    edges = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
+    return _iterate(
+        _both_ways(pairs, src, dst).distinct(),
+        lambda edges, _n: _cc_loop(edges),
+        _cc_twin,
+        (("doc_id", None, True), ("component", None, True)),
     )
-    edges = edges.localCheckpoint(eager=True)
-    n_edges = edges.count()
-    if n_edges <= _DRIVER_EDGE_CAP:
-        return _cc_driver(edges)
-    with sized_shuffle(edges.sparkSession, n_edges):
-        return _cc_loop(edges)
 
 
-# Small-graph escape: below this edge count the graph collects to the
-# driver (<= ~3 MB of longs — bounded by the CONSTANT, not by the data;
-# the k-hot-keys / BPE-merge-table collect discipline) and a pure-Python
-# twin labels it in microseconds, where the distributed loop pays ~1.5 s
-# of job latency PER ROUND regardless of size — measured on dbscan's
-# 12.6k-edge sf0.1 core graph: 13.8 s of pure round overhead. Larger
-# graphs take the unchanged self-sized distributed loops, so the 100 TB
-# path is exactly what it was. The r7 CC escape paid back 1.3-2.3x on
-# every component-consuming headline; r8 generalizes the SAME cap and
-# output contract (typed DataFrame, identical labels/distances, driver
-# algorithm replays the distributed recurrence exactly) to the other
-# iterative operators: sssp_weighted, kcore, truss_peel,
-# label_propagation (VERDICT r7 task 3). Cap-boundary equivalence is
-# pinned by tests/test_graph_driver_escape.py, which runs BOTH paths on
-# graphs straddling a shrunken cap and asserts identical row multisets.
-# bfs_hops LEFT the escape set in r10 (VERDICT r9 item 6): the r9
-# interleaved A/B measured its escape at 1.035 — frontier iteration
-# exits after ~diameter cheap rounds, so the edge collect buys nothing.
-_DRIVER_EDGE_CAP = 200_000
-
-
-def _cc_driver(edges: DataFrame) -> DataFrame:
-    """Driver union-find for graphs under the bounded-collect cap;
-    identical output contract (component = MIN node id, as a DataFrame
-    the caller can keep composing)."""
-    rows = edges.collect()
+def _cc_twin(rows) -> list:
+    """Union-find over the edge rows; labels each node with its
+    component's MIN id, like the distributed loop."""
     parent: dict = {}
 
     def find(x):
@@ -102,53 +217,30 @@ def _cc_driver(edges: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for r in rows:
-        u, v = r[0], r[1]
+    for u, v in rows:
         parent.setdefault(u, u)
         parent.setdefault(v, v)
         ru, rv = find(u), find(v)
         if ru != rv:
             parent[max(ru, rv)] = min(ru, rv)
-    out = [(n, find(n)) for n in parent]
-    from pyspark.sql.types import StructField, StructType
-
-    node_t = edges.schema.fields[0].dataType  # labels share the id type
-    schema = StructType([
-        StructField("doc_id", node_t, True),
-        StructField("component", node_t, True),
-    ])
-    return edges.sparkSession.createDataFrame(out, schema)
-
-
-# Round cap of the distributed component loop: with pointer jumping a
-# round roughly halves the remaining diameter, so 20 rounds cover any
-# realistic dup graph; hitting it raises rather than returning labels
-# that have not converged.
-_CC_MAX_ITER = 20
+    return [(n, find(n)) for n in parent]
 
 
 def _cc_loop(edges: DataFrame) -> DataFrame:
-    """The per-round body of :func:`connected_components`; runs inside
-    the sized-shuffle window, and every round (and the returned frame)
-    is an eager localCheckpoint — fully materialized before the window
-    closes.
+    """The distributed rounds of :func:`connected_components`; every
+    round is an eager localCheckpoint.
 
-    r10 (VERDICT r9 item 5 — the 100x curve measured 17x superlinear
-    growth, cause: O(log n) rounds x FULL-graph shuffle): each round
-    now CONTRACTS the edge set onto label space — every edge relabels
-    to (label[u], label[v]), self-loops (edges already settled inside
-    one label) drop, and duplicates collapse. Dup graphs are clique-
-    heavy, so round 1 collapses each k-clique from k² edges to a star
-    of its representative and the per-round shuffle shrinks toward the
-    number of still-merging component representatives instead of
-    re-shuffling all edges every round. Correctness is the standard
-    two-phase CC argument: a contracted edge connects the endpoints'
-    representatives, so min-label propagation over the contracted
-    graph reaches every representative, and the pointer-jumping step
-    (already per-round) drags every original node's label along the
-    root chain; the fixpoint test (no label changed) is unchanged, and
-    the output is bit-identical (component = MIN node id) — pinned by
-    the dedup_components oracle and the randomized equivalence tests.
+    Each round CONTRACTS the edge set onto label space: every edge
+    relabels to (label[u], label[v]), self-loops (edges already settled
+    inside one label) drop, and duplicates collapse. Dup graphs are
+    clique-heavy, so round 1 collapses each k-clique from k² edges to a
+    star of its representative, and later rounds shuffle only the
+    still-merging representatives instead of all edges (a 100x curve
+    grew 17x superlinearly without it). A contracted edge connects its
+    endpoints' representatives, so min-label propagation over the
+    contracted graph reaches every representative, and pointer jumping
+    drags every original node's label along the root chain; the output
+    stays component = MIN node id.
     """
     # round 0 fused into init: label = min(self, direct neighbors) — one
     # agg over the edges instead of a full join round
@@ -210,258 +302,23 @@ def _cc_loop(edges: DataFrame) -> DataFrame:
             return labels.select(
                 F.col("node").alias("doc_id"), F.col("label").alias("component")
             )
-        # CONTRACT: relabel edges onto label space, drop settled
-        # (self-loop) edges, collapse duplicates. Labels ARE node ids,
-        # so the neighbor-min join keys stay valid; later rounds
-        # shuffle only the still-merging representative graph. Two
-        # label-sized hash joins per round, each on a frame that
-        # shrinks geometrically for clique-heavy dup graphs.
+        # CONTRACT: labels ARE node ids, so the neighbor-min join keys
+        # stay valid. Two label-sized hash joins per round, each on a
+        # frame that shrinks geometrically for clique-heavy dup graphs.
         lu = labels.select(
             F.col("node").alias("__un"), F.col("label").alias("__ul")
         )
         lv = labels.select(
             F.col("node").alias("__vn"), F.col("label").alias("__vl")
         )
-        contracted = (
-            edges.join(lu, edges.u == F.col("__un"))
-            .join(lv, edges.v == F.col("__vn"))
-            .where(F.col("__ul") != F.col("__vl"))
-            .select(
-                F.least("__ul", "__vl").alias("a"),
-                F.greatest("__ul", "__vl").alias("b"),
-            )
-            .distinct()
+        relabelled = edges.join(lu, edges.u == F.col("__un")).join(
+            lv, edges.v == F.col("__vn")
         )
-        edges = (
-            contracted.select(F.col("a").alias("u"), F.col("b").alias("v"))
-            .unionByName(
-                contracted.select(
-                    F.col("b").alias("u"), F.col("a").alias("v")
-                )
-            )
-            .localCheckpoint(eager=True)
-        )
+        edges = _both_ways(
+            _simple_edges(relabelled, "__ul", "__vl")
+        ).localCheckpoint(eager=True)
     raise RuntimeError(
         f"connected_components: no convergence in {_CC_MAX_ITER} iterations"
-    )
-
-
-# --- driver twins for the other iterative operators (r8) -------------------
-# Each twin replays its operator's EXACT distributed recurrence in pure
-# Python on the bounded-collect edge list (<= _DRIVER_EDGE_CAP rows) and
-# returns a DataFrame with the identical schema — or None to PUNT back to
-# the distributed path (null node ids / null weights / oversized or
-# type-mismatched seed sets: regimes where the SQL null-join semantics
-# are subtle, so the distributed path stays the single source of truth).
-
-
-def _sssp_driver(
-    edges: DataFrame, sources: DataFrame, max_hops: int
-) -> DataFrame | None:
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    seed_col = sources.columns[0]
-    node_t = edges.schema.fields[1].dataType
-    if sources.schema.fields[0].dataType != node_t:
-        return None
-    seed_rows = (  # one job, not count+collect: the seed expression
-        # is often an uncheckpointed subquery over the edge tables — a
-        # separate count()+collect() would execute it twice (r8 A/B)
-        sources.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .limit(_DRIVER_EDGE_CAP + 1)
-        .collect()
-    )
-    if len(seed_rows) > _DRIVER_EDGE_CAP:
-        return None
-    seeds = [r[0] for r in seed_rows]
-    rows = edges.collect()
-    if None in seeds or any(
-        r[0] is None or r[1] is None or r[2] is None for r in rows
-    ):
-        return None
-    dist = {s: 0 for s in seeds}
-    for _ in range(max_hops):
-        # synchronous Bellman-Ford round: relax every edge against the
-        # PREVIOUS table, then min-fold — exactly the distributed
-        # union+groupBy-min recurrence
-        nxt = dict(dist)
-        for u, v, w in rows:
-            if u in dist:
-                c = dist[u] + w
-                if v not in nxt or c < nxt[v]:
-                    nxt[v] = c
-        if nxt == dist:
-            break
-        dist = nxt
-    schema = StructType([
-        StructField("node", node_t, True),
-        StructField("dist", LongType(), True),
-    ])
-    return edges.sparkSession.createDataFrame(list(dist.items()), schema)
-
-
-def _kcore_driver(edges: DataFrame, k: int) -> DataFrame | None:
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    rows = edges.collect()
-    if any(r[0] is None or r[1] is None for r in rows):
-        return None
-    es = {(r[0], r[1]) for r in rows}  # symmetric, like the frame
-    for _ in range(40):
-        if not es:
-            break
-        deg: dict = {}
-        for u, _v in es:
-            deg[u] = deg.get(u, 0) + 1
-        keep = {u for u, d in deg.items() if d >= k}
-        nxt = {(u, v) for (u, v) in es if u in keep and v in keep}
-        if len(nxt) == len(es):
-            es = nxt
-            break
-        es = nxt
-    else:
-        raise RuntimeError(
-            "kcore: no fixpoint after 40 peeling rounds"
-        )
-    core_deg: dict = {}
-    for u, _v in es:
-        core_deg[u] = core_deg.get(u, 0) + 1
-    node_t = edges.schema.fields[0].dataType
-    schema = StructType([
-        StructField("node", node_t, True),
-        StructField("core_deg", LongType(), False),
-    ])
-    return edges.sparkSession.createDataFrame(
-        list(core_deg.items()), schema
-    )
-
-
-def _lpa_driver(edges: DataFrame, rounds: int) -> DataFrame | None:
-    rows = edges.collect()
-    if any(r[0] is None or r[1] is None for r in rows):
-        return None
-    pairs = [(r[0], r[1]) for r in rows]  # symmetric (eu, ev)
-    labels = {u: u for u, _ in pairs}
-    for _ in range(rounds):
-        votes: dict = {}
-        for eu, ev in pairs:
-            cnt = votes.setdefault(eu, {})
-            lb = labels[ev]
-            cnt[lb] = cnt.get(lb, 0) + 1
-        labels = {
-            node: min(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-            for node, cnt in votes.items()
-        }
-    from pyspark.sql.types import StructField, StructType
-
-    node_t = edges.schema.fields[0].dataType
-    schema = StructType([
-        StructField("node", node_t, True),
-        StructField("community", node_t, True),
-    ])
-    return edges.sparkSession.createDataFrame(
-        list(labels.items()), schema
-    )
-
-
-# Power iterations of pagerank, on both the distributed and the driver
-# path; the oracle replays the same 3-round unroll.
-_PAGERANK_ROUNDS = 3
-
-
-def _pagerank_driver(
-    edges: DataFrame,
-    seeds: DataFrame | None,
-) -> DataFrame | None:
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    rows = [(r[0], r[1]) for r in edges.collect()]
-    if any(u is None or v is None for u, v in rows):
-        return None
-    deg: dict = {}
-    for u, _v in rows:
-        deg[u] = deg.get(u, 0) + 1
-    node_t = edges.schema.fields[0].dataType
-    schema = StructType([
-        StructField("node", node_t, True),
-        StructField("pr", LongType(), True),
-    ])
-    spark = edges.sparkSession
-    n = len(deg)
-    if n == 0:
-        return spark.createDataFrame([], schema)
-    if seeds is None:
-        init = 10 ** 12 // n
-        base = dict.fromkeys(deg, (15 * init) // 100)
-        pr = dict.fromkeys(deg, init)
-    else:
-        if seeds.schema.fields[0].dataType != node_t:
-            return None
-        sd_rows = (  # one job, not count+collect (see _sssp_driver)
-            seeds.select(F.col(seeds.columns[0]))
-            .distinct()
-            .limit(_DRIVER_EDGE_CAP + 1)
-            .collect()
-        )
-        if len(sd_rows) > _DRIVER_EDGE_CAP:
-            return None
-        svals = {r[0] for r in sd_rows}
-        if None in svals:
-            return None
-        eff = svals & set(deg)
-        if not eff:
-            raise ValueError(
-                "pagerank: no seed node appears in the graph — a "
-                "personalized walk with an empty effective seed set "
-                "has no reset distribution"
-            )
-        init = 10 ** 12 // len(eff)
-        seed_base = (15 * init) // 100
-        base = {u: (seed_base if u in eff else 0) for u in deg}
-        pr = {u: (init if u in eff else 0) for u in deg}
-    for _ in range(_PAGERANK_ROUNDS):
-        # all values non-negative, so Python // replays `div` exactly
-        contrib = {u: pr[u] // deg[u] for u in deg}
-        s = dict.fromkeys(deg, 0)
-        for u, v in rows:
-            s[v] += contrib[u]
-        pr = {u: base[u] + (85 * s[u]) // 100 for u in deg}
-    return spark.createDataFrame(list(pr.items()), schema)
-
-
-def _truss_driver(e: DataFrame, k: int, rounds: int) -> DataFrame | None:
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    rows = e.collect()
-    if any(r[0] is None or r[1] is None for r in rows):
-        return None
-    es = {(r[0], r[1]) for r in rows}  # canonical u < v
-
-    def support(edge_set):
-        adj: dict = {}
-        for u, v in edge_set:
-            adj.setdefault(u, set()).add(v)
-            adj.setdefault(v, set()).add(u)
-        return {
-            (u, v): len(adj[u] & adj[v]) for (u, v) in edge_set
-        }
-
-    for _ in range(rounds):
-        s = support(es)
-        es = {edge for edge in es if s[edge] >= k - 2}
-    final = support(es)
-    node_t = e.schema.fields[0].dataType
-    schema = StructType([
-        StructField("u", node_t, True),
-        StructField("v", node_t, True),
-        # the distributed path emits coalesce(sup, 0) — NON-nullable;
-        # the twin must match nullability too (ADVICE r8: the
-        # equivalence tests now compare schema.json(), which sees it)
-        StructField("support", LongType(), False),
-    ])
-    return e.sparkSession.createDataFrame(
-        [(u, v, s) for (u, v), s in final.items()], schema
     )
 
 
@@ -485,7 +342,6 @@ def pagerank(
     pairs: DataFrame,
     src: str = "u",
     dst: str = "v",
-    checkpoint_every: int = 4,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """3-iteration PageRank over an undirected pair list, in exact
@@ -503,27 +359,11 @@ def pagerank(
 
     Scale: each iteration is one join edges⋈ranks (shuffle on node id)
     plus a grouped sum — the standard power-iteration plan; hub-node skew
-    is AQE's skew-join case. Lineage is truncated with an eager
-    ``localCheckpoint`` every ``checkpoint_every`` rounds — NOT every
-    round: each eager checkpoint blocks and materializes the full rank
-    frame, so for short unrolls (the 3 iterations here) checkpointing
-    per round triples the number of blocking jobs for no lineage benefit.
-    A plan a few joins deep is exactly what Catalyst handles; only
-    unbounded growth needs truncation. N is materialized once (a count
-    action) before the loop.
-
-    Below the ``_DRIVER_EDGE_CAP`` bounded-collect constant the exact
-    integer recurrence replays in pure Python on the driver (r8 — the
-    generalized small-graph escape; identical bigints, punts back on
-    null ids or seed-type mismatch). Above it, per-round shuffles are
-    SELF-SIZED from the materialized edge count
-    (``sizing.sized_shuffle`` — see :func:`connected_components` for the
-    measurement). When the sizing actually raised the conf, the FINAL
-    round is eager-checkpointed inside the window (the conf is read at
-    job run time, so a lazy result would silently execute at the old
-    sizing after restore); when it didn't — every bench/cluster-sized
-    session — the result stays lazy and the caller's action pays no
-    extra materialization, exactly the pre-sizing behavior.
+    is AQE's skew-join case. The rounds are not checkpointed: a plan
+    three joins deep is exactly what Catalyst handles, and each eager
+    checkpoint would be one more blocking job. N is materialized once (a
+    count action) before the loop. Small graphs replay the recurrence on
+    the driver (see the module docstring); the bigints are identical.
 
     ``seeds`` (optional, a 1-column frame of node ids) switches to
     PERSONALIZED PageRank: the reset mass — the initial ranks and the
@@ -536,20 +376,8 @@ def pagerank(
     effective seed set raises. ``seeds=None`` is bit-identical to the
     classic uniform recurrence.
     """
-    from gene_level_metadata_pipeline_spark.sizing import sized_shuffle
 
-    edges = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_edges = edges.count()
-    if n_edges <= _DRIVER_EDGE_CAP:
-        out = _pagerank_driver(edges, seeds)
-        if out is not None:
-            return out
-    with sized_shuffle(edges.sparkSession, n_edges) as sz:
+    def loop(edges: DataFrame, _n: int) -> DataFrame:
         deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
         n = deg.count()
         if n == 0:
@@ -575,11 +403,7 @@ def pagerank(
             nodes = nodes.join(F.broadcast(seed_df), "node", "left")
             ns = nodes.where(F.col("__is_seed")).count()
             if ns == 0:
-                raise ValueError(
-                    "pagerank: no seed node appears in the graph — a "
-                    "personalized walk with an empty effective seed set "
-                    "has no reset distribution"
-                )
+                raise ValueError(_NO_SEED_IN_GRAPH)
             init = 10 ** 12 // ns
             seed_base = (15 * init) // 100
             nodes = nodes.withColumn(
@@ -593,7 +417,7 @@ def pagerank(
                 .otherwise(F.lit(0)).cast("long").alias("pr"),
             )
             nodes = nodes.drop("__is_seed")
-        for i in range(_PAGERANK_ROUNDS):
+        for _ in range(_PAGERANK_ROUNDS):
             prd = pr.join(nodes, "node")
             contrib = (
                 edges.join(prd, edges.u == prd.node)
@@ -612,19 +436,43 @@ def pagerank(
                     ).cast("long").alias("pr"),
                 )
             )
-            # truncate lineage periodically, never after the final round
-            # (the caller's action materializes the result anyway);
-            # checkpoint_every <= 0 means never (not a modulo-by-zero
-            # crash)
-            if (
-                checkpoint_every > 0
-                and (i + 1) % checkpoint_every == 0
-                and (i + 1) < _PAGERANK_ROUNDS
-            ):
-                pr = pr.localCheckpoint(eager=True)
-        if sz.changed:
-            pr = pr.localCheckpoint(eager=True)
-    return pr
+        return pr
+
+    return _iterate(
+        _both_ways(pairs, src, dst).distinct(),
+        loop,
+        _pagerank_twin,
+        (("node", None, True), ("pr", LongType(), True)),
+        seeds,
+    )
+
+
+def _pagerank_twin(rows, seeds: set | None = None) -> list:
+    deg: dict = {}
+    for u, _v in rows:
+        deg[u] = deg.get(u, 0) + 1
+    if not deg:
+        return []
+    if seeds is None:
+        init = 10 ** 12 // len(deg)
+        base = dict.fromkeys(deg, (15 * init) // 100)
+        pr = dict.fromkeys(deg, init)
+    else:
+        eff = seeds & set(deg)
+        if not eff:
+            raise ValueError(_NO_SEED_IN_GRAPH)
+        init = 10 ** 12 // len(eff)
+        seed_base = (15 * init) // 100
+        base = {u: (seed_base if u in eff else 0) for u in deg}
+        pr = {u: (init if u in eff else 0) for u in deg}
+    for _ in range(_PAGERANK_ROUNDS):
+        # all values non-negative, so Python // replays `div` exactly
+        contrib = {u: pr[u] // deg[u] for u in deg}
+        s = dict.fromkeys(deg, 0)
+        for u, v in rows:
+            s[v] += contrib[u]
+        pr = {u: base[u] + (85 * s[u]) // 100 for u in deg}
+    return list(pr.items())
 
 
 def triangle_count(
@@ -641,14 +489,7 @@ def triangle_count(
     covers the rest). Two shuffle joins over (bigint, bigint) edges —
     payload-free. Returns a single row (n_triangles).
     """
-    e = (
-        pairs.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    e = _simple_edges(pairs, src, dst)
     e1 = e.alias("e1")
     e2 = e.alias("e2")
     wedges = e1.join(e2, F.col("e1.v") == F.col("e2.u")).select(
@@ -683,31 +524,16 @@ def bfs_hops(
     work is proportional to the frontier's edge boundary, the same shape
     Pregel/GraphX uses at billions of edges. Rounds are eager
     localCheckpoints (lineage truncation) inside a ``sized_shuffle``
-    window (the edge count sizes the per-round shuffle, the
-    connected_components discipline), and the frontier size rides on the
-    checkpoint's materialization via observe() — one job per round. The
-    loop exits when a level adds no nodes, so diameter < max_hops costs
-    no extra rounds.
+    window, and the frontier size rides on the checkpoint's
+    materialization via observe() — one job per round. The loop exits
+    when a level adds no nodes, so diameter < max_hops costs no extra
+    rounds. There is no driver twin: the frontier loop already exits
+    after ~diameter cheap rounds.
     """
-    from gene_level_metadata_pipeline_spark.sizing import sized_shuffle
 
-    edges = pairs.select(F.col(src).alias("eu"), F.col(dst).alias("ev"))
-    if not directed:
-        edges = edges.unionByName(
-            pairs.select(F.col(dst).alias("eu"), F.col(src).alias("ev"))
-        )
-    edges = edges.distinct().localCheckpoint(eager=True)
-    seed_col = sources.columns[0]
-    n_edges = edges.count()
-    # No driver escape for BFS (r10, VERDICT r9 item 6): it was the one
-    # family member with no measured payoff — the r9 interleaved A/B
-    # read 1.035 (escape marginally SLOWER), because frontier iteration
-    # exits after ~diameter cheap rounds and the full edge collect costs
-    # exactly what those rounds would have. The other six escapes stay
-    # (0.68-0.93 measured wins, certification/escape_ab_r10.json).
-    with sized_shuffle(edges.sparkSession, n_edges):
+    def loop(edges: DataFrame, _n: int) -> DataFrame:
         visited = (
-            sources.select(F.col(seed_col).alias("node"))
+            sources.select(F.col(sources.columns[0]).alias("node"))
             .distinct()
             .withColumn("hop", F.lit(0))
             .localCheckpoint(eager=True)
@@ -730,6 +556,9 @@ def bfs_hops(
             frontier = nxt
         return visited
 
+    edges = _both_ways(pairs, src, dst, ("eu", "ev"), directed=directed)
+    return _iterate(edges.distinct(), loop)
+
 
 def clustering_coefficient(
     pairs: DataFrame,
@@ -750,17 +579,7 @@ def clustering_coefficient(
     the reported ratio is a double. Isolated or degree-1 nodes have an
     undefined coefficient -> NULL (try_divide), not 0.
     """
-    und = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("x"), F.greatest("a", "b").alias("y")
-        )
-        .distinct()
-    )
-    edges = und.select(F.col("x").alias("u"), F.col("y").alias("v")).unionByName(
-        und.select(F.col("y").alias("u"), F.col("x").alias("v"))
-    )
+    edges = _both_ways(_simple_edges(pairs, src, dst))
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     # orient by (degree, id): each triangle appears exactly once
     ranked = edges.join(deg.withColumnRenamed("u", "n").withColumnRenamed(
@@ -835,28 +654,11 @@ def kcore(
     edge count, so convergence detection costs no extra job. Raises if
     40 rounds don't converge (fail loud, never silently
     return a non-core)."""
-    from gene_level_metadata_pipeline_spark.sizing import sized_shuffle
-
     if k < 1:
         raise ValueError(f"kcore: k={k} must be >= 1")
-    und = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("x"), F.greatest("a", "b").alias("y"))
-        .distinct()
-    )
-    edges = (
-        und.select(F.col("x").alias("u"), F.col("y").alias("v"))
-        .unionByName(und.select(F.col("y").alias("u"), F.col("x").alias("v")))
-        .localCheckpoint(eager=True)
-    )
-    n_edges = edges.count()
-    if n_edges <= _DRIVER_EDGE_CAP:
-        out = _kcore_driver(edges, k)
-        if out is not None:
-            return out
-    with sized_shuffle(edges.sparkSession, n_edges):
-        for _ in range(40):
+
+    def loop(edges: DataFrame, n_edges: int) -> DataFrame:
+        for _ in range(_KCORE_MAX_ROUNDS):
             if n_edges == 0:
                 break
             deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
@@ -875,12 +677,38 @@ def kcore(
                 break
             edges, n_edges = nxt, n_next
         else:
-            raise RuntimeError(
-                "kcore: no fixpoint after 40 peeling rounds"
-            )
-    return edges.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).alias("core_deg")
+            raise RuntimeError(_KCORE_NO_FIXPOINT)
+        return edges.groupBy(F.col("u").alias("node")).agg(
+            F.count(F.lit(1)).alias("core_deg")
+        )
+
+    return _iterate(
+        _both_ways(_simple_edges(pairs, src, dst)),
+        loop,
+        lambda rows: _kcore_twin(rows, k),
+        (("node", None, True), ("core_deg", LongType(), False)),
     )
+
+
+def _kcore_twin(rows, k: int) -> list:
+    es = {(u, v) for u, v in rows}  # symmetric, like the frame
+    for _ in range(_KCORE_MAX_ROUNDS):
+        if not es:
+            break
+        deg: dict = {}
+        for u, _v in es:
+            deg[u] = deg.get(u, 0) + 1
+        keep = {u for u, d in deg.items() if d >= k}
+        nxt = {(u, v) for (u, v) in es if u in keep and v in keep}
+        if len(nxt) == len(es):
+            break
+        es = nxt
+    else:
+        raise RuntimeError(_KCORE_NO_FIXPOINT)
+    core_deg: dict = {}
+    for u, _v in es:
+        core_deg[u] = core_deg.get(u, 0) + 1
+    return list(core_deg.items())
 
 
 def sssp_weighted(
@@ -909,29 +737,10 @@ def sssp_weighted(
     localCheckpoint inside a ``sized_shuffle`` window, and an
     Observation on the changed-row count exits early once no distance
     improves (diameter < max_hops costs no extra rounds)."""
-    from gene_level_metadata_pipeline_spark.sizing import sized_shuffle
 
-    edges = pairs.select(
-        F.col(src).alias("eu"), F.col(dst).alias("ev"),
-        F.col(weight_col).cast("bigint").alias("ew"),
-    )
-    if not directed:
-        edges = edges.unionByName(
-            pairs.select(
-                F.col(dst).alias("eu"), F.col(src).alias("ev"),
-                F.col(weight_col).cast("bigint").alias("ew"),
-            )
-        )
-    edges = edges.distinct().localCheckpoint(eager=True)
-    seed_col = sources.columns[0]
-    n_edges = edges.count()
-    if n_edges <= _DRIVER_EDGE_CAP:
-        out = _sssp_driver(edges, sources, max_hops)
-        if out is not None:
-            return out
-    with sized_shuffle(edges.sparkSession, n_edges):
+    def loop(edges: DataFrame, _n: int) -> DataFrame:
         dist = (
-            sources.select(F.col(seed_col).alias("node"))
+            sources.select(F.col(sources.columns[0]).alias("node"))
             .distinct()
             .withColumn("dist", F.lit(0).cast("bigint"))
             .localCheckpoint(eager=True)
@@ -962,6 +771,34 @@ def sssp_weighted(
                     return nxt
             dist = nxt
         return dist
+
+    ew = F.col(weight_col).cast("bigint").alias("ew")
+    edges = _both_ways(pairs, src, dst, ("eu", "ev"), (ew,), directed)
+    return _iterate(
+        edges.distinct(),
+        loop,
+        lambda rows, seeds: _sssp_twin(rows, seeds, max_hops),
+        (("node", None, True), ("dist", LongType(), True)),
+        sources,
+    )
+
+
+def _sssp_twin(rows, seeds: set, max_hops: int) -> list:
+    dist = dict.fromkeys(seeds, 0)
+    for _ in range(max_hops):
+        # synchronous Bellman-Ford round: relax every edge against the
+        # PREVIOUS table, then min-fold — exactly the distributed
+        # union+groupBy-min recurrence
+        nxt = dict(dist)
+        for u, v, w in rows:
+            if u in dist:
+                c = dist[u] + w
+                if v not in nxt or c < nxt[v]:
+                    nxt[v] = c
+        if nxt == dist:
+            break
+        dist = nxt
+    return list(dist.items())
 
 
 def hits_bipartite(
@@ -1069,37 +906,16 @@ def label_propagation(
     count. Hub-node skew is AQE's skew-join case; the frame never
     grows, so round 1 bounds the cost.
     """
-    from pyspark.sql import Window
-
-    from gene_level_metadata_pipeline_spark.sizing import sized_shuffle
-
     if rounds < 1:
         raise ValueError(f"label_propagation: rounds={rounds} must be >= 1")
-    und = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("x"), F.greatest("a", "b").alias("y"))
-        .distinct()
-    )
-    edges = (
-        und.select(F.col("x").alias("eu"), F.col("y").alias("ev"))
-        .unionByName(
-            und.select(F.col("y").alias("eu"), F.col("x").alias("ev"))
+
+    def loop(edges: DataFrame, _n: int) -> DataFrame:
+        labels = edges.select(F.col("eu").alias("node")).distinct().withColumn(
+            "lbl", F.col("node")
         )
-        .localCheckpoint(eager=True)
-    )
-    n_edges = edges.count()
-    if n_edges <= _DRIVER_EDGE_CAP:
-        out = _lpa_driver(edges, rounds)
-        if out is not None:
-            return out
-    labels = edges.select(F.col("eu").alias("node")).distinct().withColumn(
-        "lbl", F.col("node")
-    )
-    top1 = Window.partitionBy("node").orderBy(
-        F.col("c").desc(), F.col("lbl").asc()
-    )
-    with sized_shuffle(edges.sparkSession, n_edges):
+        top1 = Window.partitionBy("node").orderBy(
+            F.col("c").desc(), F.col("lbl").asc()
+        )
         for _ in range(rounds):
             votes = (
                 edges.join(
@@ -1114,7 +930,29 @@ def label_propagation(
                 .select("node", "lbl")
                 .localCheckpoint(eager=True)
             )
-    return labels.select("node", F.col("lbl").alias("community"))
+        return labels.select("node", F.col("lbl").alias("community"))
+
+    return _iterate(
+        _both_ways(_simple_edges(pairs, src, dst), names=("eu", "ev")),
+        loop,
+        lambda rows: _lpa_twin(rows, rounds),
+        (("node", None, True), ("community", None, True)),
+    )
+
+
+def _lpa_twin(rows, rounds: int) -> list:
+    labels = {u: u for u, _ in rows}
+    for _ in range(rounds):
+        votes: dict = {}
+        for eu, ev in rows:
+            cnt = votes.setdefault(eu, {})
+            lb = labels[ev]
+            cnt[lb] = cnt.get(lb, 0) + 1
+        labels = {
+            node: min(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+            for node, cnt in votes.items()
+        }
+    return list(labels.items())
 
 
 def random_walks(
@@ -1141,20 +979,9 @@ def random_walks(
     case. At 100 TB the adjacency ranking is computed once and
     bucketable; walks extend in O(walk_len) rounds regardless of graph
     size."""
-    from pyspark.sql import Window
-
     if walk_len < 1:
         raise ValueError(f"random_walks: walk_len={walk_len} must be >= 1")
-    und = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("x"), F.greatest("a", "b").alias("y"))
-        .distinct()
-    )
-    sym = (
-        und.select(F.col("x").alias("eu"), F.col("y").alias("ev"))
-        .unionByName(und.select(F.col("y").alias("eu"), F.col("x").alias("ev")))
-    )
+    sym = _both_ways(_simple_edges(pairs, src, dst), names=("eu", "ev"))
     adj = sym.select(
         "eu", "ev",
         (F.row_number().over(
@@ -1223,27 +1050,16 @@ def temporal_reachability(
     discipline plus the guard). One edges⋈arrivals join + one min-fold
     per round over a node-sized frame, eagerly checkpointed inside a
     sized-shuffle window."""
-    from gene_level_metadata_pipeline_spark.sizing import sized_shuffle
-
     if max_hops < 1:
         raise ValueError(
             f"temporal_reachability: max_hops={max_hops} must be >= 1"
         )
-    e = edges.select(
-        F.col(src).alias("eu"), F.col(dst).alias("ev"),
-        F.col(t_col).cast("bigint").alias("et"),
-    ).where(F.col("eu") != F.col("ev"))
-    sym = e.unionByName(
-        e.select(
-            F.col("ev").alias("eu"), F.col("eu").alias("ev"), "et"
-        )
-    ).localCheckpoint(eager=True)
-    n_edges = sym.count()
-    arr = seeds.select(
-        F.col(seeds.columns[0]).alias("node"),
-        F.lit(0).cast("bigint").alias("arrival"),
-    ).distinct().localCheckpoint(eager=True)
-    with sized_shuffle(sym.sparkSession, n_edges):
+
+    def loop(sym: DataFrame, _n: int) -> DataFrame:
+        arr = seeds.select(
+            F.col(seeds.columns[0]).alias("node"),
+            F.lit(0).cast("bigint").alias("arrival"),
+        ).distinct().localCheckpoint(eager=True)
         for _ in range(max_hops):
             relaxed = (
                 sym.join(arr.withColumnRenamed("node", "eu"), "eu")
@@ -1256,7 +1072,11 @@ def temporal_reachability(
                 .agg(F.min("arrival").alias("arrival"))
                 .localCheckpoint(eager=True)
             )
-    return arr
+        return arr
+
+    et = F.col(t_col).cast("bigint").alias("et")
+    sym = _both_ways(edges, src, dst, ("eu", "ev"), (et,))
+    return _iterate(sym.where(F.col("eu") != F.col("ev")), loop)
 
 
 def truss_peel(
@@ -1292,53 +1112,54 @@ def truss_peel(
     the degree-histogram diagnostic picks the ceiling mitigation when
     a graph needs one.
     """
-    from gene_level_metadata_pipeline_spark.sizing import sized_shuffle
-
     if rounds < 1:
         raise ValueError(f"truss_peel: rounds={rounds} must be >= 1")
     if k < 3:
         raise ValueError(f"truss_peel: k={k} must be >= 3")
-    e = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_edges = e.count()
-    if n_edges <= _DRIVER_EDGE_CAP:
-        out = _truss_driver(e, k, rounds)
-        if out is not None:
-            return out
 
-    def support(edges: DataFrame) -> DataFrame:
-        und = edges.select(
-            F.col("u").alias("x"), F.col("v").alias("w")
-        ).unionByName(
-            edges.select(F.col("v").alias("x"), F.col("u").alias("w"))
-        )
-        a = und.select(F.col("x").alias("u"), "w")
-        b = und.select(F.col("x").alias("v"), "w")
+    def support(e: DataFrame) -> DataFrame:
         return (
-            edges.join(a, "u").join(b, ["v", "w"])
+            e.join(_both_ways(e, names=("u", "w")), "u")
+            .join(_both_ways(e, names=("v", "w")), ["v", "w"])
             .groupBy("u", "v")
             .agg(F.count(F.lit(1)).alias("sup"))
         )
 
-    with sized_shuffle(e.sparkSession, n_edges):
+    def loop(e: DataFrame, _n: int) -> DataFrame:
         for _ in range(rounds):
-            s = support(e)
             e = (
-                e.join(s, ["u", "v"], "left")
+                e.join(support(e), ["u", "v"], "left")
                 .where(F.coalesce(F.col("sup"), F.lit(0)) >= k - 2)
                 .select("u", "v")
                 .localCheckpoint(eager=True)
             )
-        final = e.join(support(e), ["u", "v"], "left").select(
+        return e.join(support(e), ["u", "v"], "left").select(
             "u", "v",
             F.coalesce(F.col("sup"), F.lit(0)).cast("bigint")
             .alias("support"),
         )
-    return final
+
+    return _iterate(
+        _simple_edges(pairs, src, dst),
+        loop,
+        lambda rows: _truss_twin(rows, k, rounds),
+        (("u", None, True), ("v", None, True), ("support", LongType(), False)),
+    )
+
+
+def _truss_twin(rows, k: int, rounds: int) -> list:
+    es = {(u, v) for u, v in rows}  # canonical u < v
+
+    def support(edge_set):
+        adj: dict = {}
+        for u, v in edge_set:
+            adj.setdefault(u, set()).add(v)
+            adj.setdefault(v, set()).add(u)
+        return {
+            (u, v): len(adj[u] & adj[v]) for (u, v) in edge_set
+        }
+
+    for _ in range(rounds):
+        s = support(es)
+        es = {edge for edge in es if s[edge] >= k - 2}
+    return [(u, v, s) for (u, v), s in support(es).items()]

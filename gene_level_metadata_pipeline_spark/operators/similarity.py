@@ -883,10 +883,10 @@ def probe_cells(
     sort on (-sim, cid), exact on the rounded sims — and sliced to the
     top ``probes`` before a single explode. Ties therefore match
     ``row_number() OVER (ORDER BY sim DESC, cid)`` exactly, the same
-    order the DuckDB twins replay. Degenerate vectors (NULL / zero
-    norm / NULL element) score NULL on every centroid, are filtered
-    before the sort, and fan out to ZERO rows — the multi-probe analog
-    of the NULL-cell contract.
+    order the DuckDB twins replay. A NULL or NaN cosine has no rank:
+    degenerate vectors (NULL / zero norm / NULL or NaN element) score
+    one on every centroid, are filtered before the sort, and fan out to
+    ZERO rows — the multi-probe analog of the NULL-cell contract.
     """
     if probes < 1:
         raise ValueError(f"probe_cells: probes={probes} must be >= 1")
@@ -899,7 +899,11 @@ def probe_cells(
     )
     top = F.slice(
         F.sort_array(
-            F.filter(scored, lambda s: s.getField("negsim").isNotNull())
+            F.filter(
+                scored,
+                lambda s: s.getField("negsim").isNotNull()
+                & ~F.isnan(s.getField("negsim")),
+            )
         ),
         1,
         probes,

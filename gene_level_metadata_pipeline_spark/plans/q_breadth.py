@@ -1340,6 +1340,7 @@ def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                ) AS rn
         FROM v CROSS JOIN cent c
         WHERE v.vec_id < 10
+          AND NOT isnan({_COS.format(a='v.e', b='c.ce')})
       ) WHERE rn <= 2
     ),
     scored AS (
@@ -1402,6 +1403,7 @@ def q_ann_ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                           c.cid
                ) AS rn
         FROM q CROSS JOIN cent c
+        WHERE NOT isnan({_COS.format(a='q.qe', b='c.ce')})
       ) WHERE rn <= 2
     ),
     mp AS (

@@ -2961,7 +2961,7 @@ def q_target_encode_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     return target_encode_kfold(
         base, cat_col="o_orderpriority", target_col="t",
         id_col="o_orderkey",
-    ).withColumnRenamed("cat", "cat")
+    )
 
 
 _MMR_BASE_CTES = """

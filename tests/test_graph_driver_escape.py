@@ -1,19 +1,20 @@
-"""Cap-boundary equivalence for the r8 generalized small-graph driver
-escape (VERDICT r7 task 3): every iterative graph operator must return
-an IDENTICAL row multiset (values and schema) whether the bounded-collect
-driver twin or the distributed loop runs. Each case runs the same graph
-through both paths by flipping ``graph._DRIVER_EDGE_CAP`` between 0
-(forces the distributed loop) and the real constant (the twin), so the
-test literally straddles the cap.
+"""Cap-boundary equivalence for the small-graph driver escape: every
+iterative graph operator must return an IDENTICAL row multiset (values
+and schema) whether the bounded-collect driver twin or the distributed
+loop runs. Each case runs the same graphs through both paths by flipping
+``graph._DRIVER_EDGE_CAP`` between 0 (forces the distributed loop) and
+the real constant (the twin), so the test literally straddles the cap.
 
-The graphs are deterministic pseudo-random (hash-derived, no RNG state):
-dense enough for triangles/multi-hop structure, small enough that the
-distributed runs stay in CI budget.
+Two inputs per case: a deterministic pseudo-random graph (hash-derived,
+no RNG state), dense enough for triangles/multi-hop structure and small
+enough that the distributed runs stay in CI budget; and a tiny graph with
+a NULL endpoint, which the escape must punt to the distributed loop.
 """
 
 from __future__ import annotations
 
 import hashlib
+from collections import Counter
 
 import pytest
 
@@ -57,12 +58,12 @@ def _mk_graph(tag: str, n_nodes: int = 30, n_edges: int = 70):
 
 def _both_paths(fn):
     """Run fn() with the cap forced low (distributed) then high (driver
-    twin); return both sorted row lists."""
+    twin); return both row multisets (Counter, so NULLs need no order)."""
     real_cap = graph._DRIVER_EDGE_CAP
     try:
         graph._DRIVER_EDGE_CAP = 0
         distributed = fn()
-        dist_rows = sorted(map(tuple, distributed.collect()))
+        dist_rows = Counter(map(tuple, distributed.collect()))
         # schema.json() includes NULLABILITY, which simpleString()
         # omits — a twin declaring hop/core_deg non-nullable would
         # slip past the simpleString compare (ADVICE r8)
@@ -70,83 +71,76 @@ def _both_paths(fn):
     finally:
         graph._DRIVER_EDGE_CAP = real_cap
     driver = fn()
-    drv_rows = sorted(map(tuple, driver.collect()))
+    drv_rows = Counter(map(tuple, driver.collect()))
     drv_schema = driver.schema.json()
     return (dist_rows, dist_schema), (drv_rows, drv_schema)
 
 
 @pytest.fixture(scope="module")
-def frames():
+def graphs():
+    """(edges, seeds) inputs for the equivalence cases."""
     spark = _get_spark()
-    edges = _mk_graph("r8")
-    edf = spark.createDataFrame(edges, "u bigint, v bigint, w bigint")
-    seeds = spark.createDataFrame([(0,), (7,), (1000,)], "node bigint")
-    return edf, seeds
+    schema = "u bigint, v bigint, w bigint"
+    return [
+        (
+            spark.createDataFrame(_mk_graph("r8"), schema),
+            spark.createDataFrame([(0,), (7,), (1000,)], "node bigint"),
+        ),
+        (
+            spark.createDataFrame([(1, 2, 5), (2, None, 3), (3, 4, 1)], schema),
+            spark.createDataFrame([(1,), (3,)], "node bigint"),
+        ),
+    ]
 
 
-def test_bfs_hops_cap_independent(frames):
-    """r10 (VERDICT r9 item 6): bfs_hops has NO driver escape anymore —
-    the r9 A/B measured it neutral-at-best (1.035), so the distributed
-    frontier loop is the only path and the cap must not change results."""
-    edf, seeds = frames
-    (dr, ds), (vr, vs) = _both_paths(
-        lambda: graph.bfs_hops(edf, seeds, max_hops=4)
+def _assert_paths_agree(graphs, op):
+    for edf, seeds in graphs:
+        (dr, ds), (vr, vs) = _both_paths(lambda: op(edf, seeds))
+        assert dr == vr and ds == vs
+
+
+def test_bfs_hops_cap_independent(graphs):
+    """bfs_hops has no driver escape (its A/B measured neutral at best,
+    1.035), so the distributed frontier loop is the only path and the
+    cap must not change results."""
+    _assert_paths_agree(graphs, lambda e, s: graph.bfs_hops(e, s, max_hops=4))
+
+
+def test_sssp_escape_equivalence(graphs):
+    _assert_paths_agree(
+        graphs, lambda e, s: graph.sssp_weighted(e, s, max_hops=3)
     )
-    assert dr == vr and ds == vs
 
 
-def test_sssp_escape_equivalence(frames):
-    edf, seeds = frames
-    (dr, ds), (vr, vs) = _both_paths(
-        lambda: graph.sssp_weighted(edf, seeds, max_hops=3)
+def test_kcore_escape_equivalence(graphs):
+    _assert_paths_agree(graphs, lambda e, _s: graph.kcore(e, k=3))
+
+
+def test_lpa_escape_equivalence(graphs):
+    _assert_paths_agree(
+        graphs, lambda e, _s: graph.label_propagation(e, rounds=2)
     )
-    assert dr == vr and ds == vs
 
 
-def test_kcore_escape_equivalence(frames):
-    edf, _ = frames
-    (dr, ds), (vr, vs) = _both_paths(lambda: graph.kcore(edf, k=3))
-    assert dr == vr and ds == vs
-
-
-def test_lpa_escape_equivalence(frames):
-    edf, _ = frames
-    (dr, ds), (vr, vs) = _both_paths(
-        lambda: graph.label_propagation(edf, rounds=2)
+def test_truss_escape_equivalence(graphs):
+    _assert_paths_agree(
+        graphs, lambda e, _s: graph.truss_peel(e, k=3, rounds=2)
     )
-    assert dr == vr and ds == vs
 
 
-def test_truss_escape_equivalence(frames):
-    edf, _ = frames
-    (dr, ds), (vr, vs) = _both_paths(
-        lambda: graph.truss_peel(edf, k=3, rounds=2)
+def test_cc_escape_equivalence(graphs):
+    _assert_paths_agree(
+        graphs,
+        lambda e, _s: graph.connected_components(e, src="u", dst="v"),
     )
-    assert dr == vr and ds == vs
 
 
-def test_cc_escape_equivalence(frames):
-    edf, _ = frames
-    (dr, ds), (vr, vs) = _both_paths(
-        lambda: graph.connected_components(edf, src="u", dst="v")
-    )
-    assert dr == vr and ds == vs
+def test_pagerank_escape_equivalence(graphs):
+    _assert_paths_agree(graphs, lambda e, _s: graph.pagerank(e))
 
 
-def test_pagerank_escape_equivalence(frames):
-    edf, _ = frames
-    (dr, ds), (vr, vs) = _both_paths(
-        lambda: graph.pagerank(edf)
-    )
-    assert dr == vr and ds == vs
-
-
-def test_pagerank_personalized_escape_equivalence(frames):
-    edf, seeds = frames
-    (dr, ds), (vr, vs) = _both_paths(
-        lambda: graph.pagerank(edf, seeds=seeds)
-    )
-    assert dr == vr and ds == vs
+def test_pagerank_personalized_escape_equivalence(graphs):
+    _assert_paths_agree(graphs, lambda e, s: graph.pagerank(e, seeds=s))
 
 
 def test_pagerank_driver_empty_seed_set_raises():

@@ -91,18 +91,6 @@ def test_read_delim_whitespace_preserves_quoted_fields(spark, tmp_path):
     assert float(rows["g2"].score) == 1.5
 
 
-def test_pagerank_checkpoint_every_zero_means_never(spark):
-    from pyspark.sql import functions as F
-
-    from gene_level_metadata_pipeline_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1)], "u bigint, v bigint"
-    )
-    out = pagerank(edges, checkpoint_every=0).collect()
-    assert len(out) == 3 and all(r.pr > 0 for r in out)
-
-
 def test_row_order_op_rejects_build_left(spark):
     """A plan that broadcast-redistributes its LEFT side has no defined
     'my file' order for the left frame — reject, with guidance."""

@@ -97,3 +97,18 @@ def test_nan_vector_gets_no_cell_and_moves_no_centroid(spark):
     assert sorted(
         r["cid"] for r in s.kmeans_centroids(first, k=2).collect()
     ) == [1, 2]
+
+
+def test_nan_vector_probes_no_cell(spark):
+    """A vector with a NaN element has a NaN cosine to every centroid,
+    so, like a NULL or zero-norm vector, it fans out to no probe rows."""
+    from gene_level_metadata_pipeline_spark.operators import similarity as s
+
+    df = spark.createDataFrame(ROWS, "vec_id bigint, embedding array<double>")
+    cents = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0])],
+        "cid bigint, ce array<double>",
+    )
+    probed = s.probe_cells(df, cents).collect()
+    assert {r["vec_id"] for r in probed} == {1, 2, 3, 5}
+    assert len(probed) == 8
