@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from gene_level_metadata_pipeline_spark.materialize import (
     materialize as _materialize,
 )
+from gene_level_metadata_pipeline_spark.operators.dedup import _hex_int
 
 __all__ = ["psi", "ks_two_sample"]
 
@@ -215,12 +216,9 @@ def bootstrap_mean_ci(
     # replicates cost ceil(32/5)=7 hashes per row, not 32 (measured 2.6x
     # on the 10x stress; the hash count is the hot path at corpus scale)
     u_of = lambda b: (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit(b // 5), F.col(id_col))),
-                1 + 6 * (b % 5), 6,
-            ),
-            16, 10,
+        _hex_int(
+            F.md5(F.concat_ws(":", F.lit(b // 5), F.col(id_col))),
+            1 + 6 * (b % 5), 6,
         ).cast("double")
         / F.lit(float(16 ** 6))
     )
@@ -466,11 +464,9 @@ def target_encode_kfold(
     derive from it by a second tiny rollup — the encoding table is
     |cats| x 5, broadcastable to the feature join that consumes
     it."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws(":", F.lit("fold"), F.col(id_col))),
-                    1, 4),
-        16, 10,
-    ).cast("bigint")
+    h = _hex_int(
+        F.md5(F.concat_ws(":", F.lit("fold"), F.col(id_col))), 1, 4
+    )
     per = df.select(
         F.col(cat_col).alias("cat"),
         F.col(target_col).cast("bigint").alias("t"),

@@ -10,7 +10,9 @@ lists. Every operator returns a DataFrame the caller keeps composing.
 
 Edges take two normal forms, each built in one place: ``_simple_edges``
 (one canonical ``u < v`` row per undirected edge) and ``_both_ways``
-(every edge in both orientations). The iterative operators run through
+(every edge in both orientations). ``_node_edges``, the input of
+components and PageRank, is ``_both_ways`` over the pairs with two
+non-NULL endpoints, self-loops kept. The iterative operators run through
 one gate, ``_iterate``. A graph of at most ``_DRIVER_EDGE_CAP`` edges is
 collected to the driver, where a pure-Python twin replays the
 distributed recurrence exactly. The one punt rule: a NULL in any edge
@@ -27,6 +29,7 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from gene_level_metadata_pipeline_spark.operators.dedup import _hex_int
 from gene_level_metadata_pipeline_spark.sizing import sized_shuffle
 
 __all__ = [
@@ -110,6 +113,14 @@ def _both_ways(
     )
 
 
+def _node_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
+    """Both orientations of every pair whose endpoints are both non-NULL,
+    deduplicated. Self-loops stay, so a node linked only to itself is
+    still a node."""
+    kept = pairs.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
+    return _both_ways(kept, src, dst).distinct()
+
+
 def _seed_ids(seeds: DataFrame, node_t) -> set | None:
     """The distinct ids of ``seeds``' first column, or None to punt when
     they are typed unlike the edge ids, outnumber the cap or hold NULL.
@@ -180,7 +191,8 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
 ) -> DataFrame:
-    """Component labels for every node appearing in ``pairs``.
+    """Component labels for every node appearing in ``pairs``; a pair
+    with a NULL endpoint is dropped.
 
     Returns (doc_id, component) where ``component`` is the MINIMUM node id
     in the connected component — deterministic, engine-independent.
@@ -197,7 +209,7 @@ def connected_components(
     (73.3s → 60.0s; PLANS.md).
     """
     return _iterate(
-        _both_ways(pairs, src, dst).distinct(),
+        _node_edges(pairs, src, dst),
         lambda edges, _n: _cc_loop(edges),
         _cc_twin,
         (("doc_id", None, True), ("component", None, True)),
@@ -355,7 +367,8 @@ def pagerank(
     engine unrolling the same recurrence reproduces the bigints exactly
     (float PageRank diverges across engines in the last ulps; the tiny
     floor-division mass leak here is identical everywhere). Returns
-    (node, pr) with pr in micro-units.
+    (node, pr) with pr in micro-units. A pair with a NULL endpoint is
+    dropped, so NULL is never a node and never counts in N.
 
     Scale: each iteration is one join edges⋈ranks (shuffle on node id)
     plus a grouped sum — the standard power-iteration plan; hub-node skew
@@ -439,7 +452,7 @@ def pagerank(
         return pr
 
     return _iterate(
-        _both_ways(pairs, src, dst).distinct(),
+        _node_edges(pairs, src, dst),
         loop,
         _pagerank_twin,
         (("node", None, True), ("pr", LongType(), True)),
@@ -999,15 +1012,10 @@ def random_walks(
     )
     for s in range(1, walk_len + 1):
         pick = F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(
-                        ":", F.col("start"), F.lit(s), F.col("cur")
-                    )),
-                    1, 4,
-                ),
-                16, 10,
-            ).cast("bigint"),
+            _hex_int(
+                F.md5(F.concat_ws(":", F.col("start"), F.lit(s), F.col("cur"))),
+                1, 4,
+            ),
             F.col("d"),
         )
         frontier = (

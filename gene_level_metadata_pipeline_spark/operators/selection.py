@@ -38,7 +38,12 @@ from gene_level_metadata_pipeline_spark.materialize import (
     materialize as _materialize,
 )
 
+from gene_level_metadata_pipeline_spark.operators.dedup import (
+    _hex_int,
+    shingle_array,
+)
 from gene_level_metadata_pipeline_spark.operators.textanalysis import (
+    _md5_prefix,
     hex_sample_bound,
 )
 
@@ -546,13 +551,7 @@ def weighted_take_k(
     """
     if k < 1:
         raise ValueError(f"weighted_take_k: k={k} must be >= 1")
-    v = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(salt + ":"), F.col(key_col).cast("string"))),
-            1, 8,
-        ),
-        16, 10,
-    ).cast("long")
+    v = _hex_int(_md5_prefix(salt + ":", key_col), 1, 8)
     u = (v + 1).cast("double") / F.lit(float(2 ** 32))
     w = F.col(weight_col).cast("double")
     es = F.log(u) / w
@@ -599,13 +598,7 @@ def stratified_weighted_take(
 
     if k < 1:
         raise ValueError(f"stratified_weighted_take: k={k} must be >= 1")
-    v = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("wtake:"), F.col(key_col).cast("string"))),
-            1, 8,
-        ),
-        16, 10,
-    ).cast("long")
+    v = _hex_int(_md5_prefix("wtake:", key_col), 1, 8)
     u = (v + 1).cast("double") / F.lit(float(2 ** 32))
     w = F.col(weight_col).cast("double")
     es = F.log(u) / w
@@ -798,18 +791,15 @@ def rendezvous_assign(
             F.sequence(F.lit(0), F.lit(int(n_shards) - 1))
         ).alias("shard"),
     )
-    w = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":", F.lit("hrw"), F.col("shard").cast("string"),
-                    F.col("key").cast("string"),
-                )
-            ),
-            1, 8,
+    w = _hex_int(
+        F.md5(
+            F.concat_ws(
+                ":", F.lit("hrw"), F.col("shard").cast("string"),
+                F.col("key").cast("string"),
+            )
         ),
-        16, 10,
-    ).cast("long")
+        1, 8,
+    )
     return (
         exploded.withColumn("__w", w)
         .groupBy("key")
@@ -866,10 +856,6 @@ def dsir_log_weights(
             f"dsir_log_weights: alpha={alpha} must be > 0 (unsmoothed "
             "zero-count buckets make log p undefined)"
         )
-    from gene_level_metadata_pipeline_spark.operators.dedup import (
-        _hex4_to_int,
-        shingle_array,
-    )
 
     def grams(df: DataFrame) -> DataFrame:
         words = F.split(F.col(text_col), " ")
@@ -882,7 +868,7 @@ def dsir_log_weights(
             )
             .select(
                 F.col(id_col),
-                (_hex4_to_int(F.md5(F.col("__gram"))) % buckets).alias(
+                (_hex_int(F.md5(F.col("__gram")), 1, 4) % buckets).alias(
                     "__bucket"
                 ),
             )
@@ -954,13 +940,7 @@ def dsir_gumbel_select(
     """
     if k < 1:
         raise ValueError(f"dsir_gumbel_select: k={k} must be >= 1")
-    v = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("dsir:"), F.col(id_col).cast("string"))),
-            1, 8,
-        ),
-        16, 10,
-    ).cast("long")
+    v = _hex_int(_md5_prefix("dsir:", id_col), 1, 8)
     u = (v + 1).cast("double") / F.lit(float(2 ** 32))
     key = F.col(logw_col) + (-F.log(-F.log(u)))
     out = (

@@ -1,18 +1,44 @@
 """Text-analysis operators for training-data curation.
 
-Language ID (stopword-hit heuristic), quality scoring, token counting, and
-document fingerprinting — all Catalyst expressions (array lambdas + regex),
-no Python in the hot path. Each op is deterministic and SQL-expressible so
-the DuckDB oracle certifies it end-to-end.
+The families:
+
+* filters: stopword language ID, quality scores, the Gopher and C4 rule
+  stacks, PII redaction, benchmark decontamination;
+* tokenizers: whitespace and regex token counts, BPE training and
+  encoding, token-window chunking, text normalization;
+* fingerprints: md5 min-shingle, winnowing and its overlap report,
+  repetition scores, cross-document boilerplate removal;
+* sampling: hash-Bernoulli samples and train/val/test splits;
+* retrieval: tf-idf keywords, BM25, term overlap, reciprocal-rank
+  fusion, MMR diversification;
+* models: Rocchio centroids, feature hashing and a linear classifier,
+  unigram and Kneser-Ney language models, skip-gram pairs, count-min
+  sketches.
+
+All of it is Catalyst expressions (array lambdas, regex, md5), no Python
+in the hot path. Each op is deterministic and SQL-expressible, so the
+DuckDB oracle certifies it end-to-end. Each step the operators share —
+letter-word extraction, the BPE wrap and merge chain, md5 digit
+decoding, term counts, per-key rank windows, argument checks — is built
+in one private helper below.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from gene_level_metadata_pipeline_spark.materialize import (
     materialize as _materialize,
 )
+from gene_level_metadata_pipeline_spark.operators.dedup import (
+    _hex_int,
+    shingle_array,
+    word_shingles,
+)
+from gene_level_metadata_pipeline_spark.operators.drift import (
+    _floor_div_exact,
+)
+from gene_level_metadata_pipeline_spark.operators.graph import _both_ways
 
 __all__ = [
     "STOPWORDS",
@@ -41,6 +67,19 @@ __all__ = [
     "centroid_classify",
     "bm25_topk",
     "unigram_logprob_scores",
+    "winnow_fingerprints",
+    "winnow_overlap_pairs",
+    "linear_classifier_train",
+    "linear_classifier_score",
+    "count_min_estimates",
+    "cms_sketch",
+    "cms_merge",
+    "cms_lookup",
+    "rrf_fuse",
+    "term_overlap_topk",
+    "skipgram_pairs",
+    "mmr_diversify",
+    "kneser_ney_bigram",
 ]
 
 # Tiny per-language stopword lists: enough for the n-gram-heuristic shape;
@@ -61,6 +100,71 @@ def _hits(words: Column, vocab: list[str]) -> Column:
     """Occurrence count (not distinct) of vocab words in the token array."""
     arr = F.array(*[F.lit(w) for w in vocab])
     return F.size(F.filter(words, lambda w: F.array_contains(arr, w))).cast("long")
+
+
+def _at_least_one(fn: str, **params: int | None) -> None:
+    """Fail at the call, naming ``fn`` and the parameter, when a count,
+    window or cap parameter is below 1; None (unset) passes."""
+    for name, v in params.items():
+        if v is not None and v < 1:
+            raise ValueError(f"{fn}: {name}={v} must be >= 1")
+
+
+def _ws_tokens(text) -> Column:
+    """Non-empty single-space tokens of a column (or column name) —
+    matches the oracle convention ``unnest(string_split(text, ' ')) ...
+    WHERE w <> ''`` used across the shingle/tf-idf family. Operators
+    whose oracles count empty tokens split on ``" "`` themselves."""
+    return F.filter(F.split(text, " "), lambda w: w != "")
+
+
+def _letter_words(docs: DataFrame, text_col: str, *keep) -> DataFrame:
+    """``keep`` plus one ``w`` row per lowercase ``[a-z]+`` run of every
+    non-NULL text."""
+    runs = F.regexp_extract_all(
+        F.lower(F.col(text_col)), F.lit("[a-z]+"), F.lit(0)
+    )
+    return docs.where(F.col(text_col).isNotNull()).select(
+        *keep, F.explode(runs).alias("w")
+    )
+
+
+def _md5_prefix(salt: str, key_col: str) -> Column:
+    """First 8 hex digits of md5(salt || key): the key's engine-portable
+    uniform draw, compared as text or decoded with ``_hex_int``. A NULL
+    key draws NULL."""
+    return F.substring(
+        F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string"))), 1, 8
+    )
+
+
+def _term_counts(words: DataFrame, *keys: str) -> DataFrame:
+    """Occurrences ``cnt`` per ``keys`` group of a token frame."""
+    return words.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt"))
+
+
+def _doc_term_stats(words: DataFrame, id_col: str):
+    """An (id, w) token frame's term counts ``cnt`` per (id, w),
+    document lengths ``len`` per id and document frequencies ``df`` per
+    word."""
+    tf = _term_counts(words, id_col, "w")
+    dlen = words.groupBy(id_col).agg(F.count(F.lit(1)).alias("len"))
+    dfreq = tf.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
+    return tf, dlen, dfreq
+
+
+def _top_k(
+    df: DataFrame, part: str, score: str, tie: str, k: int, rank: str
+) -> DataFrame:
+    """The rows ranked 1..``k`` within each ``part`` group under the
+    total order (``score`` DESC, ``tie`` ASC), numbered in the bigint
+    column ``rank``."""
+    w = Window.partitionBy(part).orderBy(
+        F.col(score).desc(), F.col(tie).asc()
+    )
+    return df.withColumn(rank, F.row_number().over(w).cast("long")).where(
+        F.col(rank) <= k
+    )
 
 
 def lang_scores(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -139,7 +243,7 @@ def gopher_quality_flags(
     Returns per-rule ratios (rounded 4dp — the cross-engine-stable form)
     plus the per-rule booleans and the conjunction ``gopher_ok``.
     Documents with no words fail closed (``gopher_ok`` false)."""
-    words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
+    words = _ws_tokens(text_col)
     lines = F.filter(F.split(F.col(text_col), "\n"), lambda l: l != "")
     n_words = F.size(words).cast("long")
     n_lines = F.size(lines).cast("long")
@@ -244,10 +348,7 @@ def c4_clean(
             | l.endswith('"')
             | l.endswith("'")
         )
-        & (
-            F.size(F.filter(F.split(l, " "), lambda w: w != ""))
-            >= 3
-        )
+        & (F.size(_ws_tokens(l)) >= 3)
         & ~F.contains(F.lower(l), F.lit("javascript")),
     )
     page_ok = ~F.contains(F.col(text_col), F.lit("{")) & ~F.contains(
@@ -287,8 +388,6 @@ def fingerprint(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     shared rarest shingle hash; used as a cheap near-dup blocking key.
     Computed array-natively — no explode, no shuffle. Returns
     (id, fingerprint); documents with fewer than 3 words are excluded."""
-    from gene_level_metadata_pipeline_spark.operators.dedup import shingle_array
-
     grams = shingle_array(text_col, 3)
     return df.where(F.size(grams) > 0).select(
         F.col(id_col),
@@ -320,6 +419,7 @@ def winnow_fingerprints(
     their 0-based k-gram positions. Documents shorter than k normalized
     characters yield nothing; documents with fewer than ``w`` k-grams
     winnow their single partial window (global min, rightmost tie).
+    ``k`` and ``w`` below 1 raise at the call.
 
     Engine-portable exactness: the hash is the first 6 md5 hex digits
     as an integer (< 16^6, the feature_hash/CMS discipline), and the
@@ -329,22 +429,21 @@ def winnow_fingerprints(
     nested window or min_by tie luck in either engine. Decode is exact
     integral div/pmod.
 
-    Scale shape (r10-opt rewrite): the sliding-window min runs INSIDE
-    each row over the packed-hash array — ``transform(sequence(0, n-w),
-    s -> array_min(slice(hp, s+1, w)))`` — so the k-gram frame is never
-    exploded and the former exchange + sort + two window passes over
-    every character of the corpus (rows = total chars) are gone from
-    the plan entirely; only the ~2/(w+1)-dense selection is exploded,
-    deduped per-doc with ``array_distinct`` (distinct on the packed
-    value IS distinct on (hash, pos) — the decode is bijective), and
-    then globally distinct (one exchange over sparse rows, kept for the
-    duplicate-input-id contract). Per-window cost is O(w) interpreted
-    array ops — cheaper than the sort at the guarantee-bearing small w
+    Scale shape: the sliding-window min runs INSIDE each row over the
+    packed-hash array — ``transform(sequence(0, n-w), s ->
+    array_min(slice(hp, s+1, w)))`` — so the k-gram frame is never
+    exploded and no exchange, sort or window pass runs over every
+    character of the corpus; only the ~2/(w+1)-dense selection is
+    exploded, deduped per-doc with ``array_distinct`` (distinct on the
+    packed value IS distinct on (hash, pos) — the decode is bijective),
+    and then globally distinct (one exchange over sparse rows, kept for
+    the duplicate-input-id contract). Per-window cost is O(w) array ops
+    — cheaper than a window sort at the guarantee-bearing small w
     (2/(w+1) density needs small w); a very large w would tilt back
-    toward the window form. Measured 1.8x on the overlap headline at
-    sf0.1 (interleaved min-of-5, output bit-identical via exceptAll
-    both ways), stacking on the by_hash materialization fix. No joins,
-    no driver state, no explode-per-window."""
+    toward the window form, which measured 1.8x slower on the overlap
+    headline at sf0.1. No joins, no driver state, no
+    explode-per-window."""
+    _at_least_one("winnow_fingerprints", k=k, w=w)
     norm = F.regexp_replace(F.lower(F.col(text_col)), "[^a-z]", "")
     base = (
         df.where(F.col(text_col).isNotNull())
@@ -357,10 +456,7 @@ def winnow_fingerprints(
     hp = F.transform(
         F.sequence(F.lit(1), F.length("t") - k + 1),
         lambda i: (
-            F.conv(
-                F.substring(F.md5(F.substring(F.col("t"), i, k)), 1, 6),
-                16, 10,
-            ).cast("bigint") * B
+            _hex_int(F.md5(F.substring(F.col("t"), i, k)), 1, 6) * B
             + (B - F.lit(1) - (i - F.lit(1)).cast("bigint"))
         ),
     )
@@ -422,17 +518,17 @@ def winnow_overlap_pairs(
     boilerplate hash (df > max_df) to reach ``min_shared``. The cap is
     therefore SF-sensitive in selectivity but never in correctness of
     what it reports: at 10x-100x the df distribution shifts right and a
-    FIXED max_df excludes more hashes — measured at the r8 10x sweep,
-    where the fixed cap's pair yield went to ZERO (every shared hash's
-    df decupled past 50, both engines agreeing). ``max_df_frac_e6`` is
-    the scale-proportional alternative (r8): the effective cap becomes
+    FIXED max_df excludes more hashes — on a 10x corpus the fixed cap's
+    pair yield went to ZERO (every shared hash's df decupled past 50,
+    both engines agreeing). ``max_df_frac_e6`` is the
+    scale-proportional alternative: the effective cap becomes
     ``max(max_df, n_docs * frac // 1e6)`` with n_docs counted from the
     input — boilerplate df is extensive in corpus size, so a FRACTION
     is the 100 TB-stable policy while the absolute floor keeps small
     corpora from capping at 0. Exact integer arithmetic (one count +
     one floor multiply), so any engine replays the effective cap.
 
-    ``max_df_ceiling`` (r9) bounds the OTHER regime the fractional cap
+    ``max_df_ceiling`` bounds the OTHER regime the fractional cap
     re-opens: a hash at the effective df cap joins df² pairs, so with a
     purely proportional cap the worst-case per-hash fan-out is
     (frac·n)² — quadratic in corpus size again, at exactly the scale
@@ -448,35 +544,27 @@ def winnow_overlap_pairs(
     either way: the cap (whatever its origin) is replayed exactly by
     both engines, and only pairs needing an above-cap hash to reach
     ``min_shared`` can be lost."""
+    _at_least_one(
+        "winnow_overlap_pairs",
+        max_df_frac_e6=max_df_frac_e6,
+        max_df_ceiling=max_df_ceiling,
+    )
     # by_hash feeds FOUR consumers — the corpus-proportional n_docs
     # count (an eager job at plan-build time), df_counts, and both
     # sides of the pair join — and its upstream subtree is the full
-    # winnowing pipeline (per-row in-array sliding-window minima over
-    # the packed-hash array — one md5 per normalized corpus char — plus
-    # the sparse selection explode; the r10-opt rewrite that replaced
-    # the gram-level explode + two window passes). Without a
-    # materialization point that pipeline would still run once per
-    # consumer (the r10-opt audit measured 4-5x before the rewrite).
-    # Checkpoint the thin (id, fp_hash) selection — ~2/(w+1) of the
-    # gram count — so winnowing runs once; results unchanged.
+    # winnowing pipeline (one md5 per normalized corpus char plus the
+    # sparse selection explode). Without a materialization point that
+    # pipeline would run once per consumer (measured 4-5x), so the thin
+    # (id, fp_hash) selection — ~2/(w+1) of the gram count — is
+    # checkpointed and winnowing runs once; results unchanged.
     by_hash = (
         fps.select("id", "fp_hash").distinct().transform(_materialize)
     )
     eff_max_df = max_df
     if max_df_frac_e6 is not None:
-        if max_df_frac_e6 <= 0:
-            raise ValueError(
-                f"winnow_overlap_pairs: max_df_frac_e6={max_df_frac_e6} "
-                "must be > 0"
-            )
         n_docs = by_hash.select("id").distinct().count()
         eff_max_df = max(max_df, n_docs * max_df_frac_e6 // 10 ** 6)
     if max_df_ceiling is not None:
-        if max_df_ceiling < 1:
-            raise ValueError(
-                f"winnow_overlap_pairs: max_df_ceiling={max_df_ceiling} "
-                "must be >= 1"
-            )
         eff_max_df = min(eff_max_df, max_df_ceiling)
     df_counts = by_hash.groupBy("fp_hash").agg(
         F.count(F.lit(1)).alias("df")
@@ -520,8 +608,7 @@ def stable_sample(df: DataFrame, key_col: str, fraction: float) -> DataFrame:
     SQL engine selects the identical row set.
     """
     bound = hex_sample_bound(fraction)
-    h = F.md5(F.concat(F.lit("sample:"), F.col(key_col).cast("string")))
-    return df.where(F.substring(h, 1, 8) < F.lit(bound))
+    return df.where(_md5_prefix("sample:", key_col) < F.lit(bound))
 
 
 def tf_idf_keywords(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -533,14 +620,10 @@ def tf_idf_keywords(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     and broadcast. Deterministic ranking: (rounded score desc, word asc).
     Returns (id, word, tfidf, rank).
     """
-    from pyspark.sql import Window
-
     words = df.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("w")
     )
-    tf = words.groupBy(id_col, "w").agg(F.count(F.lit(1)).alias("cnt"))
-    doc_len = words.groupBy(id_col).agg(F.count(F.lit(1)).alias("len"))
-    dfreq = tf.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
+    tf, doc_len, dfreq = _doc_term_stats(words, id_col)
     n_docs = df.select(id_col).distinct().count()
 
     scored = (
@@ -555,11 +638,8 @@ def tf_idf_keywords(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             ),
         )
     )
-    rank_w = Window.partitionBy(id_col).orderBy(F.col("tfidf").desc(), F.col("w"))
-    return (
-        scored.withColumn("rank", F.row_number().over(rank_w).cast("long"))
-        .where(F.col("rank") <= 3)
-        .select(id_col, "w", "tfidf", "rank")
+    return _top_k(scored, id_col, "tfidf", "w", 3, "rank").select(
+        id_col, "w", "tfidf", "rank"
     )
 
 
@@ -570,13 +650,11 @@ def repetition_scores(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     degenerate generations. Entirely array-native per row — a pure map,
     ZERO shuffles at any scale. Returns (id, n_grams, n_unique_grams,
     dup_fraction); documents shorter than 3 words are excluded."""
-    from gene_level_metadata_pipeline_spark.operators.dedup import shingle_array
-
     grams = shingle_array(text_col, 3, distinct=False)
     g = df.select(F.col(id_col), grams.alias("grams")).where(F.size("grams") > 0)
     total = F.size("grams").cast("long")
     uniq = F.size(F.array_distinct(F.col("grams"))).cast("long")
-    # replicate DuckDB's double rounding (see plans.driver_queries._round_to)
+    # replicate DuckDB's double rounding (see plans.registry._round_to)
     frac = F.lit(1.0) - uniq / total
     p = F.lit(10000.0)
     return g.select(
@@ -618,8 +696,6 @@ def contamination_check(
     relative to the corpus → distinct benchmark shingles broadcast, so
     the corpus side is a map-side semi-probe (no corpus shuffle before
     the per-doc agg). Returns (id, n_shared_grams, n_bench_docs)."""
-    from gene_level_metadata_pipeline_spark.operators.dedup import word_shingles
-
     cand = word_shingles(df, text_col, id_col, 5)
     bgrams = word_shingles(bench, text_col, id_col, 5).withColumnRenamed(
         id_col, "bench_id"
@@ -669,7 +745,9 @@ def chunk_documents(
     chunking is embarrassingly parallel over input partitions, and at
     100 TB output partition sizing is governed by
     files.maxPartitionBytes on the scan plus the ~size/stride fan-out.
+    ``size`` and ``stride`` below 1 raise at the call.
     """
+    _at_least_one("chunk_documents", size=size, stride=stride)
     toks = F.split(F.col(text_col), " ")
     starts = F.sequence(
         F.lit(0),
@@ -788,10 +866,7 @@ def train_split(
         raise ValueError("fractions must sum to 1")
     b1 = hex_sample_bound(fractions[0])
     b2 = hex_sample_bound(fractions[0] + fractions[1])
-    h = F.substring(
-        F.md5(F.concat(F.lit("split:"), F.col(key_col).cast("string"))),
-        1, 8,
-    )
+    h = _md5_prefix("split:", key_col)
     return df.withColumn(
         "split",
         F.when(h < F.lit(b1), "train")
@@ -811,13 +886,6 @@ def normalize_text(df: DataFrame, text_col: str, out_col: str | None = None) -> 
     c = F.regexp_replace(c, r"[\x00-\x1f\x7f]", " ")
     c = F.regexp_replace(c, r"\s+", " ")
     return df.withColumn(out, F.trim(c))
-
-
-def _ws_tokens(text_col: str) -> Column:
-    """Non-empty single-space tokens — matches the oracle convention
-    ``unnest(string_split(text, ' ')) ... WHERE w <> ''`` used across
-    the shingle/tf-idf family."""
-    return F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
 
 
 def centroid_train(
@@ -851,16 +919,14 @@ def centroid_train(
         F.col(label_col).alias("label"),
         F.explode(_ws_tokens(text_col)).alias("word"),
     )
-    counts = toks.groupBy("label", "word").agg(
-        F.count(F.lit(1)).alias("__cnt")
-    )
+    counts = _term_counts(toks, "label", "word")
     ndocs = toks.groupBy("label").agg(
         F.count_distinct(F.col("__id")).alias("__n")
     )
     return counts.join(F.broadcast(ndocs), "label").select(
         "label",
         "word",
-        F.round(F.col("__cnt").cast("double") / F.col("__n"), 6).alias("m"),
+        F.round(F.col("cnt").cast("double") / F.col("__n"), 6).alias("m"),
     )
 
 
@@ -892,23 +958,23 @@ def centroid_classify(
     cnorm = model.groupBy("label").agg(
         F.sqrt(F.sum(mdec * mdec).cast("double")).alias("__nc")
     )
-    tf = (
+    tf = _term_counts(
         df.select(
             F.col(id_col).alias("__id"),
             F.explode(_ws_tokens(text_col)).alias("word"),
-        )
-        .groupBy("__id", "word")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
+        ),
+        "__id",
+        "word",
     )
     dnorm = tf.groupBy("__id").agg(
-        F.sqrt(F.sum(F.col("__cnt") * F.col("__cnt")).cast("double")).alias(
+        F.sqrt(F.sum(F.col("cnt") * F.col("cnt")).cast("double")).alias(
             "__nd"
         )
     )
     scores = (
         tf.join(F.broadcast(model), "word")
         .groupBy("__id", "label")
-        .agg(F.sum(F.col("__cnt") * mdec).alias("__dot"))
+        .agg(F.sum(F.col("cnt") * mdec).alias("__dot"))
         .join(F.broadcast(cnorm), "label")
         .join(dnorm, "__id")
         .select(
@@ -973,14 +1039,10 @@ def bm25_topk(
     external engine reproduces scores bit-for-bit. Ranking tie-break:
     (score desc, doc id asc). Returns (qid, id, score, rank).
     """
-    from pyspark.sql import Window
-
     words = docs.select(
         F.col(id_col), F.explode(_ws_tokens(text_col)).alias("w")
     )
-    tf = words.groupBy(id_col, "w").agg(F.count(F.lit(1)).alias("cnt"))
-    dlen = words.groupBy(id_col).agg(F.count(F.lit(1)).alias("len"))
-    dfreq = tf.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
+    tf, dlen, dfreq = _doc_term_stats(words, id_col)
     # N and avg doc length: one 1-row aggregate broadcast into the plan
     # (no driver-side collect)
     stats = dlen.agg(
@@ -1008,13 +1070,8 @@ def bm25_topk(
         .groupBy(qid_col, id_col)
         .agg(F.round(F.sum(contrib), 4).cast("double").alias("score"))
     )
-    rank_w = Window.partitionBy(qid_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(rank_w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select(qid_col, id_col, "score", "rank")
+    return _top_k(scored, qid_col, "score", id_col, k, "rank").select(
+        qid_col, id_col, "score", "rank"
     )
 
 
@@ -1043,7 +1100,7 @@ def unigram_logprob_scores(
     words = df.select(
         F.col(id_col), F.explode(_ws_tokens(text_col)).alias("w")
     )
-    cnt_dw = words.groupBy(id_col, "w").agg(F.count(F.lit(1)).alias("cnt"))
+    cnt_dw = _term_counts(words, id_col, "w")
     cw = words.groupBy("w").agg(F.count(F.lit(1)).alias("cw"))
     totals = cw.agg(
         F.sum("cw").alias("__t"), F.count(F.lit(1)).alias("__v")
@@ -1077,27 +1134,33 @@ _BPE_SEP = "\x1f"
 _BPE_MAX_WORD_LEN = 20
 
 
-def _bpe_wrapped_words(docs: DataFrame, text_col: str):
-    """Word-frequency table in the wrapped-string symbol representation
-    (every symbol delimited by unit separators on both sides) — the
-    starting state of :func:`bpe_train`.
-    Eagerly checkpointed: vocabulary-sized, re-read every round."""
-    sep = _BPE_SEP
-    return (
-        docs.where(F.col(text_col).isNotNull())
-        .select(
-            F.explode(
-                F.expr(f"regexp_extract_all(lower({text_col}), '[a-z]+', 0)")
-            ).alias("w")
-        )
-        .where(F.length("w").between(1, _BPE_MAX_WORD_LEN))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .select(
-            F.regexp_replace("w", "(.)", sep + "$1" + sep).alias("s"), "freq"
-        )
-        .localCheckpoint(eager=True)
+def _bpe_words(docs: DataFrame, text_col: str, *keep) -> DataFrame:
+    """The letter words both BPE halves see: at most
+    ``_BPE_MAX_WORD_LEN`` letters long."""
+    return _letter_words(docs, text_col, *keep).where(
+        F.length("w").between(1, _BPE_MAX_WORD_LEN)
     )
+
+
+def _bpe_wrap(word) -> Column:
+    """A word in the wrapped-string symbol representation: every
+    character delimited by unit separators on both sides."""
+    return F.regexp_replace(word, "(.)", _BPE_SEP + "$1" + _BPE_SEP)
+
+
+def _bpe_merge(s: Column, pairs) -> Column:
+    """Apply the merges ``(a, b)`` in order to a wrapped string."""
+    sep = _BPE_SEP
+    for a, b in pairs:
+        s = F.replace(
+            s, F.lit(sep + a + sep + sep + b + sep), F.lit(sep + a + b + sep)
+        )
+    return s
+
+
+def _bpe_symbols(s) -> Column:
+    """The symbol array of a wrapped string."""
+    return F.split(F.btrim(s, F.lit(_BPE_SEP)), _BPE_SEP + _BPE_SEP)
 
 
 def _bpe_pair_counts(words: DataFrame) -> DataFrame:
@@ -1105,10 +1168,7 @@ def _bpe_pair_counts(words: DataFrame) -> DataFrame:
     canonical (cnt DESC, a, b) argmax order — the per-job aggregation of
     :func:`bpe_train`. All built-ins: split + slice/transform lambdas,
     no UDF."""
-    sep = _BPE_SEP
-    syms = words.withColumn(
-        "__syms", F.split(F.btrim(F.col("s"), F.lit(sep)), sep + sep)
-    )
+    syms = words.withColumn("__syms", _bpe_symbols(F.col("s")))
     pairs = syms.select(
         F.explode(
             F.expr(
@@ -1183,11 +1243,15 @@ def bpe_train(
     sf0.01; PLANS.md round 6). Jobs eagerly localCheckpoint: each job's
     collect would otherwise replay the whole merge lineage.
     """
-    if batch < 1:
-        raise ValueError(f"bpe_train: batch={batch} must be >= 1")
-    sep = _BPE_SEP
+    _at_least_one("bpe_train", batch=batch)
     spark = docs.sparkSession
-    words = _bpe_wrapped_words(docs, text_col)
+    # the word-frequency table in wrapped form; eagerly checkpointed:
+    # vocabulary-sized, re-read every round
+    words = (
+        _term_counts(_bpe_words(docs, text_col), "w")
+        .select(_bpe_wrap("w").alias("s"), F.col("cnt").alias("freq"))
+        .localCheckpoint(eager=True)
+    )
     merges: list[tuple[int, str, str, int]] = []
     for _ in range(rounds):
         cands = _bpe_pair_counts(words).limit(batch * 8).collect()
@@ -1203,15 +1267,10 @@ def bpe_train(
             used.update((a, b, a + b))
             if len(chosen) >= batch:
                 break
-        col = F.col("s")
         for a, b, cnt in chosen:
             merges.append((len(merges) + 1, a, b, cnt))
-            col = F.replace(
-                col,
-                F.lit(sep + a + sep + sep + b + sep),
-                F.lit(sep + a + b + sep),
-            )
-        words = words.select(col.alias("s"), "freq").localCheckpoint(
+        merged = _bpe_merge(F.col("s"), [(a, b) for a, b, _ in chosen])
+        words = words.select(merged.alias("s"), "freq").localCheckpoint(
             eager=True
         )
     return spark.createDataFrame(
@@ -1247,7 +1306,6 @@ def bpe_encode(
     words within a document wrap and merge once and the per-word token
     count multiplies by the occurrence count.
     """
-    sep = _BPE_SEP
     if isinstance(merges, DataFrame):
         pairs = [
             (r["sym_a"], r["sym_b"])
@@ -1255,27 +1313,13 @@ def bpe_encode(
         ]
     else:
         pairs = list(merges)
-    words = (
-        docs.where(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col).alias("__id"),
-            F.explode(
-                F.expr(f"regexp_extract_all(lower({text_col}), '[a-z]+', 0)")
-            ).alias("w"),
-        )
-        .where(F.length("w").between(1, _BPE_MAX_WORD_LEN))
-        .groupBy("__id", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
+    words = _term_counts(
+        _bpe_words(docs, text_col, F.col(id_col).alias("__id")), "__id", "w"
     )
-    s = F.regexp_replace("w", "(.)", sep + "$1" + sep)
-    for a, b in pairs:
-        s = F.replace(
-            s, F.lit(sep + a + sep + sep + b + sep), F.lit(sep + a + b + sep)
-        )
-    toks = F.size(F.split(F.btrim(s, F.lit(sep)), sep + sep))
-    # r10-opt: run the merge-replace chain once per DISTINCT word, not
-    # once per (doc, word) group — token count is a pure function of
-    # the word, and Zipf makes |vocab| orders of magnitude smaller than
+    toks = F.size(_bpe_symbols(_bpe_merge(_bpe_wrap("w"), pairs)))
+    # run the merge-replace chain once per DISTINCT word, not once per
+    # (doc, word) group — token count is a pure function of the word,
+    # and Zipf makes |vocab| orders of magnitude smaller than
     # |(doc, word)| (measured 31 vs 116k at sf0.1). The encoded vocab
     # joins back on the word; AQE broadcasts it when it is small and
     # falls back to a w-keyed shuffle for a genuinely huge vocabulary.
@@ -1286,9 +1330,9 @@ def bpe_encode(
         words.join(enc, "w")
         .groupBy(F.col("__id").alias(id_col))
         .agg(
-            F.sum("c").alias("n_words"),
-            F.sum(F.col("c") * F.length("w")).alias("n_chars"),
-            F.sum(F.col("c") * F.col("__toks")).alias("n_tokens"),
+            F.sum("cnt").alias("n_words"),
+            F.sum(F.col("cnt") * F.length("w")).alias("n_chars"),
+            F.sum(F.col("cnt") * F.col("__toks")).alias("n_tokens"),
         )
         .withColumn(
             "compression",
@@ -1320,9 +1364,9 @@ def feature_hash(
     Returns LONG-form sparse vectors (id, bucket, val) — the relational
     representation every downstream op here uses (matrix ops, Rocchio
     dots); zero-sum cancelled buckets are kept (they are real entries).
-    Determinism: bucket and sign derive from md5 hex-digit arithmetic
-    (two digits -> 0..255 mod n; third digit's high bit -> sign),
-    reproducible in any engine — no conv()/hash() dependency. One
+    Determinism: bucket and sign derive from md5 hex digits (two
+    digits -> 0..255 mod n; third digit's high bit -> sign), which any
+    engine with md5 reproduces — no hash() dependency. One
     explode + one (id, bucket) aggregation; n_features caps the
     per-doc output at a constant, so the vectorized corpus is O(docs),
     not O(docs x vocab).
@@ -1331,24 +1375,11 @@ def feature_hash(
         raise ValueError(
             f"feature_hash: n_features={n_features} not in [1, 256]"
         )
-    hexd = "0123456789abcdef"
-    words = docs.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("__id"),
-        F.explode(
-            F.expr(f"regexp_extract_all(lower({text_col}), '[a-z]+', 0)")
-        ).alias("w"),
-    )
-    # SQL form: pyspark's F.locate only takes a LITERAL needle, and the
-    # needle here is the per-row hex digit
-    dig = (
-        f"(locate(substring(md5(w), {{i}}, 1), '{hexd}') - 1)"
-    )
-    d1 = F.expr(dig.format(i=1))
-    d2 = F.expr(dig.format(i=2))
-    d3 = F.expr(dig.format(i=3))
-    bucket = ((d1 * 16 + d2) % n_features).cast("bigint")
+    words = _letter_words(docs, text_col, F.col(id_col).alias("__id"))
+    h = F.md5("w")
+    bucket = _hex_int(h, 1, 2) % n_features
     sign = (
-        F.when(d3 < 8, F.lit(1)).otherwise(F.lit(-1))
+        F.when(_hex_int(h, 3, 1) < 8, F.lit(1)).otherwise(F.lit(-1))
         if signed
         else F.lit(1)
     )
@@ -1527,28 +1558,25 @@ def linear_classifier_score(
 
 def _cms_bucket(word_col, seed: int, width: int):
     """Row j's CMS bucket for a token: the first two hex digits of
-    md5(seed ':' token) — hex-digit arithmetic reproducible in any
-    engine with md5 (the feature_hash discipline), uniform over
+    md5(seed ':' token) — hex digits reproducible in any engine with
+    md5 (the feature_hash discipline), uniform over
     [0, 256) and reduced mod ``width``.
 
     The two-digit source has only 256 distinct values, so ``width``
     must divide 256: a width > 256 would leave buckets >= 256
     permanently empty (silently degrading eps below the documented
     k/width), and a width not dividing 256 would get modulo-biased
-    buckets — the round-6 advisor's catch; fail loud instead of
-    degrading. (Widening to 4 hex digits would fix arbitrary widths
-    but change every certified bucket assignment and its DuckDB
-    oracle twin; all real callers use width <= 256, so validation is
-    the behavior-preserving fix.)"""
+    buckets; fail loud instead of degrading. (Widening to 4 hex digits
+    would fix arbitrary widths but change every certified bucket
+    assignment and its DuckDB oracle twin; all real callers use width
+    <= 256, so validation is the behavior-preserving fix.)"""
     if width <= 0 or width > 256 or 256 % width != 0:
         raise ValueError(
             f"CMS width must be a divisor of 256 in (0, 256] "
             f"(2 md5 hex digits = 256 distinct hash values); got {width}"
         )
     h = F.md5(F.concat(F.lit(f"{seed}:"), word_col))
-    return (F.conv(F.substring(h, 1, 2), 16, 10).cast("int") % width).alias(
-        "bucket"
-    )
+    return (_hex_int(h, 1, 2) % width).cast("int").alias("bucket")
 
 
 def count_min_estimates(
@@ -1664,8 +1692,6 @@ def rrf_fuse(
     |queries| x k rows — dimension-sized work, broadcastable
     downstream. At 100 TB the rankers bound the cost; RRF never
     touches the corpus."""
-    from pyspark.sql import Window
-
     if len(rankings) < 2:
         raise ValueError("rrf_fuse: need at least two rankings")
     contribs = None
@@ -1680,13 +1706,7 @@ def rrf_fuse(
     fused = contribs.groupBy("qid", "doc_id").agg(
         F.sum("contrib").alias("fused_e9")
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("fused_e9").desc(), F.col("doc_id").asc()
-    )
-    return (
-        fused.withColumn("fused_rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("fused_rank") <= topk)
-    )
+    return _top_k(fused, "qid", "fused_e9", "doc_id", topk, "fused_rank")
 
 
 def term_overlap_topk(
@@ -1703,26 +1723,18 @@ def term_overlap_topk(
     Same inverted-index probe shape as bm25_topk (queries broadcast
     onto the doc term table; only query-word postings survive).
     Returns (qid, doc_id, overlap, rank) for the per-query top 20."""
-    from pyspark.sql import Window
-
     qw = queries.select(
         F.col(qid_col).alias("qid"),
-        F.explode(F.array_distinct(F.split(query_col, " "))).alias("w"),
-    ).where(F.col("w") != "")
+        F.explode(F.array_distinct(_ws_tokens(query_col))).alias("w"),
+    )
     dw = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(F.split(text_col, " "))).alias("w"),
-    ).where(F.col("w") != "")
+        F.explode(F.array_distinct(_ws_tokens(text_col))).alias("w"),
+    )
     hits = dw.join(F.broadcast(qw), "w").groupBy("qid", "doc_id").agg(
         F.count(F.lit(1)).alias("overlap")
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("overlap").desc(), F.col("doc_id").asc()
-    )
-    return (
-        hits.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= 20)
-    )
+    return _top_k(hits, "qid", "overlap", "doc_id", 20, "rank")
 
 
 def skipgram_pairs(
@@ -1759,13 +1771,7 @@ def skipgram_pairs(
         (F.col("pb") >= F.col("pa") + 1)
         & (F.col("pb") <= F.col("pa") + 2)
     )
-    sym = ordered.select(
-        F.col("wa").alias("center"), F.col("wb").alias("context")
-    ).unionByName(
-        ordered.select(
-            F.col("wb").alias("center"), F.col("wa").alias("context")
-        )
-    )
+    sym = _both_ways(ordered, "wa", "wb", ("center", "context"))
     return sym.groupBy("center", "context").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -1792,28 +1798,23 @@ def mmr_diversify(
     corpus-scale work happened in the retriever), so every round is a
     window + a broadcast-joined max over |queries| x k rows —
     dimension-sized; k rounds of it."""
-    from pyspark.sql import Window
-
-    if k < 1:
-        raise ValueError(f"mmr_diversify: k={k} must be >= 1")
+    _at_least_one("mmr_diversify", k=k)
     cand = candidates.select(
         "qid", "doc_id", F.col("rel").cast("bigint").alias("rel")
     ).localCheckpoint(eager=True)
-    w_rel = Window.partitionBy("qid").orderBy(
-        F.col("rel").desc(), F.col("doc_id").asc()
+
+    def pick(df: DataFrame, score: str, r: int) -> DataFrame:
+        """Each query's argmax row under (score DESC, doc_id ASC), as
+        pick ``r``."""
+        return _top_k(df, "qid", score, "doc_id", 1, "rn").select(
+            "qid", F.lit(r).cast("int").alias("pick_order"), "doc_id"
+        )
+
+    picked = pick(cand, "rel", 1).localCheckpoint(eager=True)
+    sym = _both_ways(
+        sims, "a", "b", ("doc_id", "other"),
+        ("qid", F.col("sim").cast("bigint").alias("sim")),
     )
-    picked = (
-        cand.withColumn("rn", F.row_number().over(w_rel))
-        .where(F.col("rn") == 1)
-        .select("qid", F.lit(1).cast("int").alias("pick_order"), "doc_id")
-    ).localCheckpoint(eager=True)
-    sym = sims.select(
-        "qid", F.col("a").alias("doc_id"), F.col("b").alias("other"),
-        F.col("sim").cast("bigint").alias("sim"),
-    ).unionByName(sims.select(
-        "qid", F.col("b").alias("doc_id"), F.col("a").alias("other"),
-        F.col("sim").cast("bigint").alias("sim"),
-    ))
     for r in range(2, k + 1):
         remaining = cand.join(
             picked.select("qid", "doc_id"), ["qid", "doc_id"], "anti"
@@ -1836,17 +1837,8 @@ def mmr_diversify(
             "qid", "doc_id",
             (F.col("rel") * 100 - F.col("red")).alias("score"),
         )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        )
-        nxt = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select(
-                "qid", F.lit(r).cast("int").alias("pick_order"), "doc_id"
-            )
-        )
-        picked = picked.unionByName(nxt).localCheckpoint(eager=True)
+        picked = picked.unionByName(pick(scored, "score", r))
+        picked = picked.localCheckpoint(eager=True)
     return picked
 
 
@@ -1881,10 +1873,6 @@ def kneser_ney_bigram(
     joined back on their own keys; T rides a broadcast 1-row frame.
     Returns (w1, w2, c12, p_kn_e12) for bigrams with c12 >= min_count.
     """
-    from gene_level_metadata_pipeline_spark.operators.drift import (
-        _floor_div_exact,
-    )
-
     toks = df.select(_ws_tokens(text_col).alias("a")).where(
         F.size("a") >= 2
     )

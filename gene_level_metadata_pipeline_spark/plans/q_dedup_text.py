@@ -5382,6 +5382,7 @@ def q_image_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes identically by construction (property-pinned in
     tests/test_image_phash.py: same pixels through the real BMP and
     PNG decoders give equal aHash/dHash)."""
+    from gene_level_metadata_pipeline_spark.operators.dedup import _hex_int
     from gene_level_metadata_pipeline_spark.operators.multimodal import (
         image_near_dup_pairs,
     )
@@ -5407,17 +5408,14 @@ def q_image_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             # arithmetic-progression generators left stride structure
             # in the hash bits and produced O(n²) accidental
             # hamming<=6 pairs at sf0.1 (caught at first run)
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(
-                        F.lit("img:"),
-                        F.floor(d / 2).cast("string"),
-                        F.lit(":"),
-                        i.cast("string"),
-                    )),
-                    1, 2,
-                ),
-                16, 10,
+            _hex_int(
+                F.md5(F.concat(
+                    F.lit("img:"),
+                    F.floor(d / 2).cast("string"),
+                    F.lit(":"),
+                    i.cast("string"),
+                )),
+                1, 2,
             ).cast("int")
             + F.pmod(d, F.lit(2))
             * F.when(i % 41 == 0, F.lit(60)).otherwise(F.lit(0))
@@ -5473,6 +5471,7 @@ def q_image_resize_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     (constant plan size at any target; the r9 form built W·H Column
     objects); the oracle replays the exact index arithmetic per output
     cell. Pure Catalyst end-to-end — zero Python."""
+    from gene_level_metadata_pipeline_spark.operators.dedup import _hex_int
     from gene_level_metadata_pipeline_spark.operators.multimodal import (
         resize_image,
     )
@@ -5482,17 +5481,14 @@ def q_image_resize_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     px = F.transform(
         F.sequence(F.lit(0), F.lit(127)),
         lambda i: (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(
-                        F.lit("img:"),
-                        F.floor(d / 2).cast("string"),
-                        F.lit(":"),
-                        i.cast("string"),
-                    )),
-                    1, 2,
-                ),
-                16, 10,
+            _hex_int(
+                F.md5(F.concat(
+                    F.lit("img:"),
+                    F.floor(d / 2).cast("string"),
+                    F.lit(":"),
+                    i.cast("string"),
+                )),
+                1, 2,
             ).cast("int")
             + F.pmod(d, F.lit(2))
             * F.when(i % 41 == 0, F.lit(60)).otherwise(F.lit(0))

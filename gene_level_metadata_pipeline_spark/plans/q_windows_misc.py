@@ -3464,9 +3464,10 @@ def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _md5_hex8_int(prefix: str, key_sql: str) -> str:
-    """DuckDB twin of F.conv(substr(md5(prefix:key),1,8),16,10): the
-    first 8 md5 hex digits as a bigint via strpos digit arithmetic (no
-    conv() dependency) — the weighted_take / stable_sample idiom."""
+    """DuckDB twin of ``_hex_int(_md5_prefix(prefix + ":", key), 1,
+    8)``: the first 8 md5 hex digits as a bigint via strpos digit
+    arithmetic (no conv() dependency) — the weighted_take /
+    stable_sample idiom."""
     h = f"md5('{prefix}:' || CAST({key_sql} AS VARCHAR))"
     return " + ".join(
         f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
@@ -3516,24 +3517,18 @@ def q_fdr_bh_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
     step-up min_{{j>=i}} = a suffix min over the SAME pinned partition
     labels — never a single-task global window; the oracle replays the
     floored fixed-point form with one ordinary window."""
+    from gene_level_metadata_pipeline_spark.operators.dedup import _hex_int
     from gene_level_metadata_pipeline_spark.operators.drift import fdr_bh
+    from gene_level_metadata_pipeline_spark.operators.textanalysis import (
+        _md5_prefix,
+    )
 
     part = _t(spark, sf_dir, "part")
     tests = part.select(
         F.col("p_partkey").alias("id"),
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("pval:"),
-                            F.col("p_partkey").cast("string"),
-                        )
-                    ),
-                    1, 8,
-                ),
-                16, 10,
-            ).cast("long") % F.lit(1_000_001)
+            _hex_int(_md5_prefix("pval:", "p_partkey"), 1, 8)
+            % F.lit(1_000_001)
         ).alias("p_e6"),
     )
     return fdr_bh(tests, p_col="p_e6", key_col="id")

@@ -1407,16 +1407,102 @@ def test_bpe_train_batched_merged_symbol_blocked(spark):
             used.update((a, b, a + b))
 
 
-def test_bpe_train_batched_bad_batch_raises(spark):
-    import pytest as _pytest
-
-    from gene_level_metadata_pipeline_spark.operators.textanalysis import (
-        bpe_train,
+def _one_doc(spark):
+    return spark.createDataFrame(
+        [(1, "abab abx the end")], "doc_id long, text string"
     )
 
-    docs = spark.createDataFrame([(1, "ab")], "doc_id long, text string")
-    with _pytest.raises(ValueError):
-        bpe_train(docs, batch=0)
+
+def _mmr_k0(spark):
+    cands = spark.createDataFrame(
+        [(1, 10, 5), (1, 11, 4)], "qid long, doc_id long, rel long"
+    )
+    sims = spark.createDataFrame(
+        [(1, 10, 11, 3)], "qid long, a long, b long, sim long"
+    )
+    return textanalysis.mmr_diversify(cands, sims, k=0)
+
+
+@pytest.mark.parametrize(
+    "param, build",
+    [
+        (
+            "bpe_train: batch=0",
+            lambda s: textanalysis.bpe_train(_one_doc(s), batch=0),
+        ),
+        ("mmr_diversify: k=0", _mmr_k0),
+        # unchecked: empty chunks
+        (
+            "chunk_documents: size=0",
+            lambda s: textanalysis.chunk_documents(
+                _one_doc(s), "text", "doc_id", size=0
+            ),
+        ),
+        # unchecked: a sequence step of 0, failing at the first action
+        (
+            "chunk_documents: stride=0",
+            lambda s: textanalysis.chunk_documents(
+                _one_doc(s), "text", "doc_id", stride=0
+            ),
+        ),
+        # unchecked: every position fingerprinted with the md5 of ''
+        (
+            "winnow_fingerprints: k=0",
+            lambda s: textanalysis.winnow_fingerprints(_one_doc(s), k=0),
+        ),
+        # unchecked: NULL fp_hash rows
+        (
+            "winnow_fingerprints: w=0",
+            lambda s: textanalysis.winnow_fingerprints(_one_doc(s), w=0),
+        ),
+    ],
+    ids=[
+        "bpe_train-batch",
+        "mmr-k",
+        "chunk-size",
+        "chunk-stride",
+        "winnow-k",
+        "winnow-w",
+    ],
+)
+def test_count_param_below_one_raises_at_call(spark, param, build):
+    """A count or window parameter below 1 raises a ValueError naming
+    the operator and the parameter, before any Spark job runs."""
+    sc = spark.sparkContext
+    group = f"bad-param-{param}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=rf"^{param} must be >= 1"):
+            build(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_text_ops_read_a_column_name_with_a_space(spark):
+    """bpe_train, bpe_encode and feature_hash read the text column by
+    name, not through SQL text, so a name with a space (``Gene name``
+    in the paper's sources) gives the rows it gives as ``text``."""
+    plain = spark.createDataFrame(
+        [(1, "abab abab abx"), (2, "Hello, hello world"), (3, None)],
+        "doc_id long, text string",
+    )
+    spaced = plain.withColumnRenamed("text", "body text")
+
+    def run(df, col):
+        merges = textanalysis.bpe_train(df, text_col=col, rounds=3)
+        return (
+            sorted(merges.collect()),
+            sorted(textanalysis.bpe_encode(df, merges, text_col=col).collect()),
+            sorted(
+                textanalysis.feature_hash(df, text_col=col, n_features=8)
+                .collect()
+            ),
+        )
+
+    merges, encoded, hashed = run(plain, "text")
+    assert len(merges) == 3 and len(encoded) == 2 and hashed
+    assert run(spaced, "body text") == (merges, encoded, hashed)
 
 
 class TestLinearClassifier:

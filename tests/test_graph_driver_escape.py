@@ -8,7 +8,9 @@ the real constant (the twin), so the test literally straddles the cap.
 Two inputs per case: a deterministic pseudo-random graph (hash-derived,
 no RNG state), dense enough for triangles/multi-hop structure and small
 enough that the distributed runs stay in CI budget; and a tiny graph with
-a NULL endpoint, which the escape must punt to the distributed loop.
+a NULL endpoint. Components and PageRank drop that pair before either
+path runs, and their cases pin the answer; where an operator keeps it,
+the escape must punt it to the distributed loop.
 """
 
 from __future__ import annotations
@@ -93,10 +95,14 @@ def graphs():
     ]
 
 
-def _assert_paths_agree(graphs, op):
-    for edf, seeds in graphs:
+def _assert_paths_agree(graphs, op, null_graph_rows=None):
+    """Both paths agree on every input; with ``null_graph_rows`` both
+    also return exactly those rows on the NULL-endpoint graph."""
+    for i, (edf, seeds) in enumerate(graphs):
         (dr, ds), (vr, vs) = _both_paths(lambda: op(edf, seeds))
         assert dr == vr and ds == vs
+        if i == 1 and null_graph_rows is not None:
+            assert dr == Counter(null_graph_rows)
 
 
 def test_bfs_hops_cap_independent(graphs):
@@ -129,14 +135,22 @@ def test_truss_escape_equivalence(graphs):
 
 
 def test_cc_escape_equivalence(graphs):
+    # the (2, NULL) pair drops: NULL is no member of component 1
     _assert_paths_agree(
         graphs,
         lambda e, _s: graph.connected_components(e, src="u", dst="v"),
+        [(1, 1), (2, 1), (3, 3), (4, 3)],
     )
 
 
 def test_pagerank_escape_equivalence(graphs):
-    _assert_paths_agree(graphs, lambda e, _s: graph.pagerank(e))
+    # the (2, NULL) pair drops: N = 4, and on two disjoint edges every
+    # node keeps its initial 10^12 // 4
+    _assert_paths_agree(
+        graphs,
+        lambda e, _s: graph.pagerank(e),
+        [(n, 250_000_000_000) for n in (1, 2, 3, 4)],
+    )
 
 
 def test_pagerank_personalized_escape_equivalence(graphs):
